@@ -2156,18 +2156,19 @@ def histogram_quantile_brackets(
     ).orderBy("event_type", "q_ppm")
 
 
-def _user_runs(events: DataFrame) -> DataFrame:
-    """SHARED run-detection kernel of SCD2 (batch scd2_history and the
-    streaming Scd2Monitor both build on it — one definition keeps the
-    stream==batch contract structural): per (user_id, run) consecutive
-    same-event_type runs as (user_id, run, event_type, valid_from,
-    n_events), run numbered 1.. per user. The first row of a user
-    ALWAYS opens run 1 — detected via lag(event_id) (never NULL
-    mid-partition), because a NULL-typed first row satisfies
-    NULL <=> NULL and a bare null-safe compare would number that run
-    0; subsequent runs open on a null-safe type change. Ordering is
-    (ts, event_id) so equal timestamps resolve deterministically in
-    both engines. Both windows partition by user — never global.
+def _run_change_marks(events: DataFrame):
+    """SHARED run-start mark of SCD2 (batch scd2_history and, through
+    _user_runs, the streaming Scd2Monitor both build on it — one
+    definition keeps the stream==batch contract structural). Returns
+    (events projected to user_id, ts, event_id, event_type plus
+    ``__chg`` = 1 on a run's first row, the per-user (ts, event_id)
+    window). The first row of a user ALWAYS opens a run — detected via
+    lag(event_id) (never NULL mid-partition), because a NULL-typed
+    first row satisfies NULL <=> NULL and a bare null-safe compare
+    would not mark it; subsequent runs open on a null-safe type change.
+    Ordering is (ts, event_id) so equal timestamps resolve
+    deterministically in both engines. The window partitions by user —
+    never global.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("event_type").over(w)
@@ -2176,10 +2177,22 @@ def _user_runs(events: DataFrame) -> DataFrame:
         F.when(first_row | ~prev.eqNullSafe(F.col("event_type")), F.lit(1))
         .otherwise(F.lit(0))
     )
+    marked = events.select(
+        "user_id", "ts", "event_id", "event_type"
+    ).withColumn("__chg", chg)
+    return marked, w
+
+
+def _user_runs(events: DataFrame) -> DataFrame:
+    """Run-detection kernel of the streaming Scd2Monitor: per
+    (user_id, run) consecutive same-event_type runs as (user_id, run,
+    event_type, valid_from, n_events), run numbered 1.. per user by a
+    running sum of _run_change_marks' marks. Both windows partition by
+    user — never global.
+    """
+    marked, w = _run_change_marks(events)
     return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("__chg", chg)
-        .withColumn(
+        marked.withColumn(
             "run",
             F.sum("__chg").over(
                 w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2215,8 +2228,8 @@ def scd2_history(events: DataFrame) -> DataFrame:
     Scale: two per-user window passes + one (user, version) groupBy —
     all hash-partitioned by user_id; state per task bounded by the
     heaviest user's row count (the key_skew_profile prepass prices
-    that). Run detection lives in _user_runs, SHARED with the
-    streaming Scd2Monitor.
+    that). The run-start mark lives in _run_change_marks, SHARED with
+    the streaming Scd2Monitor.
     """
     # Runs-filter formulation (r15 opt, guide §2.4: fewer full-data
     # passes): instead of _user_runs' groupBy over EVERY event row (a
@@ -2232,34 +2245,25 @@ def scd2_history(events: DataFrame) -> DataFrame:
     #   - n_events  = next start's row_number − this start's (last run:
     #     user's total + 1), exact because runs tile the user's rows.
     # Equivalence to the _user_runs construction is pinned in
-    # tests/test_r15_opt.py; the streaming Scd2Monitor keeps consuming
-    # _user_runs unchanged.
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("event_type").over(w)
-    first_row = F.lag("event_id").over(w).isNull()
-    chg = (
-        F.when(first_row | ~prev.eqNullSafe(F.col("event_type")), F.lit(1))
-        .otherwise(F.lit(0))
-    )
+    # tests/test_r15_opt.py; both mark run starts with
+    # _run_change_marks.
+    marked, w = _run_change_marks(events)
     starts = (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("__chg", chg)
-        .withColumn("__rn", F.row_number().over(w))
+        marked.withColumn("__rn", F.row_number().over(w))
         .withColumn("__n", F.count("*").over(Window.partitionBy("user_id")))
         .where(F.col("__chg") == 1)
     )
-    ws = Window.partitionBy("user_id").orderBy("ts", "event_id")
     n_events = (
-        F.coalesce(F.lead("__rn").over(ws), F.col("__n") + F.lit(1))
+        F.coalesce(F.lead("__rn").over(w), F.col("__n") + F.lit(1))
         - F.col("__rn")
     )
     return (
         starts.select(
             "user_id",
-            F.row_number().over(ws).cast("long").alias("version"),
+            F.row_number().over(w).cast("long").alias("version"),
             "event_type",
             F.col("ts").alias("valid_from"),
-            F.lead("ts").over(ws).alias("valid_to"),
+            F.lead("ts").over(w).alias("valid_to"),
             n_events.cast("long").alias("n_events"),
         )
         .orderBy("user_id", "version")

@@ -8,12 +8,32 @@ late/updated rows with no special casing — watermarks bound state, the
 MVCC dedup resolves replays.
 
 Ops:
-- stream_events: parquet-directory source with the canonical events schema
+- stream_events / stream_documents: file sources with canonical schemas
 - windowed_event_stats: watermark + tumbling-window aggregation
 - stream_into_feature: foreachBatch append into a FeatureStore feature
   (exactly-once per epoch via idempotent created_time stamping)
 - sessionize: custom stateful operator (gap-based sessions) via
   applyInPandasWithState — the pattern for operators Spark lacks natively
+- stream filters/joins (dedup, quality, decontamination, attribution,
+  heavy hitters, ...): plain streaming DataFrames with batch twins
+
+Monitors: every ``*Monitor`` is the streaming twin of a batch operator
+and subclasses ``Monitor``, which owns the contract:
+
+- ``attach(stream, checkpoint_dir) -> (query, monitor)`` starts the one
+  availableNow foreachBatch query; each ``stream_*`` monitor function is
+  ``XMonitor(...).attach(stream, checkpoint_dir)``.
+- ``process_batch(batch_df, epoch_id=None)`` runs the subclass's
+  ``_update``, then counts ``n_batches``, then stamps the epoch — state
+  is only marked done after the work succeeded, so a failed batch's
+  re-delivery is processed.
+- ``ADDITIVE`` (class constant) declares the merge law. Additive
+  merges (counts, sums, run extension) would count a re-delivered epoch
+  twice, so a repeated ``epoch_id`` is skipped; idempotent merges (set
+  union, max, bottom-k, top-k) re-process it harmlessly. Direct callers
+  that pass no ``epoch_id`` get no dedup.
+- ``result()`` raises ``RuntimeError`` until a batch has been processed,
+  then returns the subclass's ``_result()``.
 """
 
 from __future__ import annotations
@@ -849,7 +869,61 @@ def heavy_hitters_batch(
     )
 
 
-class LatenessMonitor:
+class Monitor:
+    """Base of the streaming monitors (see the module docstring for the
+    contract). Subclasses implement ``_update(batch_df, epoch_id)`` and
+    ``_result()``, and set ``ADDITIVE = True`` when their merge would
+    double-count a re-delivered epoch."""
+
+    ADDITIVE = False
+    # class-level defaults; the first write shadows them per instance
+    n_batches = 0
+    _last_epoch: int | None = None
+
+    def attach(self, stream: DataFrame, checkpoint_dir: str):
+        """Run this monitor over ``stream`` as an availableNow
+        foreachBatch query. Returns (StreamingQuery, monitor) — read
+        monitor.result() after the query terminates (or periodically
+        while it runs)."""
+        q = (
+            stream.writeStream.foreachBatch(self.process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        return q, self
+
+    def process_batch(
+        self, batch_df: DataFrame, epoch_id: int | None = None
+    ) -> None:
+        # foreachBatch re-delivers an uncommitted epoch under the SAME
+        # epoch_id after a restart, so equality is the replay test
+        if self.ADDITIVE and epoch_id is not None and epoch_id == self._last_epoch:
+            return
+        self._update(batch_df, epoch_id)
+        self.n_batches += 1
+        self._last_epoch = epoch_id
+
+    def _ready(self) -> bool:
+        return self.n_batches > 0
+
+    def result(self):
+        """The monitor's state as its batch twin's output table; raises
+        RuntimeError before any micro-batch was processed."""
+        if not self._ready():
+            raise RuntimeError(
+                f"{type(self).__name__}.result() before any micro-batch "
+                "was processed"
+            )
+        return self._result()
+
+    @staticmethod
+    def _frame_from_rows(rows: list, schema) -> DataFrame:
+        """result() frame of a monitor that keeps its state in Python."""
+        return SparkSession.getActiveSession().createDataFrame(rows, schema)
+
+
+class LatenessMonitor(Monitor):
     """Incremental out-of-order-arrival monitor — the STREAMING twin of
     events_ops.lateness_audit, and the component that answers "is my
     withWatermark big enough?" while the stream runs.
@@ -861,15 +935,18 @@ class LatenessMonitor:
     arrival order), then merges the per-type counter deltas into a tiny
     driver dict (counts add, max_late maxes). State is one scalar plus
     #event_types counter rows — bounded at any scale; the per-batch work
-    is the same shuffle-light kernel the batch audit runs.
+    is the same shuffle-light kernel the batch audit runs. Counts add,
+    so a re-delivered epoch is skipped (ADDITIVE).
     """
+
+    ADDITIVE = True
 
     def __init__(self, arrival_col: str = "event_id"):
         self.arrival_col = arrival_col
         self.max_us: int | None = None
         self.totals: dict[str, list[int]] = {}
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators import events_ops
 
         rows = events_ops.lateness_audit(
@@ -890,7 +967,7 @@ class LatenessMonitor:
         if m is not None:
             self.max_us = m if self.max_us is None else max(self.max_us, m)
 
-    def result(self) -> pd.DataFrame:
+    def _result(self) -> pd.DataFrame:
         """Counters so far, in the batch audit's column layout."""
         return pd.DataFrame(
             [
@@ -915,17 +992,10 @@ def stream_lateness_monitor(
     """Attach a LatenessMonitor to an event stream. Returns
     (StreamingQuery, monitor) — read monitor.result() after
     processAllAvailable() (or periodically while running)."""
-    mon = LatenessMonitor(arrival_col=arrival_col)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return LatenessMonitor(arrival_col=arrival_col).attach(events, checkpoint_dir)
 
 
-class FunnelMonitor:
+class FunnelMonitor(Monitor):
     """Incremental ordered-funnel maintenance — the STREAMING twin of
     events_ops.funnel. Contract (same as LatenessMonitor): micro-batches
     arrive in event-time order; under that contract each user's stage
@@ -957,7 +1027,7 @@ class FunnelMonitor:
         self.steps = steps
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         b = batch_df.select("user_id", "event_type", "ts")
         k = len(self.steps)
         tcols = [f"t{i}" for i in range(1, k + 1)]
@@ -999,13 +1069,9 @@ class FunnelMonitor:
         # pin the state: lineage would otherwise grow by ~k joins/batch
         self.state = eager_checkpoint(st.select("user_id", *tcols))
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Per-step reached-user counts + ppm conversions — the same
         table shape as events_ops.funnel."""
-        if self.state is None:
-            raise RuntimeError(
-                "FunnelMonitor.result() before any micro-batch was processed"
-            )
         st = self.state
         counts = None
         for i, s in enumerate(self.steps, start=1):
@@ -1049,17 +1115,10 @@ def stream_funnel_monitor(
     """Attach a FunnelMonitor to an event stream. Returns
     (StreamingQuery, monitor) — read monitor.result() after
     processAllAvailable()."""
-    mon = FunnelMonitor(steps=steps)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return FunnelMonitor(steps=steps).attach(events, checkpoint_dir)
 
 
-class ActiveUsersMonitor:
+class ActiveUsersMonitor(Monitor):
     """Incremental DAU/WAU maintenance — streaming twin of
     events_ops.active_users. State is the distinct (user_id, day) set as
     a DISTRIBUTED DataFrame; merging a batch is union + distinct, which
@@ -1074,14 +1133,14 @@ class ActiveUsersMonitor:
         self.window_days = window_days
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         b = batch_df.select(
             "user_id", F.date_trunc("day", "ts").alias("day")
         ).distinct()
         st = b if self.state is None else self.state.unionByName(b).distinct()
         self.state = eager_checkpoint(st)
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         days = self.state
         dau = days.groupBy("day").agg(F.count("*").alias("dau"))
         membership = (
@@ -1115,17 +1174,10 @@ def stream_active_users(
 ):
     """Attach an ActiveUsersMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = ActiveUsersMonitor(window_days=window_days)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return ActiveUsersMonitor(window_days=window_days).attach(events, checkpoint_dir)
 
 
-class KMVDistinctMonitor:
+class KMVDistinctMonitor(Monitor):
     """Streaming per-source distinct-cardinality estimation — twin of
     dedup.kmv_source_distinct(include_exact=False). State is the merged
     KMV bottom-k sketch (≤ k rows PER SOURCE, a distributed frame that
@@ -1140,38 +1192,26 @@ class KMVDistinctMonitor:
         self.k = k
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.dedup import kmv_bottom_k, kmv_fingerprints
 
         b = kmv_bottom_k(kmv_fingerprints(batch_df), self.k)
         st = b if self.state is None else self.state.unionByName(b).distinct()
         self.state = eager_checkpoint(kmv_bottom_k(st, self.k))
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         from ..operators.dedup import kmv_distinct_estimate
 
-        if self.state is None:
-            raise RuntimeError(
-                "KMVDistinctMonitor.result() before any micro-batch was "
-                "processed"
-            )
         return kmv_distinct_estimate(self.state, self.k)
 
 
 def stream_kmv_distinct(docs: DataFrame, checkpoint_dir: str, k: int = 256):
     """Attach a KMVDistinctMonitor to a documents stream. Returns
     (StreamingQuery, monitor)."""
-    mon = KMVDistinctMonitor(k=k)
-    q = (
-        docs.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return KMVDistinctMonitor(k=k).attach(docs, checkpoint_dir)
 
 
-class RetentionMonitor:
+class RetentionMonitor(Monitor):
     """Streaming weekly cohort retention — twin of
     events_ops.retention_cohorts. State is ONE row per user:
     (user_id, cohort week, active-week BITMASK) — bit w set means "active
@@ -1205,7 +1245,7 @@ class RetentionMonitor:
         self.max_weeks = int(max_weeks)
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         b = batch_df.select(
             "user_id", F.date_trunc("week", F.col("ts")).alias("__wk")
         )
@@ -1261,14 +1301,8 @@ class RetentionMonitor:
         )
         self.state = eager_checkpoint(merged.select("user_id", "cohort", "mask"))
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Same table shape as events_ops.retention_cohorts."""
-        if self.state is None:
-            raise RuntimeError(
-                "RetentionMonitor.result() before any micro-batch was "
-                "processed (empty source, or the query has not committed "
-                "a batch yet)"
-            )
         st = self.state
         return (
             st.select(
@@ -1292,17 +1326,10 @@ class RetentionMonitor:
 def stream_retention(events: DataFrame, checkpoint_dir: str, max_weeks: int = 8):
     """Attach a RetentionMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = RetentionMonitor(max_weeks=max_weeks)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return RetentionMonitor(max_weeks=max_weeks).attach(events, checkpoint_dir)
 
 
-class TransitionMonitor:
+class TransitionMonitor(Monitor):
     """Streaming first-order Markov transition counts — twin of
     events_ops.event_transitions. Two pieces of state, both distributed:
 
@@ -1318,14 +1345,17 @@ class TransitionMonitor:
     last event, and within-batch order is resolved by the same
     (ts, event_id) sort the batch op uses. result() equals the batch op
     on the union of all batches, row for row (pinned in
-    tests/test_round5.py).
+    tests/test_round5.py). Counts add, so a re-delivered epoch is
+    skipped (ADDITIVE).
     """
+
+    ADDITIVE = True
 
     def __init__(self):
         self.counts: DataFrame | None = None
         self.last: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         b = batch_df.select("user_id", "ts", "event_id", "event_type")
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         within = (
@@ -1386,13 +1416,8 @@ class TransitionMonitor:
         self.counts = eager_checkpoint(merged)
         self.last = eager_checkpoint(new_last)
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Same table shape as events_ops.event_transitions."""
-        if self.counts is None:
-            raise RuntimeError(
-                "TransitionMonitor.result() before any micro-batch was "
-                "processed"
-            )
         marg = self.counts.groupBy("prev").agg(F.sum("n").alias("n_prev"))
         return (
             self.counts.join(F.broadcast(marg), "prev")
@@ -1409,17 +1434,10 @@ class TransitionMonitor:
 def stream_transitions(events: DataFrame, checkpoint_dir: str):
     """Attach a TransitionMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = TransitionMonitor()
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return TransitionMonitor().attach(events, checkpoint_dir)
 
 
-class BloomFilterMonitor:
+class BloomFilterMonitor(Monitor):
     """Streaming construction of a packed Bloom filter over the corpus's
     word n-gram shingles — the continuously-maintained state behind
     Bloom decontamination/dedup (dedup.bloom_decontaminate probes this
@@ -1467,7 +1485,7 @@ class BloomFilterMonitor:
         self.state: DataFrame | None = None
         self.batch_log: list[dict] = []
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.dedup import bloom_build_words
 
         # one job for both counters (code-review r07); same
@@ -1507,7 +1525,7 @@ class BloomFilterMonitor:
         )
         self.state = eager_checkpoint(st)
         self.batch_log.append(
-            {"epoch": int(epoch_id), "n_docs": int(n_docs),
+            {"epoch": epoch_id, "n_docs": int(n_docs),
              "n_short_docs": int(n_short),
              "n_covered_docs": int(n_covered)}
         )
@@ -1541,14 +1559,9 @@ class BloomFilterMonitor:
             .count()
         )
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """The merged filter word table, sorted by word_idx — equal to
         dedup.bloom_build_words over the union of all batches."""
-        if self.state is None:
-            raise RuntimeError(
-                "BloomFilterMonitor.result() before any micro-batch was "
-                "processed"
-            )
         return self.state.orderBy("word_idx")
 
 
@@ -1561,17 +1574,12 @@ def stream_bloom_filter(
 ):
     """Attach a BloomFilterMonitor to a documents stream. Returns
     (StreamingQuery, monitor)."""
-    mon = BloomFilterMonitor(n=n, m_bits=m_bits, k_hashes=k_hashes)
-    q = (
-        docs.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return BloomFilterMonitor(n=n, m_bits=m_bits, k_hashes=k_hashes).attach(
+        docs, checkpoint_dir
     )
-    return q, mon
 
 
-class EmbeddingDriftMonitor:
+class EmbeddingDriftMonitor(Monitor):
     """Streaming embedding-distribution drift against a fixed reference
     snapshot — twin of similarity.snapshot_drift(reference, stream).
     State is the per-(group, dim) frame of RAW integer sums
@@ -1584,11 +1592,12 @@ class EmbeddingDriftMonitor:
     similarity.drift_from_sums assembly, so stream and batch can never
     disagree on the derivation.
 
-    Note re-delivered vectors DO double-count (sums are additive, not
-    idempotent — contrast BloomFilterMonitor's bit_or): feed each
-    micro-batch exactly once, the contract every counting monitor here
-    shares (ActiveUsersMonitor, TransitionMonitor).
+    Re-delivered vectors would double-count (sums are additive, not
+    idempotent — contrast BloomFilterMonitor's bit_or), so a repeated
+    epoch is skipped (ADDITIVE), as in every counting monitor here.
     """
+
+    ADDITIVE = True
 
     def __init__(
         self,
@@ -1605,7 +1614,7 @@ class EmbeddingDriftMonitor:
         )
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.similarity import drift_per_dim_sums
 
         b = drift_per_dim_sums(batch_df, self.group_col, self.vec_col)
@@ -1622,16 +1631,11 @@ class EmbeddingDriftMonitor:
         )
         self.state = eager_checkpoint(st)
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Same table shape as similarity.snapshot_drift(reference, all
         streamed vectors)."""
         from ..operators.similarity import drift_from_sums
 
-        if self.state is None:
-            raise RuntimeError(
-                "EmbeddingDriftMonitor.result() before any micro-batch "
-                "was processed"
-            )
         return drift_from_sums(self.ref_sums, self.state, self.group_col)
 
 
@@ -1640,17 +1644,10 @@ def stream_embedding_drift(
 ):
     """Attach an EmbeddingDriftMonitor to an embedding stream. Returns
     (StreamingQuery, monitor)."""
-    mon = EmbeddingDriftMonitor(reference)
-    q = (
-        vecs.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return EmbeddingDriftMonitor(reference).attach(vecs, checkpoint_dir)
 
 
-class QualityGateMonitor:
+class QualityGateMonitor(Monitor):
     """Streaming data-quality gate — the continuously-maintained twin of
     ``operators.profile.check_constraints`` over an unbounded document/
     record stream. Additive rules (not_null / range / like) accumulate
@@ -1666,9 +1663,12 @@ class QualityGateMonitor:
     ORDER-INDEPENDENT: any micro-batch partitioning, in any arrival
     order, yields result() equal row-for-row to the batch gate on the
     union of all batches (pinned in pytest incl. permuted order).
-    Re-delivered batches DO double-count (sums, not sets) — the same
-    feed-once contract as every counting monitor here.
+    Re-delivered batches would double-count (sums, not sets), so a
+    repeated epoch is skipped (ADDITIVE), as in every counting monitor
+    here.
     """
+
+    ADDITIVE = True
 
     def __init__(self, rules: list[tuple]):
         from ..operators.profile import simple_rule_expr
@@ -1685,9 +1685,8 @@ class QualityGateMonitor:
                 self._simple.append((k, rule))
         self._counts: dict[int, int] = {k: 0 for k, _ in self._simple}
         self._ustate: dict[int, DataFrame] = {}
-        self._n_batches = 0
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.profile import simple_rule_expr
 
         # one scan of the source per batch: the simple-rule agg plus
@@ -1726,19 +1725,10 @@ class QualityGateMonitor:
             self._ustate[k] = eager_checkpoint(merged)
         if persisted:
             batch_df.unpersist()
-        self._n_batches += 1
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Same table shape as profile.check_constraints on the union of
         all processed batches."""
-        from pyspark.sql.session import SparkSession
-
-        if self._n_batches == 0:
-            raise RuntimeError(
-                "QualityGateMonitor.result() before any micro-batch was "
-                "processed"
-            )
-        spark = SparkSession.getActiveSession()
         viols: dict[int, int] = dict(self._counts)
         for k, _ in self._unique:
             st = self._ustate.get(k)
@@ -1754,7 +1744,7 @@ class QualityGateMonitor:
             (int(r[0]), str(r[1]), str(r[2]), viols[k], viols[k] == 0)
             for k, r in enumerate(self.rules)
         ]
-        return spark.createDataFrame(
+        return self._frame_from_rows(
             sorted(rows),
             "rule_id int, kind string, column string, "
             "n_violations long, passed boolean",
@@ -1766,17 +1756,10 @@ def stream_quality_gate(
 ):
     """Attach a QualityGateMonitor to a record stream. Returns
     (StreamingQuery, monitor)."""
-    mon = QualityGateMonitor(rules)
-    q = (
-        records.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return QualityGateMonitor(rules).attach(records, checkpoint_dir)
 
 
-class HistogramMonitor:
+class HistogramMonitor(Monitor):
     """Streaming fixed-width value histogram per event type — the
     continuously-maintained twin of ``events_ops.value_histogram`` (the
     ts_histogram query): state is the (event_type, bucket, n) frame,
@@ -1784,11 +1767,14 @@ class HistogramMonitor:
     overflow buckets included). Counts are ADDITIVE and commutative, so
     the histogram is fully order-independent and equals the batch op on
     the union of all batches row-for-row (pinned in pytest incl.
-    permuted batch order). Re-delivery double-counts (feed-once, like
-    every counting monitor). This is the bounded-state quantile
-    substrate: any percentile is bracketed to one bucket width from
-    result() without ever buffering raw values.
+    permuted batch order). Re-delivery would double-count, so a
+    repeated epoch is skipped (ADDITIVE, like every counting monitor).
+    This is the bounded-state quantile substrate: any percentile is
+    bracketed to one bucket width from result() without ever buffering
+    raw values.
     """
+
+    ADDITIVE = True
 
     def __init__(
         self, lo: float = 0.0, hi: float = 100.0, n_buckets: int = 10
@@ -1796,7 +1782,7 @@ class HistogramMonitor:
         self.lo, self.hi, self.n_buckets = float(lo), float(hi), int(n_buckets)
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         # sort-free core: the public op's orderBy would embed a
         # per-batch MID-PLAN global sort that the union+groupBy merge
         # discards (ADVICE r07); ordering happens once, in result()
@@ -1814,14 +1800,9 @@ class HistogramMonitor:
         )
         self.state = eager_checkpoint(st)
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Equal to events_ops.value_histogram over the union of all
         batches (same column order and sort)."""
-        if self.state is None:
-            raise RuntimeError(
-                "HistogramMonitor.result() before any micro-batch was "
-                "processed"
-            )
         return self.state.orderBy("event_type", "bucket")
 
 
@@ -1834,26 +1815,20 @@ def stream_histogram(
 ):
     """Attach a HistogramMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = HistogramMonitor(lo, hi, n_buckets)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return HistogramMonitor(lo, hi, n_buckets).attach(events, checkpoint_dir)
 
 
-class BandPlanMonitor:
+class BandPlanMonitor(Monitor):
     """Streaming ε-band join cost estimator — the continuously-
     maintained twin of ``asof.band_plan``: state is the per
     (eps_u, keys…, bucket) count frame for every candidate ε, merged
     additively per micro-batch (commutative counts → fully
-    ORDER-INDEPENDENT; re-delivery double-counts — feed-once, like
-    every counting monitor). ``result()`` assembles the decision table
-    through the SHARED ``asof.band_stats_from_counts`` (batch and
-    stream cannot drift) and equals the batch ``band_plan`` on the
-    union of all batches row-for-row.
+    ORDER-INDEPENDENT; re-delivery would double-count, so a repeated
+    epoch is skipped — ADDITIVE, like every counting monitor).
+    ``result()`` assembles the decision table through the SHARED
+    ``asof.band_stats_from_counts`` (batch and stream cannot drift) and
+    equals the batch ``band_plan`` on the union of all batches
+    row-for-row.
 
     State bound: Σ_ε n_buckets(ε) rows per key group — set by the
     VALUE DOMAIN and the ε grid, not by stream length (a [0,100]
@@ -1875,6 +1850,8 @@ class BandPlanMonitor:
     first (n_buckets stops growing as ε shrinks past it).
     """
 
+    ADDITIVE = True
+
     def __init__(
         self,
         keys: list[str],
@@ -1892,7 +1869,7 @@ class BandPlanMonitor:
         self.budget_pairs = int(budget_pairs)
         self.state: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.asof import _band_bucket_counts, _band_quantized
 
         base = _band_quantized(batch_df, self.keys, self.value_col)
@@ -1912,14 +1889,9 @@ class BandPlanMonitor:
         self.state = eager_checkpoint(st)
         base.unpersist()
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """The band_plan decision table over everything ingested —
         identical to ``asof.band_plan`` on the union of all batches."""
-        if self.state is None:
-            raise RuntimeError(
-                "BandPlanMonitor.result() before any micro-batch was "
-                "processed"
-            )
         from ..operators.asof import band_stats_from_counts
 
         out = band_stats_from_counts(self.state, self.keys).withColumn(
@@ -1954,17 +1926,12 @@ def stream_band_plan(
 ):
     """Attach a BandPlanMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = BandPlanMonitor(keys, value_col, eps_options, budget_pairs)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return BandPlanMonitor(keys, value_col, eps_options, budget_pairs).attach(
+        events, checkpoint_dir
     )
-    return q, mon
 
 
-class Scd2Monitor:
+class Scd2Monitor(Monitor):
     """Streaming SCD-type-2 dimension maintenance — the incremental twin
     of events_ops.scd2_history (events_ops.py:2138): each micro-batch
     extends every user's run history, closing versions whose successor
@@ -1991,14 +1958,18 @@ class Scd2Monitor:
 
     Every step is user-partitioned (two windows + three user-keyed
     joins per batch); no global window, no driver loop. Version
-    arithmetic is BIGINT from birth.
+    arithmetic is BIGINT from birth. Extending runs is not idempotent
+    (a replayed batch would re-open and re-count runs), so a repeated
+    epoch is skipped (ADDITIVE).
     """
+
+    ADDITIVE = True
 
     def __init__(self):
         self.closed: DataFrame | None = None
         self.open: DataFrame | None = None
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.events_ops import _user_runs
 
         # Empty micro-batch: nothing to stitch — skip entirely (ADVICE
@@ -2120,13 +2091,13 @@ class Scd2Monitor:
             else batch_open.unionByName(untouched_open)
         )
 
-    def result(self) -> DataFrame:
+    def _ready(self) -> bool:
+        # empty batches are skipped, so only a non-empty one unlocks
+        return self.open is not None
+
+    def _result(self) -> DataFrame:
         """Same table shape as events_ops.scd2_history: the closed
         versions plus each user's open run with valid_to NULL."""
-        if self.open is None:
-            raise RuntimeError(
-                "Scd2Monitor.result() before any micro-batch was processed"
-            )
         ts_type = self.open.schema["valid_from"].dataType
         open_rows = self.open.select(
             "user_id",
@@ -2147,17 +2118,10 @@ class Scd2Monitor:
 def stream_scd2(events: DataFrame, checkpoint_dir: str):
     """Attach an Scd2Monitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = Scd2Monitor()
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return Scd2Monitor().attach(events, checkpoint_dir)
 
 
-class CurationFunnelMonitor:
+class CurationFunnelMonitor(Monitor):
     """Streaming curation-funnel monitor (15th) — per-micro-batch
     gate / exact-dup / near-dup-candidate counts for a document stream,
     the continuously-maintained form of the pipeline_card chain's first
@@ -2185,6 +2149,10 @@ class CurationFunnelMonitor:
     any release_scratch() caller).
     """
 
+    # a re-delivered epoch would read as all-exact-dups — a spurious
+    # near-zero funnel row that ALSO shifts later batch indices
+    ADDITIVE = True
+
     def __init__(
         self, n_hashes: int = 64, bands: int = 32, ngram: int = 3
     ):
@@ -2194,28 +2162,17 @@ class CurationFunnelMonitor:
         self.fps: DataFrame | None = None
         self.buckets: DataFrame | None = None
         self.rows: list[tuple] = []
-        self._last_epoch: int | None = None
 
-    def process_batch(
-        self, batch_df: DataFrame, epoch_id: int | None = None
-    ) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.curation import _funnel_flags
         from ..plans.scratch import release_scratch
 
-        # checkpoint-replay guard (code-review r11): a re-delivered
-        # epoch would read as all-exact-dups — a spurious near-zero
-        # funnel row that ALSO shifts later batch indices. foreachBatch
-        # re-delivers under the SAME epoch_id, so equality is the test;
-        # direct callers (tests, backfill drivers) pass None = no dedup.
-        if epoch_id is not None and epoch_id == self._last_epoch:
-            return
         if batch_df.isEmpty():
             # an empty micro-batch is a real (all-zero) funnel row:
             # dropping it would shift later batch indices off the
             # trigger sequence (unlike Scd2Monitor, where skipping is
             # semantically neutral, result() here is per-batch)
             self.rows.append((len(self.rows), 0, 0, 0, 0))
-            self._last_epoch = epoch_id
             return
         flags, new_fps, new_buckets = _funnel_flags(
             batch_df,
@@ -2247,23 +2204,10 @@ class CurationFunnelMonitor:
             )
         )
         release_scratch()  # counts collected + additions checkpointed
-        # stamp the epoch only AFTER the batch is fully processed
-        # (ADVICE r11): stamping first meant a mid-batch failure left
-        # the epoch marked done, and the restart's re-delivery — the
-        # one case the guard exists for — was skipped, losing the row
-        self._last_epoch = epoch_id
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """One funnel row per processed micro-batch."""
-        from pyspark.sql.session import SparkSession
-
-        if not self.rows:
-            raise RuntimeError(
-                "CurationFunnelMonitor.result() before any micro-batch "
-                "was processed"
-            )
-        spark = SparkSession.getActiveSession()
-        return spark.createDataFrame(
+        return self._frame_from_rows(
             self.rows,
             "batch long, n_in long, n_gate long, "
             "n_exact_new long, n_near_new long",
@@ -2279,17 +2223,10 @@ def stream_curation_funnel(
 ):
     """Attach a CurationFunnelMonitor to a document stream. Returns
     (StreamingQuery, monitor)."""
-    mon = CurationFunnelMonitor(n_hashes, bands, ngram)
-    q = (
-        docs.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return CurationFunnelMonitor(n_hashes, bands, ngram).attach(docs, checkpoint_dir)
 
 
-class CountMinMonitor:
+class CountMinMonitor(Monitor):
     """Streaming Count-Min frequency sketch (16th monitor) — a
     continuously-maintained bounded-state frequency table for an
     integer key stream, the sketch complement of stream_heavy_hitters
@@ -2311,10 +2248,11 @@ class CountMinMonitor:
     from a ≤ depth·width-row collect per batch. result() returns the
     merged occupied-cells table; probe it with
     ``operators.sketches.cms_probe``. Additive counters DO double-count
-    a replayed epoch, so process_batch dedups on epoch_id (foreachBatch
-    re-delivers under the same id after a restart) — the guard HLL's
-    max-merge does not need.
+    a replayed epoch, so the class declares ADDITIVE and a repeated
+    epoch_id is skipped — the guard HLL's max-merge does not need.
     """
+
+    ADDITIVE = True
 
     def __init__(self, key_col: str = "user_id", depth: int = 4,
                  width: int = 256):
@@ -2322,24 +2260,13 @@ class CountMinMonitor:
         self.depth = int(depth)
         self.width = int(width)
         self.cells: dict[tuple[int, int], int] = {}
-        self.n_batches = 0
-        self._last_epoch: int | None = None
 
-    def process_batch(
-        self, batch_df: DataFrame, epoch_id: int | None = None
-    ) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import cms_build
 
-        # checkpoint-replay guard: additive counters double-count a
-        # re-delivered epoch (foreachBatch replays under the SAME
-        # epoch_id); None (direct callers) = no dedup
-        if epoch_id is not None and epoch_id == self._last_epoch:
-            return
         # collect() materializes the full cell list BEFORE any driver
         # state mutates, so a failure here leaves cells untouched and
-        # the un-stamped epoch replays cleanly (ADVICE r11: stamping
-        # before the work meant a failed batch's re-delivery — the one
-        # case the guard exists for — was skipped, dropping its counts).
+        # the un-stamped epoch replays cleanly.
         # No isEmpty() pre-check: it was a SECOND full job per batch
         # (and, with no projection, an unpruned full-schema scan of the
         # micro-batch), while an empty batch already collects to zero
@@ -2353,25 +2280,15 @@ class CountMinMonitor:
         ).collect():  # bounded: <= depth*width rows
             k = (r["row"], r["col"])
             self.cells[k] = self.cells.get(k, 0) + int(r["cnt"])
-        self.n_batches += 1
-        self._last_epoch = epoch_id
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Occupied counter cells (row, col, cnt) of the merged sketch
         — equals cms_build over the concatenated stream exactly."""
-        from pyspark.sql.session import SparkSession
-
-        if self.n_batches == 0:
-            raise RuntimeError(
-                "CountMinMonitor.result() before any micro-batch was "
-                "processed"
-            )
-        spark = SparkSession.getActiveSession()
         rows = [
             (int(r), int(c), int(n))
             for (r, c), n in sorted(self.cells.items())
         ]
-        return spark.createDataFrame(rows, "row int, col int, cnt long")
+        return self._frame_from_rows(rows, "row int, col int, cnt long")
 
 
 def stream_cms(
@@ -2383,17 +2300,10 @@ def stream_cms(
 ):
     """Attach a CountMinMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = CountMinMonitor(key_col, depth, width)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return CountMinMonitor(key_col, depth, width).attach(events, checkpoint_dir)
 
 
-class HllDistinctMonitor:
+class HllDistinctMonitor(Monitor):
     """Streaming HyperLogLog distinct-count monitor (17th) — m
     registers of driver state, period. The merge is per-bucket MAX
     (operators.sketches.hll_registers' pinned law), which is IDEMPOTENT
@@ -2417,9 +2327,8 @@ class HllDistinctMonitor:
         self.key_col = key_col
         self.m = int(m)
         self.regs: dict[int, int] = {}
-        self.n_batches = 0
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import hll_registers
 
         # no isEmpty() pre-check (the CountMinMonitor VERDICT r12 #5
@@ -2431,24 +2340,12 @@ class HllDistinctMonitor:
         ).collect():  # bounded: <= m rows
             b = int(r["bucket"])
             self.regs[b] = max(self.regs.get(b, 0), int(r["rho"]))
-        # counted only AFTER the collect succeeds (the hardened
-        # ordering): a failed-then-replayed batch must not inflate the
-        # count — register state is already idempotent via max-merge.
-        self.n_batches += 1
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Occupied registers (bucket, rho) of the merged sketch —
         equals hll_registers over the concatenated stream exactly."""
-        from pyspark.sql.session import SparkSession
-
-        if self.n_batches == 0:
-            raise RuntimeError(
-                "HllDistinctMonitor.result() before any micro-batch was "
-                "processed"
-            )
-        spark = SparkSession.getActiveSession()
         rows = [(int(b), int(r)) for b, r in sorted(self.regs.items())]
-        return spark.createDataFrame(rows, "bucket int, rho int")
+        return self._frame_from_rows(rows, "bucket int, rho int")
 
 
 def stream_hll_distinct(
@@ -2459,14 +2356,7 @@ def stream_hll_distinct(
 ):
     """Attach an HllDistinctMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = HllDistinctMonitor(key_col, m)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return HllDistinctMonitor(key_col, m).attach(events, checkpoint_dir)
 
 
 def _group_to_string(g):
@@ -2485,7 +2375,7 @@ def _group_to_string(g):
     return str(g)
 
 
-class GroupedHllMonitor:
+class GroupedHllMonitor(Monitor):
     """Per-group HyperLogLog distinct monitor (18th) — the
     per-source / per-day distinct-user rollup the HLL docstring names
     as the sketch's canonical use: state is {group: m registers},
@@ -2517,9 +2407,8 @@ class GroupedHllMonitor:
         self.group_col = group_col
         self.m = int(m)
         self.regs: dict[tuple, int] = {}  # (group, bucket) -> rho
-        self.n_batches = 0
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import hll_registers
 
         # no isEmpty() pre-check: it was a second full job per batch
@@ -2538,34 +2427,20 @@ class GroupedHllMonitor:
         ).collect():  # bounded: <= batch_groups * m rows
             k = (r[self.group_col], int(r["bucket"]))
             self.regs[k] = max(self.regs.get(k, 0), int(r["rho"]))
-        # counted only AFTER the collect succeeds (the hardened
-        # CountMinMonitor ordering): a failed-then-replayed batch must
-        # not double-count — register state is already idempotent via
-        # max-merge, this keeps the throughput log / result() guard
-        # honest too.
-        self.n_batches += 1
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Occupied registers (group, bucket, rho) of the merged
         per-group sketches — equals hll_registers(stream, key, group)
         over the concatenated stream exactly. The group column is
         surfaced as STRING (NULL preserved) — compare a non-string
         group column's batch twin after casting it."""
-        from pyspark.sql.session import SparkSession
-
-        if self.n_batches == 0:
-            raise RuntimeError(
-                "GroupedHllMonitor.result() before any micro-batch was "
-                "processed"
-            )
-        spark = SparkSession.getActiveSession()
         rows = [
             (_group_to_string(g), int(b), int(r))
             for (g, b), r in sorted(
                 self.regs.items(), key=lambda kv: (str(kv[0][0]), kv[0][1])
             )
         ]
-        return spark.createDataFrame(
+        return self._frame_from_rows(
             rows, f"{self.group_col} string, bucket int, rho int"
         )
 
@@ -2588,17 +2463,10 @@ def stream_hll_by_group(
 ):
     """Attach a GroupedHllMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = GroupedHllMonitor(key_col, group_col, m)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return GroupedHllMonitor(key_col, group_col, m).attach(events, checkpoint_dir)
 
 
-class GroupedCountMinMonitor:
+class GroupedCountMinMonitor(Monitor):
     """Per-group streaming Count-Min frequency sketches (19th monitor)
     — ONE independent depth×width counter table per group value
     (``operators.sketches.cms_build``'s group_col form): per-source /
@@ -2613,16 +2481,17 @@ class GroupedCountMinMonitor:
     sketch (the cms merge law, pinned in tests), so summing per-batch
     grouped sketches over ANY batching reproduces the one-shot grouped
     sketch to the integer — stream == batch structural and exact. Like
-    CountMinMonitor, additivity DOUBLE-COUNTS a replayed epoch, so
-    process_batch dedups on epoch_id with the hardened ordering:
-    nothing mutates and no epoch is stamped until the batch's cell
-    list has fully materialized (a failed batch's re-delivery — the one
-    case the guard exists for — replays cleanly).
+    CountMinMonitor, additivity DOUBLE-COUNTS a replayed epoch, so the
+    class declares ADDITIVE; nothing mutates until the batch's cell
+    list has fully materialized, so a failed batch's re-delivery
+    replays cleanly.
 
     result() surfaces the group column as STRING (NULL preserved, the
     GroupedHllMonitor convention); probe it per group with
     ``operators.sketches.cms_probe(..., group_col=...)`` after casting
     the keys frame's group column to string to match."""
+
+    ADDITIVE = True
 
     def __init__(
         self,
@@ -2638,16 +2507,10 @@ class GroupedCountMinMonitor:
         self.depth = int(depth)
         self.width = int(width)
         self.cells: dict[tuple, int] = {}  # (group, row, col) -> cnt
-        self.n_batches = 0
-        self._last_epoch: int | None = None
 
-    def process_batch(
-        self, batch_df: DataFrame, epoch_id: int | None = None
-    ) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import cms_build
 
-        if epoch_id is not None and epoch_id == self._last_epoch:
-            return
         # no isEmpty() pre-check (the r13 per-batch-cost fix): an empty
         # batch collects to zero cells — the additive identity — and
         # the pre-check cost a full extra unpruned job per batch.
@@ -2660,22 +2523,12 @@ class GroupedCountMinMonitor:
         ).collect():  # bounded: <= batch_groups * depth * width rows
             k = (r[self.group_col], r["row"], r["col"])
             self.cells[k] = self.cells.get(k, 0) + int(r["cnt"])
-        self.n_batches += 1
-        self._last_epoch = epoch_id
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Occupied counter cells (group, row, col, cnt) of the merged
         per-group sketches — equals cms_build(stream, key,
         group_col=group) over the concatenated stream exactly (group
         compared as string)."""
-        from pyspark.sql.session import SparkSession
-
-        if self.n_batches == 0:
-            raise RuntimeError(
-                "GroupedCountMinMonitor.result() before any micro-batch "
-                "was processed"
-            )
-        spark = SparkSession.getActiveSession()
         rows = [
             (_group_to_string(g), int(r), int(c), int(n))
             for (g, r, c), n in sorted(
@@ -2683,7 +2536,7 @@ class GroupedCountMinMonitor:
                 key=lambda kv: (str(kv[0][0]), kv[0][1], kv[0][2]),
             )
         ]
-        return spark.createDataFrame(
+        return self._frame_from_rows(
             rows,
             f"{self.group_col} string, row int, col int, cnt long",
         )
@@ -2699,17 +2552,12 @@ def stream_cms_by_group(
 ):
     """Attach a GroupedCountMinMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = GroupedCountMinMonitor(key_col, group_col, depth, width)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return GroupedCountMinMonitor(key_col, group_col, depth, width).attach(
+        events, checkpoint_dir
     )
-    return q, mon
 
 
-class GroupedKmvMonitor:
+class GroupedKmvMonitor(Monitor):
     """Per-group streaming KMV distinct-cardinality sketches (20th
     monitor) — the third sketch family completes the grouped-monitor
     triple (CMS = frequency, HLL = distinct registers, KMV = distinct
@@ -2750,11 +2598,8 @@ class GroupedKmvMonitor:
         self.group_col = group_col
         self.k = int(k)
         self.hashes: dict[object, list[int]] = {}  # group -> sorted bottom-k
-        self.n_batches = 0
 
-    def process_batch(
-        self, batch_df: DataFrame, epoch_id: int | None = None
-    ) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import kmv_sketch
 
         # dict.fromkeys: group_col == key_col is a legal config and a
@@ -2769,27 +2614,18 @@ class GroupedKmvMonitor:
         for g, hs in batch.items():
             merged = set(self.hashes.get(g, ())) | hs
             self.hashes[g] = sorted(merged)[: self.k]
-        self.n_batches += 1
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """Surviving bottom-k hashes (group, h) of the merged per-group
         sketches — equals kmv_sketch(stream, key, k, group_col=group)
         over the concatenated stream exactly (group compared as
         string)."""
-        from pyspark.sql.session import SparkSession
-
-        if self.n_batches == 0:
-            raise RuntimeError(
-                "GroupedKmvMonitor.result() before any micro-batch was "
-                "processed"
-            )
-        spark = SparkSession.getActiveSession()
         rows = [
             (_group_to_string(g), int(h))
             for g in sorted(self.hashes, key=_group_key)
             for h in self.hashes[g]
         ]
-        return spark.createDataFrame(
+        return self._frame_from_rows(
             rows, f"{self.group_col} string, h long"
         )
 
@@ -2815,17 +2651,10 @@ def stream_kmv_by_group(
 ):
     """Attach a GroupedKmvMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    mon = GroupedKmvMonitor(key_col, group_col, k)
-    q = (
-        events.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, mon
+    return GroupedKmvMonitor(key_col, group_col, k).attach(events, checkpoint_dir)
 
 
-class WeightedSampleMonitor:
+class WeightedSampleMonitor(Monitor):
     """Streaming deterministic weighted top-k sample (21st monitor) —
     ``operators.curation.weighted_sample``'s A-ES selection maintained
     incrementally: top-k by the exact-integer A-ES priority (max of
@@ -2862,12 +2691,9 @@ class WeightedSampleMonitor:
         self.cap = int(cap)
         # id -> (priority, weight, w_eff); ordering recomputed on read
         self.rows: dict[object, tuple] = {}
-        self.n_batches = 0
         self._schema = None  # captured from the batch operator's output
 
-    def process_batch(
-        self, batch_df: DataFrame, epoch_id: int | None = None
-    ) -> None:
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.curation import weighted_sample
 
         out = weighted_sample(
@@ -2887,27 +2713,18 @@ class WeightedSampleMonitor:
                 self.rows.items(), key=lambda kv: (-kv[1][0], kv[0])
             )[: self.k]
             self.rows = dict(keep)
-        self.n_batches += 1
 
-    def result(self) -> DataFrame:
+    def _result(self) -> DataFrame:
         """The current top-k sample (id, weight, w_eff, priority),
         (priority desc, id asc) ordered — equals the batch operator
         over the concatenated stream exactly."""
-        from pyspark.sql.session import SparkSession
-
-        if self.n_batches == 0:
-            raise RuntimeError(
-                "WeightedSampleMonitor.result() before any micro-batch "
-                "was processed"
-            )
-        spark = SparkSession.getActiveSession()
         ordered = sorted(
             self.rows.items(), key=lambda kv: (-kv[1][0], kv[0])
         )
         rows = [
             (i, w, int(we), int(p)) for i, (p, w, we) in ordered
         ]
-        return spark.createDataFrame(rows, self._schema)
+        return self._frame_from_rows(rows, self._schema)
 
 
 def stream_weighted_sample(
@@ -2920,11 +2737,6 @@ def stream_weighted_sample(
 ):
     """Attach a WeightedSampleMonitor to a stream. Returns
     (StreamingQuery, monitor)."""
-    mon = WeightedSampleMonitor(k, weight_col, id_col, cap)
-    q = (
-        docs.writeStream.foreachBatch(mon.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return WeightedSampleMonitor(k, weight_col, id_col, cap).attach(
+        docs, checkpoint_dir
     )
-    return q, mon

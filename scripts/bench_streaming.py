@@ -1,12 +1,16 @@
 """Streaming throughput benchmark: events/s through the streaming surface.
 
-Measures three pipelines over the testdata events table replayed as a
+Measures five pipelines over the testdata events table replayed as a
 file-source stream (availableNow, so runs are finite and comparable):
 
 - ingest:    stream_into_feature — micro-batch appends into the bitemporal
              store (the write path a production feed would use)
 - windowed:  watermarked tumbling-window aggregation
 - sessionize: applyInPandasWithState gap sessions (custom stateful op)
+- retention_monitor: stream_retention — a Monitor with distributed state
+             (one bitmask row per user)
+- cms_monitor: stream_cms — a Monitor with bounded in-process state
+             (<= depth*width Count-Min counters)
 
 Usage: python scripts/bench_streaming.py [sf_dir]
 Prints ONE JSON line {"metric": ..., "events_per_sec": {...}, ...}.
