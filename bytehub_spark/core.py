@@ -7,7 +7,7 @@ time-travel predicate → bitemporal dedup window → resample/align LOCF —
 executed only at the caller's action.
 
 Query lifecycle parity map (SURVEY.md §3.1):
-  seed lookup        core._load_feature           [dask.py:142-148]
+  seed lookup        core._seed_rows (in-plan)    [dask.py:142-148]
   pushdown scan      storage.scan                 [dask.py:85-106]
   default range      core._load_feature           [dask.py:150-155]
   time travel        timeseries.time_travel       [dask.py:119-122]
@@ -55,6 +55,28 @@ def _value_type(meta: dict | None) -> T.DataType | None:
         return T._parse_datatype_json_string(meta["value_schema"])
     except Exception:
         return None
+
+
+def _seed_rows(upto: DataFrame, time_travel: str | None, keys=()) -> DataFrame:
+    """LOCF seed (J3) as part of the read plan: per series (``keys``), the
+    newest row at or before ``from_date`` in its latest version, from a
+    scan pruned to ``time <= from_date``. Unioned into the ranged scan
+    ahead of the dedup window, so a grid point before the first ranged
+    row carries the seed's value; a seed exactly at ``from_date``
+    duplicates a ranged row and the dedup window drops the copy. One
+    mergeable aggregate instead of an eager max(time) job per load."""
+    if time_travel:
+        upto = ts.time_travel(upto, time_travel)
+    latest = F.max_by(
+        F.struct(ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL),
+        F.struct(ts.TIME_COL, ts.CREATED_COL),
+    )
+    return (
+        upto.groupBy(*keys)
+        .agg(latest.alias("__seed"))
+        .where(F.col("__seed").isNotNull())  # a global agg of 0 rows
+        .select(*keys, "__seed.*")
+    )
 
 
 def _qcol(name: str):
@@ -189,17 +211,13 @@ class FeatureStore:
         Returns a LAZY Spark DataFrame ordered by time.
         """
         pairs = unpack_feature_list(features)
-        # ONE Spark job for all per-feature scalar lookups (default-range
-        # time bounds + LOCF seed timestamps) instead of up to 2 jobs per
-        # feature: a k-branch union collected once. Each branch is a
-        # partial-agg over that feature's pruned scan, so the batched job
-        # does the same executor work as the k separate jobs minus the
-        # per-job scheduling latency (~100 ms each on a loaded driver).
-        hints = self._scalar_prepass(pairs, from_date, to_date, time_travel)
+        # With from_date or to_date omitted: ONE Spark job for every
+        # feature's default-range time bounds instead of one per feature
+        # (a k-branch union collected once). With both given the build
+        # runs no Spark job at all; the LOCF seed is part of the plan.
+        bounds = self._bounds_prepass(pairs, from_date, to_date)
 
-        fast = self._load_long_format(
-            pairs, hints, from_date, to_date, freq, time_travel
-        )
+        fast = self._load_long_format(pairs, from_date, to_date, freq, time_travel)
         if fast is not None:
             return fast
 
@@ -207,7 +225,7 @@ class FeatureStore:
             nsp, nm = pair
             sdf = self._load_feature(
                 nsp, nm, from_date, to_date, freq, time_travel, callers=[],
-                hint=hints.get(pair),
+                bounds=bounds.get(pair),
             )
             return sdf.select(
                 ts.TIME_COL, F.col(ts.VALUE_COL).alias(join_name(nsp, nm))
@@ -226,12 +244,12 @@ class FeatureStore:
         out = ts.align(
             frames,
             ffill=len(frames) > 1,
-            range_hint=self._range_hint(from_date, to_date, hints),
+            range_hint=self._range_hint(from_date, to_date, bounds),
         )
         return out.orderBy(ts.TIME_COL)
 
     def _load_long_format(
-        self, pairs, hints, from_date, to_date, freq, time_travel
+        self, pairs, from_date, to_date, freq, time_travel
     ) -> DataFrame | None:
         """Multi-feature ranged resample as ONE long-format plan.
 
@@ -245,13 +263,16 @@ class FeatureStore:
 
             union of k slim scans (tagged with the series name)
               → one time-travel predicate
+              ∪ one seed aggregate  groupBy(series) over the k scans
+                                    pruned to time <= from  [_seed_rows]
               → one dedup window  partitionBy(series, time)
               → one LOCF resample partitionBy(series)   [per-key window]
               → one pivot on time
 
-        Three shuffles TOTAL regardless of k, and the LOCF is an ordinary
-        per-key window (parallel across features — no two-pass bucketing
-        needed).
+        Four shuffles TOTAL regardless of k (the seed aggregate's carries
+        one partial row per feature per scan task), the LOCF is an
+        ordinary per-key window (parallel across features — no two-pass
+        bucketing needed), and building the plan launches no Spark job.
 
         Measured at 13 features × 35d hourly grid on local[32]: 2.1s vs
         7.5s for the generic path (plan construction alone drops 6.5→1.6s).
@@ -280,37 +301,40 @@ class FeatureStore:
             to_date = from_date  # clamp (dask.py:154-155)
 
         names = [join_name(*p) for p in pairs]
-        branches = []
-        for (nsp, nm), full in zip(pairs, names):
-            meta = metas[nsp, nm]
-            storage = self._storage(nsp)
-            vt = _value_type(meta)
-            # seed row: last point at/before from, carried onto the grid
-            seed = (hints.get((nsp, nm)) or {}).get("seed")
-            scan_from = seed if seed is not None else from_date
-            sdf = storage.scan(
-                nm,
-                from_date=scan_from,
-                to_date=to_date,
-                scheme=meta["partition"],
-                base=storage.open(nm, value_type=vt),
-                value_type=vt,
-            )
-            branches.append(
-                sdf.select(
-                    F.lit(full).alias("__series"),
-                    F.col(ts.TIME_COL),
-                    F.col(ts.CREATED_COL),
-                    F.col(ts.VALUE_COL),
+
+        def tagged(lo, hi) -> DataFrame:
+            branches = []
+            for (nsp, nm), full in zip(pairs, names):
+                meta = metas[nsp, nm]
+                storage = self._storage(nsp)
+                vt = _value_type(meta)
+                sdf = storage.scan(
+                    nm,
+                    from_date=lo,
+                    to_date=hi,
+                    scheme=meta["partition"],
+                    base=storage.open(nm, value_type=vt),
+                    value_type=vt,
                 )
-            )
-        unioned = branches[0]
-        for b in branches[1:]:
-            unioned = unioned.unionByName(b)
+                branches.append(
+                    sdf.select(
+                        F.lit(full).alias("__series"),
+                        F.col(ts.TIME_COL),
+                        F.col(ts.CREATED_COL),
+                        F.col(ts.VALUE_COL),
+                    )
+                )
+            unioned = branches[0]
+            for b in branches[1:]:
+                unioned = unioned.unionByName(b)
+            return unioned
+
+        ranged = tagged(from_date, to_date)
         if time_travel:
-            unioned = ts.time_travel(unioned, time_travel)
+            ranged = ts.time_travel(ranged, time_travel)
+        seeds = _seed_rows(tagged(None, from_date), time_travel, keys=["__series"])
         deduped = ts.dedup_latest(
-            unioned, partition_by=["__series"]
+            ranged.unionByName(seeds), partition_by=["__series"]
         ).drop(ts.CREATED_COL)
 
         # keys_df = ALL requested series (an empty feature still gets
@@ -336,7 +360,7 @@ class FeatureStore:
         return out.orderBy(ts.TIME_COL)
 
     @staticmethod
-    def _range_hint(from_date, to_date, hints: dict[tuple, dict]):
+    def _range_hint(from_date, to_date, bounds: dict[tuple, tuple]):
         """Overall (lo, hi) time span of a load, from explicit args and/or
         the prepass bounds — lets align()'s LOCF derive bucket bounds
         arithmetically instead of running an eager approxQuantile job that
@@ -344,9 +368,8 @@ class FeatureStore:
         span is unknown (e.g. all-transform loads with omitted range)."""
         if from_date is not None and to_date is not None:
             return (from_date, to_date)
-        bs = [h["bounds"] for h in hints.values() if "bounds" in h]
-        mns = [b[0] for b in bs if b[0] is not None]
-        mxs = [b[1] for b in bs if b[1] is not None]
+        mns = [b[0] for b in bounds.values() if b[0] is not None]
+        mxs = [b[1] for b in bounds.values() if b[1] is not None]
         lo = from_date if from_date is not None else (min(mns) if mns else None)
         hi = to_date if to_date is not None else (max(mxs) if mxs else None)
         if lo is None or hi is None:
@@ -440,35 +463,54 @@ class FeatureStore:
     def last(self, features: Any) -> dict[str, Any]:
         """Latest value per feature (None when empty) — core.py:315-331.
 
-        Each feature's lookup is one tiny job (last-partition scan + dedup
-        + limit 1); k features submit concurrently so wall time is ~max,
-        not ~sum (value types differ per feature, so a single unioned job
-        would force casts — concurrency gets the same latency win without
-        touching types)."""
+        Stored features are grouped by recorded value type, and each group
+        is ONE collect: the union of the members' newest-partition scans,
+        tagged with the request index, under one `groupBy(i)` whose
+        `max_by(value, (time, created_time))` is the latest version of the
+        newest row. k features of one type cost one job set, not k.
+        Transform features load per feature (last_only leaves, aligned,
+        then the function)."""
         pairs = unpack_feature_list(features)
-
-        def one(pair):
-            nsp, nm = pair
-            sdf = self._load_feature(
-                nsp, nm, None, None, None, None, callers=[], last_only=True
-            )
-            rows = ts.last_row(sdf).collect()
-            if not rows:
-                return None
-            val = rows[0][ts.VALUE_COL]
+        vals: dict[int, Any] = {}
+        groups: dict[str, list[DataFrame]] = {}
+        metas = []
+        for i, (nsp, nm) in enumerate(pairs):
             meta = self.catalog.get_feature(nsp, nm)
-            if meta and meta["serialized"] and isinstance(val, str):
+            if meta is None:
+                raise MissingFeatureException(f"Feature {nsp}/{nm} does not exist")
+            metas.append(meta)
+            if meta["transform"]:
+                rows = ts.last_row(
+                    self._load_feature(
+                        nsp, nm, None, None, None, None, callers=[], last_only=True
+                    )
+                ).collect()
+                vals[i] = rows[0][ts.VALUE_COL] if rows else None
+                continue
+            base = self._open_recorded(nsp, nm, meta)
+            parts = self._storage(nsp).list_partitions(nm, reverse=True)
+            if base is None or not parts:
+                continue  # no data: None
+            newest = base.where(F.col("partition") == parts[0]).select(
+                F.lit(i).alias("__i"), ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL
+            )
+            # the memoized base frame caches its schema: no analysis call
+            vt = base.schema[ts.VALUE_COL].dataType.json()
+            groups.setdefault(vt, []).append(newest)
+        latest = F.max_by(ts.VALUE_COL, F.struct(ts.TIME_COL, ts.CREATED_COL))
+        for scans in groups.values():
+            unioned = scans[0]
+            for b in scans[1:]:
+                unioned = unioned.unionByName(b)
+            for row in unioned.groupBy("__i").agg(latest.alias("v")).collect():
+                vals[row["__i"]] = row["v"]
+        out = {}
+        for i, (pair, meta) in enumerate(zip(pairs, metas)):
+            val = vals.get(i)
+            if meta["serialized"] and isinstance(val, str):
                 val = json.loads(val)
-            return val
-
-        if len(pairs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(pairs))) as ex:
-                vals = list(ex.map(one, pairs))
-        else:
-            vals = [one(pairs[0])]
-        return {join_name(*p): v for p, v in zip(pairs, vals)}
+            out[join_name(*pair)] = val
+        return out
 
     # -- internal ------------------------------------------------------
 
@@ -507,31 +549,17 @@ class FeatureStore:
             )
         return st
 
-    def _scalar_prepass(
-        self, pairs, from_date, to_date, time_travel
-    ) -> dict[tuple, dict]:
-        """Batch every per-feature scalar lookup of a multi-feature load
-        into one Spark job.
+    def _bounds_prepass(self, pairs, from_date, to_date) -> dict[tuple, tuple]:
+        """Default-range time bounds of every stored feature of a load
+        that omits ``from_date`` or ``to_date``, in one collect.
 
-        Two scalar kinds feed plan construction: default-range time bounds
-        (needed when from/to omitted) and the LOCF seed timestamp (the last
-        point at/before ``from_date`` — only meaningful when ``from_date``
-        is explicit: with it omitted the range starts at the data minimum,
-        which no seed can precede). Each feature contributes ONE pruned
-        scan of slim `(i, time, created_time)` rows; the scans union
-        (narrow — no per-branch query stage) into a single `groupBy(i)`
-        computing min/max/conditional-seed, so the whole prepass is one
-        shuffle and 2-3 scheduler jobs under AQE regardless of k.
-        Transform features are skipped (their leaves load recursively with
-        their own ranges).
+        Each feature contributes ONE scan of slim `(i, time)` rows; the
+        scans union (narrow — no per-branch query stage) into a single
+        `groupBy(i)` computing min/max, so the prepass is one shuffle and
+        2-3 scheduler jobs under AQE regardless of k. With both bounds
+        given it runs no job. Transform features are skipped (their leaves
+        load recursively with their own ranges).
         """
-        from .utils import parse_timedelta_interval
-
-        hints: dict[tuple, dict] = {}
-        branches = []
-        need: dict[int, tuple[bool, bool]] = {}
-        need_bounds = from_date is None or to_date is None
-        need_seed = from_date is not None
         metas = {p: self.catalog.get_feature(*p) for p in pairs}
         stored = [p for p in pairs if metas[p] is not None and not metas[p]["transform"]]
         # open() builds a fresh parquet file index per feature (~0.5s of
@@ -545,73 +573,29 @@ class FeatureStore:
                 list(
                     ex.map(lambda p: self._open_recorded(*p, metas[p]), stored)
                 )
-            # pick up any value types recorded by the warm pass
-            metas.update({p: self.catalog.get_feature(*p) for p in stored})
+        if from_date is not None and to_date is not None:
+            return {}
+        # empty dataset: bounds are definitionally null, and so are those
+        # of a feature whose scan matched no rows (no group below)
+        bounds: dict[tuple, tuple] = {p: (None, None) for p in stored}
+        branches = []
         for i, (nsp, nm) in enumerate(pairs):
-            meta = metas[nsp, nm]
-            if meta is None or meta["transform"]:
+            if (nsp, nm) not in bounds:
                 continue  # _load_feature raises / dispatches later
+            meta = self.catalog.get_feature(nsp, nm)  # value type may be new
             storage = self._storage(nsp)
             base = storage.open(nm, value_type=_value_type(meta))
-            scheme = meta["partition"]
-            hint: dict = {}
-            hints[(nsp, nm)] = hint
-            if base is None:
-                # empty dataset: bounds and seed are definitionally null
-                if need_bounds:
-                    hint["bounds"] = (None, None)
-                if need_seed:
-                    hint["seed"] = None
-                continue
-            if need_bounds:
-                sdf = storage.scan(nm, scheme=scheme, base=base)
-            else:
-                # seed-only: prune the scan to time <= from_date
-                sdf = storage.scan(nm, to_date=from_date, scheme=scheme, base=base)
-            branches.append(
-                sdf.select(
-                    F.lit(i).alias("__i"),
-                    F.col(ts.TIME_COL),
-                    F.col(ts.CREATED_COL),
-                )
-            )
-            need[i] = (need_bounds, need_seed)
+            if base is not None:
+                sdf = storage.scan(nm, scheme=meta["partition"], base=base)
+                branches.append(sdf.select(F.lit(i).alias("__i"), F.col(ts.TIME_COL)))
         if branches:
             allrows = branches[0]
             for b in branches[1:]:
                 allrows = allrows.unionByName(b)
-            aggs = [
-                F.min(ts.TIME_COL).alias("mn"),
-                F.max(ts.TIME_COL).alias("mx"),
-            ]
-            if need_seed:
-                seed_pred = F.col(ts.TIME_COL) <= F.lit(
-                    pd.Timestamp(from_date)
-                ).cast("timestamp")
-                if time_travel:
-                    seed_pred = seed_pred & (
-                        F.col(ts.CREATED_COL)
-                        <= F.col(ts.TIME_COL)
-                        + F.expr(parse_timedelta_interval(time_travel))
-                    )
-                aggs.append(
-                    F.max(F.when(seed_pred, F.col(ts.TIME_COL))).alias("seed")
-                )
+            aggs = [F.min(ts.TIME_COL).alias("mn"), F.max(ts.TIME_COL).alias("mx")]
             for row in allrows.groupBy("__i").agg(*aggs).collect():
-                hint = hints[pairs[row["__i"]]]
-                if need_bounds:
-                    hint["bounds"] = (row["mn"], row["mx"])
-                if need_seed:
-                    hint["seed"] = row["seed"]
-            # features whose scan matched no rows produce no group — their
-            # scalars are null
-            for i in need:
-                hint = hints[pairs[i]]
-                if need_bounds:
-                    hint.setdefault("bounds", (None, None))
-                if need_seed:
-                    hint.setdefault("seed", None)
-        return hints
+                bounds[pairs[row["__i"]]] = (row["mn"], row["mx"])
+        return bounds
 
     def _load_feature(
         self,
@@ -623,7 +607,7 @@ class FeatureStore:
         time_travel: str | None,
         callers: list[str],
         last_only: bool = False,
-        hint: dict | None = None,
+        bounds: tuple | None = None,
     ) -> DataFrame:
         """Single feature -> DataFrame(time, value). Dispatches transforms."""
         meta = self.catalog.get_feature(namespace, name)
@@ -657,8 +641,8 @@ class FeatureStore:
         # default range = data min/max (dask.py:150-155)
         eff_from, eff_to = from_date, to_date
         if eff_from is None or eff_to is None:
-            if hint is not None and "bounds" in hint:
-                mn, mx = hint["bounds"]
+            if bounds is not None:
+                mn, mx = bounds
             else:
                 mn, mx = ts.time_bounds(
                     storage.scan(name, scheme=scheme, base=base, value_type=vt)
@@ -677,45 +661,25 @@ class FeatureStore:
             if pd.Timestamp(eff_to) < pd.Timestamp(eff_from):
                 eff_to = eff_from  # clamp (dask.py:154-155)
 
-        # seed lookup (J3, dask.py:142-148): extend scan to the last point
-        # at/before from so LOCF has a value at the range boundary. Only
-        # when from_date is EXPLICIT: an omitted from_date defaults to the
-        # data minimum, which no seed row can precede — the lookup would
-        # be a guaranteed-no-op Spark job.
-        scan_from = eff_from
-        if from_date is not None:
-            if hint is not None and "seed" in hint:
-                seed_t = hint["seed"]
-            else:
-                seed_df = storage.scan(
-                    name, to_date=from_date, scheme=scheme, base=base, value_type=vt
-                )
-                if time_travel:
-                    seed_df = ts.time_travel(seed_df, time_travel)
-                seed_t = seed_df.agg(F.max(ts.TIME_COL).alias("t")).collect()[0]["t"]
-            if seed_t is not None:
-                scan_from = seed_t
-
         df = storage.scan(
-            name, from_date=scan_from, to_date=eff_to, scheme=scheme, base=base,
+            name, from_date=eff_from, to_date=eff_to, scheme=scheme, base=base,
             value_type=vt,
         )
         if time_travel:
             df = ts.time_travel(df, time_travel)
-        df = ts.dedup_latest(df)
-        df = df.drop(ts.CREATED_COL)
-
-        if freq is not None:
-            return ts.resample(df, eff_from, eff_to, freq)
+        if freq is None:
+            return ts.dedup_latest(df).drop(ts.CREATED_COL)
+        # seed (J3, dask.py:142-148): the last point at/before an EXPLICIT
+        # from_date, so LOCF has a value at the range boundary. An omitted
+        # from_date defaults to the data minimum, which no row precedes;
+        # without freq the reference slices the seed away (.loc[from:to]).
         if from_date is not None:
-            df = df.where(
-                F.col(ts.TIME_COL) >= F.lit(pd.Timestamp(eff_from)).cast("timestamp")
+            upto = storage.scan(
+                name, to_date=from_date, scheme=scheme, base=base, value_type=vt
             )
-        if to_date is not None:
-            df = df.where(
-                F.col(ts.TIME_COL) <= F.lit(pd.Timestamp(eff_to)).cast("timestamp")
-            )
-        return df
+            df = df.unionByName(_seed_rows(upto, time_travel))
+        df = ts.dedup_latest(df).drop(ts.CREATED_COL)
+        return ts.resample(df, eff_from, eff_to, freq)
 
     # ------------------------------------------------------------------
     # Transforms (U1–U4)

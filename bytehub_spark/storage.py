@@ -55,6 +55,15 @@ def partition_bound(value, scheme: str) -> str:
     return v.strftime("%Y-%m-%d") if scheme == "date" else v.strftime("%Y")
 
 
+def _rename(fs, src, dst) -> None:
+    """Hadoop ``FileSystem.rename`` reports most failures (missing source,
+    existing destination, a store that refuses) by returning False, not
+    by raising; a swap step that silently did nothing would leave the
+    next step deleting the only copy. Raise instead."""
+    if not fs.rename(src, dst):
+        raise StorageError(f"Failed to rename {src} to {dst}")
+
+
 # fsspec-style credential names (what the reference accepts in a
 # namespace's storage_options: _storage/dask.py:15-16, _model.py:87) →
 # s3a Hadoop conf suffixes. Unknown keys pass through verbatim when they
@@ -322,8 +331,8 @@ class SparkStorage:
                 # all files in this partition held zero rows — nothing was
                 # staged; leave the live dir untouched (pure-reorg invariant)
                 continue
-            fs.rename(live, retired)
-            fs.rename(staged, live)
+            _rename(fs, live, retired)
+            _rename(fs, staged, live)
             fs.delete(retired, True)
         fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
         fs.delete(jvm.org.apache.hadoop.fs.Path(retiring), True)
@@ -367,7 +376,7 @@ class SparkStorage:
                     fs.delete(st.getPath(), True)
                     cleaned += 1
                 else:
-                    fs.rename(st.getPath(), live)
+                    _rename(fs, st.getPath(), live)
                     restored += 1
             fs.delete(retiring, True)
         staging = jvm.org.apache.hadoop.fs.Path(self.feature_path(name) + "__compacting")

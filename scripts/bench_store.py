@@ -10,7 +10,8 @@ paths a production consumer hits:
 - load_resampled  1-month hourly LOCF grid
 - load_wide       K features aligned on one hourly grid (long-format
                   fast path: one dedup + one LOCF + one pivot)
-- last            point lookups across all features (concurrent jobs)
+- last            point lookups across all features (one batched job
+                  set: the K features share a value type)
 - time_travel     ranged read at created_time <= time - 1h
 
 Usage: python scripts/bench_store.py [n_rows] [k_features]
