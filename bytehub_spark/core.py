@@ -4,7 +4,8 @@ API parity target: /root/reference/bytehub/_base.py:61-260 (method names &
 semantics) and core.py (CoreFeatureStore behavior). The read path builds ONE
 lazy DataFrame plan — scan (Catalyst pushdown + Hive partition pruning) →
 time-travel predicate → bitemporal dedup window → resample/align LOCF —
-executed only at the caller's action.
+executed only at the caller's action. A ranged load of stored features of
+one value type shuffles its rows once (``_load_long_format``).
 
 Query lifecycle parity map (SURVEY.md §3.1):
   seed lookup        core._seed_rows (in-plan)    [dask.py:142-148]
@@ -12,8 +13,12 @@ Query lifecycle parity map (SURVEY.md §3.1):
   default range      core._load_feature           [dask.py:150-155]
   time travel        timeseries.time_travel       [dask.py:119-122]
   dedup              timeseries.dedup_latest      [dask.py:156-165]
-  resample/slice     timeseries.resample          [dask.py:169-191]
-  alias + align      core.load_dataframe          [core.py:275-276]
+                     (inside resample_long / align_long when gridded
+                     or aligned)
+  resample/slice     timeseries.resample_long     [dask.py:169-191]
+  alias + align      core.load_dataframe →        [core.py:275-276]
+                     timeseries.align_long (one value type, explicit
+                     range) or timeseries.align (generic path)
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ from .exceptions import (
     ValidationError,
 )
 from .storage import SparkStorage
+from .timeseries import _qcol
 from .utils import (
     deserialize_fn,
     join_name,
@@ -79,9 +85,11 @@ def _seed_rows(upto: DataFrame, time_travel: str | None, keys=()) -> DataFrame:
     )
 
 
-def _qcol(name: str):
-    """Column ref safe for names containing '.' (valid in feature names)."""
-    return F.col(f"`{name}`")
+def _grid(df: DataFrame, from_date, to_date, freq: str) -> DataFrame:
+    """One series' (time, created_time, value) rows, all versions, on the
+    LOCF grid: ``ts.resample_long`` with k = 1, as (time, value)."""
+    tagged = df.withColumn(ts.SERIES_COL, F.lit(ts.VALUE_COL))
+    return ts.resample_long(tagged, [ts.VALUE_COL], from_date, to_date, freq)
 
 
 class FeatureStore:
@@ -211,13 +219,21 @@ class FeatureStore:
         Returns a LAZY Spark DataFrame ordered by time.
         """
         pairs = unpack_feature_list(features)
+        return self._load(pairs, self._metas(pairs), from_date, to_date, freq, time_travel)
+
+    def _metas(self, pairs) -> dict[tuple, dict | None]:
+        """The catalog entry of every feature of a load: one lookup each,
+        passed down to every later step of the load."""
+        return {p: self.catalog.get_feature(*p) for p in dict.fromkeys(pairs)}
+
+    def _load(self, pairs, metas, from_date, to_date, freq, time_travel) -> DataFrame:
         # With from_date or to_date omitted: ONE Spark job for every
         # feature's default-range time bounds instead of one per feature
         # (a k-branch union collected once). With both given the build
         # runs no Spark job at all; the LOCF seed is part of the plan.
-        bounds = self._bounds_prepass(pairs, from_date, to_date)
+        bounds = self._bounds_prepass(pairs, metas, from_date, to_date)
 
-        fast = self._load_long_format(pairs, from_date, to_date, freq, time_travel)
+        fast = self._load_long_format(pairs, metas, from_date, to_date, freq, time_travel)
         if fast is not None:
             return fast
 
@@ -225,7 +241,7 @@ class FeatureStore:
             nsp, nm = pair
             sdf = self._load_feature(
                 nsp, nm, from_date, to_date, freq, time_travel, callers=[],
-                bounds=bounds.get(pair),
+                bounds=bounds.get(pair), meta=metas[pair],
             )
             return sdf.select(
                 ts.TIME_COL, F.col(ts.VALUE_COL).alias(join_name(nsp, nm))
@@ -249,48 +265,46 @@ class FeatureStore:
         return out.orderBy(ts.TIME_COL)
 
     def _load_long_format(
-        self, pairs, from_date, to_date, freq, time_travel
+        self, pairs, metas, from_date, to_date, freq, time_travel
     ) -> DataFrame | None:
-        """Multi-feature ranged resample as ONE long-format plan.
+        """A ranged load of stored features of one value type as ONE
+        long-format plan: gridded (``freq``, k >= 1) or aligned (no
+        ``freq``, k >= 2).
 
         The generic path builds k independent pipelines (scan → dedup
-        window → two-pass LOCF each) and aligns them — correct for every
-        argument shape, but plan construction is O(k) driver work (~0.6s/
-        feature) and execution runs ~4 stages per feature. When every
-        feature is a stored series of the SAME value type and the caller
-        gave an explicit [from, to] + freq (the training-retrieval hot
-        path), the whole load collapses to:
+        window → LOCF each), aligns them with a fold of outer joins and
+        sorts the result: per feature a dedup exchange, then a two-pass
+        LOCF (bucket seeds, a single-partition prefix, a broadcast) and a
+        range exchange with its sampling job for the final orderBy. When
+        the caller gave an explicit [from, to] and every feature is a
+        stored series of the SAME value type, the whole load is:
 
             union of k slim scans (tagged with the series name)
               → one time-travel predicate
               ∪ one seed aggregate  groupBy(series) over the k scans
                                     pruned to time <= from  [_seed_rows]
-              → one dedup window  partitionBy(series, time)
-              → one LOCF resample partitionBy(series)   [per-key window]
-              → one pivot on time
+                                    (with freq only)
+              → ts.resample_long (freq): one exchange on the grid cell,
+                    dedup + pivot in place, then the answer-sized fill
+              → ts.align_long (no freq): one range exchange on time
+                    buckets, dedup + pivot + fill in place
 
-        Four shuffles TOTAL regardless of k (the seed aggregate's carries
-        one partial row per feature per scan task), the LOCF is an
-        ordinary per-key window (parallel across features — no two-pass
-        bucketing needed), and building the plan launches no Spark job.
+        Each shuffles its rows once, on a key that already orders the
+        answer, regardless of k (the seed aggregate's exchange carries
+        one partial row per feature per scan task), and building the plan
+        launches no Spark job. Measured on the retrieve benchmark (4
+        shallow features, 1 deep): resampled 9 → 4 Spark jobs, wide 8 → 4,
+        align 13 → 5.
 
-        Measured at 13 features × 35d hourly grid on local[32]: 2.1s vs
-        7.5s for the generic path (plan construction alone drops 6.5→1.6s).
-        The no-freq shapes are NOT routed here: align() already pivots at
-        k>=8, and its per-feature dedup windows execute small parallel
-        shuffles that beat one big union dedup at bench scale — measured
-        wash-or-worse, so the generic path keeps them.
-
-        Returns None when preconditions don't hold (no freq, open-ended
-        range, transforms, mixed/unknown value types) — caller falls back
-        to the generic per-feature path.
+        Returns None when preconditions don't hold (open-ended range, a
+        single feature without freq, transforms, mixed/unknown value
+        types) — caller falls back to the generic per-feature path.
         """
-        if len(pairs) < 2 or freq is None:
-            return None
         if from_date is None or to_date is None:
             # per-feature default grids (each its own min/max) — generic path
             return None
-        metas = {p: self.catalog.get_feature(*p) for p in pairs}
+        if freq is None and len(pairs) < 2:
+            return None  # one ranged series: nothing to align
         if any(m is None or m["transform"] for m in metas.values()):
             return None
         vts = {(_value_type(m) or T.DataType()).json() for m in metas.values()}
@@ -318,7 +332,7 @@ class FeatureStore:
                 )
                 branches.append(
                     sdf.select(
-                        F.lit(full).alias("__series"),
+                        F.lit(full).alias(ts.SERIES_COL),
                         F.col(ts.TIME_COL),
                         F.col(ts.CREATED_COL),
                         F.col(ts.VALUE_COL),
@@ -332,32 +346,12 @@ class FeatureStore:
         ranged = tagged(from_date, to_date)
         if time_travel:
             ranged = ts.time_travel(ranged, time_travel)
-        seeds = _seed_rows(tagged(None, from_date), time_travel, keys=["__series"])
-        deduped = ts.dedup_latest(
-            ranged.unionByName(seeds), partition_by=["__series"]
-        ).drop(ts.CREATED_COL)
-
-        # keys_df = ALL requested series (an empty feature still gets
-        # grid rows with null values — reference semantics for empty+freq)
-        keys = self.spark.createDataFrame(
-            [(n,) for n in names],
-            T.StructType([T.StructField("__series", T.StringType())]),
+        if freq is None:
+            return ts.align_long(ranged, names, from_date, to_date)
+        seeds = _seed_rows(tagged(None, from_date), time_travel, keys=[ts.SERIES_COL])
+        return ts.resample_long(
+            ranged.unionByName(seeds), names, from_date, to_date, freq
         )
-        long_df = ts.resample(
-            deduped,
-            from_date,
-            to_date,
-            freq,
-            value_cols=[ts.VALUE_COL],
-            partition_by=["__series"],
-            keys_df=keys,
-        )
-        out = (
-            long_df.groupBy(ts.TIME_COL)
-            .pivot("__series", names)
-            .agg(F.first(ts.VALUE_COL))
-        )
-        return out.orderBy(ts.TIME_COL)
 
     @staticmethod
     def _range_hint(from_date, to_date, bounds: dict[tuple, tuple]):
@@ -378,21 +372,29 @@ class FeatureStore:
             hi = lo  # clamp, mirroring the per-feature to<from clamp
         return (lo, hi)
 
-    def load_pandas(self, features: Any, **kwargs) -> pd.DataFrame:
+    def load_pandas(
+        self,
+        features: Any,
+        from_date=None,
+        to_date=None,
+        freq: str | None = None,
+        time_travel: str | None = None,
+    ) -> pd.DataFrame:
         """Reference-shaped result: pandas frame indexed by time; serialized
         feature values decoded back to Python objects."""
         pairs = unpack_feature_list(features)
-        sdf = self.load_dataframe(features, **kwargs)
-        pdf = sdf.toPandas()
+        metas = self._metas(pairs)
+        pdf = self._load(
+            pairs, metas, from_date, to_date, freq, time_travel
+        ).toPandas()
         if len(pdf):
             pdf = pdf.set_index(ts.TIME_COL)
         else:
             pdf = pdf.set_index(ts.TIME_COL)
         pdf.index.name = ts.TIME_COL
-        for nsp, nm in pairs:
-            meta = self.catalog.get_feature(nsp, nm)
+        for pair, meta in metas.items():
             if meta and meta["serialized"]:
-                col = join_name(nsp, nm)
+                col = join_name(*pair)
                 pdf[col] = pdf[col].map(
                     lambda s: json.loads(s) if isinstance(s, str) else s
                 )
@@ -518,14 +520,14 @@ class FeatureStore:
         """open() with the catalog-recorded value type; when the catalog
         predates the dataset (rebuilt catalog over existing data), record
         the inferred type so every later read skips inference and the
-        long-format fast path can engage — self-healing bookkeeping."""
+        long-format fast path can engage — self-healing bookkeeping. The
+        recorded type is also written into ``meta``, the load's copy."""
         storage = self._storage(nsp)
         vt = _value_type(meta)
         base = storage.open(nm, value_type=vt)
         if vt is None and base is not None and ts.VALUE_COL in base.columns:
-            self.catalog.set_value_schema(
-                nsp, nm, base.schema[ts.VALUE_COL].dataType.json()
-            )
+            meta["value_schema"] = base.schema[ts.VALUE_COL].dataType.json()
+            self.catalog.set_value_schema(nsp, nm, meta["value_schema"])
         return base
 
     def _storage(self, namespace: str) -> SparkStorage:
@@ -549,7 +551,7 @@ class FeatureStore:
             )
         return st
 
-    def _bounds_prepass(self, pairs, from_date, to_date) -> dict[tuple, tuple]:
+    def _bounds_prepass(self, pairs, metas, from_date, to_date) -> dict[tuple, tuple]:
         """Default-range time bounds of every stored feature of a load
         that omits ``from_date`` or ``to_date``, in one collect.
 
@@ -560,8 +562,7 @@ class FeatureStore:
         given it runs no job. Transform features are skipped (their leaves
         load recursively with their own ranges).
         """
-        metas = {p: self.catalog.get_feature(*p) for p in pairs}
-        stored = [p for p in pairs if metas[p] is not None and not metas[p]["transform"]]
+        stored = [p for p in metas if metas[p] is not None and not metas[p]["transform"]]
         # open() builds a fresh parquet file index per feature (~0.5s of
         # driver+listing latency each); warm all memos concurrently so k
         # features pay ~max not ~sum. Spark handles concurrent job
@@ -582,11 +583,10 @@ class FeatureStore:
         for i, (nsp, nm) in enumerate(pairs):
             if (nsp, nm) not in bounds:
                 continue  # _load_feature raises / dispatches later
-            meta = self.catalog.get_feature(nsp, nm)  # value type may be new
-            storage = self._storage(nsp)
-            base = storage.open(nm, value_type=_value_type(meta))
+            meta = metas[nsp, nm]
+            base = self._open_recorded(nsp, nm, meta)
             if base is not None:
-                sdf = storage.scan(nm, scheme=meta["partition"], base=base)
+                sdf = self._storage(nsp).scan(nm, scheme=meta["partition"], base=base)
                 branches.append(sdf.select(F.lit(i).alias("__i"), F.col(ts.TIME_COL)))
         if branches:
             allrows = branches[0]
@@ -608,9 +608,11 @@ class FeatureStore:
         callers: list[str],
         last_only: bool = False,
         bounds: tuple | None = None,
+        meta: dict | None = None,
     ) -> DataFrame:
-        """Single feature -> DataFrame(time, value). Dispatches transforms."""
-        meta = self.catalog.get_feature(namespace, name)
+        """Single feature -> DataFrame(time, value). Dispatches transforms.
+        ``meta``: the load's catalog entry, when the caller has it."""
+        meta = meta or self.catalog.get_feature(namespace, name)
         if meta is None:
             raise MissingFeatureException(f"Feature {namespace}/{name} does not exist")
         full = join_name(namespace, name)
@@ -655,7 +657,7 @@ class FeatureStore:
             # feature has no data at all
             empty = storage.scan(name, scheme=scheme, base=base, value_type=vt)
             if freq is not None and from_date is not None and to_date is not None:
-                return ts.resample(empty, from_date, to_date, freq)
+                return _grid(empty, from_date, to_date, freq)
             return empty
         if eff_to is not None and eff_from is not None:
             if pd.Timestamp(eff_to) < pd.Timestamp(eff_from):
@@ -678,8 +680,7 @@ class FeatureStore:
                 name, to_date=from_date, scheme=scheme, base=base, value_type=vt
             )
             df = df.unionByName(_seed_rows(upto, time_travel))
-        df = ts.dedup_latest(df).drop(ts.CREATED_COL)
-        return ts.resample(df, eff_from, eff_to, freq)
+        return _grid(df, eff_from, eff_to, freq)
 
     # ------------------------------------------------------------------
     # Transforms (U1–U4)

@@ -28,6 +28,28 @@ Both passes are declarative DataFrame plans — no driver collect of seeds,
 no pandas round-trip (map/struct payloads stay JVM-side). With partition
 keys (long format, one series per key) locf uses an ordinary per-key
 window, which parallelizes across keys.
+
+Store read plan. The feature store's gridded and aligned loads take k
+tagged long-format series (``__series``, time, created_time, value) and
+shuffle their rows ONCE, on a key that already orders the answer:
+
+- ``resample_long`` (freq set): each row gets an integer grid cell (0 at
+  or before from_date, else ``ceil((time - from) / step)`` in µs; rows
+  past the last grid point are dropped). The rows, the LOCF seeds and one
+  null row per cell meet in ``repartition(__cell)``; the dedup window and
+  ``groupBy(__cell).pivot(__series)`` (each cell's newest non-null value
+  per series) run in place. The pivoted frame has one row per grid point,
+  so it is answer-sized: it is range-partitioned on
+  ``__pid = __cell // DEFAULT_ROWS_PER_RANGE`` and filled by the two-pass
+  buckets above. ``DEFAULT_ROWS_PER_RANGE`` bounds the rows one fill task
+  holds; a grid of at most that many points is one bucket, where Spark
+  runs no range-sampling job and pass 2 is skipped. The final
+  ``orderBy(__pid, __cell)`` is satisfied by that partitioning and costs
+  only a local sort.
+- ``align_long`` (no freq): rows get arithmetic time buckets ``__pid``
+  over the known range, go through one ``repartitionByRange(__pid)``,
+  and the dedup window, the ``groupBy(__pid, time)`` pivot, the two-pass
+  fill and ``orderBy(__pid, time)`` all run in place.
 """
 
 from __future__ import annotations
@@ -37,16 +59,29 @@ from typing import Iterable, Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .utils import freq_to_interval, parse_timedelta_interval
+from .utils import freq_to_interval, parse_freq, parse_timedelta_interval
 
 TIME_COL = "time"
 CREATED_COL = "created_time"
 VALUE_COL = "value"
+SERIES_COL = "__series"  # series tag of the long-format store loads
 
-# Rows per range partition in the two-pass LOCF; at 100 TB this is the knob
-# that sizes tasks (set so one partition's arrow batches fit in executor RAM).
+# Rows per bucket of the answer-sized fill in ``resample_long``: the knob
+# that sizes its tasks (set so one bucket's rows fit in executor RAM).
+# ``locf``'s ``rows_per_range`` carries the same default but is unused.
 DEFAULT_ROWS_PER_RANGE = 2_000_000
+
+
+def _qcol(name: str) -> Column:
+    """Column ref safe for names containing '.' (valid in feature names)."""
+    return F.col(f"`{name}`")
+
+
+def _micros(t) -> int:
+    """µs since the epoch of ``t`` as Spark reads ``F.lit(pd.Timestamp(t))``."""
+    return T.TimestampType().toInternal(pd.Timestamp(t).to_pydatetime())
 
 
 # ---------------------------------------------------------------------------
@@ -118,6 +153,8 @@ def locf(
     single-task global window.
     ``order_extra`` breaks ordering ties within equal timestamps (e.g. the
     grid-marker column in ``resample``: data rows sort before grid rows).
+    ``rows_per_range`` is accepted but unused: the two-pass fill makes
+    ``spark.sql.shuffle.partitions`` buckets, whatever the row count.
     ``range_hint=(t0, t1)``: when the caller already knows the time span
     (resample does — it built the grid), bucket bounds are interpolated
     from it instead of running an approxQuantile job. One less Spark job;
@@ -175,8 +212,17 @@ def _locf_two_pass(
     for b in bounds:
         pid_expr = pid_expr + (F.unix_micros(F.col(time_col)) > F.lit(b)).cast("int")
 
-    parted = df.withColumn("__pid", pid_expr)
+    return _fill_buckets(df.withColumn("__pid", pid_expr), cols, sort_cols).drop(
+        "__pid"
+    )
 
+
+def _fill_buckets(
+    parted: DataFrame, cols: Sequence[str], sort_cols: Sequence[str], carry=True
+) -> DataFrame:
+    """Forward-fill ``cols`` of rows bucketed by ``__pid`` (buckets ordered
+    like ``sort_cols``); keeps ``__pid``. Without ``carry`` only pass 1
+    runs: right when there is one bucket."""
     # pass 1 (declarative, no driver collect): fill WITHIN each bucket via a
     # per-bucket window — buckets run in parallel, each a bounded task.
     w_in = (
@@ -186,7 +232,9 @@ def _locf_two_pass(
     )
     filled = parted
     for c in cols:
-        filled = filled.withColumn(c, F.last(c, ignorenulls=True).over(w_in))
+        filled = filled.withColumn(c, F.last(_qcol(c), ignorenulls=True).over(w_in))
+    if not carry:
+        return filled
 
     # pass 2: seed each bucket with the last non-null value of PRIOR buckets.
     # Per-bucket last non-nulls (max_by ignores rows whose ordering key is
@@ -197,21 +245,25 @@ def _locf_two_pass(
     order_expr = F.struct(*[F.col(c) for c in sort_cols])
     seeds = parted.groupBy("__pid").agg(
         *[
-            F.max_by(F.col(c), F.when(F.col(c).isNotNull(), order_expr)).alias(c)
+            F.max_by(_qcol(c), F.when(_qcol(c).isNotNull(), order_expr)).alias(c)
             for c in cols
         ]
     )
     w_prev = Window.orderBy("__pid").rowsBetween(
         Window.unboundedPreceding, -1
     )  # single-task window, but over <= num_parts rows
+    seed_cols = [f"__seed_{i}" for i in range(len(cols))]
     prefix = seeds.select(
         "__pid",
-        *[F.last(c, ignorenulls=True).over(w_prev).alias(f"__seed_{c}") for c in cols],
+        *[
+            F.last(_qcol(c), ignorenulls=True).over(w_prev).alias(s)
+            for c, s in zip(cols, seed_cols)
+        ],
     )
     out = filled.join(F.broadcast(prefix), "__pid", "left")
-    for c in cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__seed_{c}")))
-    return out.drop("__pid", *[f"__seed_{c}" for c in cols])
+    for c, s in zip(cols, seed_cols):
+        out = out.withColumn(c, F.coalesce(_qcol(c), F.col(s)))
+    return out.drop(*seed_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -246,7 +298,6 @@ def resample(
     value_cols: Sequence[str] | None = None,
     time_col: str = TIME_COL,
     partition_by: Sequence[str] = (),
-    keys_df: DataFrame | None = None,
 ) -> DataFrame:
     """pandas ``resample(freq).ffill()`` semantics on a (deduped) series.
 
@@ -254,9 +305,8 @@ def resample(
     exactly at g wins). Implemented as union(data, grid) + LOCF ordered by
     (time, is_grid) + filter to grid rows — one range shuffle, no self-join.
 
-    With ``partition_by`` (long format, e.g. per user_id), ``keys_df``
-    supplies the key set (default: distinct keys of df) and the grid is
-    cross-joined onto the keys; LOCF runs per key in parallel.
+    With ``partition_by`` (long format, e.g. per user_id), the grid is
+    cross-joined onto the distinct keys of df; LOCF runs per key in parallel.
     """
     spark = df.sparkSession
     value_cols = list(value_cols) if value_cols is not None else [
@@ -264,8 +314,7 @@ def resample(
     ]
     grid = time_grid(spark, from_date, to_date, freq)
     if partition_by:
-        keys = keys_df if keys_df is not None else df.select(*partition_by).distinct()
-        grid = keys.crossJoin(grid)
+        grid = df.select(*partition_by).distinct().crossJoin(grid)
 
     data = df.select(
         *partition_by, time_col, F.lit(0).alias("__grid"), *value_cols
@@ -286,6 +335,54 @@ def resample(
         range_hint=(from_date, to_date),
     )
     return filled.where(F.col("__grid") == 1).drop("__grid")
+
+
+def resample_long(
+    df: DataFrame, names: Sequence[str], from_date, to_date, freq: str
+) -> DataFrame:
+    """``resample`` of k tagged series at once, as one wide frame:
+    ``time`` + one column per entry of ``names``, ordered by time.
+
+    ``df`` holds long-format rows (``__series``, time, created_time,
+    value), all versions: the ranged rows plus, per series, any seed at
+    or before ``from_date``. Grid point g takes each series' latest
+    non-null value with time <= g, in its newest version per time (a time
+    whose newest version is null carries the previous time's value, as
+    ``resample``'s LOCF does). One exchange brings the rows to their grid
+    cell; see "Store read plan" in the module docstring.
+    """
+    spark = df.sparkSession
+    step = parse_freq(freq)[2] * 1_000_000
+    t0 = _micros(from_date)
+    last = max(0, (_micros(to_date) - t0) // step)  # cells 0..last
+    per = DEFAULT_ROWS_PER_RANGE
+    n = last // per + 1
+    cell = F.greatest(
+        F.lit(0), F.expr(f"(unix_micros({TIME_COL}) - {t0} + {step - 1}) div {step}")
+    )
+    rows = df.select(SERIES_COL, TIME_COL, CREATED_COL, VALUE_COL, cell.alias("__cell"))
+    grid = spark.range(0, last + 1, 1, n).select(
+        F.lit(None).cast("string").alias(SERIES_COL),
+        F.lit(None).cast("timestamp").alias(TIME_COL),
+        F.lit(None).cast("timestamp").alias(CREATED_COL),
+        F.lit(None).cast(df.schema[VALUE_COL].dataType).alias(VALUE_COL),
+        F.col("id").alias("__cell"),
+    )
+    cells = rows.where(F.col("__cell") <= last).unionByName(grid).repartition("__cell")
+    value = F.col(VALUE_COL)
+    wide = (
+        dedup_latest(cells, partition_by=["__cell", SERIES_COL])
+        .groupBy("__cell")
+        .pivot(SERIES_COL, list(names))
+        .agg(F.max_by(value, F.when(value.isNotNull(), F.col(TIME_COL))))
+        .withColumn("__pid", F.expr(f"__cell div {per}"))
+        .repartitionByRange(n, "__pid")
+    )
+    filled = _fill_buckets(wide, names, ["__cell"], carry=n > 1)
+    return filled.orderBy("__pid", "__cell").select(
+        F.timestamp_micros(F.lit(t0) + F.col("__cell") * step).alias(TIME_COL),
+        *[_qcol(c) for c in names],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -350,6 +447,35 @@ def align(
     if ffill:
         out = locf(out, value_cols, time_col=time_col, range_hint=range_hint)
     return out
+
+
+def align_long(df: DataFrame, names: Sequence[str], from_date, to_date) -> DataFrame:
+    """``align`` of k tagged series at once: ``time`` (the union of the
+    series' times in [from_date, to_date]) + one column per entry of
+    ``names``, each carried forward, ordered by time.
+
+    ``df`` holds long-format rows (``__series``, time, created_time,
+    value), all versions, within the range. One range exchange on
+    arithmetic time buckets; see "Store read plan" in the module docstring.
+    """
+    num_parts = max(1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")))
+    t0 = _micros(from_date)
+    step = max(1, (_micros(to_date) - t0) // num_parts)
+    # the bucket of ``locf``'s range_hint bounds t0 + i*step, i = 1..P-1
+    pid = F.expr(
+        f"least({num_parts - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
+    )
+    wide = (
+        dedup_latest(
+            df.withColumn("__pid", pid).repartitionByRange("__pid"),
+            partition_by=["__pid", SERIES_COL],
+        )
+        .groupBy("__pid", TIME_COL)
+        .pivot(SERIES_COL, list(names))
+        .agg(F.first(VALUE_COL))
+    )
+    filled = _fill_buckets(wide, names, [TIME_COL], carry=num_parts > 1)
+    return filled.orderBy("__pid", TIME_COL).select(TIME_COL, *[_qcol(c) for c in names])
 
 
 # ---------------------------------------------------------------------------

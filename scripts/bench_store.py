@@ -9,10 +9,14 @@ paths a production consumer hits:
 - load_ranged     1-month slice of the deep feature (partition pruning)
 - load_resampled  1-month hourly LOCF grid
 - load_wide       K features aligned on one hourly grid (long-format
-                  fast path: one dedup + one LOCF + one pivot)
+                  plan: one exchange on the grid cell, dedup + pivot in
+                  place, then the answer-sized fill)
 - last            point lookups across all features (one batched job
                   set: the K features share a value type)
 - time_travel     ranged read at created_time <= time - 1h
+
+Next to each timing, ``spark`` records the Spark jobs and tasks of one
+call of that op (its last repetition), read from Spark's status tracker.
 
 Usage: python scripts/bench_store.py [n_rows] [k_features]
 Prints ONE JSON line.
@@ -36,6 +40,25 @@ from bytehub_spark import FeatureStore
 from bytehub_spark.session import get_spark
 
 
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _spark_work(spark, first_job: int) -> dict:
+    """Jobs and tasks run of the Spark jobs from ``first_job`` on, once
+    the listener bus has caught up."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    status = spark.sparkContext.statusTracker()
+    jobs = range(first_job, _next_job(spark))
+    tasks = 0
+    for j in jobs:
+        job = status.getJobInfo(j)
+        for s in job.stageIds if job else ():
+            stage = status.getStageInfo(s)
+            tasks += stage.numCompletedTasks if stage else 0
+    return {"jobs": len(jobs), "tasks": tasks}
+
+
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 16
@@ -45,6 +68,7 @@ def main() -> None:
     fs.create_namespace("bench", url=os.path.join(work, "store"))
 
     timings: dict[str, float] = {}
+    work_per_op: dict[str, dict] = {}
 
     # deep feature: n_rows spread over ~2 years (≈730 daily partitions)
     fs.create_feature("bench/deep", partition="date")
@@ -57,9 +81,10 @@ def main() -> None:
             "cast(id % 1000 as double) / 7.0 as value",
         )
     )
-    t0 = time.time()
+    t0, j0 = time.time(), _next_job(spark)
     fs.save_dataframe(deep, "bench/deep")
     timings["save_rows_per_sec"] = round(n_rows / (time.time() - t0), 0)
+    work_per_op["save"] = _spark_work(spark, j0)
 
     # K shallow features sharing a weekly-ish cadence
     idx = pd.date_range("2022-01-01", "2023-12-31", freq="6h")
@@ -74,9 +99,10 @@ def main() -> None:
     def timed(label, fn, reps=2):
         best = float("inf")
         for _ in range(reps):
-            t0 = time.time()
+            t0, j0 = time.time(), _next_job(spark)
             fn()
             best = min(best, time.time() - t0)
+            work_per_op[label] = _spark_work(spark, j0)
         timings[label] = round(best, 2)
 
     noop = lambda df: df.write.format("noop").mode("overwrite").save()
@@ -126,6 +152,7 @@ def main() -> None:
                 "n_rows_deep": n_rows,
                 "k_features": k,
                 "timings": timings,
+                "spark": work_per_op,
             }
         )
     )

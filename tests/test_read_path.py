@@ -1,8 +1,9 @@
 """Store read path: building a load with explicit from/to launches no Spark
-job (the LOCF seed is part of the plan), the in-plan seed matches
-hand-computed grids on both the long-format fast path and the generic
-per-feature path, last() runs one collect per stored value type, and a
-refused Hadoop rename fails loudly."""
+job (the LOCF seed is part of the plan), running a gridded or aligned load
+costs a bounded number of jobs (one keyed exchange), the long-format plans
+match hand-computed answers and the generic per-feature path, a load looks
+each feature up in the catalog once, last() runs one collect per stored
+value type, and a refused Hadoop rename fails loudly."""
 
 import json
 
@@ -69,8 +70,8 @@ def test_rename_passes_when_hadoop_returns_true():
 # ---------------------------------------------------------------------------
 
 
-def _three_doubles(fs):
-    names = [f"test/f{i}" for i in range(3)]
+def _doubles(fs, k=3):
+    names = [f"test/f{i}" for i in range(k)]
     idx = pd.date_range("2024-01-01", periods=40, freq="9h")
     for i, name in enumerate(names):
         fs.create_feature(name, partition="date")
@@ -89,7 +90,7 @@ RANGE = dict(from_date="2024-01-05", to_date="2024-01-10")
     ["ranged", "time_travel", "freq", "wide_fast_path", "generic_align"],
 )
 def test_building_an_explicit_range_load_runs_no_job(fs, spark, monkeypatch, shape):
-    names = _three_doubles(fs)
+    names = _doubles(fs)
     feats, kw = {
         "ranged": (names[0], {}),
         "time_travel": (names[0], {"time_travel": "1d"}),
@@ -119,7 +120,7 @@ def test_building_an_explicit_range_load_runs_no_job(fs, spark, monkeypatch, sha
 
 
 def test_last_is_one_collect_per_value_type(fs, spark, monkeypatch):
-    names = _three_doubles(fs)
+    names = _doubles(fs)
     _save(fs, "test/s1", [("2024-01-02", "2024-01-02", "x")])
     _save(fs, "test/s2", [("2024-01-03", "2024-01-03", "y")])
     frame_cls = type(spark.range(1))
@@ -334,3 +335,227 @@ def test_last_matches_per_feature_last_row(fs):
     assert got["test/d"] == 4.0 and got["test/t"] == 8.0 and got["test/e"] is None
     assert got["test/s"] == {"a": [2, 3]} and got["test/d2"] == 9.0
     assert _plain(got["test/st"]) == {"x": 2.0, "y": "q"}
+
+
+# ---------------------------------------------------------------------------
+# execution jobs: one keyed exchange per gridded or aligned load
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "shape,limit", [("resampled", 4), ("wide", 4), ("align", 5)]
+)
+def test_execution_jobs_per_load(fs, spark, shape, limit):
+    names = _doubles(fs, k=4)
+    feats, kw = {
+        "resampled": (names[0], {"freq": "1h"}),
+        "wide": (names, {"freq": "1h"}),
+        "align": (names, {}),
+    }[shape]
+    load = lambda: fs.load_dataframe(feats, **RANGE, **kw)  # noqa: E731
+    load().toPandas()  # open() memos warm, as in a steady read loop
+    df = load()
+    j0 = _next_job(spark)
+    df.toPandas()
+    jobs = _next_job(spark) - j0
+    assert 0 < jobs <= limit, f"{shape}: {jobs} Spark jobs to run the load"
+
+
+# ---------------------------------------------------------------------------
+# long-format plans == hand-computed answers == the generic path
+# ---------------------------------------------------------------------------
+
+
+def _both(fs, monkeypatch, feats, **kw):
+    """(long-format answer, whether that path engaged, generic answer);
+    the answers are pandas frames indexed by time."""
+    engaged = []
+    orig = FeatureStore._load_long_format
+
+    def spy(self, *a, **k):
+        out = orig(self, *a, **k)
+        engaged.append(out is not None)
+        return out
+
+    monkeypatch.setattr(FeatureStore, "_load_long_format", spy)
+    fast = fs.load_dataframe(feats, **kw).toPandas().set_index("time")
+    monkeypatch.setattr(FeatureStore, "_load_long_format", lambda self, *a, **k: None)
+    slow = fs.load_dataframe(feats, **kw).toPandas().set_index("time")
+    monkeypatch.undo()
+    return fast, engaged == [True], slow
+
+
+def test_null_newest_version_carries_previous_time(fs, monkeypatch):
+    # 02:00's newest version is null: the grid and the union axis carry
+    # 01:30's value (same grid cell), not the older non-null version of 02:00
+    _save(fs, "test/a", [
+        ("2024-02-20 01:00", "2024-02-20 01:00", 1.0),
+        ("2024-02-20 01:30", "2024-02-20 01:30", 1.5),
+        ("2024-02-20 02:00", "2024-02-20 02:00", 2.0),
+        ("2024-02-20 02:00", "2024-02-20 05:00", None),
+        ("2024-02-20 03:30", "2024-02-20 03:30", 4.0),
+    ])
+    _save(fs, "test/b", [("2024-02-20 02:30", "2024-02-20 02:30", 9.0)])
+    rng = dict(from_date="2024-02-20 00:00", to_date="2024-02-20 04:00")
+    grid, engaged, generic = _both(fs, monkeypatch, ["test/a", "test/b"], freq="1h", **rng)
+    assert engaged
+    nan = float("nan")
+    want = pd.DataFrame(
+        {"test/a": [nan, 1.0, 1.5, 1.5, 4.0], "test/b": [nan, nan, nan, 9.0, 9.0]},
+        index=pd.date_range("2024-02-20", periods=5, freq="1h", name="time"),
+    )
+    pd.testing.assert_frame_equal(grid, want, check_freq=False)
+    pd.testing.assert_frame_equal(generic, want, check_freq=False)
+    aligned, engaged, generic = _both(fs, monkeypatch, ["test/a", "test/b"], **rng)
+    assert engaged
+    want = pd.DataFrame(
+        {"test/a": [1.0, 1.5, 1.5, 1.5, 4.0], "test/b": [nan, nan, nan, 9.0, 9.0]},
+        index=pd.DatetimeIndex(
+            ["2024-02-20 01:00", "2024-02-20 01:30", "2024-02-20 02:00",
+             "2024-02-20 02:30", "2024-02-20 03:30"], name="time",
+        ),
+    )
+    pd.testing.assert_frame_equal(aligned, want)
+    pd.testing.assert_frame_equal(generic, want)
+
+
+def test_row_at_from_on_the_aligned_plan(fs, monkeypatch):
+    # without freq the row at from_date is on the axis, the seed before it
+    # is not (the gridded plans are pinned by the at_from seed case)
+    _at_from(fs)
+    aligned, engaged, generic = _both(
+        fs, monkeypatch, ["test/a", "test/b"],
+        from_date=LOAD["from_date"], to_date=LOAD["to_date"],
+    )
+    assert engaged
+    assert list(aligned.index) == [T("2024-02-20 00:00")]
+    assert list(aligned["test/a"]) == [5.0] and aligned["test/b"].isna().all()
+    pd.testing.assert_frame_equal(aligned, generic)
+
+
+@pytest.mark.parametrize("freq", ["1h", None])
+def test_empty_feature_in_a_wide_load_is_a_null_column(fs, monkeypatch, freq):
+    _deep_seed(fs)
+    # typed but without a row up to to_date, and created but never saved
+    _save(fs, "test/late", [("2024-03-01 00:00", "2024-03-01 00:00", 1.0)])
+    fs.create_feature("test/never", partition="date")
+    rng = dict(from_date="2024-02-20 00:00", to_date="2024-02-20 06:00", freq=freq)
+    got, engaged, generic = _both(fs, monkeypatch, ["test/a", "test/late", "test/b"], **rng)
+    assert engaged
+    assert got["test/late"].isna().all() and len(got) == (7 if freq else 2)
+    assert list(got["test/a"].dropna()) == ([1.0] * 3 + [2.0] * 4 if freq else [2.0, 2.0])
+    pd.testing.assert_frame_equal(got, generic)
+    # an untyped (never saved) feature takes the generic path: still nulls
+    got, engaged, _ = _both(fs, monkeypatch, ["test/a", "test/never"], **rng)
+    assert not engaged
+    assert got["test/never"].isna().all()
+
+
+@pytest.mark.parametrize("freq", ["2h", None])
+def test_mixed_value_types_take_the_join_fold(fs, monkeypatch, freq):
+    _deep_seed(fs)
+    _save(fs, "test/s", [
+        ("2024-02-19 00:00", "2024-02-19 00:00", "x"),
+        ("2024-02-20 03:00", "2024-02-20 03:00", "y"),
+    ])
+    got, engaged, generic = _both(
+        fs, monkeypatch, ["test/a", "test/s"],
+        from_date=LOAD["from_date"], to_date=LOAD["to_date"], freq=freq,
+    )
+    assert not engaged
+    pd.testing.assert_frame_equal(got, generic)
+    if freq:
+        assert list(got["test/a"]) == [1.0, 1.0, 2.0, 2.0]
+        assert list(got["test/s"]) == ["x", "x", "y", "y"]
+    else:
+        assert list(got.index) == [T("2024-02-20 03:00")]
+        assert list(got["test/a"]) == [2.0] and list(got["test/s"]) == ["y"]
+
+
+@pytest.mark.parametrize("freq", ["2h", None])
+def test_feature_names_with_dots(fs, monkeypatch, freq):
+    _save(fs, "test/a.v1", [
+        ("2024-02-19 00:00", "2024-02-19 00:00", 1.0),
+        ("2024-02-20 03:00", "2024-02-20 03:00", 2.0),
+    ])
+    _save(fs, "test/b.c.d", [("2024-02-20 05:00", "2024-02-20 05:00", 3.0)])
+    got, engaged, generic = _both(
+        fs, monkeypatch, ["test/a.v1", "test/b.c.d"],
+        from_date=LOAD["from_date"], to_date=LOAD["to_date"], freq=freq,
+    )
+    assert engaged
+    assert list(got.columns) == ["test/a.v1", "test/b.c.d"]
+    pd.testing.assert_frame_equal(got, generic)
+    if freq:
+        assert list(got["test/a.v1"]) == [1.0, 1.0, 2.0, 2.0]
+        assert list(got["test/b.c.d"].fillna(0.0)) == [0.0, 0.0, 0.0, 3.0]
+    else:
+        assert list(got["test/a.v1"]) == [2.0, 2.0]
+        assert list(got["test/b.c.d"].fillna(0.0)) == [0.0, 3.0]
+
+
+def test_bucketed_fill_equals_one_bucket(fs, monkeypatch):
+    # 16 cells in buckets of 5: bucket 1 (cells 5-9) holds no value of
+    # either series, so its values come from bucket 0 through the prefix
+    _save(fs, "test/a", [
+        ("2024-02-19 22:00", "2024-02-19 22:00", 1.0),
+        ("2024-02-20 03:00", "2024-02-20 03:00", 2.0),
+        ("2024-02-20 12:30", "2024-02-20 12:30", 3.0),
+    ])
+    _save(fs, "test/b", [
+        ("2024-02-20 01:00", "2024-02-20 01:00", 10.0),
+        ("2024-02-20 02:00", "2024-02-20 02:00", None),
+        ("2024-02-20 14:00", "2024-02-20 14:00", 20.0),
+    ])
+    kw = dict(from_date="2024-02-20 00:00", to_date="2024-02-20 15:30", freq="1h")
+    feats = ["test/a", "test/b"]
+    one = fs.load_dataframe(feats, **kw).toPandas()
+    monkeypatch.setattr(ts, "DEFAULT_ROWS_PER_RANGE", 5)
+    many = fs.load_dataframe(feats, **kw).toPandas()
+    pd.testing.assert_frame_equal(one, many)
+    assert list(many["time"]) == list(pd.date_range("2024-02-20", periods=16, freq="1h"))
+    assert list(many["test/a"]) == [1.0] * 3 + [2.0] * 10 + [3.0] * 3
+    assert list(many["test/b"].fillna(0.0)) == [0.0] + [10.0] * 13 + [20.0] * 2
+
+
+@pytest.mark.parametrize("freq", ["45s", "7min", "5h", "1d", "1w"])
+def test_projected_grid_equals_time_grid(fs, spark, freq):
+    _save(fs, "test/a", [("2024-02-19 00:00", "2024-02-19 00:00", 1.0)])
+    frm, to = "2024-01-31 13:17:05", "2024-03-09 08:00:01"
+    if freq == "45s":
+        to = "2024-01-31 15:02:59"
+    got = fs.load_dataframe("test/a", from_date=frm, to_date=to, freq=freq).toPandas()
+    want = ts.time_grid(spark, frm, to, freq).toPandas()
+    assert len(want) > 2 and want["time"].iloc[-1] < T(to)  # an off-grid `to`
+    assert list(got["time"]) == list(want["time"])
+
+
+def _catalog_spy(fs, monkeypatch):
+    calls = []
+    orig = fs.catalog.get_feature
+
+    def spy(nsp, nm):
+        calls.append((nsp, nm))
+        return orig(nsp, nm)
+
+    monkeypatch.setattr(fs.catalog, "get_feature", spy)
+    return calls
+
+
+@pytest.mark.parametrize("shape", ["wide", "align", "mixed", "open_range", "pandas"])
+def test_one_catalog_lookup_per_feature_per_load(fs, monkeypatch, shape):
+    names = _doubles(fs)
+    _save(fs, "test/s", [("2024-01-02", "2024-01-02", "x")])
+    feats, kw = {
+        "wide": (names, dict(RANGE, freq="1h")),
+        "align": (names, RANGE),
+        "mixed": (names + ["test/s"], dict(RANGE, freq="1h")),
+        "open_range": (names + ["test/s"], {"freq": "1d"}),
+        "pandas": (names, dict(RANGE, freq="1h")),
+    }[shape]
+    calls = _catalog_spy(fs, monkeypatch)
+    if shape == "pandas":
+        fs.load_pandas(feats, **kw)
+    else:
+        fs.load_dataframe(feats, **kw)
+    assert sorted(calls) == sorted(tuple(f.split("/")) for f in feats)
