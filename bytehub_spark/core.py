@@ -5,17 +5,20 @@ semantics) and core.py (CoreFeatureStore behavior). The read path builds ONE
 lazy DataFrame plan — scan (Catalyst pushdown + Hive partition pruning) →
 time-travel predicate → bitemporal dedup window → resample/align LOCF —
 executed only at the caller's action. A ranged load of stored features of
-one value type shuffles its rows once (``_load_long_format``).
+one value type shuffles its rows once, into one partition when Spark's
+plan-time estimate says the scans are small (``_load_long_format``).
 
 Query lifecycle parity map (SURVEY.md §3.1):
   seed lookup        core._seed_rows (in-plan)    [dask.py:142-148]
   pushdown scan      storage.scan                 [dask.py:85-106]
   default range      core._load_feature           [dask.py:150-155]
+  plan width         timeseries.plan_ranges       (no reference step)
   time travel        timeseries.time_travel       [dask.py:119-122]
   dedup              timeseries.dedup_latest      [dask.py:156-165]
-                     (inside resample_long / align_long when gridded
-                     or aligned)
-  resample/slice     timeseries.resample_long     [dask.py:169-191]
+                     (inside ranged_long / resample_long / align_long
+                     on the long-format plans)
+  resample/slice     timeseries.resample_long,    [dask.py:169-191]
+                     timeseries.ranged_long (one series, no freq)
   alias + align      core.load_dataframe →        [core.py:275-276]
                      timeseries.align_long (one value type, explicit
                      range) or timeseries.align (generic path)
@@ -85,11 +88,11 @@ def _seed_rows(upto: DataFrame, time_travel: str | None, keys=()) -> DataFrame:
     )
 
 
-def _grid(df: DataFrame, from_date, to_date, freq: str) -> DataFrame:
+def _grid(df: DataFrame, from_date, to_date, freq: str, ranges: int) -> DataFrame:
     """One series' (time, created_time, value) rows, all versions, on the
     LOCF grid: ``ts.resample_long`` with k = 1, as (time, value)."""
     tagged = df.withColumn(ts.SERIES_COL, F.lit(ts.VALUE_COL))
-    return ts.resample_long(tagged, [ts.VALUE_COL], from_date, to_date, freq)
+    return ts.resample_long(tagged, [ts.VALUE_COL], from_date, to_date, freq, ranges)
 
 
 class FeatureStore:
@@ -268,8 +271,8 @@ class FeatureStore:
         self, pairs, metas, from_date, to_date, freq, time_travel
     ) -> DataFrame | None:
         """A ranged load of stored features of one value type as ONE
-        long-format plan: gridded (``freq``, k >= 1) or aligned (no
-        ``freq``, k >= 2).
+        long-format plan: gridded (``freq``), aligned (no ``freq``, k >= 2)
+        or ranged (no ``freq``, k = 1).
 
         The generic path builds k independent pipelines (scan → dedup
         window → LOCF each), aligns them with a fold of outer joins and
@@ -280,6 +283,7 @@ class FeatureStore:
         stored series of the SAME value type, the whole load is:
 
             union of k slim scans (tagged with the series name)
+              → n = ts.plan_ranges(scans)  (plan-time size estimate)
               → one time-travel predicate
               ∪ one seed aggregate  groupBy(series) over the k scans
                                     pruned to time <= from  [_seed_rows]
@@ -288,23 +292,28 @@ class FeatureStore:
                     dedup + pivot in place, then the answer-sized fill
               → ts.align_long (no freq): one range exchange on time
                     buckets, dedup + pivot + fill in place
+              → ts.ranged_long (no freq, k = 1): one range exchange on
+                    time, dedup + sort in place
 
         Each shuffles its rows once, on a key that already orders the
         answer, regardless of k (the seed aggregate's exchange carries
-        one partial row per feature per scan task), and building the plan
-        launches no Spark job. Measured on the retrieve benchmark (4
-        shallow features, 1 deep): resampled 9 → 4 Spark jobs, wide 8 → 4,
-        align 13 → 5.
+        one partial row per feature per scan task), into one partition
+        when the scans are small (see "Store read plan" in timeseries),
+        and building the plan launches no Spark job. Measured on the
+        retrieve benchmark (4 shallow features, 1 deep; seed 1, local[4])
+        in Spark jobs, generic path → n = shuffle partitions → n = 1:
+        ranged 4 → 3 → 2, time travel 4 → 3 → 2, resampled 9 → 4 → 3,
+        wide 8 → 4 → 3, align 13 → 5 → 2.
 
-        Returns None when preconditions don't hold (open-ended range, a
-        single feature without freq, transforms, mixed/unknown value
-        types) — caller falls back to the generic per-feature path.
+        Returns None when preconditions don't hold (open-ended range,
+        transforms, mixed/unknown value types) — caller falls back to the
+        generic per-feature path, whose join fold reuses each feature's
+        dedup exchange on time (a range exchange per feature would not
+        co-partition with it).
         """
         if from_date is None or to_date is None:
             # per-feature default grids (each its own min/max) — generic path
             return None
-        if freq is None and len(pairs) < 2:
-            return None  # one ranged series: nothing to align
         if any(m is None or m["transform"] for m in metas.values()):
             return None
         vts = {(_value_type(m) or T.DataType()).json() for m in metas.values()}
@@ -344,13 +353,16 @@ class FeatureStore:
             return unioned
 
         ranged = tagged(from_date, to_date)
+        ranges = ts.plan_ranges(ranged)
         if time_travel:
             ranged = ts.time_travel(ranged, time_travel)
+        if freq is None and len(pairs) == 1:
+            return ts.ranged_long(ranged, names[0], ranges)
         if freq is None:
-            return ts.align_long(ranged, names, from_date, to_date)
+            return ts.align_long(ranged, names, from_date, to_date, ranges)
         seeds = _seed_rows(tagged(None, from_date), time_travel, keys=[ts.SERIES_COL])
         return ts.resample_long(
-            ranged.unionByName(seeds), names, from_date, to_date, freq
+            ranged.unionByName(seeds), names, from_date, to_date, freq, ranges
         )
 
     @staticmethod
@@ -387,11 +399,7 @@ class FeatureStore:
         pdf = self._load(
             pairs, metas, from_date, to_date, freq, time_travel
         ).toPandas()
-        if len(pdf):
-            pdf = pdf.set_index(ts.TIME_COL)
-        else:
-            pdf = pdf.set_index(ts.TIME_COL)
-        pdf.index.name = ts.TIME_COL
+        pdf = pdf.set_index(ts.TIME_COL)
         for pair, meta in metas.items():
             if meta and meta["serialized"]:
                 col = join_name(*pair)
@@ -654,11 +662,8 @@ class FeatureStore:
             if eff_to is None:
                 eff_to = mx
         if eff_from is None and eff_to is None:
-            # feature has no data at all
-            empty = storage.scan(name, scheme=scheme, base=base, value_type=vt)
-            if freq is not None and from_date is not None and to_date is not None:
-                return _grid(empty, from_date, to_date, freq)
-            return empty
+            # open range over a feature with no data at all
+            return storage.scan(name, scheme=scheme, base=base, value_type=vt)
         if eff_to is not None and eff_from is not None:
             if pd.Timestamp(eff_to) < pd.Timestamp(eff_from):
                 eff_to = eff_from  # clamp (dask.py:154-155)
@@ -671,6 +676,7 @@ class FeatureStore:
             df = ts.time_travel(df, time_travel)
         if freq is None:
             return ts.dedup_latest(df).drop(ts.CREATED_COL)
+        ranges = ts.plan_ranges(df)
         # seed (J3, dask.py:142-148): the last point at/before an EXPLICIT
         # from_date, so LOCF has a value at the range boundary. An omitted
         # from_date defaults to the data minimum, which no row precedes;
@@ -680,7 +686,7 @@ class FeatureStore:
                 name, to_date=from_date, scheme=scheme, base=base, value_type=vt
             )
             df = df.unionByName(_seed_rows(upto, time_travel))
-        return _grid(df, eff_from, eff_to, freq)
+        return _grid(df, eff_from, eff_to, freq, ranges)
 
     # ------------------------------------------------------------------
     # Transforms (U1–U4)

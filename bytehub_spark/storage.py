@@ -127,11 +127,11 @@ class SparkStorage:
     def exists(self, name: str) -> bool:
         if self._is_local:
             return os.path.isdir(self.feature_path(name))
-        try:
-            self.spark.read.parquet(self.feature_path(name)).schema
-            return True
-        except Exception:
-            return False
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        path = jvm.org.apache.hadoop.fs.Path(self.feature_path(name))
+        fs = path.getFileSystem(conf)
+        return fs.exists(path) and fs.getFileStatus(path).isDirectory()
 
     def ls(self) -> list[str]:
         """Feature datasets present on storage (S3 listing for GC).

@@ -29,27 +29,45 @@ no pandas round-trip (map/struct payloads stay JVM-side). With partition
 keys (long format, one series per key) locf uses an ordinary per-key
 window, which parallelizes across keys.
 
-Store read plan. The feature store's gridded and aligned loads take k
-tagged long-format series (``__series``, time, created_time, value) and
-shuffle their rows ONCE, on a key that already orders the answer:
+Store read plan. The feature store's ranged, gridded and aligned loads
+take k tagged long-format series (``__series``, time, created_time,
+value) and shuffle their rows ONCE, on a key that already orders the
+answer, into n partitions:
 
+- Width. ``plan_ranges`` gives n = 1 when Spark's plan-time size estimate
+  of the load's ranged scans (``optimizedPlan().stats().sizeInBytes``:
+  the partition-pruned file bytes of the memoized file index; no Spark
+  job) is at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+  the size AQE would coalesce into about one partition anyway; else n = ``spark.sql.shuffle.partitions``. At n = 1 the exchange is a
+  single partition: no range-sampling job, and every later window,
+  aggregate and sort (and, for the grid, the fill) runs in place. The
+  LOCF seed aggregate is left out of the estimate: without CBO Spark
+  sizes it like all the history before from_date, though it emits at
+  most one row per series per scan task.
+- ``ranged_long`` (one series, no freq): ``repartitionByRange(n, time)``;
+  the dedup window and ``orderBy(time)`` reuse that exchange.
 - ``resample_long`` (freq set): each row gets an integer grid cell (0 at
   or before from_date, else ``ceil((time - from) / step)`` in µs; rows
   past the last grid point are dropped). The rows, the LOCF seeds and one
-  null row per cell meet in ``repartition(__cell)``; the dedup window and
-  ``groupBy(__cell).pivot(__series)`` (each cell's newest non-null value
-  per series) run in place. The pivoted frame has one row per grid point,
-  so it is answer-sized: it is range-partitioned on
+  null row per cell meet in ``repartition(n, __cell)``; the dedup window
+  and ``groupBy(__cell).pivot(__series)`` (each cell's newest non-null
+  value per series) run in place. The pivoted frame has one row per grid
+  point, so it is answer-sized: it is range-partitioned on
   ``__pid = __cell // DEFAULT_ROWS_PER_RANGE`` and filled by the two-pass
   buckets above. ``DEFAULT_ROWS_PER_RANGE`` bounds the rows one fill task
   holds; a grid of at most that many points is one bucket, where Spark
-  runs no range-sampling job and pass 2 is skipped. The final
-  ``orderBy(__pid, __cell)`` is satisfied by that partitioning and costs
-  only a local sort.
-- ``align_long`` (no freq): rows get arithmetic time buckets ``__pid``
-  over the known range, go through one ``repartitionByRange(__pid)``,
-  and the dedup window, the ``groupBy(__pid, time)`` pivot, the two-pass
-  fill and ``orderBy(__pid, time)`` all run in place.
+  runs no range-sampling job and pass 2 is skipped, and at n = 1 it needs
+  no second exchange either: the one partition already holds the answer.
+  The final ``orderBy(__pid, __cell)`` is satisfied by that partitioning
+  and costs only a local sort.
+- ``align_long`` (no freq, k >= 2): rows get n arithmetic time buckets
+  ``__pid`` over the known range, go through one
+  ``repartitionByRange(n, __pid)``, and the dedup window, the
+  ``groupBy(__pid, time)`` pivot, the two-pass fill (pass 1 only at
+  n = 1) and ``orderBy(__pid, time)`` all run in place.
+
+Wider than 1, each exchange keeps ``spark.sql.shuffle.partitions`` that
+AQE may coalesce.
 """
 
 from __future__ import annotations
@@ -70,7 +88,6 @@ SERIES_COL = "__series"  # series tag of the long-format store loads
 
 # Rows per bucket of the answer-sized fill in ``resample_long``: the knob
 # that sizes its tasks (set so one bucket's rows fit in executor RAM).
-# ``locf``'s ``rows_per_range`` carries the same default but is unused.
 DEFAULT_ROWS_PER_RANGE = 2_000_000
 
 
@@ -82,6 +99,34 @@ def _qcol(name: str) -> Column:
 def _micros(t) -> int:
     """µs since the epoch of ``t`` as Spark reads ``F.lit(pd.Timestamp(t))``."""
     return T.TimestampType().toInternal(pd.Timestamp(t).to_pydatetime())
+
+
+def _shuffle_partitions(spark: SparkSession) -> int:
+    return max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+
+
+def plan_ranges(scans: DataFrame) -> int:
+    """Width of a store read plan over ``scans`` (its ranged scans, seed
+    aggregate left out): 1 when Spark's plan-time size estimate of them is
+    at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, else
+    ``spark.sql.shuffle.partitions``. See "Store read plan"."""
+    spark = scans.sparkSession
+    sqlconf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        sqlconf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    size = scans._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 1 if size <= advisory else _shuffle_partitions(spark)
+
+
+def _exchange(df: DataFrame, ranges: int, col: str, by_range=False) -> DataFrame:
+    """``df`` shuffled on ``col`` into one partition when ``ranges`` is 1
+    (a single partition: no range-sampling job, and every later window,
+    aggregate and sort runs in place), else into the
+    ``spark.sql.shuffle.partitions`` that ``plan_ranges`` returned, left
+    unnumbered because AQE coalesces no exchange given a partition count."""
+    width = (1, col) if ranges == 1 else (col,)
+    return df.repartitionByRange(*width) if by_range else df.repartition(*width)
 
 
 # ---------------------------------------------------------------------------
@@ -143,7 +188,6 @@ def locf(
     time_col: str = TIME_COL,
     partition_by: Sequence[str] = (),
     order_extra: Sequence[str] = (),
-    rows_per_range: int = DEFAULT_ROWS_PER_RANGE,
     range_hint: tuple | None = None,
 ) -> DataFrame:
     """Forward-fill ``cols`` in time order.
@@ -153,8 +197,7 @@ def locf(
     single-task global window.
     ``order_extra`` breaks ordering ties within equal timestamps (e.g. the
     grid-marker column in ``resample``: data rows sort before grid rows).
-    ``rows_per_range`` is accepted but unused: the two-pass fill makes
-    ``spark.sql.shuffle.partitions`` buckets, whatever the row count.
+    The two-pass fill makes ``spark.sql.shuffle.partitions`` buckets.
     ``range_hint=(t0, t1)``: when the caller already knows the time span
     (resample does — it built the grid), bucket bounds are interpolated
     from it instead of running an approxQuantile job. One less Spark job;
@@ -170,9 +213,7 @@ def locf(
         for c in cols:
             out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
         return out
-    return _locf_two_pass(
-        df, cols, time_col, list(order_extra), rows_per_range, range_hint
-    )
+    return _locf_two_pass(df, cols, time_col, list(order_extra), range_hint)
 
 
 def _locf_two_pass(
@@ -180,15 +221,10 @@ def _locf_two_pass(
     cols: Sequence[str],
     time_col: str,
     order_extra: list[str],
-    rows_per_range: int,
     range_hint: tuple | None = None,
 ) -> DataFrame:
-    spark = df.sparkSession
     sort_cols = [time_col, *order_extra]
-
-    # partition count: shuffle-partitions ceiling; on a real cluster size
-    # instead by rows_per_range from table stats.
-    num_parts = max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    num_parts = _shuffle_partitions(df.sparkSession)
 
     # Bucket boundaries are COLLECTED ONCE and baked into both passes as
     # constants. (repartitionByRange + spark_partition_id would be subtly
@@ -338,7 +374,7 @@ def resample(
 
 
 def resample_long(
-    df: DataFrame, names: Sequence[str], from_date, to_date, freq: str
+    df: DataFrame, names: Sequence[str], from_date, to_date, freq: str, ranges: int
 ) -> DataFrame:
     """``resample`` of k tagged series at once, as one wide frame:
     ``time`` + one column per entry of ``names``, ordered by time.
@@ -349,7 +385,8 @@ def resample_long(
     non-null value with time <= g, in its newest version per time (a time
     whose newest version is null carries the previous time's value, as
     ``resample``'s LOCF does). One exchange brings the rows to their grid
-    cell; see "Store read plan" in the module docstring.
+    cell, in ``ranges`` partitions (``plan_ranges``); see "Store read
+    plan" in the module docstring.
     """
     spark = df.sparkSession
     step = parse_freq(freq)[2] * 1_000_000
@@ -368,7 +405,7 @@ def resample_long(
         F.lit(None).cast(df.schema[VALUE_COL].dataType).alias(VALUE_COL),
         F.col("id").alias("__cell"),
     )
-    cells = rows.where(F.col("__cell") <= last).unionByName(grid).repartition("__cell")
+    cells = _exchange(rows.where(F.col("__cell") <= last).unionByName(grid), ranges, "__cell")
     value = F.col(VALUE_COL)
     wide = (
         dedup_latest(cells, partition_by=["__cell", SERIES_COL])
@@ -376,13 +413,23 @@ def resample_long(
         .pivot(SERIES_COL, list(names))
         .agg(F.max_by(value, F.when(value.isNotNull(), F.col(TIME_COL))))
         .withColumn("__pid", F.expr(f"__cell div {per}"))
-        .repartitionByRange(n, "__pid")
     )
+    if ranges > 1 or n > 1:  # else one partition already holds the answer
+        wide = wide.repartitionByRange(n, "__pid")
     filled = _fill_buckets(wide, names, ["__cell"], carry=n > 1)
     return filled.orderBy("__pid", "__cell").select(
         F.timestamp_micros(F.lit(t0) + F.col("__cell") * step).alias(TIME_COL),
         *[_qcol(c) for c in names],
     )
+
+
+def ranged_long(df: DataFrame, name: str, ranges: int) -> DataFrame:
+    """One series' ranged rows (time, created_time, value; all versions)
+    as (time, ``name``): the newest version per time, nulls kept, ordered
+    by time. One range exchange on time in ``ranges`` partitions
+    (``plan_ranges``); the dedup window and the sort run in place."""
+    latest = dedup_latest(_exchange(df, ranges, TIME_COL, by_range=True))
+    return latest.orderBy(TIME_COL).select(TIME_COL, F.col(VALUE_COL).alias(name))
 
 
 # ---------------------------------------------------------------------------
@@ -449,32 +496,34 @@ def align(
     return out
 
 
-def align_long(df: DataFrame, names: Sequence[str], from_date, to_date) -> DataFrame:
+def align_long(
+    df: DataFrame, names: Sequence[str], from_date, to_date, ranges: int
+) -> DataFrame:
     """``align`` of k tagged series at once: ``time`` (the union of the
     series' times in [from_date, to_date]) + one column per entry of
     ``names``, each carried forward, ordered by time.
 
     ``df`` holds long-format rows (``__series``, time, created_time,
     value), all versions, within the range. One range exchange on
-    arithmetic time buckets; see "Store read plan" in the module docstring.
+    ``ranges`` arithmetic time buckets (``plan_ranges``); see "Store read
+    plan" in the module docstring.
     """
-    num_parts = max(1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")))
     t0 = _micros(from_date)
-    step = max(1, (_micros(to_date) - t0) // num_parts)
+    step = max(1, (_micros(to_date) - t0) // ranges)
     # the bucket of ``locf``'s range_hint bounds t0 + i*step, i = 1..P-1
     pid = F.expr(
-        f"least({num_parts - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
+        f"least({ranges - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
     )
     wide = (
         dedup_latest(
-            df.withColumn("__pid", pid).repartitionByRange("__pid"),
+            _exchange(df.withColumn("__pid", pid), ranges, "__pid", by_range=True),
             partition_by=["__pid", SERIES_COL],
         )
         .groupBy("__pid", TIME_COL)
         .pivot(SERIES_COL, list(names))
         .agg(F.first(VALUE_COL))
     )
-    filled = _fill_buckets(wide, names, [TIME_COL], carry=num_parts > 1)
+    filled = _fill_buckets(wide, names, [TIME_COL], carry=ranges > 1)
     return filled.orderBy("__pid", TIME_COL).select(TIME_COL, *[_qcol(c) for c in names])
 
 

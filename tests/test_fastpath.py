@@ -82,9 +82,9 @@ def test_fast_path_engages_and_fallbacks(fs, monkeypatch):
     # no freq, explicit range, k >= 2 -> the aligned long-format plan
     fs.load_dataframe(feats, from_date="2024-01-10", to_date="2024-02-10")
     assert used["engaged"]
-    # one feature without freq -> generic path
+    # no freq, explicit range, one feature -> the ranged long-format plan
     fs.load_dataframe(feats[0], from_date="2024-01-10", to_date="2024-02-10")
-    assert not used["engaged"]
+    assert used["engaged"]
     # mixed value types -> generic path
     fs.create_feature("test/s", partition="date")
     fs.save_dataframe(

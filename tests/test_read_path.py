@@ -1,11 +1,14 @@
 """Store read path: building a load with explicit from/to launches no Spark
-job (the LOCF seed is part of the plan), running a gridded or aligned load
-costs a bounded number of jobs (one keyed exchange), the long-format plans
-match hand-computed answers and the generic per-feature path, a load looks
-each feature up in the catalog once, last() runs one collect per stored
-value type, and a refused Hadoop rename fails loudly."""
+job (the LOCF seed is part of the plan), running a ranged, gridded or
+aligned load costs a bounded number of jobs (one keyed exchange, one
+partition for a small load), the long-format plans match hand-computed
+answers, the generic per-feature path and their own wide (many-range)
+side, a load looks each feature up in the catalog once, last() runs one
+collect per stored value type, a refused Hadoop rename fails loudly and a
+non-local dataset check lists no data."""
 
 import json
+import os
 
 import pandas as pd
 import pytest
@@ -65,6 +68,19 @@ def test_rename_passes_when_hadoop_returns_true():
     assert fs.calls == [("a", "b")]
 
 
+def test_exists_through_hadoop_matches_the_local_check(fs, spark):
+    _save(fs, "test/d", [("2024-01-01", "2024-01-01", 1.0)])
+    storage = fs._storage("test")
+    os.makedirs(storage.feature_path("hollow"))
+    names = ["missing", "hollow", "d"]
+    local = [storage.exists(n) for n in names]
+    storage._is_local = False  # the branch object-store URLs take
+    j0 = _next_job(spark)
+    remote = [storage.exists(n) for n in names]
+    assert _next_job(spark) == j0  # a listing call, no schema-inference job
+    assert remote == local == [False, True, True]
+
+
 # ---------------------------------------------------------------------------
 # zero build jobs
 # ---------------------------------------------------------------------------
@@ -76,7 +92,9 @@ def _doubles(fs, k=3):
     for i, name in enumerate(names):
         fs.create_feature(name, partition="date")
         fs.save_dataframe(
-            pd.DataFrame({"time": idx, "value": [float(j + i) for j in range(40)]}),
+            pd.DataFrame(
+                {"time": idx, "created_time": idx, "value": [float(j + i) for j in range(40)]}
+            ),
             name,
         )
     return names
@@ -276,7 +294,7 @@ def test_seed_matches_hand_computed_grid(fs, monkeypatch, case, path):
     assert list(got.index) == list(GRID)
     for col, values in want.items():
         assert [_plain(v) for v in got[col]] == values, col
-    # each feature alone (always the generic per-feature path) agrees
+    # each feature alone agrees
     for col, values in want.items():
         one = fs.load_dataframe(col, **LOAD, **kw).toPandas().set_index("time").sort_index()
         assert [_plain(v) for v in one[col]] == values, col
@@ -338,16 +356,19 @@ def test_last_matches_per_feature_last_row(fs):
 
 
 # ---------------------------------------------------------------------------
-# execution jobs: one keyed exchange per gridded or aligned load
+# execution jobs: one keyed exchange per ranged, gridded or aligned load
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize(
-    "shape,limit", [("resampled", 4), ("wide", 4), ("align", 5)]
+    "shape,limit",
+    [("ranged", 2), ("travel", 2), ("resampled", 3), ("wide", 3), ("align", 2)],
 )
 def test_execution_jobs_per_load(fs, spark, shape, limit):
     names = _doubles(fs, k=4)
     feats, kw = {
+        "ranged": (names[0], {}),
+        "travel": (names[0], {"time_travel": "1h"}),
         "resampled": (names[0], {"freq": "1h"}),
         "wide": (names, {"freq": "1h"}),
         "align": (names, {}),
@@ -516,6 +537,82 @@ def test_bucketed_fill_equals_one_bucket(fs, monkeypatch):
     assert list(many["time"]) == list(pd.date_range("2024-02-20", periods=16, freq="1h"))
     assert list(many["test/a"]) == [1.0] * 3 + [2.0] * 10 + [3.0] * 3
     assert list(many["test/b"].fillna(0.0)) == [0.0] + [10.0] * 13 + [20.0] * 2
+
+
+def _width_store(fs):
+    _save(fs, "test/a", [
+        ("2024-02-19 22:00", "2024-02-19 22:00", 1.0),
+        ("2024-02-20 01:00", "2024-02-20 01:00", 2.0),
+        ("2024-02-20 02:00", "2024-02-20 02:00", 3.0),
+        ("2024-02-20 02:00", "2024-02-20 04:00", None),  # newest version null
+        ("2024-02-20 05:30", "2024-02-20 05:30", 5.0),
+    ])
+    # a correction written first, known 2h late (hidden by time travel)
+    _save(fs, "test/b", [("2024-02-20 03:00", "2024-02-20 05:00", 31.0)])
+    _save(fs, "test/b", [
+        ("2024-02-20 00:30", "2024-02-20 00:30", 10.0),
+        ("2024-02-20 03:00", "2024-02-20 03:00", 30.0),
+    ])
+    _save(fs, "test/s", [
+        ("2024-02-20 01:00", "2024-02-20 01:00", {"k": [1]}),
+        ("2024-02-20 04:00", "2024-02-20 04:00", {"k": []}),
+    ], serialized=True)
+
+
+WIDTH_CASES = {
+    "ranged": ("test/b", {}),
+    "travel": ("test/b", {"time_travel": "30min"}),
+    "resampled": ("test/a", {"freq": "1h"}),
+    "wide": (["test/a", "test/b"], {"freq": "1h"}),
+    "align": (["test/a", "test/b"], {}),
+    "serialized": ("test/s", {}),
+    "null_newest": ("test/a", {}),
+}
+# a one-byte advisory size sends every load to the many-range side
+WIDE_SIDE = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1",
+    "spark.sql.shuffle.partitions": "4",
+}
+
+
+@pytest.mark.parametrize("case", sorted(WIDTH_CASES))
+def test_many_ranges_equal_one_range(fs, spark, monkeypatch, case):
+    _width_store(fs)
+    feats, kw = WIDTH_CASES[case]
+    widths = []
+    orig = ts.plan_ranges
+
+    def spy(scans):
+        widths.append(orig(scans))
+        return widths[-1]
+
+    monkeypatch.setattr(ts, "plan_ranges", spy)
+
+    def load():
+        j0 = _next_job(spark)
+        df = fs.load_dataframe(
+            feats, from_date="2024-02-20 00:00", to_date="2024-02-20 06:00", **kw
+        )
+        assert _next_job(spark) == j0, "a Spark job while building the plan"
+        return df.toPandas()
+
+    one = load()
+    saved = {k: spark.conf.get(k, None) for k in WIDE_SIDE}
+    for k, v in WIDE_SIDE.items():
+        spark.conf.set(k, v)
+    try:
+        many = load()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert widths == [1, 4]
+    assert len(one) > 1
+    pd.testing.assert_frame_equal(one, many)
+    if case == "null_newest":  # no fill without freq
+        got = one.set_index("time")["test/a"]
+        assert list(got.index) == [T(t) for t in ("2024-02-20 01:00", "2024-02-20 02:00",
+                                                  "2024-02-20 05:30")]
+        assert got.iloc[0] == 2.0 and pd.isna(got.iloc[1]) and got.iloc[2] == 5.0
 
 
 @pytest.mark.parametrize("freq", ["45s", "7min", "5h", "1d", "1w"])
