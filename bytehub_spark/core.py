@@ -1,32 +1,33 @@
 """FeatureStore facade: the reference's public API re-expressed on Spark.
 
 API parity target: /root/reference/bytehub/_base.py:61-260 (method names &
-semantics) and core.py (CoreFeatureStore behavior). The read path builds ONE
-lazy DataFrame plan — scan (Catalyst pushdown + Hive partition pruning) →
-time-travel predicate → bitemporal dedup window → resample/align LOCF —
-executed only at the caller's action. A ranged load of stored features of
-one value type shuffles its rows once, into one partition when Spark's
-plan-time estimate says the scans are small (``_load_long_format``).
+semantics) and core.py (CoreFeatureStore behavior). Every load builds ONE
+lazy DataFrame plan (``FeatureStore._read_plan``) — scan (Catalyst pushdown
++ Hive partition pruning) → time-travel predicate → bitemporal dedup window
+→ resample/align LOCF — executed only at the caller's action. It shuffles
+its rows once, into one partition when Spark's plan-time estimate says the
+scans are small.
 
 Query lifecycle parity map (SURVEY.md §3.1):
   seed lookup        core._seed_rows (in-plan)    [dask.py:142-148]
   pushdown scan      storage.scan                 [dask.py:85-106]
-  default range      core._load_feature           [dask.py:150-155]
+  default range      core._read_plan windows      [dask.py:150-155]
+                     (core._bounds_prepass: one
+                     collect for every feature)
   plan width         timeseries.plan_ranges       (no reference step)
   time travel        timeseries.time_travel       [dask.py:119-122]
   dedup              timeseries.dedup_latest      [dask.py:156-165]
-                     (inside ranged_long / resample_long / align_long
-                     on the long-format plans)
+                     (inside ranged_long / resample_long / align_long)
   resample/slice     timeseries.resample_long,    [dask.py:169-191]
                      timeseries.ranged_long (one series, no freq)
   alias + align      core.load_dataframe →        [core.py:275-276]
-                     timeseries.align_long (one value type, explicit
-                     range) or timeseries.align (generic path)
+                     timeseries.align_long
 """
 
 from __future__ import annotations
 
 import json
+from functools import reduce
 from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
@@ -66,33 +67,76 @@ def _value_type(meta: dict | None) -> T.DataType | None:
         return None
 
 
-def _seed_rows(upto: DataFrame, time_travel: str | None, keys=()) -> DataFrame:
-    """LOCF seed (J3) as part of the read plan: per series (``keys``), the
-    newest row at or before ``from_date`` in its latest version, from a
-    scan pruned to ``time <= from_date``. Unioned into the ranged scan
-    ahead of the dedup window, so a grid point before the first ranged
-    row carries the seed's value; a seed exactly at ``from_date``
-    duplicates a ranged row and the dedup window drops the copy. One
-    mergeable aggregate instead of an eager max(time) job per load."""
+def _seed_rows(upto: DataFrame, time_travel: str | None, values) -> DataFrame:
+    """LOCF seed (J3) as part of the read plan: per series, the newest
+    long-format row at or before ``from_date`` in its latest version, from
+    a scan pruned to ``time <= from_date``; ``values`` are the load's value
+    columns. Unioned into the ranged scan ahead of the dedup window, so a
+    grid point before the first ranged row carries the seed's value; a
+    seed exactly at ``from_date`` duplicates a ranged row and the dedup
+    window drops the copy. One mergeable aggregate instead of an eager
+    max(time) job per load."""
     if time_travel:
         upto = ts.time_travel(upto, time_travel)
     latest = F.max_by(
-        F.struct(ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL),
+        F.struct(ts.TIME_COL, ts.CREATED_COL, *values),
         F.struct(ts.TIME_COL, ts.CREATED_COL),
     )
     return (
-        upto.groupBy(*keys)
+        upto.groupBy(ts.SERIES_COL)
         .agg(latest.alias("__seed"))
         .where(F.col("__seed").isNotNull())  # a global agg of 0 rows
-        .select(*keys, "__seed.*")
+        .select(ts.SERIES_COL, "__seed.*")
     )
 
 
-def _grid(df: DataFrame, from_date, to_date, freq: str, ranges: int) -> DataFrame:
-    """One series' (time, created_time, value) rows, all versions, on the
-    LOCF grid: ``ts.resample_long`` with k = 1, as (time, value)."""
-    tagged = df.withColumn(ts.SERIES_COL, F.lit(ts.VALUE_COL))
-    return ts.resample_long(tagged, [ts.VALUE_COL], from_date, to_date, freq, ranges)
+def _union(frames) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b), frames)
+
+
+def _tagged(frame: DataFrame, values: dict, cols: dict, types: dict, created) -> DataFrame:
+    """Long-format rows (``__series``, time, created_time, one column per
+    value type) of ``frame``: series n's value is the column ``values[n]``,
+    put in its type's column ``cols[n]``; ``types`` maps each value column
+    of the load to its type. One series is a projection; more explode one
+    row of ``frame`` into a row per series."""
+    def row(name):
+        return [F.lit(name).alias(ts.SERIES_COL)] + [
+            (values[name] if c == cols[name] else F.lit(None).cast(t)).alias(c)
+            for c, t in types.items()
+        ]
+
+    envelope = [F.col(ts.TIME_COL), created.alias(ts.CREATED_COL)]
+    if len(values) == 1:
+        series, *vals = row(*values)
+        return frame.select(series, *envelope, *vals)
+    rows = F.explode(F.array(*[F.struct(*row(name)) for name in values]))
+    return frame.select(*envelope, rows.alias("__row")).select(
+        ts.TIME_COL, ts.CREATED_COL, "__row.*"
+    )
+
+
+def _names(pairs) -> list[str]:
+    """The "ns/name" of each requested feature; a feature requested twice
+    would make two columns of one name."""
+    names = [join_name(*p) for p in pairs]
+    for name in names:
+        if names.count(name) > 1:
+            raise ValidationError(f"Feature {name} is requested more than once")
+    return names
+
+
+def _window(bounds, from_date, to_date) -> tuple:
+    """A feature's window: each explicit bound, else the feature's own
+    min/max time from ``bounds``; ``to < from`` clamps to ``from``
+    (dask.py:154-155), so a load ending before a feature's first row still
+    returns that row. None for the open bound of a feature without data."""
+    lo = from_date if from_date is not None else bounds[0]
+    hi = to_date if to_date is not None else bounds[1]
+    lo, hi = (None if t is None else pd.Timestamp(t) for t in (lo, hi))
+    if lo is not None and hi is not None and hi < lo:
+        hi = lo
+    return lo, hi
 
 
 class FeatureStore:
@@ -222,167 +266,142 @@ class FeatureStore:
         Returns a LAZY Spark DataFrame ordered by time.
         """
         pairs = unpack_feature_list(features)
-        return self._load(pairs, self._metas(pairs), from_date, to_date, freq, time_travel)
+        return self._read_plan(
+            pairs, self._metas(pairs), from_date, to_date, freq, time_travel
+        )
 
     def _metas(self, pairs) -> dict[tuple, dict | None]:
         """The catalog entry of every feature of a load: one lookup each,
         passed down to every later step of the load."""
         return {p: self.catalog.get_feature(*p) for p in dict.fromkeys(pairs)}
 
-    def _load(self, pairs, metas, from_date, to_date, freq, time_travel) -> DataFrame:
-        # With from_date or to_date omitted: ONE Spark job for every
-        # feature's default-range time bounds instead of one per feature
-        # (a k-branch union collected once). With both given the build
-        # runs no Spark job at all; the LOCF seed is part of the plan.
-        bounds = self._bounds_prepass(pairs, metas, from_date, to_date)
+    def _read_plan(
+        self, pairs, metas, from_date, to_date, freq, time_travel,
+        callers=(), last_only=False,
+    ) -> DataFrame:
+        """The one plan of every load: ``time`` + one column per feature,
+        ordered by time.
 
-        fast = self._load_long_format(pairs, metas, from_date, to_date, freq, time_travel)
-        if fast is not None:
-            return fast
+        Each feature keeps its own window: the explicit bound, else its
+        own min/max time (``_bounds_prepass``: one collect for the whole
+        load; with both bounds given the build runs no Spark job), with
+        ``to < from`` clamped to ``from`` (``_window``). With ``last_only``
+        (``last()`` of a transform) a stored feature's window is its
+        newest partition. A transform loads its arguments through this
+        same builder (``_load_transform``) and enters as one more series.
+        The load is
 
-        def one(pair) -> DataFrame:
-            nsp, nm = pair
-            sdf = self._load_feature(
-                nsp, nm, from_date, to_date, freq, time_travel, callers=[],
-                bounds=bounds.get(pair), meta=metas[pair],
-            )
-            return sdf.select(
-                ts.TIME_COL, F.col(ts.VALUE_COL).alias(join_name(nsp, nm))
-            )
-
-        if len(pairs) > 1:
-            # remaining per-feature plan construction (e.g. transform DAG
-            # loads) still runs its own driver work; overlap it — k
-            # features cost ~max not ~sum. The catalog is lock-backed.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(pairs))) as ex:
-                frames = list(ex.map(one, pairs))
-        else:
-            frames = [one(pairs[0])]
-        out = ts.align(
-            frames,
-            ffill=len(frames) > 1,
-            range_hint=self._range_hint(from_date, to_date, bounds),
-        )
-        return out.orderBy(ts.TIME_COL)
-
-    def _load_long_format(
-        self, pairs, metas, from_date, to_date, freq, time_travel
-    ) -> DataFrame | None:
-        """A ranged load of stored features of one value type as ONE
-        long-format plan: gridded (``freq``), aligned (no ``freq``, k >= 2)
-        or ranged (no ``freq``, k = 1).
-
-        The generic path builds k independent pipelines (scan → dedup
-        window → LOCF each), aligns them with a fold of outer joins and
-        sorts the result: per feature a dedup exchange, then a two-pass
-        LOCF (bucket seeds, a single-partition prefix, a broadcast) and a
-        range exchange with its sampling job for the final orderBy. When
-        the caller gave an explicit [from, to] and every feature is a
-        stored series of the SAME value type, the whole load is:
-
-            union of k slim scans (tagged with the series name)
+            union of the k slim scans, each tagged with its series name,
+            pruned to its window, one value column per value type
               → n = ts.plan_ranges(scans)  (plan-time size estimate)
               → one time-travel predicate
-              ∪ one seed aggregate  groupBy(series) over the k scans
-                                    pruned to time <= from  [_seed_rows]
-                                    (with freq only)
-              → ts.resample_long (freq): one exchange on the grid cell,
-                    dedup + pivot in place, then the answer-sized fill
-              → ts.align_long (no freq): one range exchange on time
-                    buckets, dedup + pivot + fill in place
-              → ts.ranged_long (no freq, k = 1): one range exchange on
-                    time, dedup + sort in place
+              → no freq: ts.ranged_long (k = 1: one range exchange on
+                    time, dedup + sort in place) or ts.align_long (one
+                    range exchange on time buckets, dedup + fill in place)
+              → freq, per distinct window: ∪ one seed aggregate
+                    groupBy(series) over the scans pruned to
+                    time <= from [_seed_rows] (explicit from_date only),
+                    then ts.resample_long (one exchange on the grid cell,
+                    dedup in place, then the answer-sized fill); one
+                    window is the answer, more (and transforms) meet in
+                    ts.align_long on the union of their grid times
 
         Each shuffles its rows once, on a key that already orders the
-        answer, regardless of k (the seed aggregate's exchange carries
-        one partial row per feature per scan task), into one partition
-        when the scans are small (see "Store read plan" in timeseries),
-        and building the plan launches no Spark job. Measured on the
-        retrieve benchmark (4 shallow features, 1 deep; seed 1, local[4])
-        in Spark jobs, generic path → n = shuffle partitions → n = 1:
+        answer, into one partition when the scans are small (see "Store
+        read plan" in timeseries). Measured on the retrieve benchmark
+        (4 shallow features, 1 deep; seed 1, local[4]) in Spark jobs, the
+        former per-feature join fold → n = shuffle partitions → n = 1:
         ranged 4 → 3 → 2, time travel 4 → 3 → 2, resampled 9 → 4 → 3,
         wide 8 → 4 → 3, align 13 → 5 → 2.
 
-        Returns None when preconditions don't hold (open-ended range,
-        transforms, mixed/unknown value types) — caller falls back to the
-        generic per-feature path, whose join fold reuses each feature's
-        dedup exchange on time (a range exchange per feature would not
-        co-partition with it).
+        A load of one transform is its output, unfilled: a null the
+        function returns at a grid point stays null.
         """
-        if from_date is None or to_date is None:
-            # per-feature default grids (each its own min/max) — generic path
-            return None
-        if any(m is None or m["transform"] for m in metas.values()):
-            return None
-        vts = {(_value_type(m) or T.DataType()).json() for m in metas.values()}
-        if len(vts) != 1 or _value_type(next(iter(metas.values()))) is None:
-            return None
+        names = _names(pairs)
+        for pair, name in zip(pairs, names):
+            if metas[pair] is None:
+                raise MissingFeatureException(f"Feature {name} does not exist")
+            if name in callers:  # U3 cycle detection (_model.py:194-197)
+                raise TransformError(f"Recursive transform: cycle at {name}")
+        bounds = {} if last_only else self._bounds_prepass(pairs, metas, from_date, to_date)
+        outputs = {
+            name: self._load_transform(
+                metas[pair], from_date, to_date, freq, time_travel,
+                [*callers, name], last_only,
+            )
+            for pair, name in zip(pairs, names)
+            if metas[pair]["transform"]
+        }
+        if len(names) == 1 and outputs:
+            out = outputs[names[0]].orderBy(ts.TIME_COL)
+            return out.select(ts.TIME_COL, F.col(ts.VALUE_COL).alias(names[0]))
+        stored = {name: pair for pair, name in zip(pairs, names) if name not in outputs}
+        windows = {
+            name: _window(bounds.get(pair, (None, None)), from_date, to_date)
+            for name, pair in stored.items()
+        }
 
-        if pd.Timestamp(to_date) < pd.Timestamp(from_date):
-            to_date = from_date  # clamp (dask.py:154-155)
+        def scan(name, lo, hi) -> DataFrame:
+            nsp, nm = stored[name]
+            meta, storage = metas[nsp, nm], self._storage(nsp)
+            base = self._open_recorded(nsp, nm, meta)
+            if last_only and base is not None:
+                newest = storage.list_partitions(nm, reverse=True)[:1]
+                base = base.where(F.col("partition").isin(newest))
+            return storage.scan(
+                nm, from_date=lo, to_date=hi, scheme=meta["partition"], base=base,
+                value_type=_value_type(meta),
+            )
 
-        names = [join_name(*p) for p in pairs]
+        scans = {name: scan(name, *windows[name]) for name in stored}
+        # one value column per value type (a never-saved feature reads as
+        # double, like storage.scan's empty frame); one type keeps `value`
+        types = {name: _value_type(metas[pair]) or T.DoubleType() for name, pair in stored.items()}
+        types.update({name: out.schema[ts.VALUE_COL].dataType for name, out in outputs.items()})
+        distinct = list(dict.fromkeys(types[n].json() for n in names))
+        cols = {
+            n: ts.VALUE_COL if len(distinct) == 1 else f"__value{distinct.index(types[n].json())}"
+            for n in names
+        }
+        vtypes = {cols[n]: types[n] for n in names}
+        no_created = F.lit(None).cast("timestamp")
 
-        def tagged(lo, hi) -> DataFrame:
-            branches = []
-            for (nsp, nm), full in zip(pairs, names):
-                meta = metas[nsp, nm]
-                storage = self._storage(nsp)
-                vt = _value_type(meta)
-                sdf = storage.scan(
-                    nm,
-                    from_date=lo,
-                    to_date=hi,
-                    scheme=meta["partition"],
-                    base=storage.open(nm, value_type=vt),
-                    value_type=vt,
-                )
-                branches.append(
-                    sdf.select(
-                        F.lit(full).alias(ts.SERIES_COL),
-                        F.col(ts.TIME_COL),
-                        F.col(ts.CREATED_COL),
-                        F.col(ts.VALUE_COL),
-                    )
-                )
-            unioned = branches[0]
-            for b in branches[1:]:
-                unioned = unioned.unionByName(b)
-            return unioned
+        def tagged(name, frame) -> DataFrame:
+            return _tagged(frame, {name: F.col(ts.VALUE_COL)}, cols, vtypes, F.col(ts.CREATED_COL))
 
-        ranged = tagged(from_date, to_date)
-        ranges = ts.plan_ranges(ranged)
-        if time_travel:
-            ranged = ts.time_travel(ranged, time_travel)
-        if freq is None and len(pairs) == 1:
-            return ts.ranged_long(ranged, names[0], ranges)
-        if freq is None:
-            return ts.align_long(ranged, names, from_date, to_date, ranges)
-        seeds = _seed_rows(tagged(None, from_date), time_travel, keys=[ts.SERIES_COL])
-        return ts.resample_long(
-            ranged.unionByName(seeds), names, from_date, to_date, freq, ranges
-        )
+        def travelled(frame) -> DataFrame:
+            return ts.time_travel(frame, time_travel) if time_travel else frame
 
-    @staticmethod
-    def _range_hint(from_date, to_date, bounds: dict[tuple, tuple]):
-        """Overall (lo, hi) time span of a load, from explicit args and/or
-        the prepass bounds — lets align()'s LOCF derive bucket bounds
-        arithmetically instead of running an eager approxQuantile job that
-        executes the whole join plan during construction. None when the
-        span is unknown (e.g. all-transform loads with omitted range)."""
-        if from_date is not None and to_date is not None:
-            return (from_date, to_date)
-        mns = [b[0] for b in bounds.values() if b[0] is not None]
-        mxs = [b[1] for b in bounds.values() if b[1] is not None]
-        lo = from_date if from_date is not None else (min(mns) if mns else None)
-        hi = to_date if to_date is not None else (max(mxs) if mxs else None)
-        if lo is None or hi is None:
-            return None
-        if pd.Timestamp(hi) < pd.Timestamp(lo):
-            hi = lo  # clamp, mirroring the per-feature to<from clamp
-        return (lo, hi)
+        ranged = {name: tagged(name, scans[name]) for name in stored}
+        extra = [
+            _tagged(out, {name: F.col(ts.VALUE_COL)}, cols, vtypes, no_created)
+            for name, out in outputs.items()
+        ]
+        ranges = ts.plan_ranges(_union([*ranged.values(), *extra]))
+        if freq is None and len(names) == 1:
+            return ts.ranged_long(travelled(ranged[names[0]]), names[0], ranges)
+        groups: dict[tuple, list[str]] = {}
+        for name in stored:
+            groups.setdefault(windows[name] if freq else None, []).append(name)
+        parts = []
+        for window, group in groups.items():
+            rows = travelled(_union(ranged[n] for n in group))
+            if window is None or None in window:  # no freq, or no data
+                parts.append(rows)
+                continue
+            lo, hi = window
+            if from_date is not None:
+                upto = _union(tagged(n, scan(n, None, lo)) for n in group)
+                rows = rows.unionByName(_seed_rows(upto, time_travel, list(vtypes)))
+            grid = ts.resample_long(rows, {n: cols[n] for n in group}, lo, hi, freq, ranges)
+            if len(groups) == 1 and not outputs:
+                return grid
+            parts.append(_tagged(grid, {n: _qcol(n) for n in group}, cols, vtypes, no_created))
+        # the span only balances align_long's buckets
+        known = [w for w in windows.values() if None not in w]
+        known = known or [_window((0, 0), from_date, to_date)]
+        span = min(w[0] for w in known), max(w[1] for w in known)
+        return ts.align_long(_union(parts + extra), cols, *span, ranges)
 
     def load_pandas(
         self,
@@ -396,7 +415,7 @@ class FeatureStore:
         feature values decoded back to Python objects."""
         pairs = unpack_feature_list(features)
         metas = self._metas(pairs)
-        pdf = self._load(
+        pdf = self._read_plan(
             pairs, metas, from_date, to_date, freq, time_travel
         ).toPandas()
         pdf = pdf.set_index(ts.TIME_COL)
@@ -457,16 +476,27 @@ class FeatureStore:
         Each feature's (deduped, optionally resampled/time-traveled) series
         becomes a view named from "ns/name" with non-identifier characters
         mapped to "_" (prod/price -> prod_price), columns (time, value).
-        A Spark-native capability with no reference equivalent: ad-hoc
-        SQL over bitemporally-resolved series, still one lazy plan.
+        Two features whose names map to one view name are refused. A
+        Spark-native capability with no reference equivalent: ad-hoc SQL
+        over bitemporally-resolved series, still one lazy plan.
         """
         import re as _re
 
-        for nsp, nm in unpack_feature_list(features):
-            sdf = self._load_feature(
-                nsp, nm, from_date, to_date, freq, time_travel, callers=[]
+        pairs = unpack_feature_list(features)
+        metas = self._metas(pairs)
+        views: dict[str, tuple] = {}
+        for pair, name in zip(pairs, _names(pairs)):
+            view = _re.sub(r"[^A-Za-z0-9_]", "_", name)
+            if view in views:
+                raise ValidationError(
+                    f"Features {views[view][1]} and {name} both map to SQL view {view}"
+                )
+            views[view] = pair, name
+        for view, (pair, name) in views.items():
+            sdf = self._read_plan(
+                [pair], {pair: metas[pair]}, from_date, to_date, freq, time_travel
             )
-            view = _re.sub(r"[^A-Za-z0-9_]", "_", join_name(nsp, nm))
+            sdf = sdf.select(ts.TIME_COL, _qcol(name).alias(ts.VALUE_COL))
             sdf.createOrReplaceTempView(view)
         return self.spark.sql(query)
 
@@ -478,8 +508,8 @@ class FeatureStore:
         tagged with the request index, under one `groupBy(i)` whose
         `max_by(value, (time, created_time))` is the latest version of the
         newest row. k features of one type cost one job set, not k.
-        Transform features load per feature (last_only leaves, aligned,
-        then the function)."""
+        A transform feature is one load of the builder over its leaves'
+        newest partitions, then the function."""
         pairs = unpack_feature_list(features)
         vals: dict[int, Any] = {}
         groups: dict[str, list[DataFrame]] = {}
@@ -490,12 +520,13 @@ class FeatureStore:
                 raise MissingFeatureException(f"Feature {nsp}/{nm} does not exist")
             metas.append(meta)
             if meta["transform"]:
+                pair = (nsp, nm)
                 rows = ts.last_row(
-                    self._load_feature(
-                        nsp, nm, None, None, None, None, callers=[], last_only=True
+                    self._read_plan(
+                        [pair], {pair: meta}, None, None, None, None, last_only=True
                     )
                 ).collect()
-                vals[i] = rows[0][ts.VALUE_COL] if rows else None
+                vals[i] = rows[0][join_name(*pair)] if rows else None
                 continue
             base = self._open_recorded(nsp, nm, meta)
             parts = self._storage(nsp).list_partitions(nm, reverse=True)
@@ -509,10 +540,7 @@ class FeatureStore:
             groups.setdefault(vt, []).append(newest)
         latest = F.max_by(ts.VALUE_COL, F.struct(ts.TIME_COL, ts.CREATED_COL))
         for scans in groups.values():
-            unioned = scans[0]
-            for b in scans[1:]:
-                unioned = unioned.unionByName(b)
-            for row in unioned.groupBy("__i").agg(latest.alias("v")).collect():
+            for row in _union(scans).groupBy("__i").agg(latest.alias("v")).collect():
                 vals[row["__i"]] = row["v"]
         out = {}
         for i, (pair, meta) in enumerate(zip(pairs, metas)):
@@ -590,103 +618,17 @@ class FeatureStore:
         branches = []
         for i, (nsp, nm) in enumerate(pairs):
             if (nsp, nm) not in bounds:
-                continue  # _load_feature raises / dispatches later
+                continue  # _read_plan raises / loads the transform
             meta = metas[nsp, nm]
             base = self._open_recorded(nsp, nm, meta)
             if base is not None:
                 sdf = self._storage(nsp).scan(nm, scheme=meta["partition"], base=base)
                 branches.append(sdf.select(F.lit(i).alias("__i"), F.col(ts.TIME_COL)))
         if branches:
-            allrows = branches[0]
-            for b in branches[1:]:
-                allrows = allrows.unionByName(b)
             aggs = [F.min(ts.TIME_COL).alias("mn"), F.max(ts.TIME_COL).alias("mx")]
-            for row in allrows.groupBy("__i").agg(*aggs).collect():
+            for row in _union(branches).groupBy("__i").agg(*aggs).collect():
                 bounds[pairs[row["__i"]]] = (row["mn"], row["mx"])
         return bounds
-
-    def _load_feature(
-        self,
-        namespace: str,
-        name: str,
-        from_date,
-        to_date,
-        freq: str | None,
-        time_travel: str | None,
-        callers: list[str],
-        last_only: bool = False,
-        bounds: tuple | None = None,
-        meta: dict | None = None,
-    ) -> DataFrame:
-        """Single feature -> DataFrame(time, value). Dispatches transforms.
-        ``meta``: the load's catalog entry, when the caller has it."""
-        meta = meta or self.catalog.get_feature(namespace, name)
-        if meta is None:
-            raise MissingFeatureException(f"Feature {namespace}/{name} does not exist")
-        full = join_name(namespace, name)
-        if full in callers:  # U3 cycle detection (_model.py:194-197)
-            raise TransformError(f"Recursive transform: cycle at {full}")
-        if meta["transform"]:
-            return self._load_transform(
-                meta, from_date, to_date, freq, time_travel,
-                callers=[*callers, full], last_only=last_only,
-            )
-
-        storage = self._storage(namespace)
-        scheme = meta["partition"]
-        vt = _value_type(meta)
-        # ONE partition-discovery pass per load: every scan below filters
-        # this shared frame (a fresh spark.read per scan re-lists the whole
-        # dataset — multi-second on a daily-partitioned multi-year feature)
-        base = self._open_recorded(namespace, name, meta)
-
-        if last_only:
-            parts = storage.list_partitions(name, reverse=True)
-            if not parts or base is None:
-                # canonical empty frame
-                return storage.scan(name, base=base, value_type=vt)
-            df = base.where(F.col("partition") == parts[0]).drop("partition")
-            return ts.dedup_latest(df)
-
-        # default range = data min/max (dask.py:150-155)
-        eff_from, eff_to = from_date, to_date
-        if eff_from is None or eff_to is None:
-            if bounds is not None:
-                mn, mx = bounds
-            else:
-                mn, mx = ts.time_bounds(
-                    storage.scan(name, scheme=scheme, base=base, value_type=vt)
-                )
-            if eff_from is None:
-                eff_from = mn
-            if eff_to is None:
-                eff_to = mx
-        if eff_from is None and eff_to is None:
-            # open range over a feature with no data at all
-            return storage.scan(name, scheme=scheme, base=base, value_type=vt)
-        if eff_to is not None and eff_from is not None:
-            if pd.Timestamp(eff_to) < pd.Timestamp(eff_from):
-                eff_to = eff_from  # clamp (dask.py:154-155)
-
-        df = storage.scan(
-            name, from_date=eff_from, to_date=eff_to, scheme=scheme, base=base,
-            value_type=vt,
-        )
-        if time_travel:
-            df = ts.time_travel(df, time_travel)
-        if freq is None:
-            return ts.dedup_latest(df).drop(ts.CREATED_COL)
-        ranges = ts.plan_ranges(df)
-        # seed (J3, dask.py:142-148): the last point at/before an EXPLICIT
-        # from_date, so LOCF has a value at the range boundary. An omitted
-        # from_date defaults to the data minimum, which no row precedes;
-        # without freq the reference slices the seed away (.loc[from:to]).
-        if from_date is not None:
-            upto = storage.scan(
-                name, to_date=from_date, scheme=scheme, base=base, value_type=vt
-            )
-            df = df.unionByName(_seed_rows(upto, time_travel))
-        return _grid(df, eff_from, eff_to, freq, ranges)
 
     # ------------------------------------------------------------------
     # Transforms (U1–U4)
@@ -719,6 +661,9 @@ class FeatureStore:
         self, meta: dict, from_date, to_date, freq, time_travel,
         callers: list[str], last_only: bool = False,
     ) -> DataFrame:
+        """A transform's output (time, value): its arguments as one load of
+        ``_read_plan`` (one argument unfilled, more carried forward on the
+        union of their times), then the function per batch."""
         if not self.enable_transforms:
             raise TransformError(
                 "Transforms are disabled on this store (enable_transforms=False)"
@@ -727,22 +672,10 @@ class FeatureStore:
         fn = deserialize_fn(payload["function"])
         args: list[str] = payload["args"]
 
-        inputs: list[DataFrame] = []
-        for full in args:
-            nsp, nm = split_name(full)
-            sdf = self._load_feature(
-                nsp, nm, from_date, to_date, freq, time_travel,
-                callers=callers, last_only=last_only,
-            )
-            inputs.append(
-                sdf.select(ts.TIME_COL, F.col(ts.VALUE_COL).alias(full))
-            )
-        wide = ts.align(
-            inputs,
-            ffill=len(inputs) > 1,
-            range_hint=(from_date, to_date)
-            if from_date is not None and to_date is not None
-            else None,
+        pairs = [split_name(full) for full in args]
+        wide = self._read_plan(
+            pairs, self._metas(pairs), from_date, to_date, freq, time_travel,
+            callers, last_only,
         )
 
         # Infer output type by applying fn to a small driver-side sample

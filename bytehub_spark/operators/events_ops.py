@@ -138,9 +138,8 @@ def align_ffill_types(events: DataFrame, types=("click", "purchase")) -> DataFra
             .agg(F.max_by("value", F.struct("ts", "event_id")).alias(f"{t}_value"))
         )
         frames.append(hourly)
-    # range hint from one cheap agg over the raw scan: without it align's
-    # LOCF samples bucket bounds via approxQuantile, executing both
-    # grouped branches a second time
+    # range hint from one cheap agg over the raw scan: align's LOCF
+    # interpolates its bucket bounds from it
     bounds = events.agg(
         F.date_trunc("hour", F.min("ts")).alias("t0"),
         F.date_trunc("hour", F.max("ts")).alias("t1"),

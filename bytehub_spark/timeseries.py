@@ -17,9 +17,10 @@ A global ``Window.orderBy("time")`` (no partitionBy) collapses to ONE task —
 correct but a straggler at 100 TB. ``locf`` therefore uses a two-pass
 algorithm when no partition keys are given:
 
-  pass 1: bucket rows by time range (quantile bounds collected once) and
-          forward-fill WITHIN each bucket via a per-bucket window — buckets
-          run in parallel.
+  pass 1: bucket rows by time range (bounds interpolated from the span
+          the caller already knows, ``range_hint``) and forward-fill
+          WITHIN each bucket via a per-bucket window — buckets run in
+          parallel.
   pass 2: each bucket's last non-null per column (one row per bucket) is
           prefix-scanned by a window over that tiny frame and broadcast-
           joined back; leading nulls coalesce to the prior buckets' seed.
@@ -27,18 +28,24 @@ algorithm when no partition keys are given:
 Both passes are declarative DataFrame plans — no driver collect of seeds,
 no pandas round-trip (map/struct payloads stay JVM-side). With partition
 keys (long format, one series per key) locf uses an ordinary per-key
-window, which parallelizes across keys.
+window, which parallelizes across keys. ``locf``, ``resample`` and the
+join fold of ``align`` serve the operators (``events_ops``); the feature
+store reads through the long-format plans below.
 
-Store read plan. The feature store's ranged, gridded and aligned loads
-take k tagged long-format series (``__series``, time, created_time,
-value) and shuffle their rows ONCE, on a key that already orders the
-answer, into n partitions:
+Store read plan. Every feature-store load (``core.FeatureStore._read_plan``)
+takes k tagged long-format series (``__series``, time, created_time and
+one value column per distinct value type of the load: just ``value``
+when they share one) and shuffles their rows ONCE, on a key that already
+orders the answer, into n partitions. Each series aggregates from its
+own value column with one ``max_by``/``first`` over
+``when(__series = name, ...)``, so a load may mix value types:
 
 - Width. ``plan_ranges`` gives n = 1 when Spark's plan-time size estimate
   of the load's ranged scans (``optimizedPlan().stats().sizeInBytes``:
   the partition-pruned file bytes of the memoized file index; no Spark
   job) is at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
-  the size AQE would coalesce into about one partition anyway; else n = ``spark.sql.shuffle.partitions``. At n = 1 the exchange is a
+  the size AQE would coalesce into about one partition anyway; else
+  n = ``spark.sql.shuffle.partitions``. At n = 1 the exchange is a
   single partition: no range-sampling job, and every later window,
   aggregate and sort (and, for the grid, the fill) runs in place. The
   LOCF seed aggregate is left out of the estimate: without CBO Spark
@@ -46,25 +53,26 @@ answer, into n partitions:
   most one row per series per scan task.
 - ``ranged_long`` (one series, no freq): ``repartitionByRange(n, time)``;
   the dedup window and ``orderBy(time)`` reuse that exchange.
-- ``resample_long`` (freq set): each row gets an integer grid cell (0 at
-  or before from_date, else ``ceil((time - from) / step)`` in µs; rows
-  past the last grid point are dropped). The rows, the LOCF seeds and one
-  null row per cell meet in ``repartition(n, __cell)``; the dedup window
-  and ``groupBy(__cell).pivot(__series)`` (each cell's newest non-null
-  value per series) run in place. The pivoted frame has one row per grid
-  point, so it is answer-sized: it is range-partitioned on
-  ``__pid = __cell // DEFAULT_ROWS_PER_RANGE`` and filled by the two-pass
-  buckets above. ``DEFAULT_ROWS_PER_RANGE`` bounds the rows one fill task
-  holds; a grid of at most that many points is one bucket, where Spark
-  runs no range-sampling job and pass 2 is skipped, and at n = 1 it needs
-  no second exchange either: the one partition already holds the answer.
-  The final ``orderBy(__pid, __cell)`` is satisfied by that partitioning
-  and costs only a local sort.
-- ``align_long`` (no freq, k >= 2): rows get n arithmetic time buckets
-  ``__pid`` over the known range, go through one
-  ``repartitionByRange(n, __pid)``, and the dedup window, the
-  ``groupBy(__pid, time)`` pivot, the two-pass fill (pass 1 only at
-  n = 1) and ``orderBy(__pid, time)`` all run in place.
+- ``resample_long`` (freq set; the series of one window): each row gets
+  an integer grid cell (0 at or before from_date, else
+  ``ceil((time - from) / step)`` in µs; rows past the last grid point are
+  dropped). The rows, the LOCF seeds and one null row per cell meet in
+  ``repartition(n, __cell)``; the dedup window and ``groupBy(__cell)``
+  (each cell's newest non-null value per series) run in place. The
+  grouped frame has one row per grid point, so it is answer-sized: it is
+  range-partitioned on ``__pid = __cell // DEFAULT_ROWS_PER_RANGE`` and
+  filled by the two-pass buckets above. ``DEFAULT_ROWS_PER_RANGE`` bounds
+  the rows one fill task holds; a grid of at most that many points is one
+  bucket, where Spark runs no range-sampling job and pass 2 is skipped,
+  and at n = 1 it needs no second exchange either: the one partition
+  already holds the answer. The final ``orderBy(__pid, __cell)`` is
+  satisfied by that partitioning and costs only a local sort.
+- ``align_long`` (k >= 2 without freq, or series on different grids):
+  rows get n arithmetic time buckets ``__pid`` over the load's span, go
+  through one ``repartitionByRange(n, __pid)``, and the dedup window, the
+  ``groupBy(__pid, time)`` aggregate, the two-pass fill (pass 1 only at
+  n = 1) and ``orderBy(__pid, time)`` all run in place. The span only
+  balances the buckets; rows outside it land in the first or last one.
 
 Wider than 1, each exchange keeps ``spark.sql.shuffle.partitions`` that
 AQE may coalesce.
@@ -188,7 +196,8 @@ def locf(
     time_col: str = TIME_COL,
     partition_by: Sequence[str] = (),
     order_extra: Sequence[str] = (),
-    range_hint: tuple | None = None,
+    *,
+    range_hint: tuple,
 ) -> DataFrame:
     """Forward-fill ``cols`` in time order.
 
@@ -197,11 +206,9 @@ def locf(
     single-task global window.
     ``order_extra`` breaks ordering ties within equal timestamps (e.g. the
     grid-marker column in ``resample``: data rows sort before grid rows).
-    The two-pass fill makes ``spark.sql.shuffle.partitions`` buckets.
-    ``range_hint=(t0, t1)``: when the caller already knows the time span
-    (resample does — it built the grid), bucket bounds are interpolated
-    from it instead of running an approxQuantile job. One less Spark job;
-    correctness is unaffected (bounds only steer parallelism).
+    The two-pass fill makes ``spark.sql.shuffle.partitions`` buckets whose
+    bounds are interpolated from ``range_hint=(t0, t1)``, the time span the
+    caller knows; they only steer parallelism, never the answer.
     """
     if partition_by:
         w = (
@@ -221,29 +228,19 @@ def _locf_two_pass(
     cols: Sequence[str],
     time_col: str,
     order_extra: list[str],
-    range_hint: tuple | None = None,
+    range_hint: tuple,
 ) -> DataFrame:
     sort_cols = [time_col, *order_extra]
     num_parts = _shuffle_partitions(df.sparkSession)
 
-    # Bucket boundaries are COLLECTED ONCE and baked into both passes as
-    # constants. (repartitionByRange + spark_partition_id would be subtly
-    # wrong: its sampled boundaries can differ when the lazy second pass
-    # recomputes, silently mismatching the seeds.)
-    if range_hint is not None:
-        t0 = int(pd.Timestamp(range_hint[0]).value // 1000)  # ns -> µs
-        t1 = int(pd.Timestamp(range_hint[1]).value // 1000)
-        step = max(1, (t1 - t0) // num_parts)
-        bounds = [t0 + i * step for i in range(1, num_parts)] if t1 > t0 else []
-    else:
-        probs = [i / num_parts for i in range(1, num_parts)]
-        bounds = (
-            df.select(F.unix_micros(F.col(time_col)).alias("__t"))
-            .stat.approxQuantile("__t", probs, 0.01)
-            if probs
-            else []
-        )
-    bounds = sorted(set(int(b) for b in bounds))
+    # Bucket boundaries are constants baked into both passes.
+    # (repartitionByRange + spark_partition_id would be subtly wrong: its
+    # sampled boundaries can differ when the lazy second pass recomputes,
+    # silently mismatching the seeds.)
+    t0 = int(pd.Timestamp(range_hint[0]).value // 1000)  # ns -> µs
+    t1 = int(pd.Timestamp(range_hint[1]).value // 1000)
+    step = max(1, (t1 - t0) // num_parts)
+    bounds = [t0 + i * step for i in range(1, num_parts)] if t1 > t0 else []
     pid_expr = F.lit(0)
     for b in bounds:
         pid_expr = pid_expr + (F.unix_micros(F.col(time_col)) > F.lit(b)).cast("int")
@@ -374,19 +371,20 @@ def resample(
 
 
 def resample_long(
-    df: DataFrame, names: Sequence[str], from_date, to_date, freq: str, ranges: int
+    df: DataFrame, cols: dict[str, str], from_date, to_date, freq: str, ranges: int
 ) -> DataFrame:
     """``resample`` of k tagged series at once, as one wide frame:
-    ``time`` + one column per entry of ``names``, ordered by time.
+    ``time`` + one column per series of ``cols``, ordered by time.
 
-    ``df`` holds long-format rows (``__series``, time, created_time,
-    value), all versions: the ranged rows plus, per series, any seed at
-    or before ``from_date``. Grid point g takes each series' latest
-    non-null value with time <= g, in its newest version per time (a time
-    whose newest version is null carries the previous time's value, as
-    ``resample``'s LOCF does). One exchange brings the rows to their grid
-    cell, in ``ranges`` partitions (``plan_ranges``); see "Store read
-    plan" in the module docstring.
+    ``df`` holds long-format rows (``__series``, time, created_time and the
+    value columns), all versions: the ranged rows plus, per series, any
+    seed at or before ``from_date``. ``cols`` maps each series name to its
+    value column. Grid point g takes each series' latest non-null value
+    with time <= g, in its newest version per time (a time whose newest
+    version is null carries the previous time's value, as ``resample``'s
+    LOCF does). One exchange brings the rows to their grid cell, in
+    ``ranges`` partitions (``plan_ranges``); see "Store read plan" in the
+    module docstring.
     """
     spark = df.sparkSession
     step = parse_freq(freq)[2] * 1_000_000
@@ -397,30 +395,39 @@ def resample_long(
     cell = F.greatest(
         F.lit(0), F.expr(f"(unix_micros({TIME_COL}) - {t0} + {step - 1}) div {step}")
     )
-    rows = df.select(SERIES_COL, TIME_COL, CREATED_COL, VALUE_COL, cell.alias("__cell"))
+    values = list(dict.fromkeys(cols.values()))
+    rows = df.select(SERIES_COL, TIME_COL, CREATED_COL, *values, cell.alias("__cell"))
+    schema = df.schema
     grid = spark.range(0, last + 1, 1, n).select(
         F.lit(None).cast("string").alias(SERIES_COL),
         F.lit(None).cast("timestamp").alias(TIME_COL),
         F.lit(None).cast("timestamp").alias(CREATED_COL),
-        F.lit(None).cast(df.schema[VALUE_COL].dataType).alias(VALUE_COL),
+        *[F.lit(None).cast(schema[c].dataType).alias(c) for c in values],
         F.col("id").alias("__cell"),
     )
     cells = _exchange(rows.where(F.col("__cell") <= last).unionByName(grid), ranges, "__cell")
-    value = F.col(VALUE_COL)
+    newest = [
+        F.max_by(c, F.when(_of(name) & F.col(c).isNotNull(), F.col(TIME_COL))).alias(name)
+        for name, c in cols.items()
+    ]
     wide = (
         dedup_latest(cells, partition_by=["__cell", SERIES_COL])
         .groupBy("__cell")
-        .pivot(SERIES_COL, list(names))
-        .agg(F.max_by(value, F.when(value.isNotNull(), F.col(TIME_COL))))
+        .agg(*newest)
         .withColumn("__pid", F.expr(f"__cell div {per}"))
     )
     if ranges > 1 or n > 1:  # else one partition already holds the answer
         wide = wide.repartitionByRange(n, "__pid")
-    filled = _fill_buckets(wide, names, ["__cell"], carry=n > 1)
+    filled = _fill_buckets(wide, list(cols), ["__cell"], carry=n > 1)
     return filled.orderBy("__pid", "__cell").select(
         F.timestamp_micros(F.lit(t0) + F.col("__cell") * step).alias(TIME_COL),
-        *[_qcol(c) for c in names],
+        *[_qcol(c) for c in cols],
     )
+
+
+def _of(name: str) -> Column:
+    """True on the long-format rows of series ``name``."""
+    return F.col(SERIES_COL) == F.lit(name)
 
 
 def ranged_long(df: DataFrame, name: str, ranges: int) -> DataFrame:
@@ -436,60 +443,26 @@ def ranged_long(df: DataFrame, name: str, ranges: int) -> DataFrame:
 # J1 — multi-feature alignment: full outer join on time + forward fill
 # ---------------------------------------------------------------------------
 
-ALIGN_PIVOT_MIN_K = 8
-
-
 def align(
     dfs: Sequence[DataFrame],
     time_col: str = TIME_COL,
     ffill: bool = True,
-    range_hint: tuple | None = None,
+    *,
+    range_hint: tuple,
 ) -> DataFrame:
     """Outer-join k single-series frames on time; carry each series forward
     onto the union time axis (_timeseries.py:11-26).
 
-    Each input must have columns (time, <unique series name>). Two physical
-    strategies:
-    - k < ALIGN_PIVOT_MIN_K (or mixed value types): fold of outer joins —
-      sort-merge friendly, preserves each column's exact type.
-    - k >= ALIGN_PIVOT_MIN_K with uniform numeric types: long-format union
-      + pivot — ONE shuffle on time instead of k-1 join shuffles; at wide
-      feature counts the join fold's plan depth and exchange count grow
-      linearly while the pivot stays flat.
-
-    ``range_hint=(t0, t1)``: pass the known overall time span so the LOCF
-    bucket bounds are derived arithmetically. Without it, locf samples
-    bounds via approxQuantile — an EAGER job that executes the whole
-    upstream join plan once during plan construction.
+    Each input must have columns (time, <unique series name>). A fold of
+    outer joins — sort-merge friendly, preserves each column's exact type.
+    ``range_hint=(t0, t1)``: the known overall time span, from which the
+    LOCF bucket bounds are derived arithmetically.
     """
     if not dfs:
         raise ValueError("align() needs at least one frame")
-    value_names = [
-        [c for c in df.columns if c != time_col][0] for df in dfs
-    ]
-    types = {df.schema[n].dataType.simpleString() for df, n in zip(dfs, value_names)}
-    numeric = types <= {"double", "float", "int", "bigint", "smallint", "tinyint"}
-    if len(dfs) >= ALIGN_PIVOT_MIN_K and numeric:
-        longs = [
-            df.select(
-                F.col(time_col),
-                F.lit(n).alias("__feature"),
-                F.col(n).cast("double").alias("__value"),
-            )
-            for df, n in zip(dfs, value_names)
-        ]
-        unioned = longs[0]
-        for nxt in longs[1:]:
-            unioned = unioned.unionByName(nxt)
-        out = (
-            unioned.groupBy(time_col)
-            .pivot("__feature", value_names)
-            .agg(F.first("__value"))
-        )
-    else:
-        out = dfs[0]
-        for nxt in dfs[1:]:
-            out = out.join(nxt, on=time_col, how="outer")
+    out = dfs[0]
+    for nxt in dfs[1:]:
+        out = out.join(nxt, on=time_col, how="outer")
     value_cols = [c for c in out.columns if c != time_col]
     if ffill:
         out = locf(out, value_cols, time_col=time_col, range_hint=range_hint)
@@ -497,16 +470,17 @@ def align(
 
 
 def align_long(
-    df: DataFrame, names: Sequence[str], from_date, to_date, ranges: int
+    df: DataFrame, cols: dict[str, str], from_date, to_date, ranges: int
 ) -> DataFrame:
     """``align`` of k tagged series at once: ``time`` (the union of the
-    series' times in [from_date, to_date]) + one column per entry of
-    ``names``, each carried forward, ordered by time.
+    series' times) + one column per series of ``cols``, each carried
+    forward, ordered by time.
 
-    ``df`` holds long-format rows (``__series``, time, created_time,
-    value), all versions, within the range. One range exchange on
-    ``ranges`` arithmetic time buckets (``plan_ranges``); see "Store read
-    plan" in the module docstring.
+    ``df`` holds long-format rows (``__series``, time, created_time and the
+    value columns), all versions, each within its series' window; ``cols``
+    maps each series name to its value column. One range exchange on
+    ``ranges`` arithmetic time buckets over [from_date, to_date]
+    (``plan_ranges``); see "Store read plan" in the module docstring.
     """
     t0 = _micros(from_date)
     step = max(1, (_micros(to_date) - t0) // ranges)
@@ -514,17 +488,20 @@ def align_long(
     pid = F.expr(
         f"least({ranges - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
     )
+    firsts = [
+        F.first(F.when(_of(name), F.col(c)), ignorenulls=True).alias(name)
+        for name, c in cols.items()
+    ]
     wide = (
         dedup_latest(
             _exchange(df.withColumn("__pid", pid), ranges, "__pid", by_range=True),
             partition_by=["__pid", SERIES_COL],
         )
         .groupBy("__pid", TIME_COL)
-        .pivot(SERIES_COL, list(names))
-        .agg(F.first(VALUE_COL))
+        .agg(*firsts)
     )
-    filled = _fill_buckets(wide, names, [TIME_COL], carry=ranges > 1)
-    return filled.orderBy("__pid", TIME_COL).select(TIME_COL, *[_qcol(c) for c in names])
+    filled = _fill_buckets(wide, list(cols), [TIME_COL], carry=ranges > 1)
+    return filled.orderBy("__pid", TIME_COL).select(TIME_COL, *[_qcol(c) for c in cols])
 
 
 # ---------------------------------------------------------------------------
@@ -540,7 +517,9 @@ def last_row(df: DataFrame, time_col: str = TIME_COL):
 
 
 def time_bounds(df: DataFrame, time_col: str = TIME_COL):
-    """(min, max) of the time axis as python values (None, None) if empty."""
+    """(min, max) of the time axis as python values (None, None) if empty.
+    No store load calls it (``core._bounds_prepass`` collects every
+    feature's bounds at once); ``perfbench/run.py`` traces it by name."""
     row = df.agg(
         F.min(time_col).alias("mn"), F.max(time_col).alias("mx")
     ).collect()[0]

@@ -9,8 +9,15 @@ paths a production consumer hits:
 - load_ranged     1-month slice of the deep feature (partition pruning)
 - load_resampled  1-month hourly LOCF grid
 - load_wide       K features aligned on one hourly grid (long-format
-                  plan: one exchange on the grid cell, dedup + pivot in
-                  place, then the answer-sized fill)
+                  plan: one exchange on the grid cell, dedup + one
+                  aggregate per series in place, then the answer-sized
+                  fill)
+- load_wide_open  the K features over their whole history, hourly, each
+                  on its own default grid (one grid per window, then
+                  aligned on the union of the grid times)
+- load_mixed      the deep feature and a string feature on one hourly
+                  grid (one value column per value type)
+- load_transform  a transform summing two shallow features, hourly
 - last            point lookups across all features (one batched job
                   set: the K features share a value type)
 - time_travel     ranged read at created_time <= time - 1h
@@ -95,6 +102,15 @@ def main() -> None:
             pd.DataFrame({"time": idx, "value": rng.randn(len(idx))}),
             f"bench/f{i}",
         )
+    fs.create_feature("bench/s", partition="date")
+    fs.save_dataframe(
+        pd.DataFrame({"time": idx, "value": [f"s{j % 97}" for j in range(len(idx))]}),
+        "bench/s",
+    )
+
+    @fs.transform("bench/sum", from_features=["bench/f0", "bench/f1"])
+    def _sum(df):
+        return df["bench/f0"] + df["bench/f1"]
 
     def timed(label, fn, reps=2):
         best = float("inf")
@@ -131,6 +147,13 @@ def main() -> None:
             )
         ),
     )
+    timed(
+        "load_wide_open",
+        lambda: noop(fs.load_dataframe([f"bench/f{i}" for i in range(k)], freq="1h")),
+    )
+    month = dict(from_date="2023-03-01", to_date="2023-04-01", freq="1h")
+    timed("load_mixed", lambda: noop(fs.load_dataframe(["bench/deep", "bench/s"], **month)))
+    timed("load_transform", lambda: noop(fs.load_dataframe("bench/sum", **month)))
     timed("last", lambda: fs.last([f"bench/f{i}" for i in range(k)]))
     timed(
         "time_travel",

@@ -1,13 +1,15 @@
-"""The long-format multi-feature resample fast path must be byte-equivalent
-to the generic per-feature path (scan → dedup → resample → align) for every
-argument shape it claims, and must fall back cleanly when preconditions
-don't hold (mixed value types, transforms, open-ended range)."""
+"""Every store load shape — gridded, aligned, ranged, open-range and
+mixed-type — equals the pandas model of the reference semantics
+(``read_model``), which stands in for the per-feature generic path the
+long-format plans replaced; and the value type a load needs is recorded
+on save or on the first read."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from bytehub_spark.core import FeatureStore
+from read_model import assert_matches, loaded, model
 
 
 def _build(fs, k=4, with_empty=True):
@@ -26,20 +28,10 @@ def _build(fs, k=4, with_empty=True):
         names.append(name)
     if with_empty:
         fs.create_feature("test/empty", partition="date")
-        # record the type so the fast path engages despite no data
+        # typed, but without data
         fs.catalog.set_value_schema("test", "empty", '"double"')
         names.append("test/empty")
     return names
-
-
-def _both_paths(fs, feats, monkeypatch, **kwargs):
-    fast = fs.load_dataframe(feats, **kwargs).toPandas().set_index("time").sort_index()
-    monkeypatch.setattr(
-        FeatureStore, "_load_long_format", lambda self, *a, **k: None
-    )
-    slow = fs.load_dataframe(feats, **kwargs).toPandas().set_index("time").sort_index()
-    monkeypatch.undo()
-    return fast, slow
 
 
 @pytest.mark.parametrize(
@@ -56,36 +48,33 @@ def _both_paths(fs, feats, monkeypatch, **kwargs):
         ),
     ],
 )
-def test_fast_path_matches_generic(fs, monkeypatch, kwargs):
+def test_fast_path_matches_generic(fs, kwargs):
     feats = _build(fs)
-    fast, slow = _both_paths(fs, feats, monkeypatch, **kwargs)
-    assert list(fast.columns) == list(slow.columns)
-    pd.testing.assert_frame_equal(fast, slow, check_like=True)
+    got = loaded(fs.load_dataframe(feats, **kwargs))
+    assert list(got.columns) == feats
+    assert_matches(got, model(fs, feats, **kwargs))
 
 
-def test_fast_path_engages_and_fallbacks(fs, monkeypatch):
+def test_fast_path_engages_and_fallbacks(fs):
+    """Each load shape that once fell back to the per-feature path (open
+    range, mixed value types) equals the model, as do the shapes the
+    long-format plans always served."""
     feats = _build(fs, k=2, with_empty=False)
-    used = {}
-    orig = FeatureStore._load_long_format
+    rng = dict(from_date="2024-01-10", to_date="2024-02-10")
 
-    def spy(self, *a, **k):
-        r = orig(self, *a, **k)
-        used["engaged"] = r is not None
-        return r
+    def pin(features, **kw):
+        assert_matches(
+            loaded(fs.load_dataframe(features, **kw)), model(fs, features, **kw)
+        )
 
-    monkeypatch.setattr(FeatureStore, "_load_long_format", spy)
-    fs.load_dataframe(feats, from_date="2024-01-10", to_date="2024-02-10", freq="1h")
-    assert used["engaged"]
-    # open-ended range -> generic path
-    fs.load_dataframe(feats, freq="1h")
-    assert not used["engaged"]
+    pin(feats, **rng, freq="1h")
+    # open-ended range: each feature on its own default grid
+    pin(feats, freq="1h")
     # no freq, explicit range, k >= 2 -> the aligned long-format plan
-    fs.load_dataframe(feats, from_date="2024-01-10", to_date="2024-02-10")
-    assert used["engaged"]
+    pin(feats, **rng)
     # no freq, explicit range, one feature -> the ranged long-format plan
-    fs.load_dataframe(feats[0], from_date="2024-01-10", to_date="2024-02-10")
-    assert used["engaged"]
-    # mixed value types -> generic path
+    pin(feats[0], **rng)
+    # mixed value types: one value column per type
     fs.create_feature("test/s", partition="date")
     fs.save_dataframe(
         pd.DataFrame(
@@ -93,10 +82,7 @@ def test_fast_path_engages_and_fallbacks(fs, monkeypatch):
         ),
         "test/s",
     )
-    fs.load_dataframe(
-        feats + ["test/s"], from_date="2024-01-10", to_date="2024-02-10", freq="1h"
-    )
-    assert not used["engaged"]
+    pin(feats + ["test/s"], **rng, freq="1h")
 
 
 def test_value_schema_recorded_on_save(fs):
@@ -116,8 +102,7 @@ def test_value_schema_recorded_on_save(fs):
 
 def test_value_schema_self_heals_on_read(fs, spark, tmp_path):
     """A rebuilt catalog over existing datasets has no recorded value
-    types; the first multi-feature load's prepass records them (and the
-    fast path can engage in that same call)."""
+    types; the first multi-feature load's prepass records them."""
     feats = _build(fs, k=2, with_empty=False)
     rebuilt = FeatureStore(":memory:", spark=spark)
     rebuilt.create_namespace("test", url=str(tmp_path / "featurestore"))

@@ -104,7 +104,10 @@ def test_two_pass_locf_matches_pandas_ffill(spark, n, null_frac, seed):
         }
     )
     out = (
-        ts.locf(spark.createDataFrame(pdf), ["value"])
+        ts.locf(
+            spark.createDataFrame(pdf), ["value"],
+            range_hint=(pdf["time"].min(), pdf["time"].max()),
+        )
         .toPandas()
         .sort_values("time")
         .reset_index(drop=True)

@@ -1,11 +1,12 @@
 """Store read path: building a load with explicit from/to launches no Spark
 job (the LOCF seed is part of the plan), running a ranged, gridded or
 aligned load costs a bounded number of jobs (one keyed exchange, one
-partition for a small load), the long-format plans match hand-computed
-answers, the generic per-feature path and their own wide (many-range)
-side, a load looks each feature up in the catalog once, last() runs one
-collect per stored value type, a refused Hadoop rename fails loudly and a
-non-local dataset check lists no data."""
+partition for a small load), the one read plan matches hand-computed
+answers, the pandas model of the reference semantics (``read_model``,
+which stands in for the per-feature generic path the plan replaced) and
+its own wide (many-range) side, a load looks each feature up in the
+catalog once, last() runs one collect per stored value type, a refused
+Hadoop rename fails loudly and a non-local dataset check lists no data."""
 
 import json
 import os
@@ -14,9 +15,9 @@ import pandas as pd
 import pytest
 
 from bytehub_spark import timeseries as ts
-from bytehub_spark.core import FeatureStore
 from bytehub_spark.exceptions import StorageError
 from bytehub_spark.storage import _rename
+from read_model import assert_matches, loaded, model
 
 T = pd.Timestamp
 
@@ -114,18 +115,17 @@ def test_building_an_explicit_range_load_runs_no_job(fs, spark, monkeypatch, sha
         "time_travel": (names[0], {"time_travel": "1d"}),
         "freq": (names[0], {"freq": "1h"}),
         "wide_fast_path": (names, {"freq": "1h"}),
+        # the shape that once took the per-feature join fold
         "generic_align": (names, {}),
     }[shape]
-    if shape == "wide_fast_path":
-        engaged = []
-        orig = FeatureStore._load_long_format
+    grids = []
+    orig = ts.resample_long
 
-        def spy(self, *a, **k):
-            out = orig(self, *a, **k)
-            engaged.append(out is not None)
-            return out
+    def spy(*a, **k):
+        grids.append(1)
+        return orig(*a, **k)
 
-        monkeypatch.setattr(FeatureStore, "_load_long_format", spy)
+    monkeypatch.setattr(ts, "resample_long", spy)
     j0 = _next_job(spark)
     df = fs.load_dataframe(feats, **RANGE, **kw)
     j1 = _next_job(spark)
@@ -134,7 +134,7 @@ def test_building_an_explicit_range_load_runs_no_job(fs, spark, monkeypatch, sha
     assert j1 - j0 == 0, f"{shape}: {j1 - j0} Spark job(s) while building the plan"
     assert j2 > j1  # the action itself runs the plan
     if shape == "wide_fast_path":
-        assert engaged == [True]
+        assert grids == [1]  # one grid for the k features of one window
 
 
 def test_last_is_one_collect_per_value_type(fs, spark, monkeypatch):
@@ -170,7 +170,7 @@ def test_last_is_one_collect_per_value_type(fs, spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# in-plan seed: hand-computed grids, fast path and generic path
+# in-plan seed: hand-computed grids, the read plan and the model
 # ---------------------------------------------------------------------------
 
 GRID = pd.DatetimeIndex(
@@ -270,34 +270,23 @@ def _plain(v):
 
 @pytest.mark.parametrize("path", ["fast", "generic"])
 @pytest.mark.parametrize("case", sorted(SEED_CASES))
-def test_seed_matches_hand_computed_grid(fs, monkeypatch, case, path):
+def test_seed_matches_hand_computed_grid(fs, case, path):
+    """``fast``: the read plan; ``generic``: the pandas model that stands
+    in for the former per-feature path."""
     kw, want = SEED_CASES[case](fs)
-    engaged = []
-    if path == "generic":
-        monkeypatch.setattr(FeatureStore, "_load_long_format", lambda self, *a, **k: None)
-    else:
-        orig = FeatureStore._load_long_format
 
-        def spy(self, *a, **k):
-            out = orig(self, *a, **k)
-            engaged.append(out is not None)
-            return out
+    def load(feats):
+        if path == "generic":
+            return model(fs, feats, **LOAD, **kw)
+        return loaded(fs.load_dataframe(feats, **LOAD, **kw))
 
-        monkeypatch.setattr(FeatureStore, "_load_long_format", spy)
-    got = (
-        fs.load_dataframe(["test/a", "test/b"], **LOAD, **kw)
-        .toPandas()
-        .set_index("time")
-        .sort_index()
-    )
-    assert engaged == ([True] if path == "fast" else [])
+    got = load(["test/a", "test/b"])
     assert list(got.index) == list(GRID)
     for col, values in want.items():
         assert [_plain(v) for v in got[col]] == values, col
     # each feature alone agrees
     for col, values in want.items():
-        one = fs.load_dataframe(col, **LOAD, **kw).toPandas().set_index("time").sort_index()
-        assert [_plain(v) for v in one[col]] == values, col
+        assert [_plain(v) for v in load(col)[col]] == values, col
 
 
 def test_ranged_load_without_freq_drops_the_seed(fs):
@@ -340,16 +329,13 @@ def test_last_matches_per_feature_last_row(fs):
     got = fs.last(feats)
 
     want = {}
-    for name in feats:
-        nsp, nm = name.split("/")
-        rows = ts.last_row(
-            fs._load_feature(nsp, nm, None, None, None, None, callers=[], last_only=True)
-        ).collect()
-        val = rows[0]["value"] if rows else None
-        if fs.catalog.get_feature(nsp, nm)["serialized"] and isinstance(val, str):
+    for name in feats:  # the model's newest-partition load, last row
+        newest = model(fs, name, last_only=True)[name]
+        val = newest.iloc[-1] if len(newest) else None
+        if fs.catalog.get_feature(*name.split("/"))["serialized"] and isinstance(val, str):
             val = json.loads(val)
         want[name] = val
-    assert got == want
+    assert {k: _plain(v) for k, v in got.items()} == want
     assert got["test/d"] == 4.0 and got["test/t"] == 8.0 and got["test/e"] is None
     assert got["test/s"] == {"a": [2, 3]} and got["test/d2"] == 9.0
     assert _plain(got["test/st"]) == {"x": 2.0, "y": "q"}
@@ -383,30 +369,19 @@ def test_execution_jobs_per_load(fs, spark, shape, limit):
 
 
 # ---------------------------------------------------------------------------
-# long-format plans == hand-computed answers == the generic path
+# the read plan == hand-computed answers == the model
 # ---------------------------------------------------------------------------
 
 
-def _both(fs, monkeypatch, feats, **kw):
-    """(long-format answer, whether that path engaged, generic answer);
-    the answers are pandas frames indexed by time."""
-    engaged = []
-    orig = FeatureStore._load_long_format
-
-    def spy(self, *a, **k):
-        out = orig(self, *a, **k)
-        engaged.append(out is not None)
-        return out
-
-    monkeypatch.setattr(FeatureStore, "_load_long_format", spy)
-    fast = fs.load_dataframe(feats, **kw).toPandas().set_index("time")
-    monkeypatch.setattr(FeatureStore, "_load_long_format", lambda self, *a, **k: None)
-    slow = fs.load_dataframe(feats, **kw).toPandas().set_index("time")
-    monkeypatch.undo()
-    return fast, engaged == [True], slow
+def _both(fs, feats, **kw):
+    """(the read plan's answer, the model's); pandas frames indexed by
+    time, the answer checked equal to the model."""
+    got, want = loaded(fs.load_dataframe(feats, **kw)), model(fs, feats, **kw)
+    assert_matches(got, want)
+    return got, want
 
 
-def test_null_newest_version_carries_previous_time(fs, monkeypatch):
+def test_null_newest_version_carries_previous_time(fs):
     # 02:00's newest version is null: the grid and the union axis carry
     # 01:30's value (same grid cell), not the older non-null version of 02:00
     _save(fs, "test/a", [
@@ -418,17 +393,15 @@ def test_null_newest_version_carries_previous_time(fs, monkeypatch):
     ])
     _save(fs, "test/b", [("2024-02-20 02:30", "2024-02-20 02:30", 9.0)])
     rng = dict(from_date="2024-02-20 00:00", to_date="2024-02-20 04:00")
-    grid, engaged, generic = _both(fs, monkeypatch, ["test/a", "test/b"], freq="1h", **rng)
-    assert engaged
+    grid, modelled = _both(fs, ["test/a", "test/b"], freq="1h", **rng)
     nan = float("nan")
     want = pd.DataFrame(
         {"test/a": [nan, 1.0, 1.5, 1.5, 4.0], "test/b": [nan, nan, nan, 9.0, 9.0]},
         index=pd.date_range("2024-02-20", periods=5, freq="1h", name="time"),
     )
     pd.testing.assert_frame_equal(grid, want, check_freq=False)
-    pd.testing.assert_frame_equal(generic, want, check_freq=False)
-    aligned, engaged, generic = _both(fs, monkeypatch, ["test/a", "test/b"], **rng)
-    assert engaged
+    assert_matches(modelled, want)
+    aligned, modelled = _both(fs, ["test/a", "test/b"], **rng)
     want = pd.DataFrame(
         {"test/a": [1.0, 1.5, 1.5, 1.5, 4.0], "test/b": [nan, nan, nan, 9.0, 9.0]},
         index=pd.DatetimeIndex(
@@ -437,54 +410,46 @@ def test_null_newest_version_carries_previous_time(fs, monkeypatch):
         ),
     )
     pd.testing.assert_frame_equal(aligned, want)
-    pd.testing.assert_frame_equal(generic, want)
+    assert_matches(modelled, want)
 
 
-def test_row_at_from_on_the_aligned_plan(fs, monkeypatch):
+def test_row_at_from_on_the_aligned_plan(fs):
     # without freq the row at from_date is on the axis, the seed before it
     # is not (the gridded plans are pinned by the at_from seed case)
     _at_from(fs)
-    aligned, engaged, generic = _both(
-        fs, monkeypatch, ["test/a", "test/b"],
-        from_date=LOAD["from_date"], to_date=LOAD["to_date"],
+    aligned, _ = _both(
+        fs, ["test/a", "test/b"], from_date=LOAD["from_date"], to_date=LOAD["to_date"],
     )
-    assert engaged
     assert list(aligned.index) == [T("2024-02-20 00:00")]
     assert list(aligned["test/a"]) == [5.0] and aligned["test/b"].isna().all()
-    pd.testing.assert_frame_equal(aligned, generic)
 
 
 @pytest.mark.parametrize("freq", ["1h", None])
-def test_empty_feature_in_a_wide_load_is_a_null_column(fs, monkeypatch, freq):
+def test_empty_feature_in_a_wide_load_is_a_null_column(fs, freq):
     _deep_seed(fs)
     # typed but without a row up to to_date, and created but never saved
     _save(fs, "test/late", [("2024-03-01 00:00", "2024-03-01 00:00", 1.0)])
     fs.create_feature("test/never", partition="date")
     rng = dict(from_date="2024-02-20 00:00", to_date="2024-02-20 06:00", freq=freq)
-    got, engaged, generic = _both(fs, monkeypatch, ["test/a", "test/late", "test/b"], **rng)
-    assert engaged
+    got, _ = _both(fs, ["test/a", "test/late", "test/b"], **rng)
     assert got["test/late"].isna().all() and len(got) == (7 if freq else 2)
     assert list(got["test/a"].dropna()) == ([1.0] * 3 + [2.0] * 4 if freq else [2.0, 2.0])
-    pd.testing.assert_frame_equal(got, generic)
-    # an untyped (never saved) feature takes the generic path: still nulls
-    got, engaged, _ = _both(fs, monkeypatch, ["test/a", "test/never"], **rng)
-    assert not engaged
-    assert got["test/never"].isna().all()
+    # an untyped (never saved) feature reads as a null double column
+    got, _ = _both(fs, ["test/a", "test/never"], **rng)
+    assert got["test/never"].isna().all() and got["test/never"].dtype == "float64"
 
 
 @pytest.mark.parametrize("freq", ["2h", None])
-def test_mixed_value_types_take_the_join_fold(fs, monkeypatch, freq):
+def test_mixed_value_types_on_one_plan(fs, freq):
     _deep_seed(fs)
     _save(fs, "test/s", [
         ("2024-02-19 00:00", "2024-02-19 00:00", "x"),
         ("2024-02-20 03:00", "2024-02-20 03:00", "y"),
     ])
-    got, engaged, generic = _both(
-        fs, monkeypatch, ["test/a", "test/s"],
+    got, _ = _both(
+        fs, ["test/a", "test/s"],
         from_date=LOAD["from_date"], to_date=LOAD["to_date"], freq=freq,
     )
-    assert not engaged
-    pd.testing.assert_frame_equal(got, generic)
     if freq:
         assert list(got["test/a"]) == [1.0, 1.0, 2.0, 2.0]
         assert list(got["test/s"]) == ["x", "x", "y", "y"]
@@ -494,19 +459,17 @@ def test_mixed_value_types_take_the_join_fold(fs, monkeypatch, freq):
 
 
 @pytest.mark.parametrize("freq", ["2h", None])
-def test_feature_names_with_dots(fs, monkeypatch, freq):
+def test_feature_names_with_dots(fs, freq):
     _save(fs, "test/a.v1", [
         ("2024-02-19 00:00", "2024-02-19 00:00", 1.0),
         ("2024-02-20 03:00", "2024-02-20 03:00", 2.0),
     ])
     _save(fs, "test/b.c.d", [("2024-02-20 05:00", "2024-02-20 05:00", 3.0)])
-    got, engaged, generic = _both(
-        fs, monkeypatch, ["test/a.v1", "test/b.c.d"],
+    got, _ = _both(
+        fs, ["test/a.v1", "test/b.c.d"],
         from_date=LOAD["from_date"], to_date=LOAD["to_date"], freq=freq,
     )
-    assert engaged
     assert list(got.columns) == ["test/a.v1", "test/b.c.d"]
-    pd.testing.assert_frame_equal(got, generic)
     if freq:
         assert list(got["test/a.v1"]) == [1.0, 1.0, 2.0, 2.0]
         assert list(got["test/b.c.d"].fillna(0.0)) == [0.0, 0.0, 0.0, 3.0]

@@ -134,8 +134,9 @@ def test_empty_feature(fs):
 
 
 def test_wide_alignment_pivot_path(fs):
-    """k>=8 numeric features: pivot strategy must give the same result as
-    the join fold, with a flat (non-growing) exchange count."""
+    """k = 10 numeric features on the one read plan (``align_long``: one
+    exchange, one aggregate per series) equal pandas outer-concat + ffill,
+    with a flat (non-growing) exchange count and no join chain."""
     from bytehub_spark import plans
     from bytehub_spark import timeseries as tsm
 
@@ -162,6 +163,6 @@ def test_wide_alignment_pivot_path(fs):
     pd.testing.assert_frame_equal(
         got, exp, check_dtype=False, check_freq=False, check_names=False
     )
-    # strategy check: one pivot aggregate, not a 9-join chain
+    # strategy check: one aggregate, not a 9-join chain
     plan = plans.executed_plan(wide)
     assert plan.count("SortMergeJoin") <= 2
