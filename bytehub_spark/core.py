@@ -476,7 +476,9 @@ class FeatureStore:
         Each feature's (deduped, optionally resampled/time-traveled) series
         becomes a view named from "ns/name" with non-identifier characters
         mapped to "_" (prod/price -> prod_price), columns (time, value).
-        Two features whose names map to one view name are refused. A
+        Two features whose names map to one view name are refused. The
+        views live only while Spark analyses ``query``: the call drops
+        them before it returns, so a later call cannot read them. A
         Spark-native capability with no reference equivalent: ad-hoc SQL
         over bitemporally-resolved series, still one lazy plan.
         """
@@ -492,13 +494,17 @@ class FeatureStore:
                     f"Features {views[view][1]} and {name} both map to SQL view {view}"
                 )
             views[view] = pair, name
-        for view, (pair, name) in views.items():
-            sdf = self._read_plan(
-                [pair], {pair: metas[pair]}, from_date, to_date, freq, time_travel
-            )
-            sdf = sdf.select(ts.TIME_COL, _qcol(name).alias(ts.VALUE_COL))
-            sdf.createOrReplaceTempView(view)
-        return self.spark.sql(query)
+        try:
+            for view, (pair, name) in views.items():
+                sdf = self._read_plan(
+                    [pair], {pair: metas[pair]}, from_date, to_date, freq, time_travel
+                )
+                sdf = sdf.select(ts.TIME_COL, _qcol(name).alias(ts.VALUE_COL))
+                sdf.createOrReplaceTempView(view)
+            return self.spark.sql(query)
+        finally:
+            for view in views:
+                self.spark.catalog.dropTempView(view)
 
     def last(self, features: Any) -> dict[str, Any]:
         """Latest value per feature (None when empty) — core.py:315-331.

@@ -6,7 +6,8 @@ returning a DataFrame whose columns are aliased for the DuckDB oracle.
 
 Scale notes are inline; every op is shuffle-minimal: windows partition by
 series key (parallel across keys), grids come from sequence() (no driver
-loop), and the LOCF resample is the engine's partitioned two-pass kernel.
+loop), and the LOCF resample is the engine's keyed resample (one hash
+exchange on the key).
 """
 
 from __future__ import annotations
@@ -89,42 +90,31 @@ def time_travel_summary(events: DataFrame) -> DataFrame:
 def resample_locf(events: DataFrame, freq: str = "1h") -> DataFrame:
     """J2: per-user regular grid with LOCF as-of semantics.
 
-    Dedup (latest event_id per user/ts) then the engine's partitioned
-    resample: grid via sequence(), LOCF per user key — one shuffle on
-    (user_id), grid cross-join is broadcast (keys × small grid).
+    The grid runs from the hour of the first ``ts`` to the last ``ts``
+    (one small bounds collect); every user gets all of it. ``ts.resample``
+    then makes one plan with one hash exchange on ``user_id``: the dedup
+    (latest ``event_id`` per user and ``ts``), the per-cell newest value,
+    each user's grid rows and the fill all run in place. No timed row:
+    no grid, an empty frame.
     """
-    from ..plans.scratch import scratch_persist
-
-    # persist the dedup: downstream it feeds BOTH resample's key-list
-    # aggregate and the LOCF branch (two full window passes without the
-    # cache), and the grid-bounds agg below reads it too — ONE events
-    # scan + rank window per run instead of three scans + two windows
-    # (r15 opt). Bounds off the dedup are exact: dedup_latest keeps one
-    # row per (user_id, time), so every distinct non-null ts survives,
-    # and min/max ignore nulls in both engines.
-    dedup = scratch_persist(
-        ts.dedup_latest(
-            events.select(
-                "user_id", F.col("ts").alias("time"), "value", "event_id"
-            ),
-            time_col="time",
-            created_col="event_id",  # deterministic tiebreak: latest event wins
-            partition_by=["user_id"],
-        ).drop("event_id")
-    )
-    bounds = dedup.agg(
-        F.date_trunc("hour", F.min("time")).alias("t0"),
-        F.max("time").alias("t1"),
+    # as instants: naive bounds would be read in the driver's time zone
+    instant = F.col("ts").cast("timestamp")
+    bounds = events.agg(
+        F.date_trunc("hour", F.min(instant)).alias("t0"),
+        F.max(instant).alias("t1"),
     ).collect()[0]
-    out = ts.resample(
-        dedup,
+    rows = events.select("user_id", F.col("ts").alias("time"), "value", "event_id")
+    if bounds["t0"] is None:
+        return rows.select("user_id", F.col("time").cast("timestamp"), "value").limit(0)
+    return ts.resample(
+        rows,
         bounds["t0"],
         bounds["t1"],
         freq,
         value_cols=["value"],
         partition_by=["user_id"],
+        created_col="event_id",  # deterministic tiebreak: latest event wins
     )
-    return out.select("user_id", "time", "value")
 
 
 def align_ffill_types(events: DataFrame, types=("click", "purchase")) -> DataFrame:

@@ -5,9 +5,9 @@ These are the dataflow building blocks of the reference engine
 
 - dedup_latest   (A1)  latest created_time per event time   [_storage/dask.py:156-165]
 - time_travel    (P2)  created_time <= time + delta         [_storage/dask.py:119-122]
-- locf           (J1/J2 core) last-observation-carried-forward
+- locf           (J1 core) last-observation-carried-forward
 - time_grid      (J2)  regular timestamp grid via sequence()
-- resample       (J2)  grid + as-of LOCF join               [_storage/dask.py:169-188]
+- resample       (J2)  keyed grid + as-of LOCF              [_storage/dask.py:169-188]
 - align          (J1)  multi-feature outer join + ffill     [_timeseries.py:11-26]
 - first_row/last_row (A2/A3)                                [_storage/dask.py:196-221]
 
@@ -15,7 +15,7 @@ Scale notes
 -----------
 A global ``Window.orderBy("time")`` (no partitionBy) collapses to ONE task —
 correct but a straggler at 100 TB. ``locf`` therefore uses a two-pass
-algorithm when no partition keys are given:
+algorithm:
 
   pass 1: bucket rows by time range (bounds interpolated from the span
           the caller already knows, ``range_hint``) and forward-fill
@@ -26,11 +26,22 @@ algorithm when no partition keys are given:
           joined back; leading nulls coalesce to the prior buckets' seed.
 
 Both passes are declarative DataFrame plans — no driver collect of seeds,
-no pandas round-trip (map/struct payloads stay JVM-side). With partition
-keys (long format, one series per key) locf uses an ordinary per-key
-window, which parallelizes across keys. ``locf``, ``resample`` and the
-join fold of ``align`` serve the operators (``events_ops``); the feature
-store reads through the long-format plans below.
+no pandas round-trip (map/struct payloads stay JVM-side). ``locf`` and the
+join fold of ``align`` serve the ``ts_align_ffill`` operator, ``resample``
+the ``ts_resample_locf`` operator (``events_ops``); the feature store reads
+through the long-format plans below.
+
+Keyed resample. ``resample`` grids one series per key (e.g. per user) in
+one plan with one hash exchange, ``repartition(keys)`` (one partition when
+there is no key); every later step runs in place. The dedup window on
+(keys, time) keeps each time's newest version; each row gets an integer
+grid cell as in ``resample_long`` (0 at or before from_date, rows past the
+last grid point in one cell no grid row reads); ``groupBy(keys, cell)``
+keeps each cell's newest non-null value; ``groupBy(keys)`` gathers a key's
+cells into a map and ``explode(sequence(0, G))`` makes its grid rows, so a
+key with no row in range still gets the whole grid; a per-key window
+ordered by cell fills them. No key list, cross join or union with the
+grid, and no range-sampling job.
 
 Store read plan. Every feature-store load (``core.FeatureStore._read_plan``)
 takes k tagged long-format series (``__series``, time, created_time and
@@ -194,43 +205,15 @@ def locf(
     df: DataFrame,
     cols: Sequence[str],
     time_col: str = TIME_COL,
-    partition_by: Sequence[str] = (),
-    order_extra: Sequence[str] = (),
     *,
     range_hint: tuple,
 ) -> DataFrame:
-    """Forward-fill ``cols`` in time order.
-
-    With ``partition_by``: per-key window (parallel across keys).
-    Without: two-pass distributed fill (see module docstring) — avoids the
-    single-task global window.
-    ``order_extra`` breaks ordering ties within equal timestamps (e.g. the
-    grid-marker column in ``resample``: data rows sort before grid rows).
-    The two-pass fill makes ``spark.sql.shuffle.partitions`` buckets whose
-    bounds are interpolated from ``range_hint=(t0, t1)``, the time span the
-    caller knows; they only steer parallelism, never the answer.
+    """Forward-fill ``cols`` in time order by the two-pass distributed fill
+    (see module docstring), which avoids the single-task global window.
+    It makes ``spark.sql.shuffle.partitions`` buckets whose bounds are
+    interpolated from ``range_hint=(t0, t1)``, the time span the caller
+    knows; they only steer parallelism, never the answer.
     """
-    if partition_by:
-        w = (
-            Window.partitionBy(*partition_by)
-            .orderBy(time_col, *order_extra)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = df
-        for c in cols:
-            out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-        return out
-    return _locf_two_pass(df, cols, time_col, list(order_extra), range_hint)
-
-
-def _locf_two_pass(
-    df: DataFrame,
-    cols: Sequence[str],
-    time_col: str,
-    order_extra: list[str],
-    range_hint: tuple,
-) -> DataFrame:
-    sort_cols = [time_col, *order_extra]
     num_parts = _shuffle_partitions(df.sparkSession)
 
     # Bucket boundaries are constants baked into both passes.
@@ -245,7 +228,7 @@ def _locf_two_pass(
     for b in bounds:
         pid_expr = pid_expr + (F.unix_micros(F.col(time_col)) > F.lit(b)).cast("int")
 
-    return _fill_buckets(df.withColumn("__pid", pid_expr), cols, sort_cols).drop(
+    return _fill_buckets(df.withColumn("__pid", pid_expr), cols, [time_col]).drop(
         "__pid"
     )
 
@@ -331,43 +314,77 @@ def resample(
     value_cols: Sequence[str] | None = None,
     time_col: str = TIME_COL,
     partition_by: Sequence[str] = (),
+    created_col: str | None = None,
 ) -> DataFrame:
-    """pandas ``resample(freq).ffill()`` semantics on a (deduped) series.
+    """pandas ``resample(freq).ffill()`` per key of ``partition_by`` (one
+    series when it is empty): (keys..., ``time_col``, value_cols...).
 
-    grid point g takes the latest value with time <= g (inclusive; a data row
-    exactly at g wins). Implemented as union(data, grid) + LOCF ordered by
-    (time, is_grid) + filter to grid rows — one range shuffle, no self-join.
-
-    With ``partition_by`` (long format, e.g. per user_id), the grid is
-    cross-joined onto the distinct keys of df; LOCF runs per key in parallel.
+    Grid point g = from_date + i * step (i = 0..G, the last point at or
+    before to_date) takes the key's latest non-null value with time <= g
+    (inclusive: a row exactly at g wins), in the newest version per time:
+    highest ``created_col`` when given, else ``df`` holds one row per
+    (keys, time). A time whose newest version is null carries the previous
+    time's value. Every key of ``df`` gets the whole grid, nulls before
+    its first value, even when none of its rows is in range. One hash
+    exchange on the keys; see "Keyed resample" in the module docstring.
     """
-    spark = df.sparkSession
+    keys = list(partition_by)
     value_cols = list(value_cols) if value_cols is not None else [
-        c for c in df.columns if c not in (time_col, *partition_by)
+        c for c in df.columns if c not in (time_col, created_col, *keys)
     ]
-    grid = time_grid(spark, from_date, to_date, freq)
-    if partition_by:
-        grid = df.select(*partition_by).distinct().crossJoin(grid)
-
-    data = df.select(
-        *partition_by, time_col, F.lit(0).alias("__grid"), *value_cols
-    ).where(F.col(time_col) <= F.lit(pd.Timestamp(to_date)).cast("timestamp"))
-    gridded = grid.select(
-        *partition_by, time_col, F.lit(1).alias("__grid"),
-        *[F.lit(None).cast(data.schema[c].dataType).alias(c) for c in value_cols],
+    step = parse_freq(freq)[2] * 1_000_000
+    t0 = _micros(from_date)
+    last = max(0, (_micros(to_date) - t0) // step)  # cells 0..last
+    # rows at or before from_date land in cell 0, rows past the last grid
+    # point in cell last + 1, which no grid row reads; a null time gives a
+    # null max_by key below, so its row adds nothing but its key
+    cell = F.least(
+        F.lit(last + 1),
+        F.greatest(
+            F.lit(0),
+            F.expr(
+                f"(unix_micros(CAST(`{time_col}` AS TIMESTAMP)) - {t0} + {step - 1})"
+                f" div {step}"
+            ),
+        ),
     )
-    unioned = data.unionByName(gridded)
-    filled = locf(
-        unioned,
-        value_cols,
-        time_col=time_col,
-        partition_by=partition_by,
-        order_extra=["__grid"],
-        # the grid span is known: seed rows before from_date land in
-        # bucket 0; no quantile job needed
-        range_hint=(from_date, to_date),
+    rows = df.repartition(*keys) if keys else df.repartition(1)
+    if created_col is not None:
+        rows = dedup_latest(rows, time_col, created_col, partition_by=keys)
+    newest = [
+        F.max_by(c, F.when(F.col(c).isNotNull(), F.col(time_col))).alias(c)
+        for c in value_cols
+    ]
+    grids = (
+        rows.groupBy(*keys, cell.alias("__cell"))
+        .agg(*newest)
+        .groupBy(*keys)
+        .agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("__cell", F.struct(*value_cols)))
+            ).alias("__cells")
+        )
+        .select(
+            *keys,
+            "__cells",
+            F.explode(F.expr(f"sequence(0L, {last}L)")).alias("__cell"),
+        )
     )
-    return filled.where(F.col("__grid") == 1).drop("__grid")
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy("__cell")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return grids.select(
+        *keys,
+        F.timestamp_micros(F.lit(t0) + F.col("__cell") * step).alias(time_col),
+        *[
+            F.last(F.col("__cells")[F.col("__cell")][c], ignorenulls=True)
+            .over(w)
+            .alias(c)
+            for c in value_cols
+        ],
+    )
 
 
 def resample_long(

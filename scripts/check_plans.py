@@ -43,7 +43,9 @@ snapshot is refreshed deliberately (a new pandas-UDF boundary should be
 a reviewed decision, not an accident).
 
 Snapshot state (reviewed): py_eval=0 everywhere; the cartesian=true
-entries (39 as of r13) are all one of two declared benign classes —
+entries (38; 39 until ts_resample_locf's per-user grid cross join gave
+way to one hash exchange on user_id) are all one of two declared benign
+classes —
 (a) SCALAR-ATTACH joins: a 1-row aggregate (corpus total, cutoff
 timestamp, weight normalizer) broadcast-nested-loop-joined onto a data
 frame, the standard way to attach a scalar without a collect; (b) the

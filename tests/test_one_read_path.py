@@ -1,12 +1,14 @@
 """One read plan for every load: open ranges, mixed value types,
 transforms, last() of a transform and sql() views all equal the pandas
 model of the reference semantics (``read_model``); a feature requested
-twice, or two features sharing one SQL view name, are refused; and the
-shapes that once took the per-feature join fold run few Spark jobs."""
+twice, or two features sharing one SQL view name, are refused; sql()
+views end with their call; and the shapes that once took the
+per-feature join fold run few Spark jobs."""
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import AnalysisException
 
 from bytehub_spark.exceptions import ValidationError
 from read_model import assert_matches, loaded, model
@@ -171,6 +173,24 @@ def test_two_features_sharing_a_sql_view_name_are_refused(fs):
         fs.sql("select avg(value) from test_a_b", ["test/a-b", "test/a_b"])
     # each alone keeps its own view
     assert fs.sql("select avg(value) as v from test_a_b", ["test/a-b"]).collect()[0]["v"] == 1.0
+
+
+def test_sql_views_do_not_outlive_the_call(fs):
+    """A call's views are gone once it returns: a later call cannot read a
+    view it did not list, and the frame the first call returned still
+    collects."""
+    for name, n in (("test/a", 1), ("test/b", 2)):
+        fs.create_feature(name, partition="date")
+        times = pd.date_range("2024-01-01", periods=n, freq="12h")
+        fs.save_dataframe(pd.DataFrame({"time": times, "value": 1.0}), name)
+    got = fs.sql(
+        "select count(*) as n from test_b", ["test/b"],
+        from_date="2024-01-01", to_date="2024-01-02",
+    )
+    with pytest.raises(AnalysisException, match="test_b"):
+        fs.sql("select count(*) from test_b", ["test/a"])
+    assert got.collect()[0]["n"] == 2
+    assert fs.sql("select count(*) as n from test_a", ["test/a"]).collect()[0]["n"] == 1
 
 
 # a one-byte advisory size sends every load to the many-range side
