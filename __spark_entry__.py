@@ -454,17 +454,15 @@ def _weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _weighted_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The weighted_sample cap ROUTER's >64 regime end-to-end (VERDICT
-    r13 #4: the route is the operator's choice now): weight = 1 +
-    n_chars % 200 (spans [1, 200] — genuinely past the unroll cap),
-    cap = 150 (> WSAMPLE_UNROLL_CAP = 128, the r14-measured boundary),
-    so the operator self-routes to the higher-order-function shape
-    (array_max over transform/sequence — no unrolled projection, no
-    explode, no shuffle) AND the clamp to [1, 150] is live for weights
-    in (150, 200]. The oracle replays the identical integer
-    draws via generate_series ≤ w_eff + MAX — the driver hash-compares
-    the actual routed selection. Plan: still TakeOrderedAndProject with
-    ZERO exchanges (pinned in pytest across the boundary)."""
+    """curation.weighted_sample with a live clamp end-to-end: weight =
+    1 + n_chars % 200 (spans [1, 200]), cap = 150, so weights in
+    (150, 200] clamp to 150 and a row draws up to 150 times in the
+    operator's one priority shape (array_max over chained transforms
+    of sequence(1, w_eff) — no row explosion, no shuffle).
+    The oracle replays the identical integer draws via generate_series
+    ≤ w_eff + MAX — the driver hash-compares the actual selection.
+    Plan: TakeOrderedAndProject with ZERO exchanges (pinned in
+    pytest)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", (1 + F.col("n_chars") % 200).alias("w")
     )
@@ -2217,7 +2215,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # A-ES weighted top-k sample in exact integer arithmetic
         # (max-of-w-uniforms reformulation) — exact oracle
         "cur_weighted_sample": _weighted_sample,
-        # the cap router's >64 regime (HOF shape + live clamp) — exact
+        # weights past the cap (live clamp, up to 150 draws) — exact
         # oracle (generate_series replay)
         "cur_weighted_routed": _weighted_routed,
         # RFM quintile segmentation: per-user recency/frequency/monetary
@@ -3612,10 +3610,12 @@ def oracle_sql() -> dict[str, str]:
                 (SELECT t0 FROM b), (SELECT t1 FROM b), INTERVAL 1 HOUR)) AS time),
             users AS (SELECT DISTINCT user_id FROM events),
             ug AS (SELECT u.user_id, g.time FROM users u CROSS JOIN grid g),
-            dedup AS (SELECT user_id, ts, arg_max(value, event_id) AS value
-                      FROM events GROUP BY user_id, ts)
+            dedup AS (SELECT user_id, ts, value FROM events
+                      QUALIFY row_number() OVER (
+                          PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
+            known AS (SELECT * FROM dedup WHERE value IS NOT NULL)
             SELECT ug.user_id, ug.time, d.value
-            FROM ug ASOF LEFT JOIN dedup d
+            FROM ug ASOF LEFT JOIN known d
               ON d.user_id = ug.user_id AND d.ts <= ug.time
         """,
         "ts_align_ffill": """

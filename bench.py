@@ -145,7 +145,7 @@ BENCH_QUERIES = [
     "ts_hll_matrix",
     "cur_weighted_sample",
     # r14: grouped KMV (per-type bottom-k distinct estimate) + the
-    # weighted_sample cap router's >64 HOF regime, benched at birth
+    # weighted_sample with weights past its cap, benched at birth
     "ts_kmv_by_type",
     "cur_weighted_routed",
 ]

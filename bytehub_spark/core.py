@@ -17,11 +17,12 @@ Query lifecycle parity map (SURVEY.md §3.1):
   plan width         timeseries.plan_ranges       (no reference step)
   time travel        timeseries.time_travel       [dask.py:119-122]
   dedup              timeseries.dedup_latest      [dask.py:156-165]
-                     (inside ranged_long / resample_long / align_long)
+                     (inside ranged_long / resample_long / align)
   resample/slice     timeseries.resample_long,    [dask.py:169-191]
                      timeseries.ranged_long (one series, no freq)
   alias + align      core.load_dataframe →        [core.py:275-276]
-                     timeseries.align_long
+                     timeseries.align (with locf, the
+                     ts_align_ffill operator's kernel too)
 """
 
 from __future__ import annotations
@@ -133,7 +134,7 @@ def _window(bounds, from_date, to_date) -> tuple:
     returns that row. None for the open bound of a feature without data."""
     lo = from_date if from_date is not None else bounds[0]
     hi = to_date if to_date is not None else bounds[1]
-    lo, hi = (None if t is None else pd.Timestamp(t) for t in (lo, hi))
+    lo, hi = (None if t is None else ts.instant(t) for t in (lo, hi))
     if lo is not None and hi is not None and hi < lo:
         hi = lo
     return lo, hi
@@ -296,15 +297,15 @@ class FeatureStore:
               → n = ts.plan_ranges(scans)  (plan-time size estimate)
               → one time-travel predicate
               → no freq: ts.ranged_long (k = 1: one range exchange on
-                    time, dedup + sort in place) or ts.align_long (one
-                    range exchange on time buckets, dedup + fill in place)
+                    time, dedup + sort in place) or ts.align (one range
+                    exchange on time buckets, dedup + fill in place)
               → freq, per distinct window: ∪ one seed aggregate
                     groupBy(series) over the scans pruned to
                     time <= from [_seed_rows] (explicit from_date only),
                     then ts.resample_long (one exchange on the grid cell,
                     dedup in place, then the answer-sized fill); one
                     window is the answer, more (and transforms) meet in
-                    ts.align_long on the union of their grid times
+                    ts.align on the union of their grid times
 
         Each shuffles its rows once, on a key that already orders the
         answer, into one partition when the scans are small (see "Store
@@ -397,11 +398,11 @@ class FeatureStore:
             if len(groups) == 1 and not outputs:
                 return grid
             parts.append(_tagged(grid, {n: _qcol(n) for n in group}, cols, vtypes, no_created))
-        # the span only balances align_long's buckets
+        # the span only balances align's buckets
         known = [w for w in windows.values() if None not in w]
         known = known or [_window((0, 0), from_date, to_date)]
         span = min(w[0] for w in known), max(w[1] for w in known)
-        return ts.align_long(_union(parts + extra), cols, *span, ranges)
+        return ts.align(_union(parts + extra), cols, *span, ranges)
 
     def load_pandas(
         self,
@@ -631,9 +632,13 @@ class FeatureStore:
                 sdf = self._storage(nsp).scan(nm, scheme=meta["partition"], base=base)
                 branches.append(sdf.select(F.lit(i).alias("__i"), F.col(ts.TIME_COL)))
         if branches:
-            aggs = [F.min(ts.TIME_COL).alias("mn"), F.max(ts.TIME_COL).alias("mx")]
-            for row in _union(branches).groupBy("__i").agg(*aggs).collect():
-                bounds[pairs[row["__i"]]] = (row["mn"], row["mx"])
+            # µs since the epoch: a collected timestamp is a naive datetime
+            # in the driver's time zone, a naive request time a UTC instant
+            aggs = [F.unix_micros(f(ts.TIME_COL)) for f in (F.min, F.max)]
+            for i, *us in _union(branches).groupBy("__i").agg(*aggs).collect():
+                bounds[pairs[i]] = tuple(
+                    None if t is None else pd.Timestamp(t, unit="us", tz="UTC") for t in us
+                )
         return bounds
 
     # ------------------------------------------------------------------
@@ -792,7 +797,7 @@ class FeatureStore:
             raise MissingFeatureException(f"Feature {nsp}/{nm} does not exist")
 
         if ts.CREATED_COL not in pdf.columns:
-            pdf[ts.CREATED_COL] = pd.Timestamp.now()
+            pdf[ts.CREATED_COL] = pd.Timestamp.now(tz="UTC")  # naive times are UTC too
         pdf[ts.TIME_COL] = pd.to_datetime(pdf[ts.TIME_COL])
         pdf[ts.CREATED_COL] = pd.to_datetime(pdf[ts.CREATED_COL])
         pdf = pdf[[ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL]]

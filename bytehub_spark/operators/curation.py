@@ -564,21 +564,7 @@ def sample_k_per_group(
 # sketch family's h1/h2 streams on the same key.
 WSAMPLE_SEED = 2654435769
 
-# Routing boundary for weighted_sample: caps up to this many draws are
-# driver-unrolled IF-gated mixer expressions under GREATEST; past it
-# the operator routes itself to the higher-order-function shape (max
-# over transform/sequence) — same priority law, still ZERO exchanges
-# (VERDICT r13 #4: the route is the operator's choice, not caller
-# homework). Boundary MEASURED, not assumed (r14, 10M rows, w_eff
-# saturated at the cap): unroll beats the HOF shape 2.9x at cap=128
-# (22.7s vs 64.8s warm) but only ~1.2x at cap=256 while its compile
-# cost balloons (first-run 139.5s vs 39.8s at 128 — the generated
-# method outgrows JIT budgets and scaling turns super-linear), so the
-# boundary sits at 128 where the unroll's win is still decisive and
-# compile cost is bounded.
-WSAMPLE_UNROLL_CAP = 128
-
-# Refusal bound for the routed shape: per-row work is O(min(weight,
+# Refusal bound for weighted_sample's cap: per-row work is O(min(weight,
 # cap)) mixer rounds, so a cap past this is a config error (bucket
 # heavy-tailed raw weights into [1, cap] instead — the priced-refusal
 # convention: refuse loudly rather than run a pathological plan).
@@ -605,36 +591,28 @@ def weighted_sample(
 
     Weights are COALESCEd (NULL → 1) then clamped to [1, cap],
     surfaced as ``w_eff`` so the clamp is visible in the output, not
-    silent. The cap bounds per-row work and ROUTES the priority shape
-    (self-routing, the jaccard_pairs_routed convention): cap ≤
-    WSAMPLE_UNROLL_CAP (128, measured — see the constant's comment)
-    builds cap driver-unrolled mixer expressions gated by
-    IF(w_eff >= r, h_r, -1) under GREATEST — the widest
-    codegen-friendly projection; past it the unrolled projection
-    outgrows codegen/JIT budgets, so the operator switches to
-    array_max(transform(sequence(1, w_eff), r -> mix(id, SEED + r)))
-    — the same priority law as a JVM higher-order function, per-row
-    work O(w_eff) with NO row explosion and NO groupBy shuffle. Both
-    shapes produce bit-identical output (pinned across the boundary in
-    tests). cap > WSAMPLE_MAX_CAP (2^20) raises — bucket heavy-tailed
+    silent. The priority is array_max over chained transforms of
+    sequence(1, w_eff), one mixer round each — a JVM higher-order
+    function, per-row work O(w_eff) with NO row explosion and NO groupBy
+    shuffle. cap > WSAMPLE_MAX_CAP (2^20) raises — bucket heavy-tailed
     raw weights into [1, cap] instead of paying 2^20 mixer rounds per
     row.
 
     Scale: top-k is orderBy(priority desc, id).limit(k) =
     TakeOrderedAndProject — per-partition running top-k, then a
-    k·partitions driver merge. NO full shuffle, NO global sort (BOTH
-    shapes — pinned): a weighted sample of 100 TB costs one scan.
+    k·partitions driver merge. NO full shuffle, NO global sort
+    (pinned): a weighted sample of 100 TB costs one scan.
     Output (id, weight, w_eff, priority), priority-desc / id-asc
     ordered; ids are assumed unique (the sample is keyed by id).
     """
-    from .hashing import int_mix_sql
+    from .hashing import MINHASH_PRIME, PLANE_A, PLANE_C
 
     if k < 1:
         raise ValueError("k >= 1 required")
     if not (1 <= int(cap) <= WSAMPLE_MAX_CAP):
         raise ValueError(
-            f"cap must be in [1, {WSAMPLE_MAX_CAP}] — per-row work in "
-            "the routed shape is O(cap) mixer rounds; pre-bucket "
+            f"cap must be in [1, {WSAMPLE_MAX_CAP}] — per-row work is "
+            "O(cap) mixer rounds; pre-bucket "
             "heavy-tailed weights instead of raising the cap further"
         )
     cap = int(cap)
@@ -648,40 +626,25 @@ def weighted_sample(
         F.col(weight_col).alias("weight"),
         w_eff.alias("w_eff"),
     )
-    if cap <= WSAMPLE_UNROLL_CAP:
-        draws = [
-            F.expr(
-                f"IF(w_eff >= {r}, "
-                f"{int_mix_sql(id_col, WSAMPLE_SEED + r)}, -1)"
-            )
-            for r in range(1, cap + 1)
-        ]
-        pri = draws[0] if cap == 1 else F.greatest(*draws)
-    else:
-        # routed shape, as CHAINED transforms (r15 opt): int_mix_sql's
-        # text nests each round's operand h three times — free under
-        # whole-stage codegen (subexpression elimination), but
-        # higher-order-function lambdas run INTERPRETED, where every
-        # textual occurrence re-evaluates, compounding to ~9 residue
-        # computations per mixer round per draw. Binding each round to
-        # its own transform makes h a lambda VARIABLE (evaluated once);
-        # the arithmetic — base residue, affine round, two quadratic
-        # rounds mod p — is the same operations in the same order, so
-        # every priority is bit-identical (pinned across the route
-        # boundary in tests). Intermediates unchanged (< 2^62 + 2^61:
-        # seed ≤ 2^32 + 2^20).
-        from .hashing import MINHASH_PRIME, PLANE_A, PLANE_C
-
-        m_, a_, c_ = MINHASH_PRIME, PLANE_A, PLANE_C
-        t0 = (
-            f"transform(sequence(1, w_eff), r -> "
-            f"((CAST({id_col} AS BIGINT) % {m_} + {m_} "
-            f"+ ({WSAMPLE_SEED} + r)) % {m_}))"
-        )
-        t1 = f"transform({t0}, h -> ((h * {a_} + {c_}) % {m_}))"
-        t2 = f"transform({t1}, h -> ((h * h + {a_} * h + {c_}) % {m_}))"
-        t3 = f"transform({t2}, h -> ((h * h + {a_} * h + {c_}) % {m_}))"
-        pri = F.expr(f"array_max({t3})")
+    # CHAINED transforms: int_mix_sql's text nests each round's operand h
+    # three times — free under whole-stage codegen (subexpression
+    # elimination), but higher-order-function lambdas run INTERPRETED,
+    # where every textual occurrence re-evaluates. Binding each round to
+    # its own transform makes h a lambda VARIABLE (evaluated once); the
+    # arithmetic — base residue, affine round, two quadratic rounds mod p
+    # — is int_mix's, in the same order, so every priority is
+    # bit-identical to it (pinned by a pure-Python replay in tests).
+    # Intermediates < 2^62 + 2^61 (seed ≤ 2^32 + 2^20).
+    m_, a_, c_ = MINHASH_PRIME, PLANE_A, PLANE_C
+    t0 = (
+        f"transform(sequence(1, w_eff), r -> "
+        f"((CAST({id_col} AS BIGINT) % {m_} + {m_} "
+        f"+ ({WSAMPLE_SEED} + r)) % {m_}))"
+    )
+    t1 = f"transform({t0}, h -> ((h * {a_} + {c_}) % {m_}))"
+    t2 = f"transform({t1}, h -> ((h * h + {a_} * h + {c_}) % {m_}))"
+    t3 = f"transform({t2}, h -> ((h * h + {a_} * h + {c_}) % {m_}))"
+    pri = F.expr(f"array_max({t3})")
     return (
         base.select(
             id_col, "weight", "w_eff", pri.cast("long").alias("priority")

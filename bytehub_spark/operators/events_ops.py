@@ -6,8 +6,9 @@ returning a DataFrame whose columns are aliased for the DuckDB oracle.
 
 Scale notes are inline; every op is shuffle-minimal: windows partition by
 series key (parallel across keys), grids come from sequence() (no driver
-loop), and the LOCF resample is the engine's keyed resample (one hash
-exchange on the key).
+loop), the LOCF resample is the engine's keyed resample (one hash
+exchange on the key), and alignment is the store's aligned kernel
+(``ts.align``, one range exchange on time buckets).
 """
 
 from __future__ import annotations
@@ -97,19 +98,20 @@ def resample_locf(events: DataFrame, freq: str = "1h") -> DataFrame:
     each user's grid rows and the fill all run in place. No timed row:
     no grid, an empty frame.
     """
-    # as instants: naive bounds would be read in the driver's time zone
+    # as µs since the epoch: a collected timestamp is a naive datetime in
+    # the driver's time zone, a naive request time a UTC instant
     instant = F.col("ts").cast("timestamp")
-    bounds = events.agg(
-        F.date_trunc("hour", F.min(instant)).alias("t0"),
-        F.max(instant).alias("t1"),
+    t0, t1 = events.agg(
+        F.unix_micros(F.date_trunc("hour", F.min(instant))),
+        F.unix_micros(F.max(instant)),
     ).collect()[0]
     rows = events.select("user_id", F.col("ts").alias("time"), "value", "event_id")
-    if bounds["t0"] is None:
+    if t0 is None:
         return rows.select("user_id", F.col("time").cast("timestamp"), "value").limit(0)
     return ts.resample(
         rows,
-        bounds["t0"],
-        bounds["t1"],
+        pd.Timestamp(t0, unit="us"),
+        pd.Timestamp(t1, unit="us"),
         freq,
         value_cols=["value"],
         partition_by=["user_id"],
@@ -119,23 +121,30 @@ def resample_locf(events: DataFrame, freq: str = "1h") -> DataFrame:
 
 def align_ffill_types(events: DataFrame, types=("click", "purchase")) -> DataFrame:
     """J1: two series (hourly latest value per type) aligned on the union
-    hour axis, each carried forward — outer join + LOCF."""
-    frames = []
-    for t in types:
-        hourly = (
-            events.where(F.col("event_type") == t)
-            .groupBy(F.date_trunc("hour", F.col("ts")).alias("time"))
-            .agg(F.max_by("value", F.struct("ts", "event_id")).alias(f"{t}_value"))
+    hour axis, each carried forward: the store's aligned kernel
+    ``ts.align`` over long-format rows, one per (type, hour) from one
+    ``groupBy``, tagged ``<type>_value``. Its buckets' span is collected
+    only when ``ts.plan_ranges`` gives more than one; it steers no answer.
+    """
+    hour = F.date_trunc("hour", F.col("ts"))
+    rows = (
+        events.where(F.col("event_type").isin(*types))
+        .groupBy("event_type", hour.alias(ts.TIME_COL))
+        .agg(F.max_by("value", F.struct("ts", "event_id")).alias(ts.VALUE_COL))
+        .select(
+            F.concat("event_type", F.lit("_value")).alias(ts.SERIES_COL),
+            ts.TIME_COL,
+            F.lit(None).cast("timestamp").alias(ts.CREATED_COL),
+            ts.VALUE_COL,
         )
-        frames.append(hourly)
-    # range hint from one cheap agg over the raw scan: align's LOCF
-    # interpolates its bucket bounds from it
-    bounds = events.agg(
-        F.date_trunc("hour", F.min("ts")).alias("t0"),
-        F.date_trunc("hour", F.max("ts")).alias("t1"),
-    ).collect()[0]
-    aligned = ts.align(frames, ffill=True, range_hint=(bounds["t0"], bounds["t1"]))
-    return aligned.select("time", *[f"{t}_value" for t in types])
+    )
+    ranges = ts.plan_ranges(rows)
+    span = (0, 0)
+    if ranges > 1:
+        us = events.agg(F.unix_micros(F.min(hour)), F.unix_micros(F.max(hour))).collect()[0]
+        span = tuple(pd.Timestamp(0 if t is None else t, unit="us") for t in us)
+    cols = {f"{t}_value": ts.VALUE_COL for t in types}
+    return ts.align(rows, cols, *span, ranges)
 
 
 def seed_lookup(events: DataFrame, cutoff: str) -> DataFrame:

@@ -25,7 +25,6 @@ import shutil
 from typing import Sequence
 from urllib.parse import urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,7 +50,7 @@ def partition_expr(scheme: str):
 
 
 def partition_bound(value, scheme: str) -> str:
-    v = pd.Timestamp(value)
+    v = ts.instant(value)
     return v.strftime("%Y-%m-%d") if scheme == "date" else v.strftime("%Y")
 
 
@@ -472,12 +471,12 @@ class SparkStorage:
             return self.spark.createDataFrame([], empty_schema)
         if from_date is not None:
             df = df.where(
-                (F.col(ts.TIME_COL) >= F.lit(pd.Timestamp(from_date)).cast("timestamp"))
+                (F.col(ts.TIME_COL) >= F.lit(ts.instant(from_date)).cast("timestamp"))
                 & (F.col(PARTITION_COL) >= partition_bound(from_date, scheme))
             )
         if to_date is not None:
             df = df.where(
-                (F.col(ts.TIME_COL) <= F.lit(pd.Timestamp(to_date)).cast("timestamp"))
+                (F.col(ts.TIME_COL) <= F.lit(ts.instant(to_date)).cast("timestamp"))
                 & (F.col(PARTITION_COL) <= partition_bound(to_date, scheme))
             )
         return df.drop(PARTITION_COL)

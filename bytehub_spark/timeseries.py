@@ -5,31 +5,33 @@ These are the dataflow building blocks of the reference engine
 
 - dedup_latest   (A1)  latest created_time per event time   [_storage/dask.py:156-165]
 - time_travel    (P2)  created_time <= time + delta         [_storage/dask.py:119-122]
-- locf           (J1 core) last-observation-carried-forward
+- locf           (J1 core) last-observation-carried-forward over time buckets
 - time_grid      (J2)  regular timestamp grid via sequence()
 - resample       (J2)  keyed grid + as-of LOCF              [_storage/dask.py:169-188]
-- align          (J1)  multi-feature outer join + ffill     [_timeseries.py:11-26]
+- align          (J1)  k-series outer join on time + ffill  [_timeseries.py:11-26]
 - first_row/last_row (A2/A3)                                [_storage/dask.py:196-221]
 
 Scale notes
 -----------
 A global ``Window.orderBy("time")`` (no partitionBy) collapses to ONE task —
-correct but a straggler at 100 TB. ``locf`` therefore uses a two-pass
-algorithm:
+correct but a straggler at 100 TB. ``locf`` therefore fills rows that its
+caller has bucketed by time range (``__pid``) in two passes:
 
-  pass 1: bucket rows by time range (bounds interpolated from the span
-          the caller already knows, ``range_hint``) and forward-fill
-          WITHIN each bucket via a per-bucket window — buckets run in
-          parallel.
+  pass 1: forward-fill WITHIN each bucket via a per-bucket window —
+          buckets run in parallel.
   pass 2: each bucket's last non-null per column (one row per bucket) is
           prefix-scanned by a window over that tiny frame and broadcast-
           joined back; leading nulls coalesce to the prior buckets' seed.
+          One bucket skips it.
 
 Both passes are declarative DataFrame plans — no driver collect of seeds,
-no pandas round-trip (map/struct payloads stay JVM-side). ``locf`` and the
-join fold of ``align`` serve the ``ts_align_ffill`` operator, ``resample``
-the ``ts_resample_locf`` operator (``events_ops``); the feature store reads
-through the long-format plans below.
+no pandas round-trip (map/struct payloads stay JVM-side). ``align`` and
+``resample_long`` fill through ``locf``; they serve the feature store's
+loads (below) and, for ``align``, the ``ts_align_ffill`` operator, whose
+hourly rows per event type enter as tagged long-format series.
+``resample`` serves the ``ts_resample_locf`` operator (``events_ops``).
+A naive request time is a UTC instant (``instant``), whatever the
+driver process's time zone.
 
 Keyed resample. ``resample`` grids one series per key (e.g. per user) in
 one plan with one hash exchange, ``repartition(keys)`` (one partition when
@@ -78,7 +80,7 @@ own value column with one ``max_by``/``first`` over
   and at n = 1 it needs no second exchange either: the one partition
   already holds the answer. The final ``orderBy(__pid, __cell)`` is
   satisfied by that partitioning and costs only a local sort.
-- ``align_long`` (k >= 2 without freq, or series on different grids):
+- ``align`` (k >= 2 without freq, or series on different grids):
   rows get n arithmetic time buckets ``__pid`` over the load's span, go
   through one ``repartitionByRange(n, __pid)``, and the dedup window, the
   ``groupBy(__pid, time)`` aggregate, the two-pass fill (pass 1 only at
@@ -91,12 +93,11 @@ AQE may coalesce.
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .utils import freq_to_interval, parse_freq, parse_timedelta_interval
 
@@ -115,9 +116,17 @@ def _qcol(name: str) -> Column:
     return F.col(f"`{name}`")
 
 
+def instant(t) -> pd.Timestamp:
+    """Request time ``t`` as a UTC instant: a naive time is read in UTC,
+    the session zone ``get_spark`` sets, never in the driver's zone
+    (``F.lit`` of a naive datetime would read it in the latter)."""
+    t = pd.Timestamp(t)
+    return t.tz_localize("UTC") if t.tzinfo is None else t.tz_convert("UTC")
+
+
 def _micros(t) -> int:
-    """µs since the epoch of ``t`` as Spark reads ``F.lit(pd.Timestamp(t))``."""
-    return T.TimestampType().toInternal(pd.Timestamp(t).to_pydatetime())
+    """µs since the epoch of ``instant(t)``."""
+    return instant(t).value // 1000
 
 
 def _shuffle_partitions(spark: SparkSession) -> int:
@@ -202,43 +211,12 @@ def time_travel(
 # ---------------------------------------------------------------------------
 
 def locf(
-    df: DataFrame,
-    cols: Sequence[str],
-    time_col: str = TIME_COL,
-    *,
-    range_hint: tuple,
-) -> DataFrame:
-    """Forward-fill ``cols`` in time order by the two-pass distributed fill
-    (see module docstring), which avoids the single-task global window.
-    It makes ``spark.sql.shuffle.partitions`` buckets whose bounds are
-    interpolated from ``range_hint=(t0, t1)``, the time span the caller
-    knows; they only steer parallelism, never the answer.
-    """
-    num_parts = _shuffle_partitions(df.sparkSession)
-
-    # Bucket boundaries are constants baked into both passes.
-    # (repartitionByRange + spark_partition_id would be subtly wrong: its
-    # sampled boundaries can differ when the lazy second pass recomputes,
-    # silently mismatching the seeds.)
-    t0 = int(pd.Timestamp(range_hint[0]).value // 1000)  # ns -> µs
-    t1 = int(pd.Timestamp(range_hint[1]).value // 1000)
-    step = max(1, (t1 - t0) // num_parts)
-    bounds = [t0 + i * step for i in range(1, num_parts)] if t1 > t0 else []
-    pid_expr = F.lit(0)
-    for b in bounds:
-        pid_expr = pid_expr + (F.unix_micros(F.col(time_col)) > F.lit(b)).cast("int")
-
-    return _fill_buckets(df.withColumn("__pid", pid_expr), cols, [time_col]).drop(
-        "__pid"
-    )
-
-
-def _fill_buckets(
     parted: DataFrame, cols: Sequence[str], sort_cols: Sequence[str], carry=True
 ) -> DataFrame:
     """Forward-fill ``cols`` of rows bucketed by ``__pid`` (buckets ordered
-    like ``sort_cols``); keeps ``__pid``. Without ``carry`` only pass 1
-    runs: right when there is one bucket."""
+    like ``sort_cols``) by the two-pass fill (see module docstring), which
+    avoids the single-task global window; keeps ``__pid``. Without
+    ``carry`` only pass 1 runs: right when there is one bucket."""
     # pass 1 (declarative, no driver collect): fill WITHIN each bucket via a
     # per-bucket window — buckets run in parallel, each a bounded task.
     w_in = (
@@ -297,8 +275,8 @@ def time_grid(spark: SparkSession, start, end, freq: str) -> DataFrame:
         .select(
             F.explode(
                 F.sequence(
-                    F.lit(pd.Timestamp(start)).cast("timestamp"),
-                    F.lit(pd.Timestamp(end)).cast("timestamp"),
+                    F.lit(instant(start)).cast("timestamp"),
+                    F.lit(instant(end)).cast("timestamp"),
                     F.expr(interval),
                 )
             ).alias(TIME_COL)
@@ -435,7 +413,7 @@ def resample_long(
     )
     if ranges > 1 or n > 1:  # else one partition already holds the answer
         wide = wide.repartitionByRange(n, "__pid")
-    filled = _fill_buckets(wide, list(cols), ["__cell"], carry=n > 1)
+    filled = locf(wide, list(cols), ["__cell"], carry=n > 1)
     return filled.orderBy("__pid", "__cell").select(
         F.timestamp_micros(F.lit(t0) + F.col("__cell") * step).alias(TIME_COL),
         *[_qcol(c) for c in cols],
@@ -461,37 +439,12 @@ def ranged_long(df: DataFrame, name: str, ranges: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def align(
-    dfs: Sequence[DataFrame],
-    time_col: str = TIME_COL,
-    ffill: bool = True,
-    *,
-    range_hint: tuple,
-) -> DataFrame:
-    """Outer-join k single-series frames on time; carry each series forward
-    onto the union time axis (_timeseries.py:11-26).
-
-    Each input must have columns (time, <unique series name>). A fold of
-    outer joins — sort-merge friendly, preserves each column's exact type.
-    ``range_hint=(t0, t1)``: the known overall time span, from which the
-    LOCF bucket bounds are derived arithmetically.
-    """
-    if not dfs:
-        raise ValueError("align() needs at least one frame")
-    out = dfs[0]
-    for nxt in dfs[1:]:
-        out = out.join(nxt, on=time_col, how="outer")
-    value_cols = [c for c in out.columns if c != time_col]
-    if ffill:
-        out = locf(out, value_cols, time_col=time_col, range_hint=range_hint)
-    return out
-
-
-def align_long(
     df: DataFrame, cols: dict[str, str], from_date, to_date, ranges: int
 ) -> DataFrame:
-    """``align`` of k tagged series at once: ``time`` (the union of the
-    series' times) + one column per series of ``cols``, each carried
-    forward, ordered by time.
+    """Outer join of k tagged series on time plus forward fill
+    (_timeseries.py:11-26): ``time`` (the union of the series' times) +
+    one column per series of ``cols``, each carried forward, ordered by
+    time.
 
     ``df`` holds long-format rows (``__series``, time, created_time and the
     value columns), all versions, each within its series' window; ``cols``
@@ -501,7 +454,7 @@ def align_long(
     """
     t0 = _micros(from_date)
     step = max(1, (_micros(to_date) - t0) // ranges)
-    # the bucket of ``locf``'s range_hint bounds t0 + i*step, i = 1..P-1
+    # bucket i holds (t0 + i*step, t0 + (i+1)*step]; the ends take the rest
     pid = F.expr(
         f"least({ranges - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
     )
@@ -517,7 +470,7 @@ def align_long(
         .groupBy("__pid", TIME_COL)
         .agg(*firsts)
     )
-    filled = _fill_buckets(wide, list(cols), [TIME_COL], carry=ranges > 1)
+    filled = locf(wide, list(cols), [TIME_COL], carry=ranges > 1)
     return filled.orderBy("__pid", TIME_COL).select(TIME_COL, *[_qcol(c) for c in cols])
 
 

@@ -62,14 +62,17 @@ Round-5 adjudication of the two new flags over all 178 plans:
   inheriting a full-data range exchange + sort that the window's hash
   shuffle immediately destroyed. Fixed (unordered _token_budget core);
   snapshot now has global_sort=0 everywhere.
-- global_window: FOUR hits, all reviewed tiny-frame windows, kept:
-  cur_pack_sequences + ts_align_ffill (locf) + ts_lateness_audit — the
-  pass-2 prefix scan over the <= shuffle-partitions-row per-shard
-  offsets table of the two-pass prefix-sum/cummax pattern (the pattern
-  exists precisely so the DATA never sees a partition-less window);
-  ts_top_paths — rank over the k=20 survivors of a
-  TakeOrderedAndProject. These stay true in the snapshot; a NEW
-  global_window anywhere else fails the gate.
+- global_window: THREE hits, all reviewed tiny-frame windows, kept:
+  cur_pack_sequences + ts_lateness_audit — the pass-2 prefix scan over
+  the <= shuffle-partitions-row per-shard offsets table of the two-pass
+  prefix-sum/cummax pattern (the pattern exists precisely so the DATA
+  never sees a partition-less window); ts_top_paths — rank over the
+  k=20 survivors of a TakeOrderedAndProject. These stay true in the
+  snapshot; a NEW global_window anywhere else fails the gate.
+  ts_align_ffill was a fourth (ts.locf's pass 2) until it moved onto
+  the store's aligned kernel (ts.align), which plans a scan this small
+  as one bucket and skips pass 2; past the advisory partition size it
+  runs that same tiny-frame prefix scan again.
 
 Round-5 additions (186 queries total): the 8 new queries contribute 2
 cartesian=true (ts_rfm_segments' percentile-breakpoint scalar attach,

@@ -2,7 +2,7 @@
 # Corpus: python scripts/gen_scale_corpora.py ev100m  (/tmp/sf100_stream100m)
 """Round-14 operators at 100M events (the sketch-at-birth convention,
 r13's scale_r13ops100m.py): grouped KMV batch build + estimate, the
-GroupedKmvMonitor replay, and the routed weighted_sample — each with
+GroupedKmvMonitor replay, and weighted_sample at cap 150 — each with
 an exactness assertion so the number only counts if the answer is
 right.
 
@@ -11,11 +11,9 @@ right.
   countDistinct within the ~1/sqrt(k-2) law (x4 slack).
 - GroupedKmvMonitor over a 20-file replay: stream == batch hash-for-
   hash (the idempotent bottom-k merge at scale).
-- weighted_sample routed shape (cap=150 > the measured unroll
-  boundary 128) over 100M rows with weights spanning [1, 200]: the
-  check is the pure-integer replay on the selected rows + the
-  zero-exchange plan shape (caps past the boundary are unreachable
-  unrolled, so there is no twin to compare against).
+- weighted_sample (cap=150) over 100M rows with weights spanning
+  [1, 200]: the check is the pure-integer replay on the selected rows
+  + the zero-exchange plan shape.
 """
 import os
 import shutil
@@ -104,7 +102,7 @@ want = sorted(
 assert got == want, "grouped kmv stream != batch"
 print("  stream == batch EXACT (hash level)")
 
-# ---- routed weighted_sample at 100M ----
+# ---- weighted_sample at 100M ----
 rows = ev.select(
     F.col("event_id").alias("doc_id"),
     (1 + F.col("event_id") % 200).cast("int").alias("w"),
@@ -116,7 +114,7 @@ wall = time.time() - t0
 plan = top._jdf.queryExecution().executedPlan().toString()
 assert "TakeOrderedAndProject" in plan and "Exchange" not in plan
 print(
-    f"weighted_sample routed cap=150: {wall:.1f}s = "
+    f"weighted_sample cap=150: {wall:.1f}s = "
     f"{n / wall:,.0f} rows/s, zero exchanges, steal {steal() - s0}",
     flush=True,
 )

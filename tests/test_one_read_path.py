@@ -202,7 +202,7 @@ WIDE_SIDE = {
 
 @pytest.mark.parametrize("freq", ["1h", None])
 def test_all_transform_open_range_answer_ignores_the_bucket_span(fs, spark, freq):
-    """Such a load knows no span for align_long's buckets; its answer on
+    """Such a load knows no span for align's buckets; its answer on
     many ranges equals the one-range answer and the model."""
     _store(fs)
     feats = ["test/sum", "test/gap"]

@@ -7,6 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from bytehub_spark import timeseries as ts
 
@@ -90,10 +91,13 @@ def test_dedup_latest_matches_pandas(spark, n, dup_every, seed):
 @given(
     n=st.integers(min_value=2, max_value=50),
     null_frac=st.floats(min_value=0.0, max_value=0.9),
+    ranges=st.integers(min_value=2, max_value=8),
     seed=st.integers(min_value=0, max_value=10_000),
 )
 @settings(**SETTINGS)
-def test_two_pass_locf_matches_pandas_ffill(spark, n, null_frac, seed):
+def test_two_pass_locf_matches_pandas_ffill(spark, n, null_frac, ranges, seed):
+    """``ts.align`` of one series over ``ranges`` > 1 time buckets, so
+    ``locf``'s pass 2 carries values across buckets, against pandas."""
     rng = np.random.default_rng(seed)
     pdf = pd.DataFrame(
         {
@@ -103,15 +107,15 @@ def test_two_pass_locf_matches_pandas_ffill(spark, n, null_frac, seed):
             ),
         }
     )
-    out = (
-        ts.locf(
-            spark.createDataFrame(pdf), ["value"],
-            range_hint=(pdf["time"].min(), pdf["time"].max()),
-        )
-        .toPandas()
-        .sort_values("time")
-        .reset_index(drop=True)
+    rows = spark.createDataFrame(pdf).select(
+        F.lit("value").alias(ts.SERIES_COL),
+        "time",
+        F.lit(None).cast("timestamp").alias(ts.CREATED_COL),
+        "value",
     )
+    lo, hi = pdf["time"].min(), pdf["time"].max()
+    out = ts.align(rows, {"value": "value"}, lo, hi, ranges).toPandas()
+    assert list(out["time"]) == list(pdf["time"])
     exp = pdf["value"].ffill()
     a, b = out["value"].to_numpy(), exp.to_numpy()
     assert (np.isnan(a) == np.isnan(b)).all()

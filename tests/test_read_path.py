@@ -619,3 +619,32 @@ def test_one_catalog_lookup_per_feature_per_load(fs, monkeypatch, shape):
     else:
         fs.load_dataframe(feats, **kw)
     assert sorted(calls) == sorted(tuple(f.split("/")) for f in feats)
+
+
+def test_request_times_ignore_the_driver_time_zone(fs, monkeypatch):
+    """A naive request time is a UTC instant (the session zone) wherever
+    the driver runs: saved and read with TZ=Asia/Tokyo, hourly values
+    0..47 give 06:00..09:00 with 6..9, and the default created_time is
+    the current UTC time."""
+    import time
+
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        fs.create_feature("test/a", partition="date")
+        hours = pd.date_range("2024-01-01", periods=48, freq="h")
+        before = pd.Timestamp.now(tz="UTC").tz_localize(None)
+        fs.save_dataframe(pd.DataFrame({"time": hours, "value": range(48)}), "test/a")
+        kw = dict(from_date="2024-01-01 06:00", to_date="2024-01-01 09:00")
+        grid = fs.load_pandas("test/a", freq="1h", **kw)
+        ranged = fs.load_pandas("test/a", **kw)
+        created = fs._storage("test").export("a").toPandas()["created_time"]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    want = pd.date_range("2024-01-01 06:00", periods=4, freq="h")
+    assert list(grid.index) == list(want)
+    assert list(grid["test/a"]) == [6.0, 7.0, 8.0, 9.0]
+    assert list(ranged.index) == list(want)
+    assert created.min() >= before - pd.Timedelta(seconds=1)
+    assert created.max() <= pd.Timestamp.now(tz="UTC").tz_localize(None)

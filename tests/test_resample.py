@@ -134,7 +134,7 @@ def test_empty_feature(fs):
 
 
 def test_wide_alignment_pivot_path(fs):
-    """k = 10 numeric features on the one read plan (``align_long``: one
+    """k = 10 numeric features on the one read plan (``ts.align``: one
     exchange, one aggregate per series) equal pandas outer-concat + ffill,
     with a flat (non-growing) exchange count and no join chain."""
     from bytehub_spark import plans

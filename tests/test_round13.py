@@ -675,10 +675,8 @@ def test_weighted_sample_validation_and_plan(spark):
     )
     with pytest.raises(ValueError):
         curation.weighted_sample(df, 0, "w")
-    # cap=65 no longer raises — it ROUTES (r14: the cap router took
-    # over the >64 regime; the refusal moved to WSAMPLE_MAX_CAP and is
-    # pinned in test_round14); zero-exchange plan holds on that route
-    # too
+    # cap=65 does not raise (the refusal is WSAMPLE_MAX_CAP, pinned in
+    # test_round14); the zero-exchange plan holds there too
     routed = curation.weighted_sample(df, 5, "w", cap=65)
     pr = routed._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in pr and pr.count("Exchange") == 0

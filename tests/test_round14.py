@@ -1,6 +1,6 @@
 """Round-14 tests: ADVICE-r13 fixes (grouped monitors accept non-string
 group columns, cms_probe grouped/ungrouped mismatch guards), grouped
-KMV (+ GroupedKmvMonitor), the weighted_sample cap router (+
+KMV (+ GroupedKmvMonitor), the weighted_sample priority law (+
 WeightedSampleMonitor), and kmv_overlap_matrix.
 """
 
@@ -232,52 +232,31 @@ def test_kmv_sketch_group_eq_key_col(spark):
     assert rows == {(v, int_mix(v, 0)) for v in range(4)}
 
 
-# ------------------- weighted_sample cap router (VERDICT r13 #4)
+# ------------------- weighted_sample's priority law
 
 
-def test_weighted_sample_routes_across_cap_boundary(spark):
-    """cap=UNROLL_CAP (unrolled GREATEST) and cap=UNROLL_CAP+1 (routed
-    HOF shape) give BIT-IDENTICAL output on data whose weights never
-    exceed the boundary — the clamp is the same, so the only
-    difference is the route. Also: the routed shape replays exactly in
-    pure python (the A-ES max-of-w-uniforms law at a cap the unrolled
-    shape can't reach), and its plan keeps TakeOrderedAndProject with
-    zero exchanges."""
-    from bytehub_spark.operators.curation import (
-        WSAMPLE_SEED,
-        WSAMPLE_UNROLL_CAP as UC,
-        weighted_sample,
-    )
+@pytest.mark.parametrize("cap", [8, 200])
+def test_weighted_sample_replays_int_mix_law(spark, cap):
+    """The selection equals a pure-Python replay of the A-ES
+    max-of-w-uniforms law, priority = max over r = 1..w_eff of
+    int_mix(id, WSAMPLE_SEED + r), at a small cap and at one with
+    weights up to 200 (null weights count 1, weights past the cap
+    clamp to it); the plan keeps TakeOrderedAndProject with zero
+    exchanges."""
+    from bytehub_spark.operators.curation import WSAMPLE_SEED, weighted_sample
     from bytehub_spark.operators.hashing import int_mix
 
-    src = spark.createDataFrame(
-        [(i, (i * 7) % UC + 1 if i % 5 else None) for i in range(300)],
-        "doc_id int, w int",
-    )
-    a = weighted_sample(src, 25, "w", id_col="doc_id", cap=UC).collect()
-    b = weighted_sample(src, 25, "w", id_col="doc_id", cap=UC + 1).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # pure-python replay of the routed shape at cap=200 with weights
-    # that genuinely exceed 64 (the regime the unroll refused before)
-    big = spark.createDataFrame(
-        [(i, 1 + (i * 37) % 200) for i in range(400)],
-        "doc_id int, w int",
-    )
-    got = weighted_sample(big, 10, "w", id_col="doc_id", cap=200)
+    data = [(i, 1 + (i * 37) % 200 if i % 9 else None) for i in range(400)]
+    src = spark.createDataFrame(data, "doc_id int, w int")
+    got = weighted_sample(src, 25, "w", id_col="doc_id", cap=cap)
     rows = [tuple(r) for r in got.collect()]
-    pri = {
-        i: max(
-            int_mix(i, WSAMPLE_SEED + r)
-            for r in range(1, 1 + (1 + (i * 37) % 200))
-        )
-        for i in range(400)
-    }
-    want = sorted(
-        ((i, 1 + (i * 37) % 200, 1 + (i * 37) % 200, pri[i])
-         for i in range(400)),
-        key=lambda t: (-t[3], t[0]),
-    )[:10]
-    assert rows == want
+    want = []
+    for i, w in data:
+        w_eff = max(1, min(1 if w is None else w, cap))
+        pri = max(int_mix(i, WSAMPLE_SEED + r) for r in range(1, w_eff + 1))
+        want.append((i, w, w_eff, pri))
+    want.sort(key=lambda t: (-t[3], t[0]))
+    assert rows == want[:25]
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan
