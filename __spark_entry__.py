@@ -7673,16 +7673,18 @@ def oracle_sql() -> dict[str, str]:
         "ts_scd2_history": """
             WITH r AS (
                 SELECT user_id, ts, event_id, event_type,
-                       CASE WHEN lag(event_id) OVER w IS NULL THEN 1
+                       CASE WHEN row_number() OVER w = 1 THEN 1
                             WHEN lag(event_type) OVER w
                                  IS DISTINCT FROM event_type
                             THEN 1 ELSE 0 END AS chg
                 FROM events
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+                WINDOW w AS (PARTITION BY user_id
+                             ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
             ),
             v AS (
                 SELECT *, SUM(chg) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id
+                    PARTITION BY user_id
+                    ORDER BY ts NULLS FIRST, event_id NULLS FIRST
                     ROWS UNBOUNDED PRECEDING) AS version
                 FROM r
             ),

@@ -1121,8 +1121,7 @@ def pipeline_card(
     exactly-threshold agreement for non-power-of-two n_hashes). The
     fixed default shape (bands=16, r=4) is the 500k-doc-validated one —
     ``dedup.minhash_band_balance`` is the planner that picks it when
-    the corpus changes (scripts/scale_pipeline500k.py runs the planned
-    variant end-to-end).
+    the corpus changes.
 
     Scale shape: five sequential stages, each a linear pass or an
     id-keyed shuffle; the only super-linear hazard is the LSH bucket

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .hashing import MINHASH_PRIME
+
 
 def normalized(text_col: str = "text") -> F.Column:
     return F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
@@ -330,9 +332,6 @@ def canonical_per_cluster(
         )
         .orderBy(id_col)
     )
-
-
-MINHASH_PRIME = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 
 def _h1_h2(sh: DataFrame, id_col: str) -> DataFrame:
@@ -1450,9 +1449,6 @@ def lsh_dedup_eval(
     )
 
 
-KMV_PRIME = 2147483647  # fingerprint space: FNV-1a mod 2^31-1
-
-
 def kmv_fingerprints(
     documents: DataFrame,
     text_col: str = "text",
@@ -1460,7 +1456,9 @@ def kmv_fingerprints(
 ) -> DataFrame:
     """Distinct (src, h) fingerprint rows for the KMV sketch family:
     FNV-1a over whitespace-normalized text mod 2^31-1 — the same
-    engine-portable integer hash the MinHash family replays in SQL."""
+    engine-portable integer hash the MinHash family replays in SQL,
+    in the hash space of sketches.kmv_sketch, so the text corpus rides
+    the one KMV kernel (sketches.kmv_bottom_k / kmv_estimate)."""
     from pyspark.sql import types as T
 
     from ..plans import ensure_parallelism
@@ -1470,7 +1468,7 @@ def kmv_fingerprints(
         from .hashing import fnv1a_cp_np
 
         return pd.Series(
-            (fnv1a_cp_np(texts.tolist()) % np.uint64(KMV_PRIME)).astype(
+            (fnv1a_cp_np(texts.tolist()) % np.uint64(MINHASH_PRIME)).astype(
                 np.int64
             )
         )
@@ -1482,49 +1480,6 @@ def kmv_fingerprints(
             _fp(normalized(text_col)).alias("h"),
         )
         .distinct()
-    )
-
-
-def kmv_bottom_k(fp: DataFrame, k: int) -> DataFrame:
-    """Per-source k minimum hash values — the KMV sketch itself, as
-    (src, h) rows. Sharded two-pass (h%32 local bottom-k, then bottom-k
-    over the ≤32·k survivors): no single-task global sort per source at
-    any corpus size. Mergeable: bottom_k(A ∪ B) == bottom_k(bottom_k(A)
-    ∪ bottom_k(B)) — the property the streaming twin's state update
-    relies on."""
-    w_shard = Window.partitionBy("src", "shard").orderBy("h")
-    w_src = Window.partitionBy("src").orderBy("h")
-    return (
-        fp.withColumn("shard", F.col("h") % 32)
-        .withColumn("r", F.row_number().over(w_shard))
-        .where(F.col("r") <= k)
-        .withColumn("r2", F.row_number().over(w_src))
-        .where(F.col("r2") <= k)
-        .select("src", "h")
-    )
-
-
-def kmv_distinct_estimate(sketch: DataFrame, k: int) -> DataFrame:
-    """Finish a KMV sketch into per-source distinct estimates:
-    (src, m, u_k, est_distinct) — est = (k-1)·P div u_k, or exactly m
-    when the sketch is complete (m < k). Pure integers."""
-    P = KMV_PRIME
-    return (
-        sketch.groupBy("src")
-        .agg(
-            F.count("*").cast("long").alias("m"),
-            F.max("h").cast("long").alias("u_k"),
-        )
-        .select(
-            "src",
-            "m",
-            "u_k",
-            F.expr(
-                f"CASE WHEN m < {k} THEN m "
-                f"ELSE CAST({k - 1} AS BIGINT) * {P} div u_k END"
-            ).cast("long").alias("est_distinct"),
-        )
-        .orderBy("src")
     )
 
 
@@ -1541,12 +1496,14 @@ def kmv_source_distinct(
     KMVDistinctMonitor, whose merged state must finish to EXACTLY these
     rows — sketch merging is order-independent). ``include_exact``
     (default, for the gate) adds the true distinct count and err_ppm;
-    at 100 TB run est-only.
+    at 100 TB run est-only (src, m, u_k, est_distinct).
     """
+    from .sketches import kmv_bottom_k, kmv_estimate
+
     fp = kmv_fingerprints(documents, text_col, group_col)
-    est = kmv_distinct_estimate(kmv_bottom_k(fp, k), k)
+    est = kmv_estimate(kmv_bottom_k(fp, k, ["src"]), k, ["src"])
     if not include_exact:
-        return est
+        return est.orderBy("src")
     exact = fp.groupBy("src").agg(
         F.count("*").cast("long").alias("exact_distinct")
     )
@@ -1598,70 +1555,30 @@ def kmv_source_overlap(
     exact join is the thing you can no longer afford.
 
     Scale shape: one (source, h)-keyed distinct, then the per-source
-    k-minimum runs SHARDED (h%32 local top-k, then top-k over the
-    ≤32·k survivors) — no single-task global sort per source; pair
-    merging touches only #pairs·2k sketch rows.
+    sketch and the pair merge are sketches.kmv_bottom_k and
+    sketches.kmv_pair_merge — the kmv_overlap_matrix kernel, projected
+    here onto (src_a, src_b, m, est_union, est_intersection).
     """
-    P = 2147483647
     from ..plans.scratch import scratch_persist
+    from .sketches import kmv_bottom_k, kmv_pair_merge
 
     # fp is read by several branches (sketch, source list, and in
     # include_exact mode both sides of the exact join); unpersisted it
     # re-ran the whole scan + Arrow-UDF hash + distinct per branch
     # (r14 optimization round, guide §2.4/§4) — persist it once.
     fp = scratch_persist(kmv_fingerprints(documents, text_col, group_col))
-    # the sketch is likewise read twice (sk_a / sk_b fan-outs below);
-    # coalesce(1): bounded at sources*k rows no matter the corpus size,
-    # and the inherited shuffle partitioning otherwise schedules a full
-    # task wave per consumer over a few hundred cached rows (r15 opt,
-    # the sketches.py hll_overlap_matrix measurement)
-    sketch = scratch_persist(kmv_bottom_k(fp, k).coalesce(1))
-    # every non-empty source has >= 1 sketch row, so the distinct
-    # source list can come off the (<= sources*k row) sketch instead
-    # of the full fingerprint table — same set, cheaper branch.
-    srcs = sketch.select("src").distinct()
-    src_pairs = (
-        srcs.select(F.col("src").alias("src_a"))
-        .join(srcs.select(F.col("src").alias("src_b")))
-        .where(F.col("src_a") < F.col("src_b"))
-    )
-    sk_a = sketch.select(F.col("src").alias("src_a"), "h")
-    sk_b = sketch.select(F.col("src").alias("src_b"), "h")
-    merged = (
-        src_pairs.join(sk_a, "src_a")
-        .select("src_a", "src_b", "h", F.lit(1).alias("in_a"))
-        .unionByName(
-            src_pairs.join(sk_b, "src_b")
-            .select("src_a", "src_b", "h", F.lit(1).alias("in_a"))
-            .withColumn("in_a", F.lit(0))
-        )
-        .groupBy("src_a", "src_b", "h")
-        .agg(F.max("in_a").alias("a"), F.min("in_a").alias("b_flag"))
-        # present in BOTH sketches iff max(in_a)=1 AND min(in_a)=0
-        .withColumn(
-            "in_both", ((F.col("a") == 1) & (F.col("b_flag") == 0)).cast("int")
-        )
-    )
-    w_pair = Window.partitionBy("src_a", "src_b").orderBy("h")
-    topk = merged.withColumn("r", F.row_number().over(w_pair)).where(
-        F.col("r") <= k
-    )
-    est = topk.groupBy("src_a", "src_b").agg(
-        F.count("*").cast("long").alias("m"),
-        F.max("h").cast("long").alias("u_k"),
-        F.sum("in_both").cast("long").alias("both_cnt"),
-    ).select(
-        "src_a",
-        "src_b",
-        "m",
-        F.expr(
-            f"CASE WHEN m < {k} THEN m "
-            f"ELSE CAST({k - 1} AS BIGINT) * {P} div u_k END"
-        ).cast("long").alias("est_union"),
-        F.expr(
-            f"CASE WHEN m < {k} THEN both_cnt "
-            f"ELSE both_cnt * (CAST({k - 1} AS BIGINT) * {P} div u_k) div {k} END"
-        ).cast("long").alias("est_intersection"),
+    # the sketch is likewise read twice (the pair fan-outs); coalesce(1):
+    # bounded at sources*k rows no matter the corpus size, and the
+    # inherited shuffle partitioning otherwise schedules a full task
+    # wave per consumer over a few hundred cached rows (r15 opt, the
+    # sketches.py hll_overlap_matrix measurement)
+    sketch = scratch_persist(kmv_bottom_k(fp, k, ["src"]).coalesce(1))
+    est = kmv_pair_merge(sketch, k, "src").select(
+        F.col("group_a").alias("src_a"),
+        F.col("group_b").alias("src_b"),
+        F.col("kk").alias("m"),
+        "est_union",
+        F.col("est_inter").alias("est_intersection"),
     )
     if not include_exact:
         return est.orderBy("src_a", "src_b")
@@ -2344,9 +2261,9 @@ def prefix_filter_pairs(
     small Σ f² (e.g. sf0.1's 5k docs) the extra stages make this ~5x
     slower than ngram_jaccard_pairs' single inverted-index join — this
     operator is for when the pre-join arithmetic says brute is
-    unaffordable (the 500k-doc table in scripts/scale_prefix500k.py:
-    227e9 brute tuples vs 3.2e9 at τ=0.9). Run the cheap Σ C(f,2)
-    aggregate first and pick the join the numbers pick.
+    unaffordable (measured on a 500k-doc table: 227e9 brute tuples vs
+    3.2e9 at τ=0.9). Run the cheap Σ C(f,2) aggregate first and pick
+    the join the numbers pick.
     """
     if not (0 < int(threshold_ppm) <= 1_000_000):
         raise ValueError("threshold_ppm must be in (0, 1e6]")

@@ -2160,17 +2160,18 @@ def _run_change_marks(events: DataFrame):
     definition keeps the stream==batch contract structural). Returns
     (events projected to user_id, ts, event_id, event_type plus
     ``__chg`` = 1 on a run's first row, the per-user (ts, event_id)
-    window). The first row of a user ALWAYS opens a run — detected via
-    lag(event_id) (never NULL mid-partition), because a NULL-typed
-    first row satisfies NULL <=> NULL and a bare null-safe compare
-    would not mark it; subsequent runs open on a null-safe type change.
+    window). The first row of a user ALWAYS opens a run — detected as
+    row_number() == 1, because a NULL-typed first row satisfies NULL
+    <=> NULL and a bare null-safe compare would not mark it (a
+    lag(event_id) IS NULL test would also open a run after every NULL
+    event_id); subsequent runs open on a null-safe type change.
     Ordering is (ts, event_id) so equal timestamps resolve
     deterministically in both engines. The window partitions by user —
     never global.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("event_type").over(w)
-    first_row = F.lag("event_id").over(w).isNull()
+    first_row = F.row_number().over(w) == 1
     chg = (
         F.when(first_row | ~prev.eqNullSafe(F.col("event_type")), F.lit(1))
         .otherwise(F.lit(0))

@@ -1,8 +1,7 @@
-"""Mergeable fixed-size sketches: Count-Min and HyperLogLog registers.
-
-The KMV family (dedup.py) covers distinct-count and overlap estimation
-with a k-smallest sketch; this module adds the other two canonical
-mergeable sketches a 100 TB telemetry layer needs:
+"""Mergeable fixed-size sketches: Count-Min, HyperLogLog registers and
+KMV bottom-k — one kernel per sketch, each taking an optional group
+column (one mergeable summary per group), shared by the batch
+operators, dedup's text-corpus KMV ops and the streaming monitors:
 
 - **Count-Min** (Cormode & Muthukrishnan, J. Algorithms 2005):
   frequency estimation over an unbounded key domain with a FIXED
@@ -22,19 +21,23 @@ mergeable sketches a 100 TB telemetry layer needs:
   unit of accuracy and the merge is an idempotent max (re-delivery
   safe), which is why it is the sketch of choice for per-source /
   per-day distinct-user rollups that later fold across partitions.
+- **KMV** (Bar-Yossef et al. 2002): the k minimum hash VALUES per
+  group (kmv_bottom_k — also the kernel under dedup.kmv_source_* for
+  FNV text fingerprints), finished by kmv_estimate; pairs merge with
+  kmv_pair_merge into union and membership-intersection estimates.
 
-Both are built on the engine-portable integer double-hash
+All are built on the engine-portable integer double-hash
 (hashing.int_h1_h2 / int_mix_sql): one affine + two quadratic rounds
 mod 2^31-1, every intermediate < 2^63 — plain BIGINT in Spark AND
 DuckDB, so the oracle replays sketches bit-identically and the driver
 gate hash-compares full register tables. No Python in the hot path:
 every expression is whole-stage-codegen SQL. String keys: pre-hash to
-an integer column first (the FNV path kmv_fingerprints uses) — the
-mixer here only needs SOME integer injection of the key domain.
+an integer column first (the FNV path dedup.kmv_fingerprints uses) —
+the mixer here only needs SOME integer injection of the key domain.
 
 Reference parity note: the reference engine ships no sketch operators
 (SURVEY.md §2); this family extends the training-data-pipeline surface
-(exact counterparts: dedup.kmv_*, dedup.bloom_*).
+(exact counterpart: dedup.bloom_*).
 """
 
 from __future__ import annotations
@@ -400,9 +403,10 @@ def hll_overlap(
     register files (the pinned idempotent merge law — union costs no
     rescan of either side: each register table is persisted and feeds
     both its own estimate and the max-merge from cache) and est_inter =
-    est_a + est_b − est_union by inclusion-exclusion. The KMV twin
-    (dedup.kmv_source_overlap) estimates overlap from k smallest hash
-    values; this is the register-file form — m ints per side no matter
+    est_a + est_b − est_union by inclusion-exclusion. The KMV form
+    (kmv_pair_merge, behind dedup.kmv_source_overlap) estimates overlap
+    from k smallest hash values; this is the register-file form — m
+    ints per side no matter
     the cardinality, mergeable across shards/days without touching raw
     data, which is what makes per-source overlap matrices tractable at
     100 TB (sketch once per source, combine driver-side). Estimates
@@ -486,7 +490,7 @@ def hll_overlap_matrix(
     est_b, est_union, est_inter) for every unordered group pair
     (group_a < group_b) — hll_overlap generalized from 2 fixed sides to
     every pair of a grouping column's values (NEXT.md r13 candidate;
-    the register-file twin of dedup.kmv_source_overlap's matrix form).
+    the register-file form of kmv_overlap_matrix).
 
     The raw data is scanned ONCE into the per-group register table
     (hll_registers — ≤ groups·m rows no matter the input size); the
@@ -627,19 +631,23 @@ def kmv_sketch(
         .select(*gcols, F.expr(int_h1_sql(key_col)).alias("h"))
         .distinct()
     )
-    return _kmv_bottom_k(hashed, k, gcols)
+    return kmv_bottom_k(hashed, k, gcols)
 
 
-def _kmv_bottom_k(fp: DataFrame, k: int, gcols: list[str]) -> DataFrame:
-    """Per-group k minimum distinct h values of a (group…, h) frame.
-    Two passes: a SHARDED window bottom-k (h % 32 — partitionBy always
-    includes the shard key, so no global window even with no groups)
-    caps survivors at 32·k per group, then a sort_array/slice finisher
-    aggregation picks the true bottom-k from that bounded set (an agg,
-    not a window — flag-free and map-side combinable in the ungrouped
-    form)."""
+def kmv_bottom_k(
+    fp: DataFrame, k: int, group_cols: list[str] | None = None
+) -> DataFrame:
+    """Per-group k minimum distinct h values of a (group…, h) frame —
+    the KMV sketch itself, shared by kmv_sketch's integer keys and
+    dedup's text fingerprints. Two passes: a SHARDED window bottom-k
+    (h % 32 — partitionBy always includes the shard key, so no global
+    window even with no groups) caps survivors at 32·k per group, then
+    a sort_array/slice finisher aggregation picks the true bottom-k
+    from that bounded set (an agg, not a window — flag-free and
+    map-side combinable in the ungrouped form)."""
     from pyspark.sql import Window
 
+    gcols = list(group_cols or [])
     w_shard = Window.partitionBy(*gcols, "__shard").orderBy("h")
     survivors = (
         fp.withColumn("__shard", F.col("h") % 32)
@@ -665,9 +673,7 @@ def kmv_merge(
     kmv_sketch(A ∪ B) exactly (the pinned merge law): the streaming /
     multi-shard state update."""
     gcols = list(group_cols or [])
-    return _kmv_bottom_k(
-        sketches.select(*gcols, "h").distinct(), k, gcols
-    )
+    return kmv_bottom_k(sketches.select(*gcols, "h").distinct(), k, gcols)
 
 
 def kmv_estimate(
@@ -702,51 +708,26 @@ def kmv_estimate(
     )
 
 
-def kmv_overlap_matrix(
-    df: DataFrame,
-    key_col: str,
-    group_col: str,
-    k: int = 256,
-) -> DataFrame:
-    """All-pairs KMV overlap matrix from ONE corpus scan — the KMV twin
-    of ``hll_overlap_matrix``, with the property register sketches
-    cannot offer: because KMV keeps hash VALUES, intersections come
-    from actual membership (h ∈ S_a AND h ∈ S_b inside the union
-    bottom-k — the Beyer et al. 2007 estimator) instead of
-    inclusion-exclusion, so they cannot go negative, and whenever a
-    pair's union sketch is COMPLETE (fewer than k distinct hashes) the
-    reported intersection and union are EXACT, not estimates.
+def kmv_pair_merge(sk: DataFrame, k: int, group_col: str) -> DataFrame:
+    """Pairwise union sketches of a grouped KMV sketch: per unordered
+    group pair (group_a < group_b) the bottom-k of the pair's union
+    with side-membership flags — (group_a, group_b, kk, u_kk,
+    est_union, p_both, est_inter), where kk = |union bottom-k|, u_kk
+    its largest hash, p_both = its members present in BOTH sides,
+    est_union = kk when complete (kk < k) else (k−1)·P div u_kk, and
+    est_inter = p_both·est_union div kk (the Beyer et al. 2007
+    membership estimator: never negative, EXACT when the union sketch
+    is complete). The one pair merge of kmv_overlap_matrix and
+    dedup.kmv_source_overlap.
 
-    Output per unordered group pair (group_a < group_b): (m_a, m_b,
-    est_a, est_b, kk, u_kk, est_union, p_both, est_inter,
-    jaccard_ppm) where kk = |union bottom-k|, p_both = members of the
-    union bottom-k present in BOTH sides, est_union = kk when complete
-    else (k−1)·P div u_kk, est_inter = p_both·est_union div kk, and
-    jaccard_ppm = p_both·10^6 div kk. All integer arithmetic — the
-    DuckDB oracle replays every column bit-exact.
-
-    Scale shape (the hll_overlap_matrix argument): one corpus scan
-    into ≤ groups·k sketch rows (kmv_sketch's sharded bottom-k), then
-    the matrix is assembled entirely sketch-side — a distinct-groups
-    '<' self-join builds the pair frame (the declared benign cartesian
-    class: bounded by group cardinality at ANY input size), two
-    broadcast equi-joins fan each group's hashes to its pairs, a
-    per-pair distinct + sharded bottom-k forms each union sketch, and
-    membership flags ride along via a 3-key re-join. k sources cost
-    one scan + O(k²·k_sketch) sketch rows, never k² corpus scans.
-
-    NULL group rows form their own sketch group (kmv_sketch keeps
-    them) but are EXCLUDED from the matrix — '<' never admits a NULL
-    side; probe a NULL group via kmv_estimate directly. NULL keys
-    excluded as always.
-    """
+    Sketch-side only: a distinct-groups '<' self-join builds the pair
+    frame (the declared benign cartesian class: bounded by group
+    cardinality at ANY input size), two equi-joins fan each group's
+    hashes to its pairs, a per-pair distinct + sharded bottom-k forms
+    each union sketch, and the membership flags ride along via a 3-key
+    re-join. NULL groups never pair ('<' never admits a NULL side)."""
     from ..plans.scratch import scratch_persist
 
-    # consumed three times (per-group estimates + both pair fan-outs);
-    # coalesce(1): the sketch is bounded at groups*k rows no matter the
-    # input size (the hll_overlap_matrix task-scheduling measurement)
-    sk = scratch_persist(kmv_sketch(df, key_col, k, group_col).coalesce(1))
-    est = kmv_estimate(sk, k, [group_col])
     groups = sk.select(F.col(group_col).alias("__g")).distinct()
     pairs = groups.select(F.col("__g").alias("group_a")).join(
         groups.select(F.col("__g").alias("group_b")),
@@ -768,15 +749,17 @@ def kmv_overlap_matrix(
         .agg(
             F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b")
         )
-        # bounded at pairs*2k rows - same coalesce rationale as `sk`
+        # bounded at pairs*2k rows: one task, not a full shuffle-width
+        # wave over a few hundred cached rows
         .coalesce(1)
     )
-    union_k = _kmv_bottom_k(
+    union_k = kmv_bottom_k(
         tagged.select("group_a", "group_b", "h"),
         k,
         ["group_a", "group_b"],
     )
-    per_pair = (
+    P = MINHASH_PRIME
+    return (
         union_k.join(tagged, ["group_a", "group_b", "h"])
         .groupBy("group_a", "group_b")
         .agg(
@@ -786,28 +769,9 @@ def kmv_overlap_matrix(
             .cast("long")
             .alias("p_both"),
         )
-    )
-    P = MINHASH_PRIME
-    ea = est.select(
-        F.col(group_col).alias("group_a"),
-        F.col("m").alias("m_a"),
-        F.col("est_distinct").alias("est_a"),
-    )
-    eb = est.select(
-        F.col(group_col).alias("group_b"),
-        F.col("m").alias("m_b"),
-        F.col("est_distinct").alias("est_b"),
-    )
-    return (
-        per_pair.join(F.broadcast(ea), "group_a")
-        .join(F.broadcast(eb), "group_b")
         .select(
             "group_a",
             "group_b",
-            "m_a",
-            "m_b",
-            "est_a",
-            "est_b",
             "kk",
             "u_kk",
             F.expr(
@@ -820,9 +784,77 @@ def kmv_overlap_matrix(
             "est_inter",
             F.expr("p_both * est_union div kk").cast("long"),
         )
-        .withColumn(
-            "jaccard_ppm",
-            F.expr("p_both * 1000000 div kk").cast("long"),
+    )
+
+
+def kmv_overlap_matrix(
+    df: DataFrame,
+    key_col: str,
+    group_col: str,
+    k: int = 256,
+) -> DataFrame:
+    """All-pairs KMV overlap matrix from ONE corpus scan — the KMV twin
+    of ``hll_overlap_matrix``, with the property register sketches
+    cannot offer: because KMV keeps hash VALUES, intersections come
+    from actual membership (h ∈ S_a AND h ∈ S_b inside the union
+    bottom-k — the Beyer et al. 2007 estimator) instead of
+    inclusion-exclusion, so they cannot go negative, and whenever a
+    pair's union sketch is COMPLETE (fewer than k distinct hashes) the
+    reported intersection and union are EXACT, not estimates.
+
+    Output per unordered group pair (group_a < group_b): (m_a, m_b,
+    est_a, est_b, kk, u_kk, est_union, p_both, est_inter,
+    jaccard_ppm) — the kmv_pair_merge columns next to each side's
+    kmv_estimate, and jaccard_ppm = p_both·10^6 div kk. All integer
+    arithmetic — the DuckDB oracle replays every column bit-exact.
+
+    Scale shape (the hll_overlap_matrix argument): one corpus scan
+    into ≤ groups·k sketch rows (kmv_sketch's sharded bottom-k), then
+    the matrix is assembled entirely sketch-side (kmv_pair_merge). k
+    sources cost one scan + O(k²·k_sketch) sketch rows, never k²
+    corpus scans.
+
+    NULL group rows form their own sketch group (kmv_sketch keeps
+    them) but are EXCLUDED from the matrix — '<' never admits a NULL
+    side; probe a NULL group via kmv_estimate directly. NULL keys
+    excluded as always.
+    """
+    from ..plans.scratch import scratch_persist
+
+    # consumed three times (per-group estimates + both pair fan-outs);
+    # coalesce(1): the sketch is bounded at groups*k rows no matter the
+    # input size (the hll_overlap_matrix task-scheduling measurement)
+    sk = scratch_persist(kmv_sketch(df, key_col, k, group_col).coalesce(1))
+    est = kmv_estimate(sk, k, [group_col])
+    ea = est.select(
+        F.col(group_col).alias("group_a"),
+        F.col("m").alias("m_a"),
+        F.col("est_distinct").alias("est_a"),
+    )
+    eb = est.select(
+        F.col(group_col).alias("group_b"),
+        F.col("m").alias("m_b"),
+        F.col("est_distinct").alias("est_b"),
+    )
+    return (
+        kmv_pair_merge(sk, k, group_col)
+        .join(F.broadcast(ea), "group_a")
+        .join(F.broadcast(eb), "group_b")
+        .select(
+            "group_a",
+            "group_b",
+            "m_a",
+            "m_b",
+            "est_a",
+            "est_b",
+            "kk",
+            "u_kk",
+            "est_union",
+            "p_both",
+            "est_inter",
+            F.expr("p_both * 1000000 div kk").cast("long").alias(
+                "jaccard_ppm"
+            ),
         )
         .orderBy("group_a", "group_b")
     )

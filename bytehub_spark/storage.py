@@ -90,6 +90,10 @@ class SparkStorage:
         else:
             # s3a://, gs://, abfs:// … — handed to Hadoop FS connectors as-is
             self.base = url
+        # Local paths list and stat through os, not the Hadoop
+        # FileSystem: over py4j, list_partitions of a 16-feature store
+        # (730 daily partitions each, local[4]) took 3.8-4.6 s against
+        # 14-22 ms for os.listdir (three runs). Keep both branches.
         self._is_local = parsed.scheme in ("", "file")
         # memoized open() frames; every mutation through this object
         # invalidates (external writers bypass this — same staleness

@@ -34,6 +34,14 @@ and subclasses ``Monitor``, which owns the contract:
   that pass no ``epoch_id`` get no dedup.
 - ``result()`` raises ``RuntimeError`` until a batch has been processed,
   then returns the subclass's ``_result()``.
+
+Sketch monitors follow the ``operators.sketches`` kernels: one class
+per mergeable sketch, with an optional group column giving one summary
+per group value. ``CountMinMonitor`` and ``HllDistinctMonitor`` take
+``group_col=None`` (``stream_cms_by_group`` / ``stream_hll_by_group``
+set it); ``KMVDistinctMonitor`` (text fingerprints per source) and
+``GroupedKmvMonitor`` (integer keys per group) run on the same KMV
+bottom-k, merge and estimator.
 """
 
 from __future__ import annotations
@@ -543,7 +551,7 @@ def _lsh_band_rows(
     pandas UDF — the same split the batch kernel uses, so stream, batch,
     and the DuckDB oracle agree on every bucket id.
     """
-    from ..operators.dedup import MINHASH_PRIME as P
+    from ..operators.hashing import MINHASH_PRIME as P
     from ..operators.hashing import BAND_K
 
     r = n_hashes // bands
@@ -1182,27 +1190,31 @@ class KMVDistinctMonitor(Monitor):
     dedup.kmv_source_distinct(include_exact=False). State is the merged
     KMV bottom-k sketch (≤ k rows PER SOURCE, a distributed frame that
     never grows past k·n_sources regardless of stream length — contrast
-    ActiveUsersMonitor, whose state grows with the data). Merging is
-    bottom_k(state ∪ batch_sketch): KMV sketches are MERGEABLE and set
-    union is order-independent, so replays and late arrivals land in the
-    identical sketch and result() equals the batch op on the union of
-    all batches, row for row."""
+    ActiveUsersMonitor, whose state grows with the data), on the one
+    KMV kernel (operators.sketches.kmv_bottom_k / kmv_merge /
+    kmv_estimate). Merging is bottom_k(state ∪ batch_sketch): KMV
+    sketches are MERGEABLE and set union is order-independent, so
+    replays and late arrivals land in the identical sketch and result()
+    equals the batch op on the union of all batches, row for row."""
 
     def __init__(self, k: int = 256):
         self.k = k
         self.state: DataFrame | None = None
 
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
-        from ..operators.dedup import kmv_bottom_k, kmv_fingerprints
+        from ..operators.dedup import kmv_fingerprints
+        from ..operators.sketches import kmv_bottom_k, kmv_merge
 
-        b = kmv_bottom_k(kmv_fingerprints(batch_df), self.k)
-        st = b if self.state is None else self.state.unionByName(b).distinct()
-        self.state = eager_checkpoint(kmv_bottom_k(st, self.k))
+        b = kmv_bottom_k(kmv_fingerprints(batch_df), self.k, ["src"])
+        st = b if self.state is None else kmv_merge(
+            self.state.unionByName(b), self.k, ["src"]
+        )
+        self.state = eager_checkpoint(st)
 
     def _result(self) -> DataFrame:
-        from ..operators.dedup import kmv_distinct_estimate
+        from ..operators.sketches import kmv_estimate
 
-        return kmv_distinct_estimate(self.state, self.k)
+        return kmv_estimate(self.state, self.k, ["src"]).orderBy("src")
 
 
 def stream_kmv_distinct(docs: DataFrame, checkpoint_dir: str, k: int = 256):
@@ -1837,13 +1849,12 @@ class BandPlanMonitor(Monitor):
     radar a long-running 100 TB range-join pipeline reads instead of
     re-profiling the corpus per run.
 
-    Sizing caveat (measured, 10M-event run in
-    scripts/scale_band_join10m.py): the bound is only useful when the
-    ε grid is NO FINER than the value resolution. Over near-continuous
-    values (sub-µ jitter) at ε_u=10, occupied buckets ≈ distinct
-    values — state reached 12.77M rows (≈ stream length) and merge
-    throughput dropped to ~39k ev/s, vs 357k ev/s for the |types|²
-    TransitionMonitor. Pick the grid from the quantization actually
+    Sizing caveat (measured on a 10M-event stream): the bound is only
+    useful when the ε grid is NO FINER than the value resolution. Over
+    near-continuous values (sub-µ jitter) at ε_u=10, occupied buckets
+    ≈ distinct values — state reached 12.77M rows (≈ stream length)
+    and merge throughput dropped to ~39k ev/s, vs 357k ev/s for the
+    |types|² TransitionMonitor. Pick the grid from the quantization actually
     stored (for 2-decimal values nothing below ε_u=10_000 adds
     information), or pre-round the value column; band_plan's batch
     decision table is the cheap way to discover the native resolution
@@ -2226,139 +2237,6 @@ def stream_curation_funnel(
     return CurationFunnelMonitor(n_hashes, bands, ngram).attach(docs, checkpoint_dir)
 
 
-class CountMinMonitor(Monitor):
-    """Streaming Count-Min frequency sketch (16th monitor) — a
-    continuously-maintained bounded-state frequency table for an
-    integer key stream, the sketch complement of stream_heavy_hitters
-    (which keeps EXACT windowed counts and therefore state proportional
-    to distinct keys; this keeps depth·width integers at ANY key
-    cardinality).
-
-    Shares ``operators.sketches.cms_build`` with the batch op (the
-    _user_runs / _funnel_flags pattern), so stream == batch is
-    STRUCTURAL AND EXACT: Count-Min counters are additive
-    (cms(A ∪ B) = cms(A) + cms(B) cell-by-cell — the merge law pinned
-    in tests), hence summing per-batch sketches over ANY batching of
-    the stream reproduces the one-shot sketch to the integer. No
-    arrival-order contract needed — addition commutes (unlike the
-    history monitors' event-time-ordered contracts).
-
-    State is the counter dict itself: ≤ depth·width ints on the driver
-    (bounded by construction — the whole point of the sketch), updated
-    from a ≤ depth·width-row collect per batch. result() returns the
-    merged occupied-cells table; probe it with
-    ``operators.sketches.cms_probe``. Additive counters DO double-count
-    a replayed epoch, so the class declares ADDITIVE and a repeated
-    epoch_id is skipped — the guard HLL's max-merge does not need.
-    """
-
-    ADDITIVE = True
-
-    def __init__(self, key_col: str = "user_id", depth: int = 4,
-                 width: int = 256):
-        self.key_col = key_col
-        self.depth = int(depth)
-        self.width = int(width)
-        self.cells: dict[tuple[int, int], int] = {}
-
-    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
-        from ..operators.sketches import cms_build
-
-        # collect() materializes the full cell list BEFORE any driver
-        # state mutates, so a failure here leaves cells untouched and
-        # the un-stamped epoch replays cleanly.
-        # No isEmpty() pre-check: it was a SECOND full job per batch
-        # (and, with no projection, an unpruned full-schema scan of the
-        # micro-batch), while an empty batch already collects to zero
-        # cells — the additive identity for free (VERDICT r12 #5: at
-        # 100M events the pre-check was ~half the per-batch overhead).
-        # The explicit key-column select makes the scan pruning
-        # independent of cms_build internals.
-        for r in cms_build(
-            batch_df.select(self.key_col), self.key_col,
-            self.depth, self.width
-        ).collect():  # bounded: <= depth*width rows
-            k = (r["row"], r["col"])
-            self.cells[k] = self.cells.get(k, 0) + int(r["cnt"])
-
-    def _result(self) -> DataFrame:
-        """Occupied counter cells (row, col, cnt) of the merged sketch
-        — equals cms_build over the concatenated stream exactly."""
-        rows = [
-            (int(r), int(c), int(n))
-            for (r, c), n in sorted(self.cells.items())
-        ]
-        return self._frame_from_rows(rows, "row int, col int, cnt long")
-
-
-def stream_cms(
-    events: DataFrame,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    depth: int = 4,
-    width: int = 256,
-):
-    """Attach a CountMinMonitor to an event stream. Returns
-    (StreamingQuery, monitor)."""
-    return CountMinMonitor(key_col, depth, width).attach(events, checkpoint_dir)
-
-
-class HllDistinctMonitor(Monitor):
-    """Streaming HyperLogLog distinct-count monitor (17th) — m
-    registers of driver state, period. The merge is per-bucket MAX
-    (operators.sketches.hll_registers' pinned law), which is IDEMPOTENT
-    as well as commutative: re-delivered micro-batches, overlapping
-    backfills, and replayed checkpoints cannot skew the estimate —
-    the property the additive monitors (CountMinMonitor, the counter
-    family) structurally lack, and the reason HLL is the sketch of
-    choice for at-least-once pipelines. Pinned in tests by processing
-    the SAME batch twice and asserting state is unchanged.
-
-    Shares ``operators.sketches.hll_registers`` with the batch op
-    (ts_hll_users' kernel), so stream == batch is structural: after any
-    batching — including duplicated batches — result() equals the
-    one-shot register table over the distinct stream contents. Finish
-    with ``operators.sketches.hll_estimate``.
-    """
-
-    def __init__(self, key_col: str = "user_id", m: int = 64):
-        if m < 2 or (m & (m - 1)) != 0:
-            raise ValueError("m must be a power of two >= 2")
-        self.key_col = key_col
-        self.m = int(m)
-        self.regs: dict[int, int] = {}
-
-    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
-        from ..operators.sketches import hll_registers
-
-        # no isEmpty() pre-check (the CountMinMonitor VERDICT r12 #5
-        # fix): an empty batch collects to zero rows — the max-merge
-        # identity — and the pre-check cost a full extra job per batch;
-        # the projection keeps the micro-batch scan key-column-pruned.
-        for r in hll_registers(
-            batch_df.select(self.key_col), self.key_col, None, self.m
-        ).collect():  # bounded: <= m rows
-            b = int(r["bucket"])
-            self.regs[b] = max(self.regs.get(b, 0), int(r["rho"]))
-
-    def _result(self) -> DataFrame:
-        """Occupied registers (bucket, rho) of the merged sketch —
-        equals hll_registers over the concatenated stream exactly."""
-        rows = [(int(b), int(r)) for b, r in sorted(self.regs.items())]
-        return self._frame_from_rows(rows, "bucket int, rho int")
-
-
-def stream_hll_distinct(
-    events: DataFrame,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    m: int = 64,
-):
-    """Attach an HllDistinctMonitor to an event stream. Returns
-    (StreamingQuery, monitor)."""
-    return HllDistinctMonitor(key_col, m).attach(events, checkpoint_dir)
-
-
 def _group_to_string(g):
     """Render a collected group value the way Spark's CAST(x AS STRING)
     would, so the grouped monitors' result() frames (group surfaced as
@@ -2375,171 +2253,118 @@ def _group_to_string(g):
     return str(g)
 
 
-class GroupedHllMonitor(Monitor):
-    """Per-group HyperLogLog distinct monitor (18th) — the
-    per-source / per-day distinct-user rollup the HLL docstring names
-    as the sketch's canonical use: state is {group: m registers},
-    i.e. groups·m ints — bounded whenever the GROUP domain is bounded
-    (sources, days, event types; the key domain stays unbounded).
-    Merge is per-(group, bucket) MAX (hll_registers' pinned law), so
-    like HllDistinctMonitor it is IDEMPOTENT under re-delivered
-    micro-batches and overlapping backfills — no epoch guard needed.
+def _group_key(g):
+    """NULL-first string sort key for Python-side group iteration."""
+    return (g is not None, str(g))
 
-    Shares ``operators.sketches.hll_registers`` with the batch op
-    (ts_hll_users' grouped kernel), so stream == batch is structural:
-    result() equals the one-shot grouped register table over the
-    concatenated stream exactly; finish with
-    ``operators.sketches.hll_estimate_corrected`` (estimates()) for
-    per-group counts usable across the whole cardinality range. The
-    per-batch collect is ≤ batch_groups·m rows; the shuffle feeding it
-    is capped by map-side combine at the same domain.
-    """
 
-    def __init__(
-        self,
-        key_col: str = "user_id",
-        group_col: str = "event_type",
-        m: int = 64,
-    ):
-        if m < 2 or (m & (m - 1)) != 0:
-            raise ValueError("m must be a power of two >= 2")
-        self.key_col = key_col
-        self.group_col = group_col
-        self.m = int(m)
-        self.regs: dict[tuple, int] = {}  # (group, bucket) -> rho
+def _sketch_input(batch_df: DataFrame, key_col: str, group_col: str | None):
+    """A sketch monitor's micro-batch projection: (group?, key). The
+    explicit select keeps the scan pruned independent of the kernel's
+    internals; dict.fromkeys because group_col == key_col is a legal
+    config (group by the key itself) and a duplicate select would make
+    every downstream reference ambiguous."""
+    return batch_df.select(*dict.fromkeys(c for c in (group_col, key_col) if c))
 
-    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
-        from ..operators.sketches import hll_registers
 
-        # no isEmpty() pre-check: it was a second full job per batch
-        # with an unpruned full-schema scan, while an empty batch
-        # already collects to zero register rows — the max-merge
-        # identity for free (the CountMinMonitor VERDICT r12 #5 fix,
-        # applied to the sibling). Explicit projection keeps the scan
-        # pruned independent of hll_registers internals.
-        # dict.fromkeys: group_col == key_col is a legal config (group
-        # by the key itself) and a duplicate select would make every
-        # downstream reference ambiguous
-        cols = list(dict.fromkeys((self.group_col, self.key_col)))
-        for r in hll_registers(
-            batch_df.select(*cols),
-            self.key_col, self.group_col, self.m
-        ).collect():  # bounded: <= batch_groups * m rows
-            k = (r[self.group_col], int(r["bucket"]))
-            self.regs[k] = max(self.regs.get(k, 0), int(r["rho"]))
-
-    def _result(self) -> DataFrame:
-        """Occupied registers (group, bucket, rho) of the merged
-        per-group sketches — equals hll_registers(stream, key, group)
-        over the concatenated stream exactly. The group column is
-        surfaced as STRING (NULL preserved) — compare a non-string
-        group column's batch twin after casting it."""
+def _sketch_frame(state: dict, group_col: str | None, schema: str) -> DataFrame:
+    """result() frame of a Count-Min or HLL monitor from its Python
+    state {(group?, cell…) or cell: value}: one row per occupied cell,
+    sorted by cell — NULL group first (_group_key) when grouped, the
+    group column surfaced as STRING (NULL preserved)."""
+    if group_col is None:
         rows = [
-            (_group_to_string(g), int(b), int(r))
-            for (g, b), r in sorted(
-                self.regs.items(), key=lambda kv: (str(kv[0][0]), kv[0][1])
-            )
+            (*map(int, k if isinstance(k, tuple) else (k,)), int(v))
+            for k, v in sorted(state.items())
         ]
-        return self._frame_from_rows(
-            rows, f"{self.group_col} string, bucket int, rho int"
+        return Monitor._frame_from_rows(rows, schema)
+    rows = [
+        (_group_to_string(k[0]), *map(int, k[1:]), int(v))
+        for k, v in sorted(
+            state.items(), key=lambda kv: (_group_key(kv[0][0]), kv[0][1:])
         )
-
-    def estimates(self) -> DataFrame:
-        """Per-group linear-counting-corrected distinct estimates:
-        (group, occupied, est_raw, est_distinct)."""
-        from ..operators.sketches import hll_estimate_corrected
-
-        return hll_estimate_corrected(
-            self.result(), self.m, [self.group_col]
-        )
+    ]
+    return Monitor._frame_from_rows(rows, f"{group_col} string, {schema}")
 
 
-def stream_hll_by_group(
-    events: DataFrame,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    group_col: str = "event_type",
-    m: int = 64,
-):
-    """Attach a GroupedHllMonitor to an event stream. Returns
-    (StreamingQuery, monitor)."""
-    return GroupedHllMonitor(key_col, group_col, m).attach(events, checkpoint_dir)
+class CountMinMonitor(Monitor):
+    """Streaming Count-Min frequency sketch — a continuously-maintained
+    bounded-state frequency table for an integer key stream, the sketch
+    complement of stream_heavy_hitters (which keeps EXACT windowed
+    counts and therefore state proportional to distinct keys; this
+    keeps depth·width integers at ANY key cardinality). With
+    ``group_col`` set, ONE independent depth×width table per group
+    value (per-source / per-day frequency monitoring where a hot key in
+    one group must not inflate another group's estimates — the
+    isolation the batch gate ts_cms_topk_by_type pins); state ≤
+    groups·depth·width ints, bounded whenever the GROUP domain is.
 
+    Shares ``operators.sketches.cms_build`` with the batch op (the
+    _user_runs / _funnel_flags pattern), so stream == batch is
+    STRUCTURAL AND EXACT: Count-Min counters are additive per (group?,
+    row, col) (cms(A ∪ B) = cms(A) + cms(B) cell-by-cell — the merge
+    law pinned in tests), hence summing per-batch sketches over ANY
+    batching of the stream reproduces the one-shot sketch to the
+    integer. No arrival-order contract needed — addition commutes
+    (unlike the history monitors' event-time-ordered contracts).
 
-class GroupedCountMinMonitor(Monitor):
-    """Per-group streaming Count-Min frequency sketches (19th monitor)
-    — ONE independent depth×width counter table per group value
-    (``operators.sketches.cms_build``'s group_col form): per-source /
-    per-day frequency monitoring where a hot key in one group must not
-    inflate another group's estimates (the isolation the batch gate
-    ts_cms_topk_by_type pins). State ≤ groups·depth·width ints on the
-    driver — bounded whenever the GROUP domain is bounded, while the
-    key domain stays unbounded; the per-batch shuffle is capped by
-    map-side combine at the same (group, row, col) domain.
-
-    Counters are ADDITIVE per (group, row, col) within each group's own
-    sketch (the cms merge law, pinned in tests), so summing per-batch
-    grouped sketches over ANY batching reproduces the one-shot grouped
-    sketch to the integer — stream == batch structural and exact. Like
-    CountMinMonitor, additivity DOUBLE-COUNTS a replayed epoch, so the
-    class declares ADDITIVE; nothing mutates until the batch's cell
-    list has fully materialized, so a failed batch's re-delivery
-    replays cleanly.
-
-    result() surfaces the group column as STRING (NULL preserved, the
-    GroupedHllMonitor convention); probe it per group with
-    ``operators.sketches.cms_probe(..., group_col=...)`` after casting
-    the keys frame's group column to string to match."""
+    State is the counter dict ``cells`` {(group?, row, col): cnt} in
+    the Python process, updated from a bounded collect per batch. result()
+    returns the merged occupied-cells table ((group,)? row, col, cnt);
+    probe it with ``operators.sketches.cms_probe`` (grouped: pass
+    ``group_col=`` after casting the keys frame's group column to
+    string to match). Additive counters DO double-count a replayed
+    epoch, so the class declares ADDITIVE and a repeated epoch_id is
+    skipped — the guard HLL's max-merge does not need. Nothing mutates
+    until the batch's cell list has fully materialized, so a failed
+    batch's re-delivery replays cleanly.
+    """
 
     ADDITIVE = True
 
-    def __init__(
-        self,
-        key_col: str = "user_id",
-        group_col: str = "event_type",
-        depth: int = 4,
-        width: int = 256,
-    ):
+    def __init__(self, key_col: str = "user_id", depth: int = 4,
+                 width: int = 256, group_col: str | None = None):
         if depth < 1 or width < 2:
             raise ValueError("depth >= 1 and width >= 2 required")
         self.key_col = key_col
-        self.group_col = group_col
         self.depth = int(depth)
         self.width = int(width)
-        self.cells: dict[tuple, int] = {}  # (group, row, col) -> cnt
+        self.group_col = group_col
+        self.cells: dict[tuple, int] = {}
 
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import cms_build
 
-        # no isEmpty() pre-check (the r13 per-batch-cost fix): an empty
-        # batch collects to zero cells — the additive identity — and
-        # the pre-check cost a full extra unpruned job per batch.
-        # dict.fromkeys: group_col == key_col is a legal config and a
-        # duplicate select would make downstream references ambiguous.
-        cols = list(dict.fromkeys((self.group_col, self.key_col)))
+        # No isEmpty() pre-check: it was a SECOND full job per batch
+        # (and, with no projection, an unpruned full-schema scan of the
+        # micro-batch), while an empty batch already collects to zero
+        # cells — the additive identity for free (VERDICT r12 #5: at
+        # 100M events the pre-check was ~half the per-batch overhead).
+        cell = [c for c in (self.group_col, "row", "col") if c]
         for r in cms_build(
-            batch_df.select(*cols), self.key_col,
-            self.depth, self.width, group_col=self.group_col
-        ).collect():  # bounded: <= batch_groups * depth * width rows
-            k = (r[self.group_col], r["row"], r["col"])
+            _sketch_input(batch_df, self.key_col, self.group_col),
+            self.key_col, self.depth, self.width, group_col=self.group_col,
+        ).collect():  # bounded: <= groups * depth * width rows
+            k = tuple(r[c] for c in cell)
             self.cells[k] = self.cells.get(k, 0) + int(r["cnt"])
 
     def _result(self) -> DataFrame:
-        """Occupied counter cells (group, row, col, cnt) of the merged
-        per-group sketches — equals cms_build(stream, key,
-        group_col=group) over the concatenated stream exactly (group
-        compared as string)."""
-        rows = [
-            (_group_to_string(g), int(r), int(c), int(n))
-            for (g, r, c), n in sorted(
-                self.cells.items(),
-                key=lambda kv: (str(kv[0][0]), kv[0][1], kv[0][2]),
-            )
-        ]
-        return self._frame_from_rows(
-            rows,
-            f"{self.group_col} string, row int, col int, cnt long",
-        )
+        """Occupied counter cells ((group,)? row, col, cnt) of the
+        merged sketch — equals cms_build over the concatenated stream
+        exactly (group compared as string)."""
+        return _sketch_frame(self.cells, self.group_col, "row int, col int, cnt long")
+
+
+def stream_cms(
+    events: DataFrame,
+    checkpoint_dir: str,
+    key_col: str = "user_id",
+    depth: int = 4,
+    width: int = 256,
+):
+    """Attach a CountMinMonitor to an event stream. Returns
+    (StreamingQuery, monitor)."""
+    return CountMinMonitor(key_col, depth, width).attach(events, checkpoint_dir)
 
 
 def stream_cms_by_group(
@@ -2550,20 +2375,106 @@ def stream_cms_by_group(
     depth: int = 4,
     width: int = 256,
 ):
-    """Attach a GroupedCountMinMonitor to an event stream. Returns
+    """Attach a per-group CountMinMonitor to an event stream. Returns
     (StreamingQuery, monitor)."""
-    return GroupedCountMinMonitor(key_col, group_col, depth, width).attach(
+    return CountMinMonitor(key_col, depth, width, group_col).attach(
+        events, checkpoint_dir
+    )
+
+
+class HllDistinctMonitor(Monitor):
+    """Streaming HyperLogLog distinct-count monitor — m registers of
+    Python state, or with ``group_col`` set m per group value (the
+    per-source / per-day distinct-user rollup that is the sketch's
+    canonical use; groups·m ints, bounded whenever the GROUP domain is
+    — the key domain stays unbounded). The merge is per-(group?,
+    bucket) MAX (operators.sketches.hll_registers' pinned law), which
+    is IDEMPOTENT as well as commutative: re-delivered micro-batches,
+    overlapping backfills, and replayed checkpoints cannot skew the
+    estimate — the property the additive monitors (CountMinMonitor,
+    the counter family) structurally lack, and the reason HLL is the
+    sketch of choice for at-least-once pipelines. Pinned in tests by
+    processing the SAME batch twice and asserting state is unchanged.
+
+    Shares ``operators.sketches.hll_registers`` with the batch op
+    (ts_hll_users' kernel), so stream == batch is structural: after any
+    batching — including duplicated batches — result() ((group,)?
+    bucket, rho) equals the one-shot register table over the distinct
+    stream contents. State ``regs`` is {bucket: rho}, or {(group,
+    bucket): rho} when grouped. ``estimates()`` finishes it with
+    ``operators.sketches.hll_estimate_corrected``, usable across the
+    whole cardinality range.
+    """
+
+    def __init__(self, key_col: str = "user_id", m: int = 64,
+                 group_col: str | None = None):
+        if m < 2 or (m & (m - 1)) != 0:
+            raise ValueError("m must be a power of two >= 2")
+        self.key_col = key_col
+        self.m = int(m)
+        self.group_col = group_col
+        self.regs: dict = {}
+
+    def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
+        from ..operators.sketches import hll_registers
+
+        # no isEmpty() pre-check (the CountMinMonitor VERDICT r12 #5
+        # fix): an empty batch collects to zero rows — the max-merge
+        # identity — and the pre-check cost a full extra job per batch
+        g = self.group_col
+        for r in hll_registers(
+            _sketch_input(batch_df, self.key_col, g), self.key_col, g, self.m
+        ).collect():  # bounded: <= groups * m rows
+            k = (r[g], int(r["bucket"])) if g else int(r["bucket"])
+            self.regs[k] = max(self.regs.get(k, 0), int(r["rho"]))
+
+    def _result(self) -> DataFrame:
+        """Occupied registers ((group,)? bucket, rho) of the merged
+        sketch — equals hll_registers over the concatenated stream
+        exactly (group compared as string)."""
+        return _sketch_frame(self.regs, self.group_col, "bucket int, rho int")
+
+    def estimates(self) -> DataFrame:
+        """Linear-counting-corrected distinct estimates, per group when
+        grouped: ((group,)? occupied, est_raw, est_distinct)."""
+        from ..operators.sketches import hll_estimate_corrected
+
+        g = [self.group_col] if self.group_col else None
+        return hll_estimate_corrected(self.result(), self.m, g)
+
+
+def stream_hll_distinct(
+    events: DataFrame,
+    checkpoint_dir: str,
+    key_col: str = "user_id",
+    m: int = 64,
+):
+    """Attach an HllDistinctMonitor to an event stream. Returns
+    (StreamingQuery, monitor)."""
+    return HllDistinctMonitor(key_col, m).attach(events, checkpoint_dir)
+
+
+def stream_hll_by_group(
+    events: DataFrame,
+    checkpoint_dir: str,
+    key_col: str = "user_id",
+    group_col: str = "event_type",
+    m: int = 64,
+):
+    """Attach a per-group HllDistinctMonitor to an event stream.
+    Returns (StreamingQuery, monitor)."""
+    return HllDistinctMonitor(key_col, m, group_col).attach(
         events, checkpoint_dir
     )
 
 
 class GroupedKmvMonitor(Monitor):
-    """Per-group streaming KMV distinct-cardinality sketches (20th
-    monitor) — the third sketch family completes the grouped-monitor
-    triple (CMS = frequency, HLL = distinct registers, KMV = distinct
-    hash VALUES): one independent bottom-k of mixer-hashed integer keys
-    per group value, through ``operators.sketches.kmv_sketch``'s
-    group_col kernel. vs GroupedHllMonitor, KMV state supports set
+    """Per-group streaming KMV distinct-cardinality sketches — the third
+    sketch family completes the grouped-monitor triple (CMS =
+    frequency, HLL = distinct registers, KMV = distinct hash VALUES):
+    one independent bottom-k of mixer-hashed integer keys per group
+    value, through ``operators.sketches.kmv_sketch``'s group_col
+    kernel. vs a grouped HllDistinctMonitor, KMV state supports set
     algebra downstream (union/intersection estimation on the surviving
     hashes) and its estimate is the exact distinct count whenever a
     group's sketch is complete (m < k).
@@ -2574,7 +2485,7 @@ class GroupedKmvMonitor(Monitor):
     kmv_merge law pinned in the batch tests — which is IDEMPOTENT:
     re-delivered rows, replayed epochs, and overlapping batches all
     land in the identical sketch (no epoch guard needed, unlike the
-    additive CMS monitors; the HLL max-merge argument, on sets). So
+    additive CountMinMonitor; the HLL max-merge argument, on sets). So
     result() equals kmv_sketch over the concatenation of all batches
     row for row, structurally, over ANY batching.
 
@@ -2602,13 +2513,10 @@ class GroupedKmvMonitor(Monitor):
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import kmv_sketch
 
-        # dict.fromkeys: group_col == key_col is a legal config and a
-        # duplicate select would make downstream references ambiguous.
-        cols = list(dict.fromkeys((self.group_col, self.key_col)))
         batch: dict[object, set[int]] = {}
         for r in kmv_sketch(
-            batch_df.select(*cols), self.key_col, self.k,
-            group_col=self.group_col
+            _sketch_input(batch_df, self.key_col, self.group_col),
+            self.key_col, self.k, group_col=self.group_col,
         ).collect():  # bounded: <= batch_groups * k rows
             batch.setdefault(r[self.group_col], set()).add(int(r["h"]))
         for g, hs in batch.items():
@@ -2637,11 +2545,6 @@ class GroupedKmvMonitor(Monitor):
         return kmv_estimate(self.result(), self.k, [self.group_col])
 
 
-def _group_key(g):
-    """NULL-first string sort key for driver-side group iteration."""
-    return (g is not None, str(g))
-
-
 def stream_kmv_by_group(
     events: DataFrame,
     checkpoint_dir: str,
@@ -2655,7 +2558,7 @@ def stream_kmv_by_group(
 
 
 class WeightedSampleMonitor(Monitor):
-    """Streaming deterministic weighted top-k sample (21st monitor) —
+    """Streaming deterministic weighted top-k sample —
     ``operators.curation.weighted_sample``'s A-ES selection maintained
     incrementally: top-k by the exact-integer A-ES priority (max of
     w_eff mixer draws) with (priority desc, id asc) ordering. Because

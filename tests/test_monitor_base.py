@@ -1,6 +1,8 @@
-"""The ``Monitor`` base-class contract, pinned across all 19 streaming
-monitors: every ``stream_*`` attach equals feeding the same files
-through ``process_batch``; additive monitors skip a re-delivered epoch;
+"""The ``Monitor`` base-class contract, pinned across all 19 ``stream_*``
+attach functions (17 monitor classes; the Count-Min and HLL monitors run
+once ungrouped and once with ``group_col="event_type"``): every
+``stream_*`` attach equals feeding the same files through
+``process_batch``; additive monitors skip a re-delivered epoch;
 ``result()`` before any micro-batch raises one uniform error."""
 
 from __future__ import annotations
@@ -35,6 +37,10 @@ def _reference(spark):
 
 def _weighted(df):
     return df.select("doc_id", (1 + F.col("n_chars") % 8).alias("w"))
+
+
+def _by_type(spark):
+    return {"group_col": "event_type"}
 
 
 # (stream_* function, monitor class, source table, kwargs(spark), prep)
@@ -78,8 +84,8 @@ CASES = [
     ),
     ("stream_cms", st.CountMinMonitor, "events", None, None),
     ("stream_hll_distinct", st.HllDistinctMonitor, "events", None, None),
-    ("stream_hll_by_group", st.GroupedHllMonitor, "events", None, None),
-    ("stream_cms_by_group", st.GroupedCountMinMonitor, "events", None, None),
+    ("stream_hll_by_group", st.HllDistinctMonitor, "events", _by_type, None),
+    ("stream_cms_by_group", st.CountMinMonitor, "events", _by_type, None),
     ("stream_kmv_by_group", st.GroupedKmvMonitor, "events", None, None),
     (
         "stream_weighted_sample",
@@ -89,7 +95,15 @@ CASES = [
         _weighted,
     ),
 ]
-CASE_IDS = [c[1].__name__ for c in CASES]
+
+
+def _case_id(case):
+    """The monitor class, plus the group column of a grouped case."""
+    _, cls, _, kwargs, _ = case
+    return f"{cls.__name__}-event_type" if kwargs is _by_type else cls.__name__
+
+
+CASE_IDS = [_case_id(c) for c in CASES]
 
 # merges that add counts or sums, or extend runs: a re-delivered epoch
 # would be counted twice
@@ -102,7 +116,6 @@ ADDITIVE = {
     "BandPlanMonitor",
     "Scd2Monitor",
     "CountMinMonitor",
-    "GroupedCountMinMonitor",
     "CurationFunnelMonitor",
 }
 ADDITIVE_CASES = [c for c in CASES if c[1].__name__ in ADDITIVE]
@@ -186,7 +199,7 @@ def test_attach_equals_process_batch(spark, sources, tmp_path, case):
 
 
 @pytest.mark.parametrize(
-    "case", ADDITIVE_CASES, ids=[c[1].__name__ for c in ADDITIVE_CASES]
+    "case", ADDITIVE_CASES, ids=[_case_id(c) for c in ADDITIVE_CASES]
 )
 def test_additive_monitor_skips_replayed_epoch(spark, sources, case):
     """foreachBatch re-delivers an uncommitted epoch under the same
@@ -208,6 +221,8 @@ def test_additive_monitor_skips_replayed_epoch(spark, sources, case):
 def test_only_additive_monitors_declare_the_law():
     assert {c[1].__name__ for c in CASES if c[1].ADDITIVE} == ADDITIVE
     assert len(CASES) == 19
+    assert len({c[1] for c in CASES}) == 17
+    assert len(ADDITIVE) == 9
 
 
 @pytest.mark.parametrize("case", CASES, ids=CASE_IDS)

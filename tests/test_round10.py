@@ -73,6 +73,54 @@ def test_scd2_null_leading_run_starts_at_version_one(spark):
     assert pd.isna(out.event_type.iloc[0])
 
 
+def test_scd2_null_event_id_does_not_split_a_run(spark):
+    """Only a user's first row opens a run: three `view` events with
+    event ids 5, NULL, 7 are one version of 3 events in scd2_history,
+    in Scd2Monitor (one batch, and one batch per event) and in the
+    DuckDB oracle."""
+    from datetime import datetime
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from bytehub_spark.streaming import Scd2Monitor
+
+    rows = [
+        (5, 1, datetime(2024, 1, 1, 0, 10), "view"),
+        (None, 1, datetime(2024, 1, 1, 0, 20), "view"),
+        (7, 1, datetime(2024, 1, 1, 0, 30), "view"),
+    ]
+
+    def frame(rs):
+        return spark.createDataFrame(
+            rs, "event_id long, user_id long, ts timestamp, event_type string"
+        )
+
+    batch = frame(rows)
+    want = [(1, 1, "view", pd.Timestamp("2024-01-01 00:10:00"), 3)]
+    cols = ["user_id", "version", "event_type", "valid_from", "n_events"]
+
+    def runs(pdf):
+        assert pdf.valid_to.isna().all()
+        return [tuple(r) for r in pdf[cols].itertuples(index=False)]
+
+    assert runs(events_ops.scd2_history(batch).toPandas()) == want
+    mon = Scd2Monitor()
+    mon.process_batch(batch)
+    assert runs(mon.result().toPandas()) == want
+    mon = Scd2Monitor()
+    for r in rows:
+        mon.process_batch(frame([r]))
+    assert runs(mon.result().toPandas()) == want
+    con = duckdb.connect()
+    con.register(
+        "events",
+        pd.DataFrame(rows, columns=["event_id", "user_id", "ts", "event_type"])
+        .astype({"event_id": "Int64"}),
+    )
+    assert runs(con.execute(entry.oracle_sql()["ts_scd2_history"]).df()) == want
+
+
 # ------------------------------------------------ intervals_merge
 
 

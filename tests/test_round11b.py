@@ -18,6 +18,8 @@ from bytehub_spark.operators import sketches as S
 from bytehub_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
+# the sketch monitors' optional group column: ungrouped and per type
+GROUP_COLS = (None, "event_type")
 
 KEYS = [
     0, 1, 2, 7, -1, -17, 12345678901, 2147483646, 2147483647,
@@ -174,8 +176,12 @@ def test_stream_cms_equals_batch_exactly(spark, tmp_path):
 def test_cms_monitor_guards_result_before_any_batch():
     from bytehub_spark.streaming import CountMinMonitor
 
-    with pytest.raises(RuntimeError):
-        CountMinMonitor().result()
+    for group_col in GROUP_COLS:
+        with pytest.raises(RuntimeError):
+            CountMinMonitor(group_col=group_col).result()
+        # depth/width are validated at construction, grouped or not
+        with pytest.raises(ValueError):
+            CountMinMonitor(width=1, group_col=group_col)
 
 
 def test_stream_hll_equals_batch_and_idempotent(spark, tmp_path):
@@ -223,6 +229,10 @@ def test_stream_hll_equals_batch_and_idempotent(spark, tmp_path):
         spark.createDataFrame(pdf.iloc[bounds[0]:bounds[1]])
     )
     assert mon.regs == before
+    # estimates() without a group column: one corrected estimate
+    (est,) = mon.estimates().collect()
+    exact = ev.select("user_id").distinct().count()
+    assert abs(est["est_distinct"] - exact) <= max(3, 0.2 * exact)
 
 
 def test_epoch_replay_guard_cms_and_funnel(spark):

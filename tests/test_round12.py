@@ -290,7 +290,7 @@ def test_funnel_monitor_failed_batch_replays(spark, monkeypatch):
     assert len(mon.rows) == 1
 
 
-# ------------------------------------------ GroupedHllMonitor (18th)
+# ------------------------------------- HllDistinctMonitor per group
 
 
 def test_grouped_hll_monitor_stream_equals_batch(spark):
@@ -298,12 +298,12 @@ def test_grouped_hll_monitor_stream_equals_batch(spark):
     grouped hll_registers (max-merge per (group, bucket) is structural
     — shared kernel), and re-processing the SAME batch leaves state
     unchanged (idempotence, the at-least-once claim)."""
-    from bytehub_spark.streaming import GroupedHllMonitor
+    from bytehub_spark.streaming import HllDistinctMonitor
 
     ev = load_table(spark, SF, "events").where(
         F.col("user_id").isNotNull()
     )
-    mon = GroupedHllMonitor()
+    mon = HllDistinctMonitor(group_col="event_type")
     # 3 uneven batches by event_id ranges (arrival order irrelevant)
     for lo, hi in [(0, 300), (300, 1100), (1100, 10**9)]:
         mon.process_batch(
@@ -341,9 +341,10 @@ def test_grouped_hll_monitor_stream_equals_batch(spark):
 
 
 def test_grouped_hll_monitor_guard(spark):
-    from bytehub_spark.streaming import GroupedHllMonitor
+    from bytehub_spark.streaming import HllDistinctMonitor
 
-    with pytest.raises(RuntimeError):
-        GroupedHllMonitor().result()
-    with pytest.raises(ValueError):
-        GroupedHllMonitor(m=48)
+    for group_col in (None, "event_type"):
+        with pytest.raises(RuntimeError):
+            HllDistinctMonitor(group_col=group_col).result()
+        with pytest.raises(ValueError):
+            HllDistinctMonitor(m=48, group_col=group_col)

@@ -1,5 +1,5 @@
 """Round-13 tests: ADVICE-r12 fixes (HLL m BIGINT bound, pickleable
-QgramBudgetExceeded, GroupedHllMonitor n_batches ordering, persisted
+QgramBudgetExceeded, HLL monitor n_batches ordering, persisted
 hll_overlap register frames) and the VERDICT-r12 embedding_cosine_dups
 probe-then-collect cap guard.
 """
@@ -14,6 +14,8 @@ from bytehub_spark.operators import sketches as S
 from bytehub_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
+# the sketch monitors' optional group column: ungrouped and per type
+GROUP_COLS = (None, "event_type")
 
 
 # --------------------------- HLL m bound (ADVICE r12 #1)
@@ -70,7 +72,7 @@ def test_qgram_budget_exceeded_pickle_roundtrip():
     assert e2.plan_collapsed == {"volume": 7}
 
 
-# --------------------------- GroupedHllMonitor ordering (ADVICE r12 #3)
+# --------------------------- HllDistinctMonitor ordering (ADVICE r12 #3)
 
 
 def test_grouped_hll_monitor_failed_batch_not_counted(spark, monkeypatch):
@@ -79,44 +81,45 @@ def test_grouped_hll_monitor_failed_batch_not_counted(spark, monkeypatch):
     must not double-count — register state is already idempotent, this
     keeps throughput logs and the result() guard honest."""
     from bytehub_spark.operators import sketches as sk_mod
-    from bytehub_spark.streaming import GroupedHllMonitor
+    from bytehub_spark.streaming import HllDistinctMonitor
 
     ev = load_table(spark, SF, "events").limit(50)
-    mon = GroupedHllMonitor()
-
     real = sk_mod.hll_registers
 
     def boom(*a, **kw):
         raise RuntimeError("executor lost")
 
-    monkeypatch.setattr(sk_mod, "hll_registers", boom)
-    with pytest.raises(RuntimeError):
-        mon.process_batch(ev, epoch_id=5)
-    assert mon.n_batches == 0  # NOT counted
-    assert mon.regs == {}
-    with pytest.raises(RuntimeError):
-        mon.result()  # guard still sees zero batches
+    for group_col in GROUP_COLS:
+        mon = HllDistinctMonitor(group_col=group_col)
+        monkeypatch.setattr(sk_mod, "hll_registers", boom)
+        with pytest.raises(RuntimeError):
+            mon.process_batch(ev, epoch_id=5)
+        assert mon.n_batches == 0  # NOT counted
+        assert mon.regs == {}
+        with pytest.raises(RuntimeError):
+            mon.result()  # guard still sees zero batches
 
-    monkeypatch.setattr(sk_mod, "hll_registers", real)
-    mon.process_batch(ev, epoch_id=5)  # re-delivery: processed + counted
-    assert mon.n_batches == 1
-    state = dict(mon.regs)
-    assert state
-    mon.process_batch(ev, epoch_id=5)  # re-delivery again: idempotent
-    assert mon.n_batches == 2
-    assert mon.regs == state
+        monkeypatch.setattr(sk_mod, "hll_registers", real)
+        mon.process_batch(ev, epoch_id=5)  # re-delivery: processed + counted
+        assert mon.n_batches == 1
+        state = dict(mon.regs)
+        assert state
+        mon.process_batch(ev, epoch_id=5)  # re-delivery again: idempotent
+        assert mon.n_batches == 2
+        assert mon.regs == state
 
 
 def test_grouped_hll_monitor_empty_batch_counts(spark):
     """An empty micro-batch IS fully processed (max-merge identity) —
     it counts toward n_batches and unblocks result()."""
-    from bytehub_spark.streaming import GroupedHllMonitor
+    from bytehub_spark.streaming import HllDistinctMonitor
 
     ev = load_table(spark, SF, "events").limit(0)
-    mon = GroupedHllMonitor()
-    mon.process_batch(ev, epoch_id=0)
-    assert mon.n_batches == 1
-    assert mon.result().count() == 0
+    for group_col in GROUP_COLS:
+        mon = HllDistinctMonitor(group_col=group_col)
+        mon.process_batch(ev, epoch_id=0)
+        assert mon.n_batches == 1
+        assert mon.result().count() == 0
 
 
 # --------------------------- hll_overlap persists registers (ADVICE r12 #4)
@@ -478,20 +481,20 @@ def test_grouped_hll_monitor_group_equals_key(spark):
     itself); the per-batch projection must not duplicate the column
     (review-pass catch: select(k, k) made every downstream reference
     ambiguous and killed the stream on batch one)."""
-    from bytehub_spark.streaming import GroupedHllMonitor
+    from bytehub_spark.streaming import HllDistinctMonitor
 
-    mon = GroupedHllMonitor(key_col="user_id", group_col="user_id")
+    mon = HllDistinctMonitor(key_col="user_id", group_col="user_id")
     df = spark.createDataFrame([(i % 3,) for i in range(30)], "user_id long")
     mon.process_batch(df, epoch_id=0)
     assert mon.n_batches == 1
     assert len(mon.regs) == 3  # one register group per key value
 
 
-# ------------------- GroupedCountMinMonitor (19th monitor, r14 prepay)
+# ------------------------------------------ CountMinMonitor per group
 
 
 def test_grouped_cms_monitor_stream_equals_batch(spark, tmp_path):
-    """GroupedCountMinMonitor over arbitrary file micro-batches ==
+    """Per-group CountMinMonitor over arbitrary file micro-batches ==
     one-shot grouped cms_build on the full table, to the integer —
     per-group additivity, no arrival-order assumption."""
     import os
@@ -548,11 +551,11 @@ def test_grouped_cms_monitor_stream_equals_batch(spark, tmp_path):
 def test_grouped_cms_monitor_epoch_replay_guard(spark):
     """Additive counters double-count a replayed epoch — the guard and
     its hardened ordering (state/epoch untouched until the collect
-    succeeds) mirror CountMinMonitor."""
-    from bytehub_spark.streaming import GroupedCountMinMonitor
+    succeeds) hold per group as they do ungrouped."""
+    from bytehub_spark.streaming import CountMinMonitor
 
     ev = load_table(spark, SF, "events").limit(200)
-    mon = GroupedCountMinMonitor()
+    mon = CountMinMonitor(group_col="event_type")
     mon.process_batch(ev, epoch_id=0)
     cells0 = dict(mon.cells)
     assert cells0
@@ -566,10 +569,10 @@ def test_grouped_cms_monitor_failed_batch_not_stamped(spark, monkeypatch):
     """A batch that dies mid-collect must leave cells AND the epoch
     stamp untouched, so the re-delivery (the one case the guard exists
     for) counts exactly once."""
-    from bytehub_spark.streaming import GroupedCountMinMonitor
+    from bytehub_spark.streaming import CountMinMonitor
 
     ev = load_table(spark, SF, "events").limit(100)
-    mon = GroupedCountMinMonitor()
+    mon = CountMinMonitor(group_col="event_type")
     import bytehub_spark.operators.sketches as sk
 
     real = sk.cms_build
@@ -590,18 +593,19 @@ def test_grouped_cms_monitor_isolation_and_guard(spark):
     """Group isolation carries into the monitor (a hot key in group A
     never inflates group B's cells), and result() refuses before any
     batch."""
-    from bytehub_spark.streaming import GroupedCountMinMonitor
+    from bytehub_spark.streaming import CountMinMonitor
 
     rows = [("A", 1)] * 50 + [("B", 1)] * 2
     df = spark.createDataFrame(rows, "event_type string, user_id long")
-    mon = GroupedCountMinMonitor()
+    mon = CountMinMonitor(group_col="event_type")
     mon.process_batch(df)
     b_cells = {k: v for k, v in mon.cells.items() if k[0] == "B"}
     assert set(b_cells.values()) == {2}
-    with pytest.raises(RuntimeError):
-        GroupedCountMinMonitor().result()
-    with pytest.raises(ValueError):
-        GroupedCountMinMonitor(width=1)
+    for group_col in GROUP_COLS:
+        with pytest.raises(RuntimeError):
+            CountMinMonitor(group_col=group_col).result()
+        with pytest.raises(ValueError):
+            CountMinMonitor(width=1, group_col=group_col)
 
 
 # ------------------- weighted deterministic sample (A-ES, r14 prepay)

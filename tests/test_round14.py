@@ -1,5 +1,5 @@
-"""Round-14 tests: ADVICE-r13 fixes (grouped monitors accept non-string
-group columns, cms_probe grouped/ungrouped mismatch guards), grouped
+"""Round-14 tests: ADVICE-r13 fixes (grouped sketch monitors accept
+non-string group columns, cms_probe grouped/ungrouped mismatch guards), grouped
 KMV (+ GroupedKmvMonitor), the weighted_sample priority law (+
 WeightedSampleMonitor), and kmv_overlap_matrix.
 """
@@ -23,10 +23,7 @@ def test_grouped_monitors_accept_int_group_col(spark):
     createDataFrame (TypeError at schema verification pre-fix). The
     string values must match Spark's own CAST(x AS STRING) so a batch
     twin comparison stays exact."""
-    from bytehub_spark.streaming import (
-        GroupedCountMinMonitor,
-        GroupedHllMonitor,
-    )
+    from bytehub_spark.streaming import CountMinMonitor, HllDistinctMonitor
 
     ev = load_table(spark, SF, "events").where(
         F.col("user_id").isNotNull()
@@ -39,7 +36,7 @@ def test_grouped_monitors_accept_int_group_col(spark):
             "grp"
         ),
     )
-    mon = GroupedCountMinMonitor(key_col="user_id", group_col="grp")
+    mon = CountMinMonitor(key_col="user_id", group_col="grp")
     mon.process_batch(src, epoch_id=0)
     got = mon.result()  # pre-fix: TypeError here
     want = (
@@ -52,7 +49,7 @@ def test_grouped_monitors_accept_int_group_col(spark):
     )
     assert {r["grp"] for r in got.collect()} >= {"0", "1", "2", None}
 
-    hmon = GroupedHllMonitor(key_col="user_id", group_col="grp")
+    hmon = HllDistinctMonitor(key_col="user_id", group_col="grp")
     hmon.process_batch(src)
     hgot = hmon.result()
     hwant = S.hll_registers(src, "user_id", "grp", 64).select(
