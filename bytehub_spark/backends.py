@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .exceptions import StorageError, ValidationError
-from .storage import PARTITION_COL, SparkStorage
+from .storage import PARTITION_COL, SparkStorage, partitioned
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -76,30 +76,16 @@ class DeltaStorage(SparkStorage):
 
     def exists(self, name: str) -> bool:
         try:
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            log = jvm.org.apache.hadoop.fs.Path(
-                self.feature_path(name) + "/_delta_log"
-            )
-            return log.getFileSystem(conf).exists(log)
+            fs, log = self._fs(self.feature_path(name) + "/_delta_log")
+            return fs.exists(log)
         except Exception:
             return False
 
     def write(self, name, df, scheme="date", known_value_type=None):
-        from . import timeseries as ts
-
-        for c in (ts.TIME_COL, ts.VALUE_COL):
-            if c not in df.columns:
-                raise ValidationError(f"save requires a {c!r} column")
-        from .storage import partition_expr
-
-        out = (
-            df.select(ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL)
-            .withColumn(PARTITION_COL, partition_expr(scheme))
-            .repartition(F.col(PARTITION_COL))
-        )
         (
-            out.write.format("delta")
+            partitioned(df, scheme)
+            .repartition(F.col(PARTITION_COL))
+            .write.format("delta")
             .mode("append")
             .option("mergeSchema", "false")  # same schema guard semantics
             .partitionBy(PARTITION_COL)

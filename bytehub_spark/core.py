@@ -574,8 +574,9 @@ class FeatureStore:
         return base
 
     def _storage(self, namespace: str) -> SparkStorage:
-        # setdefault keeps one SparkStorage per namespace even under the
-        # threaded multi-feature load (two would split the open() memo)
+        # setdefault keeps one SparkStorage per namespace even when
+        # _bounds_prepass's pool opens features concurrently (two would
+        # split the open() memo)
         st = self._storages.get(namespace)
         if st is None:
             nsrow = self.catalog.get_namespace(namespace)
@@ -751,118 +752,71 @@ class FeatureStore:
 
         Single-feature form: columns {time?, created_time?, value} + explicit
         name; or the payload column itself named "ns/name". Wide form: k
-        feature-named columns → split into per-feature saves (unpivot).
+        feature-named columns, each saved as its own feature (unpivot).
+        Every target is checked against the catalog before any is written.
         """
-        if isinstance(df, pd.DataFrame):
-            self._save_pandas(df, name, namespace)
-        elif isinstance(df, DataFrame):
-            self._save_spark(df, name, namespace)
-        else:
-            raise ValidationError(
-                f"save_dataframe expects a pandas or Spark DataFrame, got {type(df)}"
-            )
-
-    def _save_pandas(self, pdf: pd.DataFrame, name, namespace) -> None:
-        pdf = pdf.copy()
-        if isinstance(pdf.index, pd.DatetimeIndex):
-            if ts.TIME_COL in pdf.columns:
+        is_pandas = isinstance(df, pd.DataFrame)
+        if is_pandas and isinstance(df.index, pd.DatetimeIndex):
+            if ts.TIME_COL in df.columns:
                 raise ValidationError(
                     "Ambiguous time: both DatetimeIndex and 'time' column present"
                 )
-            pdf = pdf.reset_index().rename(columns={pdf.index.name or "index": ts.TIME_COL})
-        if ts.TIME_COL not in pdf.columns:
-            raise ValidationError("save requires a 'time' column or DatetimeIndex")
-
-        payload_cols = [c for c in pdf.columns if c not in ENVELOPE_COLS and c != ts.TIME_COL]
-        if not payload_cols:
+            df = df.reset_index().rename(columns={df.index.name or "index": ts.TIME_COL})
+        elif not (is_pandas or isinstance(df, DataFrame)):
+            raise ValidationError(
+                f"save_dataframe expects a pandas or Spark DataFrame, got {type(df)}"
+            )
+        if ts.TIME_COL not in df.columns:
+            raise ValidationError("save requires a 'time' column (or a pandas DatetimeIndex)")
+        payload = [c for c in df.columns if c not in ENVELOPE_COLS]
+        if not payload:
             raise ValidationError("No value column to save")
-        if len(payload_cols) > 1 or (payload_cols[0] != ts.VALUE_COL and "/" in payload_cols[0]):
-            # wide form: each column is a feature
-            for col in payload_cols:
-                sub_cols = [ts.TIME_COL] + ([ts.CREATED_COL] if ts.CREATED_COL in pdf.columns else [])
-                sub = pdf[sub_cols + [col]].rename(columns={col: ts.VALUE_COL})
-                nsp, nm = split_name(col, namespace if "/" not in col else None)
-                self._save_pandas(sub, nm, nsp)
-            return
-
-        col = payload_cols[0]
-        if col != ts.VALUE_COL:
-            nsp, nm = split_name(col, namespace)
-            pdf = pdf.rename(columns={col: ts.VALUE_COL})
-        else:
+        if payload == [ts.VALUE_COL]:
             if name is None:
                 raise ValidationError(
                     "Column named 'value' requires an explicit feature name"
                 )
-            nsp, nm = split_name(name, namespace)
-        meta = self.catalog.get_feature(nsp, nm)
-        if meta is None:
-            raise MissingFeatureException(f"Feature {nsp}/{nm} does not exist")
+            targets = {ts.VALUE_COL: split_name(name, namespace)}
+        else:  # each payload column is a feature, "ns/name" or named in namespace
+            targets = {c: split_name(c, None if "/" in c else namespace) for c in payload}
+        metas = {}
+        for col, (nsp, nm) in targets.items():
+            metas[col] = self.catalog.get_feature(nsp, nm)
+            if metas[col] is None:
+                raise MissingFeatureException(f"Feature {nsp}/{nm} does not exist")
 
-        if ts.CREATED_COL not in pdf.columns:
-            pdf[ts.CREATED_COL] = pd.Timestamp.now(tz="UTC")  # naive times are UTC too
-        pdf[ts.TIME_COL] = pd.to_datetime(pdf[ts.TIME_COL])
-        pdf[ts.CREATED_COL] = pd.to_datetime(pdf[ts.CREATED_COL])
-        pdf = pdf[[ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL]]
-
-        if meta["serialized"]:
-            pdf[ts.VALUE_COL] = pdf[ts.VALUE_COL].map(json.dumps)
-
-        # pyarrow inference mirrors the reference's schema derivation
-        # (dask.py:66-69): dict payloads become structs, not strings.
-        table = pa.Table.from_pandas(pdf, preserve_index=False)
-        sdf = self.spark.createDataFrame(table)
-        sdf = sdf.withColumn(ts.TIME_COL, F.col(ts.TIME_COL).cast("timestamp"))
-        sdf = sdf.withColumn(ts.CREATED_COL, F.col(ts.CREATED_COL).cast("timestamp"))
-        self._write_feature(nsp, nm, meta, sdf)
-
-    def _save_spark(self, sdf: DataFrame, name, namespace) -> None:
-        payload_cols = [c for c in sdf.columns if c not in ENVELOPE_COLS and c != ts.TIME_COL]
-        if ts.TIME_COL not in sdf.columns:
-            raise ValidationError("save requires a 'time' column")
-        if not payload_cols:
-            raise ValidationError("No value column to save")
-        if len(payload_cols) > 1 or (payload_cols[0] != ts.VALUE_COL and "/" in payload_cols[0]):
-            for col in payload_cols:
-                keep = [ts.TIME_COL] + ([ts.CREATED_COL] if ts.CREATED_COL in sdf.columns else [])
-                sub = sdf.select(*keep, _qcol(col).alias(ts.VALUE_COL))
-                nsp, nm = split_name(col, namespace if "/" not in col else None)
-                self._save_spark(sub, nm, nsp)
-            return
-
-        col = payload_cols[0]
-        if col != ts.VALUE_COL:
-            nsp, nm = split_name(col, namespace)
-            sdf = sdf.withColumnRenamed(col, ts.VALUE_COL)
-        else:
-            if name is None:
-                raise ValidationError(
-                    "Column named 'value' requires an explicit feature name"
-                )
-            nsp, nm = split_name(name, namespace)
-        meta = self.catalog.get_feature(nsp, nm)
-        if meta is None:
-            raise MissingFeatureException(f"Feature {nsp}/{nm} does not exist")
-
-        if ts.CREATED_COL not in sdf.columns:
-            sdf = sdf.withColumn(ts.CREATED_COL, F.current_timestamp())
-        sdf = sdf.withColumn(ts.TIME_COL, F.col(ts.TIME_COL).cast("timestamp"))
-        sdf = sdf.withColumn(ts.CREATED_COL, F.col(ts.CREATED_COL).cast("timestamp"))
-
-        if meta["serialized"]:
-            vt = sdf.schema[ts.VALUE_COL].dataType
-            if isinstance(vt, (T.StructType, T.ArrayType, T.MapType)):
-                sdf = sdf.withColumn(ts.VALUE_COL, F.to_json(ts.VALUE_COL))
+        has_created = ts.CREATED_COL in df.columns
+        for col, (nsp, nm) in targets.items():
+            if is_pandas:
+                value = df[col].map(json.dumps) if metas[col]["serialized"] else df[col]
+                pdf = pd.DataFrame({
+                    ts.TIME_COL: pd.to_datetime(df[ts.TIME_COL]),
+                    # naive times are UTC too
+                    ts.CREATED_COL: pd.to_datetime(df[ts.CREATED_COL]) if has_created
+                    else pd.Timestamp.now(tz="UTC"),
+                    ts.VALUE_COL: value,
+                })
+                # pyarrow inference mirrors the reference's schema derivation
+                # (dask.py:66-69): dict payloads become structs, not strings.
+                sdf = self.spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False))
             else:
-                enc = F.pandas_udf(
-                    lambda s: s.map(lambda v: json.dumps(v) if v is not None else None),
-                    T.StringType(),
+                value = _qcol(col)
+                if metas[col]["serialized"]:
+                    if isinstance(df.schema[col].dataType, (T.StructType, T.ArrayType, T.MapType)):
+                        value = F.to_json(value)
+                    else:
+                        value = F.pandas_udf(
+                            lambda s: s.map(lambda v: json.dumps(v) if v is not None else None),
+                            T.StringType(),
+                        )(value)
+                created = F.col(ts.CREATED_COL) if has_created else F.current_timestamp()
+                sdf = df.select(
+                    ts.TIME_COL, created.alias(ts.CREATED_COL), value.alias(ts.VALUE_COL)
                 )
-                sdf = sdf.withColumn(ts.VALUE_COL, enc(F.col(ts.VALUE_COL)))
-
-        self._write_feature(
-            nsp, nm, meta, sdf.select(*[ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL])
-        )
+            self._write_feature(nsp, nm, metas[col], sdf.select(
+                *[F.col(c).cast("timestamp").alias(c) for c in (ts.TIME_COL, ts.CREATED_COL)],
+                ts.VALUE_COL,
+            ))
 
     def _write_feature(self, nsp: str, nm: str, meta: dict, sdf: DataFrame) -> None:
         """Append + catalog bookkeeping: the first successful save records

@@ -494,10 +494,10 @@ def hll_overlap_matrix(
 
     The raw data is scanned ONCE into the per-group register table
     (hll_registers — ≤ groups·m rows no matter the input size); the
-    matrix is assembled entirely sketch-side: a distinct-groups
-    self-join builds the pair frame (groups² rows — tiny), two
-    broadcast equi-joins fan each group's registers to the pairs it
-    participates in, a (pair, bucket) max-merge forms each pair's union
+    matrix is assembled entirely sketch-side: _pair_fans (the pair
+    build kmv_pair_merge shares) fans each group's registers to the
+    pairs it participates in (groups² pairs — tiny), a (pair, bucket)
+    max-merge forms each pair's union
     registers (the pinned idempotent merge law), and
     hll_estimate_corrected finishes per-group and per-pair estimates.
     est_inter = est_a + est_b − est_union (inclusion-exclusion; like
@@ -527,21 +527,7 @@ def hll_overlap_matrix(
         hll_registers(df, key_col, group_col, m).coalesce(1)
     )
     est = hll_estimate_corrected(regs, m, [group_col])
-    groups = regs.select(F.col(group_col).alias("__g")).distinct()
-    pairs = (
-        groups.select(F.col("__g").alias("group_a"))
-        .join(
-            groups.select(F.col("__g").alias("group_b")),
-            F.col("group_a") < F.col("group_b"),
-        )
-    )
-    r = regs.withColumnRenamed(group_col, "__rg")
-    fan_a = pairs.join(
-        r, F.col("__rg") == F.col("group_a")
-    ).select("group_a", "group_b", "bucket", "rho")
-    fan_b = pairs.join(
-        r, F.col("__rg") == F.col("group_b")
-    ).select("group_a", "group_b", "bucket", "rho")
+    fan_a, fan_b = _pair_fans(regs, group_col, "bucket", "rho")
     union_regs = (
         fan_a.unionByName(fan_b)
         .groupBy("group_a", "group_b", "bucket")
@@ -708,6 +694,25 @@ def kmv_estimate(
     )
 
 
+def _pair_fans(sk: DataFrame, group_col: str, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """The pair build of both overlap matrices (hll_overlap_matrix,
+    kmv_pair_merge): a distinct-groups '<' self-join builds the pair frame
+    (group_a, group_b) — the declared benign cartesian class, bounded by
+    group cardinality at ANY input size — and two equi-joins fan each
+    group's sketch rows ``cols`` to the pairs it is side a of, resp. side
+    b of. NULL groups never pair ('<' never admits a NULL side)."""
+    groups = sk.select(F.col(group_col).alias("__g")).distinct()
+    pairs = groups.select(F.col("__g").alias("group_a")).join(
+        groups.select(F.col("__g").alias("group_b")),
+        F.col("group_a") < F.col("group_b"),
+    )
+    s = sk.withColumnRenamed(group_col, "__sg")
+    return tuple(
+        pairs.join(s, F.col("__sg") == F.col(side)).select("group_a", "group_b", *cols)
+        for side in ("group_a", "group_b")
+    )
+
+
 def kmv_pair_merge(sk: DataFrame, k: int, group_col: str) -> DataFrame:
     """Pairwise union sketches of a grouped KMV sketch: per unordered
     group pair (group_a < group_b) the bottom-k of the pair's union
@@ -720,27 +725,15 @@ def kmv_pair_merge(sk: DataFrame, k: int, group_col: str) -> DataFrame:
     is complete). The one pair merge of kmv_overlap_matrix and
     dedup.kmv_source_overlap.
 
-    Sketch-side only: a distinct-groups '<' self-join builds the pair
-    frame (the declared benign cartesian class: bounded by group
-    cardinality at ANY input size), two equi-joins fan each group's
-    hashes to its pairs, a per-pair distinct + sharded bottom-k forms
-    each union sketch, and the membership flags ride along via a 3-key
-    re-join. NULL groups never pair ('<' never admits a NULL side)."""
+    Sketch-side only: _pair_fans (the pair build hll_overlap_matrix
+    shares) fans each group's hashes to its pairs, a per-pair distinct +
+    sharded bottom-k forms each union sketch, and the membership flags
+    ride along via a 3-key re-join. NULL groups never pair."""
     from ..plans.scratch import scratch_persist
 
-    groups = sk.select(F.col(group_col).alias("__g")).distinct()
-    pairs = groups.select(F.col("__g").alias("group_a")).join(
-        groups.select(F.col("__g").alias("group_b")),
-        F.col("group_a") < F.col("group_b"),
-    )
-    s = sk.withColumnRenamed(group_col, "__sg")
-    fan_a = pairs.join(s, F.col("__sg") == F.col("group_a")).select(
-        "group_a", "group_b", "h",
-        F.lit(1).alias("in_a"), F.lit(0).alias("in_b"),
-    )
-    fan_b = pairs.join(s, F.col("__sg") == F.col("group_b")).select(
-        "group_a", "group_b", "h",
-        F.lit(0).alias("in_a"), F.lit(1).alias("in_b"),
+    fan_a, fan_b = (
+        fan.select("*", F.lit(a).alias("in_a"), F.lit(1 - a).alias("in_b"))
+        for fan, a in zip(_pair_fans(sk, group_col, "h"), (1, 0))
     )
     # one row per (pair, h) with side-membership flags
     tagged = scratch_persist(

@@ -14,15 +14,16 @@ Scale design:
   at 100 TB touch only the needed days/years.
 - time-range predicates are pushed to the parquet row-group stats.
 - appends write through `partitionBy("partition")` so ingest is append-only
-  and parallel; no small-file compaction here (delegate to table format —
-  Delta/Iceberg — when their jars are on the classpath).
+  and parallel, one file per touched partition per append
+  (`_write_partitioned`); compact() rewrites partitions that many appends
+  fragmented, swapping them in by directory renames (a table format —
+  Delta/Iceberg, `backends.py` — does it ACID when its jars are on the
+  classpath).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-from typing import Sequence
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +53,26 @@ def partition_expr(scheme: str):
 def partition_bound(value, scheme: str) -> str:
     v = ts.instant(value)
     return v.strftime("%Y-%m-%d") if scheme == "date" else v.strftime("%Y")
+
+
+def partitioned(df: DataFrame, scheme: str) -> DataFrame:
+    """The (time, created_time, value) rows of ``df`` with the derived
+    ``partition`` column: what every backend appends."""
+    for c in (ts.TIME_COL, ts.VALUE_COL):
+        if c not in df.columns:
+            raise ValidationError(f"save requires a {c!r} column")
+    return df.select(*ENVELOPE).withColumn(PARTITION_COL, partition_expr(scheme))
+
+
+def _schema(value_type: T.DataType) -> T.StructType:
+    """The stored envelope (time, created_time, value) of a value type."""
+    return T.StructType(
+        [
+            T.StructField(ts.TIME_COL, T.TimestampType()),
+            T.StructField(ts.CREATED_COL, T.TimestampType()),
+            T.StructField(ts.VALUE_COL, value_type),
+        ]
+    )
 
 
 def _rename(fs, src, dst) -> None:
@@ -90,10 +111,6 @@ class SparkStorage:
         else:
             # s3a://, gs://, abfs:// … — handed to Hadoop FS connectors as-is
             self.base = url
-        # Local paths list and stat through os, not the Hadoop
-        # FileSystem: over py4j, list_partitions of a 16-feature store
-        # (730 daily partitions each, local[4]) took 3.8-4.6 s against
-        # 14-22 ms for os.listdir (three runs). Keep both branches.
         self._is_local = parsed.scheme in ("", "file")
         # memoized open() frames; every mutation through this object
         # invalidates (external writers bypass this — same staleness
@@ -127,14 +144,42 @@ class SparkStorage:
     def feature_path(self, name: str) -> str:
         return os.path.join(self.base, "feature", name)
 
-    def exists(self, name: str) -> bool:
+    def _fs(self, path: str):
+        """(Hadoop FileSystem, Path) of ``path``: the data plane's one
+        handle on the Hadoop file system (renames, deletes, non-local
+        listings)."""
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jpath
+
+    def _entries(self, path: str) -> list[tuple[str, bool]] | None:
+        """(name, is_dir) of each entry of directory ``path``; None when it
+        is missing. Driver-side listing, no data scan.
+
+        Local paths list through os, not the Hadoop FileSystem: over py4j,
+        list_partitions of a 16-feature store (730 daily partitions each,
+        local[4]) took 3.8-4.2 s against 16-22 ms through os.scandir
+        (three runs), and partition_file_counts of two of those features
+        4.2 s against 43 ms. Keep both branches. scandir's entries carry
+        their type, so ``is_dir`` costs no stat per entry."""
         if self._is_local:
-            return os.path.isdir(self.feature_path(name))
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(self.feature_path(name))
-        fs = path.getFileSystem(conf)
-        return fs.exists(path) and fs.getFileStatus(path).isDirectory()
+            if not os.path.isdir(path):
+                return None
+            with os.scandir(path) as it:
+                return [(e.name, e.is_dir()) for e in it]
+        fs, jpath = self._fs(path)
+        if not fs.exists(jpath):
+            return None
+        return [(st.getPath().getName(), st.isDirectory()) for st in fs.listStatus(jpath)]
+
+    def _partition_dirs(self, path: str) -> list[str]:
+        """The ``partition=<p>`` directory names under ``path``."""
+        return [
+            n for n, is_dir in self._entries(path) or ()
+            if is_dir and n.startswith(f"{PARTITION_COL}=")
+        ]
+
+    def exists(self, name: str) -> bool:
+        return (name, True) in (self._entries(os.path.join(self.base, "feature")) or ())
 
     def ls(self) -> list[str]:
         """Feature datasets present on storage (S3 listing for GC).
@@ -142,61 +187,48 @@ class SparkStorage:
         Compaction work dirs (``<name>__compacting`` / ``<name>__retiring``)
         are transient siblings, not datasets — excluded.
         """
-        root = os.path.join(self.base, "feature")
-        if self._is_local:
-            if not os.path.isdir(root):
-                return []
-            names = (
-                d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))
-            )
-        else:
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            path = jvm.org.apache.hadoop.fs.Path(root)
-            fs = path.getFileSystem(conf)
-            if not fs.exists(path):
-                return []
-            names = (
-                st.getPath().getName()
-                for st in fs.listStatus(path)
-                if st.isDirectory()
-            )
         return sorted(
-            n for n in names
-            if not n.endswith(("__compacting", "__retiring"))
+            n for n, is_dir in self._entries(os.path.join(self.base, "feature")) or ()
+            if is_dir and not n.endswith(("__compacting", "__retiring"))
         )
 
     def list_partitions(self, name: str, reverse: bool = False) -> list[str]:
-        """Sorted `partition=` values for a feature (dask.py:38-50).
+        """Sorted `partition=` values for a feature (dask.py:38-50)."""
+        return sorted(
+            (d.split("=", 1)[1] for d in self._partition_dirs(self.feature_path(name))),
+            reverse=reverse,
+        )
 
-        Driver-side directory listing — O(#partitions), no data scan.
-        """
+    def partition_file_counts(self, name: str) -> dict[str, int]:
+        """Data-file count per Hive partition."""
         root = self.feature_path(name)
-        if self._is_local:
-            if not os.path.isdir(root):
-                return []
-            vals = [
-                d.split("=", 1)[1]
-                for d in os.listdir(root)
-                if d.startswith(f"{PARTITION_COL}=")
-            ]
-        else:
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            path = jvm.org.apache.hadoop.fs.Path(root)
-            fs = path.getFileSystem(conf)
-            if not fs.exists(path):
-                return []
-            vals = [
-                st.getPath().getName().split("=", 1)[1]
-                for st in fs.listStatus(path)
-                if st.isDirectory() and st.getPath().getName().startswith(f"{PARTITION_COL}=")
-            ]
-        return sorted(vals, reverse=reverse)
+        return {
+            d.split("=", 1)[1]: sum(
+                n.endswith(".parquet") for n, _ in self._entries(os.path.join(root, d)) or ()
+            )
+            for d in self._partition_dirs(root)
+        }
 
     # ------------------------------------------------------------------
     # S2 — append sink
     # ------------------------------------------------------------------
+
+    def _write_partitioned(self, df: DataFrame, mode: str, path: str) -> None:
+        """``df`` (with its ``partition`` column) as Hive-partitioned
+        parquet at ``path``, one file per partition.
+
+        Without the repartition every task writes a sliver into every
+        partition dir — a daily-partitioned multi-year series exploded
+        into ~80k tiny files (measured: 40s save / 14s ranged load at 600k
+        rows; 4s / <1s after). maxRecordsPerFile re-splits genuinely large
+        partitions."""
+        (
+            df.repartition(F.col(PARTITION_COL))
+            .write.mode(mode)
+            .option("maxRecordsPerFile", 5_000_000)
+            .partitionBy(PARTITION_COL)
+            .parquet(path)
+        )
 
     def write(
         self,
@@ -215,9 +247,7 @@ class SparkStorage:
         instead of opening the dataset (one less file-index build + schema
         inference per append).
         """
-        for c in (ts.TIME_COL, ts.VALUE_COL):
-            if c not in df.columns:
-                raise ValidationError(f"save requires a {c!r} column")
+        out = partitioned(df, scheme)
         if known_value_type is not None:
             old_t = known_value_type
         else:
@@ -232,50 +262,13 @@ class SparkStorage:
                     f"incoming {new_t.simpleString()} (use serialized=True "
                     f"for evolving schemas)"
                 )
-        out = (
-            df.select(ts.TIME_COL, ts.CREATED_COL, ts.VALUE_COL)
-            .withColumn(PARTITION_COL, partition_expr(scheme))
-        )
-        # One file per Hive partition per append: without the repartition
-        # every task writes a sliver into every partition dir — a daily-
-        # partitioned multi-year series exploded into ~80k tiny files
-        # (measured: 40s save / 14s ranged load at 600k rows; 4s / <1s
-        # after). maxRecordsPerFile re-splits genuinely large partitions.
-        out = out.repartition(F.col(PARTITION_COL))
         try:
-            (
-                out.write.mode("append")
-                .option("maxRecordsPerFile", 5_000_000)
-                .partitionBy(PARTITION_COL)
-                .parquet(self.feature_path(name))
-            )
+            self._write_partitioned(out, "append", self.feature_path(name))
         except Exception as e:  # report the feature path (fixes ref bug dask.py:83)
             raise StorageError(
                 f"Failed to write feature dataset at {self.feature_path(name)}: {e}"
             ) from e
         self.invalidate(name)  # the cached file index no longer sees all files
-
-    def partition_file_counts(self, name: str) -> dict[str, int]:
-        """Data-file count per Hive partition (driver-side listing, no scan)."""
-        root = self.feature_path(name)
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(root)
-        fs = path.getFileSystem(conf)
-        if not fs.exists(path):
-            return {}
-        counts: dict[str, int] = {}
-        for st in fs.listStatus(path):
-            nm = st.getPath().getName()
-            if not (st.isDirectory() and nm.startswith(f"{PARTITION_COL}=")):
-                continue
-            n = sum(
-                1
-                for f in fs.listStatus(st.getPath())
-                if f.getPath().getName().endswith(".parquet")
-            )
-            counts[nm.split("=", 1)[1]] = n
-        return counts
 
     def compact(self, name: str, max_files_per_partition: int = 1) -> dict:
         """Rewrite fragmented partitions into target-sized files.
@@ -305,30 +298,17 @@ class SparkStorage:
         if not frag:
             return {"partitions": 0, "files_before": 0, "files_after": 0}
         files_before = sum(counts[p] for p in frag)
-        base = self.open(name)
-        staging = self.feature_path(name) + "__compacting"
-        retiring = self.feature_path(name) + "__retiring"
-        (
-            base.where(F.col(PARTITION_COL).isin(frag))
-            .repartition(F.col(PARTITION_COL))
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", 5_000_000)
-            .partitionBy(PARTITION_COL)
-            .parquet(staging)
+        root = self.feature_path(name)
+        staging, retiring = root + "__compacting", root + "__retiring"
+        self._write_partitioned(
+            self.open(name).where(F.col(PARTITION_COL).isin(frag)), "overwrite", staging
         )
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.Path(staging).getFileSystem(conf)
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(retiring))
+        fs, retiring_dir = self._fs(retiring)
+        fs.mkdirs(retiring_dir)
         for p in frag:
-            live = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(self.feature_path(name), f"{PARTITION_COL}={p}")
-            )
-            staged = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(staging, f"{PARTITION_COL}={p}")
-            )
-            retired = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(retiring, f"{PARTITION_COL}={p}")
+            live, staged, retired = (
+                self._fs(os.path.join(d, f"{PARTITION_COL}={p}"))[1]
+                for d in (root, staging, retiring)
             )
             if not fs.exists(staged):
                 # all files in this partition held zero rows — nothing was
@@ -337,8 +317,8 @@ class SparkStorage:
             _rename(fs, live, retired)
             _rename(fs, staged, live)
             fs.delete(retired, True)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(retiring), True)
+        fs.delete(self._fs(staging)[1], True)
+        fs.delete(retiring_dir, True)
         self.invalidate(name)
         after_counts = self.partition_file_counts(name)
         files_after = sum(after_counts.get(p, 0) for p in frag)
@@ -362,29 +342,20 @@ class SparkStorage:
         Idempotent and cheap (directory listings only); compact() runs it
         first, so recovery needs no separate operational step.
         """
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
+        root = self.feature_path(name)
+        retiring = root + "__retiring"
+        fs, retiring_dir = self._fs(retiring)
         restored = cleaned = 0
-        retiring = jvm.org.apache.hadoop.fs.Path(self.feature_path(name) + "__retiring")
-        fs = retiring.getFileSystem(conf)
-        if fs.exists(retiring):
-            for st in fs.listStatus(retiring):
-                nm = st.getPath().getName()
-                if not nm.startswith(f"{PARTITION_COL}="):
-                    continue
-                live = jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(self.feature_path(name), nm)
-                )
-                if fs.exists(live):
-                    fs.delete(st.getPath(), True)
-                    cleaned += 1
-                else:
-                    _rename(fs, st.getPath(), live)
-                    restored += 1
-            fs.delete(retiring, True)
-        staging = jvm.org.apache.hadoop.fs.Path(self.feature_path(name) + "__compacting")
-        if fs.exists(staging):
-            fs.delete(staging, True)
+        for d in self._partition_dirs(retiring):
+            retired, live = (self._fs(os.path.join(r, d))[1] for r in (retiring, root))
+            if fs.exists(live):
+                fs.delete(retired, True)
+                cleaned += 1
+            else:
+                _rename(fs, retired, live)
+                restored += 1
+        fs.delete(retiring_dir, True)
+        if fs.delete(self._fs(root + "__compacting")[1], True):
             cleaned += 1
         if restored:
             self.invalidate(name)
@@ -426,14 +397,7 @@ class SparkStorage:
         if not self.exists(name):
             return None
         if value_type is not None:
-            schema = T.StructType(
-                [
-                    T.StructField(ts.TIME_COL, T.TimestampType()),
-                    T.StructField(ts.CREATED_COL, T.TimestampType()),
-                    T.StructField(ts.VALUE_COL, value_type),
-                    T.StructField(PARTITION_COL, T.StringType()),
-                ]
-            )
+            schema = _schema(value_type).add(PARTITION_COL, T.StringType())
             df = self.spark.read.schema(schema).parquet(self.feature_path(name))
         else:
             df = self.spark.read.parquet(self.feature_path(name))
@@ -460,19 +424,18 @@ class SparkStorage:
         Derives `partition` predicates from the time bounds so Catalyst
         prunes Hive partitions *and* pushes the time filters to row-group
         stats. Empty/missing datasets return a 0-row frame with the
-        canonical schema (parity: dask.py:108-114).
+        canonical schema (parity: dask.py:108-114): a projection of
+        ``range(0)``, which Spark sizes at 0 bytes. A frame built from
+        Python rows (``createDataFrame``) is sized at
+        ``spark.sql.defaultSizeInBytes``, so one never-saved feature made
+        ``ts.plan_ranges`` plan the whole load wide.
         """
         df = base if base is not None else self.open(name)
         if df is None:
-            vt = value_type or T.DoubleType()
-            empty_schema = T.StructType(
-                [
-                    T.StructField(ts.TIME_COL, T.TimestampType()),
-                    T.StructField(ts.CREATED_COL, T.TimestampType()),
-                    T.StructField(ts.VALUE_COL, vt),
-                ]
+            return self.spark.range(0).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name)
+                  for f in _schema(value_type or T.DoubleType())]
             )
-            return self.spark.createDataFrame([], empty_schema)
         if from_date is not None:
             df = df.where(
                 (F.col(ts.TIME_COL) >= F.lit(ts.instant(from_date)).cast("timestamp"))
@@ -499,11 +462,7 @@ class SparkStorage:
         cols = set(df.columns)
         if not {ts.TIME_COL, ts.VALUE_COL, PARTITION_COL} <= cols:
             raise ValidationError("import requires time/value/partition columns")
-        (
-            df.write.mode("append")
-            .partitionBy(PARTITION_COL)
-            .parquet(self.feature_path(name))
-        )
+        self._write_partitioned(df, "append", self.feature_path(name))
         self.invalidate(name)
 
     def copy(self, from_name: str, to_name: str, dest: "SparkStorage") -> None:
@@ -511,14 +470,8 @@ class SparkStorage:
             dest.import_(to_name, self.export(from_name))
 
     def delete(self, name: str) -> None:
+        """Remove a feature's dataset: one recursive Hadoop delete, local or
+        not (only listings take the os branch, for speed)."""
         self.invalidate(name)
-        path = self.feature_path(name)
-        if self._is_local:
-            shutil.rmtree(path, ignore_errors=True)
-            return
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, True)
+        fs, path = self._fs(self.feature_path(name))
+        fs.delete(path, True)

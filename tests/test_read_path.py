@@ -1,12 +1,13 @@
 """Store read path: building a load with explicit from/to launches no Spark
 job (the LOCF seed is part of the plan), running a ranged, gridded or
 aligned load costs a bounded number of jobs (one keyed exchange, one
-partition for a small load), the one read plan matches hand-computed
-answers, the pandas model of the reference semantics (``read_model``,
-which stands in for the per-feature generic path the plan replaced) and
-its own wide (many-range) side, a load looks each feature up in the
-catalog once, last() runs one collect per stored value type, a refused
-Hadoop rename fails loudly and a non-local dataset check lists no data."""
+partition for a small load, also beside a never-saved feature), the one
+read plan matches hand-computed answers, the pandas model of the reference
+semantics (``read_model``, which stands in for the per-feature generic path
+the plan replaced) and its own wide (many-range) side, a load looks each
+feature up in the catalog once, last() runs one collect per stored value
+type, a refused Hadoop rename fails loudly and the os and Hadoop listings
+agree without scanning data."""
 
 import json
 import os
@@ -70,16 +71,35 @@ def test_rename_passes_when_hadoop_returns_true():
 
 
 def test_exists_through_hadoop_matches_the_local_check(fs, spark):
-    _save(fs, "test/d", [("2024-01-01", "2024-01-01", 1.0)])
+    # exists, ls, list_partitions and partition_file_counts answer alike
+    # through the os listing local stores take and the Hadoop listing
+    # object-store URLs take, and neither runs a Spark job
+    _save(fs, "test/d", [("2024-01-01", "2024-01-01", 1.0), ("2024-01-03", "2024-01-03", 2.0)])
+    _save(fs, "test/d", [("2024-01-01", "2024-01-02", 3.0)])
     storage = fs._storage("test")
     os.makedirs(storage.feature_path("hollow"))
+    os.makedirs(storage.feature_path("d") + "__compacting")  # a work dir, not a dataset
     names = ["missing", "hollow", "d"]
-    local = [storage.exists(n) for n in names]
+
+    def listings():
+        return {
+            "exists": [storage.exists(n) for n in names],
+            "ls": storage.ls(),
+            "list_partitions": [storage.list_partitions(n, reverse=True) for n in names],
+            "partition_file_counts": [storage.partition_file_counts(n) for n in names],
+        }
+
+    local = listings()
     storage._is_local = False  # the branch object-store URLs take
     j0 = _next_job(spark)
-    remote = [storage.exists(n) for n in names]
-    assert _next_job(spark) == j0  # a listing call, no schema-inference job
-    assert remote == local == [False, True, True]
+    remote = listings()
+    assert _next_job(spark) == j0  # listing calls, no schema-inference job
+    assert remote == local == {
+        "exists": [False, True, True],
+        "ls": ["d", "hollow"],
+        "list_partitions": [[], [], ["2024-01-03", "2024-01-01"]],
+        "partition_file_counts": [{}, {}, {"2024-01-01": 2, "2024-01-03": 1}],
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -348,16 +368,21 @@ def test_last_matches_per_feature_last_row(fs):
 
 @pytest.mark.parametrize(
     "shape,limit",
-    [("ranged", 2), ("travel", 2), ("resampled", 3), ("wide", 3), ("align", 2)],
+    [("ranged", 2), ("travel", 2), ("resampled", 3), ("wide", 3), ("align", 2),
+     ("never_saved", 2), ("never_saved_freq", 3)],
 )
 def test_execution_jobs_per_load(fs, spark, shape, limit):
     names = _doubles(fs, k=4)
+    # created, never saved: its empty scan must not make the plan wide
+    fs.create_feature("test/never", partition="date")
     feats, kw = {
         "ranged": (names[0], {}),
         "travel": (names[0], {"time_travel": "1h"}),
         "resampled": (names[0], {"freq": "1h"}),
         "wide": (names, {"freq": "1h"}),
         "align": (names, {}),
+        "never_saved": ([names[0], "test/never"], {}),
+        "never_saved_freq": ([names[0], "test/never"], {"freq": "1h"}),
     }[shape]
     load = lambda: fs.load_dataframe(feats, **RANGE, **kw)  # noqa: E731
     load().toPandas()  # open() memos warm, as in a steady read loop
