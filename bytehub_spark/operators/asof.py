@@ -273,24 +273,32 @@ def _band_quantized(
 
 
 def _band_bucket_counts(
-    base: DataFrame, keys: Sequence[str], eps_u: int
+    base: DataFrame, keys: Sequence[str], eps_options: Sequence[int]
 ) -> DataFrame:
-    """Per (eps_u, keys…, bucket) row counts — band_plan's one data-sized
-    pass per candidate ε, and BandPlanMonitor's additive state frame.
+    """Per (eps_u, keys…, bucket) row counts for every candidate ε in ONE
+    pass over the quantized ``base`` — band_plan's only data-sized pass
+    and BandPlanMonitor's additive per-batch state. Each row is
+    explode-tagged with every ε, so one bucketing projection and one
+    (eps_u, keys, bucket) count serve all widths (r14 opt, the
+    minhash_band_balance pattern).
     Bucketing is the identical exact-BIGINT floor division band_join
     performs (div + negative-remainder correction, never a DOUBLE
     divide)."""
-    eps_u = int(eps_u)
-    b = F.expr(
-        f"CAST((v_u div {eps_u}) - (CASE WHEN v_u % {eps_u} < 0 "
-        f"THEN 1 ELSE 0 END) AS BIGINT)"
+    bucketed = base.select(
+        *keys,
+        "v_u",
+        F.explode(
+            F.array(*[F.lit(int(e)).cast("long") for e in eps_options])
+        ).alias("eps_u"),
+    ).withColumn(
+        "bucket",
+        F.expr(
+            "CAST((v_u div eps_u) - (CASE WHEN v_u % eps_u < 0 "
+            "THEN 1 ELSE 0 END) AS BIGINT)"
+        ),
     )
-    return (
-        base.withColumn("bucket", b)
-        .groupBy(
-            F.lit(eps_u).cast("long").alias("eps_u"), *keys, "bucket"
-        )
-        .agg(F.count("*").cast("long").alias("c"))
+    return bucketed.groupBy("eps_u", *keys, "bucket").agg(
+        F.count("*").cast("long").alias("c")
     )
 
 
@@ -299,9 +307,8 @@ def band_stats_from_counts(
 ) -> DataFrame:
     """Assemble the per-ε decision row from a (eps_u, keys…, bucket, c)
     counts frame — SHARED by the batch ``band_plan`` and the streaming
-    ``BandPlanMonitor`` so the two can never disagree (the
-    drift_from_sums pattern). Sort-free core: ordering happens only in
-    the public ops.
+    ``BandPlanMonitor``, which both finish it with ``band_verdict``.
+    Sort-free core: ordering happens only in band_verdict.
 
     ``cand_pairs`` is the EXACT equi-join output row count of the self
     band join at that ε (each left row fans out to buckets {b−1,b,b+1}
@@ -340,70 +347,16 @@ def band_stats_from_counts(
     )
 
 
-def band_plan(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    eps_options: Sequence[int] = (1_000, 5_000, 20_000),
-    budget_pairs: int = 20_000_000,
-) -> DataFrame:
-    """ε-band join decision table — the range-join twin of
-    ``similarity.lsh_plane_plan`` / ``dedup.minhash_band_balance``: per
-    candidate band width ε (µ-units) the bucket occupancy, the EXACT
-    candidate-pair volume the self band join would produce, and the
-    hot-bucket imbalance — priced from one slim pass per ε BEFORE
-    committing the quadratic join. ``recommended`` = the WIDEST ε whose
-    candidate volume fits ``budget_pairs`` (the loosest band
-    affordable; width is the quality knob, volume the cost).
-    When nothing fits, every ``recommended`` is false — shrink ε or
-    pre-aggregate values.
-
-    Scale shape: the µ-quantized (keys, v_u) projection is
-    scratch-persisted and scanned once per candidate ε; each pass is a
-    map-side-combined count shuffled on (keys, bucket) — linear in the
-    data, never quadratic. Skew follows value density: a hot ε-band
-    shows up here as max_bucket_rows/imbalance_ppm before it becomes a
-    straggler task (the same pre-join discipline the LSH planners
-    encode, which is how a 100 TB range join avoids both the BNLJ and
-    the hot-bucket stall)."""
-    from pyspark import StorageLevel
-
-    from ..plans.scratch import scratch_persist
-
-    if not eps_options:
-        raise ValueError("band_plan: eps_options must be non-empty")
-    base = scratch_persist(
-        _band_quantized(df, keys, value_col), StorageLevel.MEMORY_AND_DISK
-    )
-    # Fused ε evaluation (r14 opt, the minhash_band_balance pattern):
-    # ONE explode-tagged bucketing pass + one (eps, keys, bucket) count
-    # serves every candidate width — band_stats_from_counts already
-    # partitions/groups by eps_u, so the fused counts frame drops
-    # straight in. Replaces one full pass + stats pipeline per ε.
-    eps_list = [int(e) for e in eps_options]
-    bucketed = base.select(
-        *keys,
-        "v_u",
-        F.explode(
-            F.array(*[F.lit(e).cast("long") for e in eps_list])
-        ).alias("eps_u"),
-    ).withColumn(
-        "bucket",
-        F.expr(
-            "CAST((v_u div eps_u) - (CASE WHEN v_u % eps_u < 0 "
-            "THEN 1 ELSE 0 END) AS BIGINT)"
-        ),
-    )
-    counts = bucketed.groupBy("eps_u", *keys, "bucket").agg(
-        F.count("*").cast("long").alias("c")
-    )
-    # 1 row per ε, but consumed by the best-width scalar AND the final
-    # verdict join — persist or the whole pricing pass re-runs per
-    # consumer (the lsh_plane_plan lesson)
-    out = scratch_persist(
-        band_stats_from_counts(counts, keys).withColumn(
-            "within_budget", F.col("cand_pairs") <= F.lit(int(budget_pairs))
-        )
+def band_verdict(stats: DataFrame, budget_pairs: int) -> DataFrame:
+    """The band_plan decision table from band_stats_from_counts' per-ε
+    rows: ``within_budget`` = cand_pairs ≤ ``budget_pairs``, and
+    ``recommended`` = the widest ε within budget (all false when none
+    is), sorted by eps_u. Shared by the batch ``band_plan`` and the
+    streaming ``BandPlanMonitor``. ``stats`` is read twice (the
+    best-width scalar and the verdict join): band_plan passes it
+    persisted, the monitor its checkpointed state's projection."""
+    out = stats.withColumn(
+        "within_budget", F.col("cand_pairs") <= F.lit(int(budget_pairs))
     )
     best = out.agg(
         F.max(F.when(F.col("within_budget"), F.col("eps_u"))).alias("_best")
@@ -416,4 +369,48 @@ def band_plan(
         )
         .drop("_best")
         .orderBy("eps_u")
+    )
+
+
+def band_plan(
+    df: DataFrame,
+    keys: Sequence[str],
+    value_col: str,
+    eps_options: Sequence[int] = (1_000, 5_000, 20_000),
+    budget_pairs: int = 20_000_000,
+) -> DataFrame:
+    """ε-band join decision table — the range-join twin of
+    ``similarity.lsh_plane_plan`` / ``dedup.minhash_band_balance``: per
+    candidate band width ε (µ-units) the bucket occupancy, the EXACT
+    candidate-pair volume the self band join would produce, and the
+    hot-bucket imbalance — priced from one slim pass BEFORE committing
+    the quadratic join. ``recommended`` = the WIDEST ε whose candidate
+    volume fits ``budget_pairs`` (the loosest band affordable; width is
+    the quality knob, volume the cost). When nothing fits, every
+    ``recommended`` is false — shrink ε or pre-aggregate values.
+
+    Scale shape: the µ-quantized (keys, v_u) projection is
+    scratch-persisted and scanned ONCE for all candidate widths
+    (_band_bucket_counts tags each row with every ε); the pass is a
+    map-side-combined count shuffled on (eps_u, keys, bucket) — linear
+    in the data, never quadratic. Skew follows value density: a hot
+    ε-band shows up here as max_bucket_rows/imbalance_ppm before it
+    becomes a straggler task (the same pre-join discipline the LSH
+    planners encode, which is how a 100 TB range join avoids both the
+    BNLJ and the hot-bucket stall)."""
+    from pyspark import StorageLevel
+
+    from ..plans.scratch import scratch_persist
+
+    if not eps_options:
+        raise ValueError("band_plan: eps_options must be non-empty")
+    base = scratch_persist(
+        _band_quantized(df, keys, value_col), StorageLevel.MEMORY_AND_DISK
+    )
+    counts = _band_bucket_counts(base, keys, eps_options)
+    # 1 row per ε, but consumed by the best-width scalar AND the final
+    # verdict join — persist or the whole pricing pass re-runs per
+    # consumer (the lsh_plane_plan lesson)
+    return band_verdict(
+        scratch_persist(band_stats_from_counts(counts, keys)), budget_pairs
     )

@@ -88,6 +88,17 @@ def dup_rate_by_group(
     )
 
 
+def word_ngrams(n: int) -> F.Column:
+    """The positional word n-grams of the split-text array column
+    ``__w``: element i is words i..i+n-1 joined by one space, in order,
+    duplicates kept. Callers that need a set wrap it in
+    ``F.array_distinct``; ``__w`` must hold at least ``n`` words (filter
+    or guard first — a shorter array makes the sequence run backwards)."""
+    return F.expr(
+        f"transform(sequence(0, size(__w) - {n}), i -> concat_ws(' ', slice(__w, i + 1, {n})))"
+    )
+
+
 def shingle_sets(
     documents: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -104,11 +115,8 @@ def shingle_sets(
         "__w", F.split(F.col(text_col), " ")
     )
     df = df.where(F.size("__w") >= n)
-    shingles = F.expr(
-        f"transform(sequence(0, size(__w) - {n}), i -> concat_ws(' ', slice(__w, i + 1, {n})))"
-    )
-    return (
-        df.select(F.col(id_col), F.explode(F.array_distinct(shingles)).alias("shingle"))
+    return df.select(
+        F.col(id_col), F.explode(F.array_distinct(word_ngrams(n))).alias("shingle")
     )
 
 
@@ -128,10 +136,7 @@ def _shingle_pair_source(
         "__w", F.split(F.col(text_col), " ")
     )
     df = df.where(F.size("__w") >= n)
-    shingles = F.expr(
-        f"array_distinct(transform(sequence(0, size(__w) - {n}), "
-        f"i -> concat_ws(' ', slice(__w, i + 1, {n}))))"
-    )
+    shingles = F.array_distinct(word_ngrams(n))
     # two-step select so the transform() evaluates once per row (no CSE in
     # Spark projections); the Generate node explodes the materialized array
     arr = df.select(F.col(id_col), shingles.alias("__sh_arr"))
@@ -366,7 +371,6 @@ def minhash_signatures(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "pandas",
 ) -> DataFrame:
     """MinHash signature per doc: (id, sig array<long>[n_hashes]) where
     sig[j] = min over shingles of h_j(shingle).
@@ -379,32 +383,18 @@ def minhash_signatures(
     hashes are engine-portable (hashing.fnv1a_cp*), so signatures — and
     every LSH bucket derived from them — are bit-identical in the DuckDB
     oracle. All downstream arithmetic fits in 38 bits (no ANSI overflow).
-    Both impls are bit-identical:
 
-    - ``pandas`` (default): repartition slim (id, h1, h2) rows on id, then
-      a numpy kernel per partition (argsort + 64 minimum.reduceat passes).
-      Replaces 64 per-row JVM agg expressions with vectorized columnar
-      mins — measured 1.5s → 0.9s on 1M shingles / 5k docs.
-    - ``sql``: groupBy(id) with 64 min-aggregates. Slower per row, but
-      map-side partial aggregation shrinks the shuffle to one signature
-      per (doc, map task) — prefer it when shingle volume per executor
-      dwarfs memory (the pandas impl shuffles every shingle row).
+    The mins run in numpy: slim (id, h1, h2) rows are repartitioned on
+    id, then one kernel per partition (argsort + n_hashes
+    minimum.reduceat passes). It replaced n_hashes per-row JVM
+    min-aggregates (groupBy(id) with one min per hash) — measured 1.5s →
+    0.9s on 1M shingles / 5k docs. The trade: every shingle row is
+    shuffled, where the aggregate's map-side combine shuffled one
+    signature per (doc, map task).
     """
     p = MINHASH_PRIME
     sh = shingle_sets(documents, text_col, id_col, n)
     slim = _h1_h2(sh, id_col)
-
-    if impl == "sql":
-        aggs = [
-            F.min(
-                F.pmod(F.col("__h1") + F.lit(j) * F.col("__h2"), F.lit(p))
-            ).alias(f"h{j}")
-            for j in range(n_hashes)
-        ]
-        wide = slim.groupBy(id_col).agg(*aggs)
-        return wide.select(
-            id_col, F.array(*[F.col(f"h{j}") for j in range(n_hashes)]).alias("sig")
-        )
 
     def kernel(batches):
         parts = [pdf for pdf in batches]
@@ -1229,10 +1219,7 @@ def two_stage_dedup(
     )
     df = documents.withColumn("__w", F.split(F.col("text"), " "))
     df = df.where(F.size("__w") >= ngram)
-    shingles = F.expr(
-        f"array_distinct(transform(sequence(0, size(__w) - {ngram}), "
-        f"i -> concat_ws(' ', slice(__w, i + 1, {ngram}))))"
-    )
+    shingles = F.array_distinct(word_ngrams(ngram))
     arrs = df.select(F.col(doc_id_col).alias("__id"), shingles.alias("__sh"))
     a = arrs.select(
         F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")
@@ -1911,12 +1898,7 @@ def decontaminate_mask(
         df.where(F.size("__w") >= n)
         .select(
             F.col(id_col),
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(__w) - {n}), "
-                    f"i -> concat_ws(' ', slice(__w, i + 1, {n})))"
-                )
-            ).alias("__i", "shingle"),
+            F.posexplode(word_ngrams(n)).alias("__i", "shingle"),
         )
     )
     bench_sh = (
@@ -2000,12 +1982,7 @@ def dup_span_coverage(
         df.where(F.size("__w") >= n).select(
             F.col(id_col),
             F.col(group_col),
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(__w) - {n}), "
-                    f"i -> concat_ws(' ', slice(__w, i + 1, {n})))"
-                )
-            ).alias("__i", "shingle"),
+            F.posexplode(word_ngrams(n)).alias("__i", "shingle"),
         )
     )
     hot = (

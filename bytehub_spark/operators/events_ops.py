@@ -1397,15 +1397,7 @@ def funnel(
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
     )
-
-    def _count(df, i, s):
-        return df.agg(
-            F.lit(i).cast("int").alias("step"),
-            F.lit(s).alias("event_type"),
-            F.count("*").alias("n_users"),
-        )
-
-    counts = _count(stage, 1, steps[0])
+    counts = funnel_count(stage, 1, steps[0])
     for i, s in enumerate(steps[1:], start=2):
         joined = ev.where(F.col("event_type") == s).join(stage, "user_id")
         cond = F.col("ts") > F.col(f"t{i - 1}")
@@ -1420,14 +1412,33 @@ def funnel(
             .groupBy("user_id", *keep)
             .agg(F.min("ts").alias(f"t{i}"))
         )
-        counts = counts.unionByName(_count(stage, i, s))
+        counts = counts.unionByName(funnel_count(stage, i, s))
     from ..plans.scratch import scratch_persist
 
     # len(steps) rows, but consumed three times (itself + the step-1
     # scalar + the shifted previous-step frame); without the persist the
     # whole per-step aggregation chain re-ran per consumer (r14 opt:
     # 22 jobs/43 stages -> measured below)
-    counts = scratch_persist(counts)
+    return funnel_table(scratch_persist(counts))
+
+
+def funnel_count(df: DataFrame, i: int, step: str) -> DataFrame:
+    """(step, event_type, n_users): one row counting the rows of ``df``
+    (one per user that reached step ``i``) — the per-step count of
+    ``funnel`` and of streaming.FunnelMonitor's state."""
+    return df.agg(
+        F.lit(i).cast("int").alias("step"),
+        F.lit(step).alias("event_type"),
+        F.count("*").alias("n_users"),
+    )
+
+
+def funnel_table(counts: DataFrame) -> DataFrame:
+    """``funnel``'s output from its per-step counts (the union of the
+    funnel_count rows): integer conversion rates as ppm of step 1 and
+    ppm of the previous step, sorted by step. ``counts`` is read three
+    times (itself, the step-1 scalar, the shifted previous-step frame),
+    so a caller whose counts are costly to recompute persists them."""
     first = counts.where(F.col("step") == 1).select(
         F.col("n_users").alias("n_first")
     )
@@ -1519,10 +1530,21 @@ def active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
     semantics). Stickiness is integer ppm (DAU/WAU — the DAU/MAU-style
     engagement ratio).
     """
-    days = (
+    return active_users_from_days(active_days(events), window_days)
+
+
+def active_days(events: DataFrame) -> DataFrame:
+    """The distinct (user_id, day) activity set — ``active_users``'s
+    input and streaming.ActiveUsersMonitor's state (merged by union +
+    distinct, so any batching gives the same set)."""
+    return (
         events.select("user_id", F.date_trunc("day", "ts").alias("day"))
         .distinct()
     )
+
+
+def active_users_from_days(days: DataFrame, window_days: int) -> DataFrame:
+    """``active_users``'s table from a distinct (user_id, day) set."""
     dau = days.groupBy("day").agg(F.count("*").alias("dau"))
     membership = (
         days.select(
@@ -1565,8 +1587,15 @@ def event_transitions(events: DataFrame) -> DataFrame:
     bounded by a user's own history, and the output is |event types|^2
     rows — tiny.
     """
+    return transition_table(transition_counts(events))
+
+
+def transition_counts(events: DataFrame) -> DataFrame:
+    """(prev, next, n): counts of each user's consecutive event-type
+    pairs in (ts, event_id) order — ``event_transitions``'s counts and
+    streaming.TransitionMonitor's per-batch state (counts add)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
+    return (
         events.select(
             "user_id",
             F.col("event_type").alias("prev"),
@@ -1576,9 +1605,14 @@ def event_transitions(events: DataFrame) -> DataFrame:
         .groupBy("prev", "next")
         .agg(F.count("*").alias("n"))
     )
-    marg = trans.groupBy("prev").agg(F.sum("n").alias("n_prev"))
+
+
+def transition_table(counts: DataFrame) -> DataFrame:
+    """``event_transitions``'s table from (prev, next, n) counts: each
+    count with its probability given prev in integer ppm, sorted."""
+    marg = counts.groupBy("prev").agg(F.sum("n").alias("n_prev"))
     return (
-        trans.join(F.broadcast(marg), "prev")
+        counts.join(F.broadcast(marg), "prev")
         .select(
             "prev",
             "next",

@@ -656,8 +656,9 @@ def kmv_merge(
     """Merge a union of KMV sketch frames back to one bottom-k per
     group — bottom-k of the concatenated (group…, h) rows, duplicate
     hash values collapsed. kmv_merge(kmv_sketch(A) ∪ kmv_sketch(B)) ==
-    kmv_sketch(A ∪ B) exactly (the pinned merge law): the streaming /
-    multi-shard state update."""
+    kmv_sketch(A ∪ B) exactly (the pinned merge law): the multi-shard
+    merge. The streaming KMV monitors apply the same law to collected
+    sketches on the driver (streaming.ingest._merge_bottom_k)."""
     gcols = list(group_cols or [])
     return kmv_bottom_k(sketches.select(*gcols, "h").distinct(), k, gcols)
 

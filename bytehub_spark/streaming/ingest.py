@@ -37,11 +37,24 @@ and subclasses ``Monitor``, which owns the contract:
 
 Sketch monitors follow the ``operators.sketches`` kernels: one class
 per mergeable sketch, with an optional group column giving one summary
-per group value. ``CountMinMonitor`` and ``HllDistinctMonitor`` take
-``group_col=None`` (``stream_cms_by_group`` / ``stream_hll_by_group``
-set it); ``KMVDistinctMonitor`` (text fingerprints per source) and
-``GroupedKmvMonitor`` (integer keys per group) run on the same KMV
-bottom-k, merge and estimator.
+per group value, and state kept on the driver. ``CountMinMonitor`` and
+``HllDistinctMonitor`` take ``group_col=None`` (``stream_cms_by_group``
+/ ``stream_hll_by_group`` set it); ``KMVDistinctMonitor`` (text
+fingerprints per source) and ``GroupedKmvMonitor`` (integer keys per
+group) collect each batch's KMV bottom-k and fold it into a
+{group: sorted bottom-k} dict with the one ``_merge_bottom_k``, then
+finish through ``sketches.kmv_estimate``.
+
+Counting monitors whose state is a frame (histogram, band plan,
+embedding drift, the quality gate's ``unique`` rules, transition
+counts) merge it with the one ``Monitor._summed``: sum per key, then
+``eager_checkpoint``. Every monitor with a batch twin builds its
+per-batch state and its result() table with the twin's own functions
+(``events_ops.active_days`` / ``active_users_from_days``,
+``transition_counts`` / ``transition_table``, ``funnel_count`` /
+``funnel_table``, ``asof._band_bucket_counts`` /
+``band_stats_from_counts`` + ``band_verdict``), so
+stream == batch does not rest on two copies staying in step.
 """
 
 from __future__ import annotations
@@ -495,11 +508,11 @@ def benchmark_shingle_set(benchmark: DataFrame, n: int = 4) -> DataFrame:
 
 
 def _decontaminate_cols(docs: DataFrame, bench_set: DataFrame, n: int) -> DataFrame:
-    shingles = F.expr(
-        f"CASE WHEN size(__w) >= {n} THEN array_distinct(transform("
-        f"sequence(0, size(__w) - {n}), i -> concat_ws(' ', slice(__w, i + 1, {n}))))"
-        f" ELSE array() END"
-    )
+    from ..operators.dedup import word_ngrams
+
+    shingles = F.when(
+        F.size("__w") >= n, F.array_distinct(word_ngrams(n))
+    ).otherwise(F.array())
     return (
         docs.withColumn("__w", F.split(F.col("text"), " "))
         .withColumn("__sh", shingles)
@@ -551,14 +564,10 @@ def _lsh_band_rows(
     pandas UDF — the same split the batch kernel uses, so stream, batch,
     and the DuckDB oracle agree on every bucket id.
     """
+    from ..operators.dedup import _band_fold, word_ngrams
     from ..operators.hashing import MINHASH_PRIME as P
-    from ..operators.hashing import BAND_K
 
     r = n_hashes // bands
-    shingles = F.expr(
-        f"transform(sequence(0, size(__w) - {ngram}),"
-        f" i -> concat_ws(' ', slice(__w, i + 1, {ngram})))"
-    )
 
     @F.pandas_udf("h1 array<long>, h2 array<long>")
     def _hh_arr(shs: pd.Series) -> pd.DataFrame:
@@ -578,7 +587,7 @@ def _lsh_band_rows(
     with_h = (
         docs.withColumn("__w", F.split(F.col("text"), " "))
         .where(F.size("__w") >= ngram)
-        .withColumn("__sh", F.array_distinct(shingles))
+        .withColumn("__sh", F.array_distinct(word_ngrams(ngram)))
         .withColumn("__hh", _hh_arr(F.col("__sh")))
         .withColumn("__h1", F.col("__hh.h1"))
         .withColumn("__h2", F.col("__hh.h2"))
@@ -597,15 +606,9 @@ def _lsh_band_rows(
             out.append(((a1[None, :] + js[:, None] * a2[None, :]) % P).min(axis=1))
         return pd.Series(out)
 
-    def _fold(b: int) -> F.Column:
-        acc = F.col("sig")[b * r]
-        for i in range(1, r):
-            acc = F.pmod(acc * F.lit(BAND_K) + F.col("sig")[b * r + i], F.lit(P))
-        return acc
-
     sig = with_h.withColumn("sig", sig_udf("__h1", "__h2")).drop("__h1", "__h2")
     band_cols = [
-        F.struct(F.lit(b).alias("band"), _fold(b).alias("bh"))
+        F.struct(F.lit(b).alias("band"), F.expr(_band_fold(b, r)).alias("bh"))
         for b in range(bands)
     ]
     return sig.select(
@@ -930,6 +933,21 @@ class Monitor:
         """result() frame of a monitor that keeps its state in Python."""
         return SparkSession.getActiveSession().createDataFrame(rows, schema)
 
+    @staticmethod
+    def _summed(
+        state: DataFrame | None, batch: DataFrame, keys: list[str], sums: list[str]
+    ) -> DataFrame:
+        """The additive frame merge: ``batch`` (one row per key) folded
+        into ``state`` by summing ``sums`` per ``keys``, pinned by
+        eager_checkpoint so the lineage does not grow with batch count.
+        Sums commute, so any batching and arrival order give the same
+        frame; they are not idempotent, hence ADDITIVE on the callers."""
+        if state is not None:
+            batch = state.unionByName(batch).groupBy(*keys).agg(
+                *[F.sum(c).alias(c) for c in sums]
+            )
+        return eager_checkpoint(batch)
+
 
 class LatenessMonitor(Monitor):
     """Incremental out-of-order-arrival monitor — the STREAMING twin of
@@ -1024,9 +1042,10 @@ class FunnelMonitor(Monitor):
     dict: per-user funnel state at corpus scale belongs on executors.
     Each batch costs k-1 user-keyed joins + aggregations against batch
     data only, and the state frame is localCheckpointed so the lineage
-    does not grow with batch count. ``result()`` reduces state to the
-    same per-step table events_ops.funnel emits — equality is pinned in
-    tests/test_round3c.py.
+    does not grow with batch count. ``result()`` counts each step's
+    reached users with events_ops.funnel_count and finishes them with
+    events_ops.funnel_table, the batch op's own code — equality is
+    pinned in tests/test_round3c.py.
     """
 
     def __init__(self, steps: tuple[str, ...] = ("view", "click", "purchase")):
@@ -1078,41 +1097,17 @@ class FunnelMonitor(Monitor):
         self.state = eager_checkpoint(st.select("user_id", *tcols))
 
     def _result(self) -> DataFrame:
-        """Per-step reached-user counts + ppm conversions — the same
-        table shape as events_ops.funnel."""
-        st = self.state
+        """Per-step reached-user counts + ppm conversions, finished by
+        events_ops.funnel's own funnel_count / funnel_table."""
+        from ..operators.events_ops import funnel_count, funnel_table
+
         counts = None
-        for i, s in enumerate(self.steps, start=1):
-            c = st.where(F.col(f"t{i}").isNotNull()).agg(
-                F.lit(i).cast("int").alias("step"),
-                F.lit(s).alias("event_type"),
-                F.count("*").alias("n_users"),
+        for i, step in enumerate(self.steps, start=1):
+            c = funnel_count(
+                self.state.where(F.col(f"t{i}").isNotNull()), i, step
             )
             counts = c if counts is None else counts.unionByName(c)
-        first = counts.where(F.col("step") == 1).select(
-            F.col("n_users").alias("n_first")
-        )
-        prev = counts.select(
-            (F.col("step") + 1).alias("step"), F.col("n_users").alias("n_prev")
-        )
-        return (
-            counts.join(F.broadcast(first))
-            .join(F.broadcast(prev), "step", "left")
-            .select(
-                "step",
-                "event_type",
-                "n_users",
-                F.coalesce(
-                    F.expr("(n_users * 1000000) div nullif(n_first, 0)"),
-                    F.lit(0),
-                ).alias("ppm_of_first"),
-                F.coalesce(
-                    F.expr("(n_users * 1000000) div nullif(n_prev, 0)"),
-                    F.lit(1_000_000),
-                ).alias("ppm_of_prev"),
-            )
-            .orderBy("step")
-        )
+        return funnel_table(counts)
 
 
 def stream_funnel_monitor(
@@ -1128,13 +1123,14 @@ def stream_funnel_monitor(
 
 class ActiveUsersMonitor(Monitor):
     """Incremental DAU/WAU maintenance — streaming twin of
-    events_ops.active_users. State is the distinct (user_id, day) set as
-    a DISTRIBUTED DataFrame; merging a batch is union + distinct, which
-    is ORDER-INDEPENDENT — unlike the funnel monitor this twin needs no
-    arrival-order contract at all (late or replayed events land in the
-    same set). State grows with users x active-days, not events;
-    localCheckpoint keeps lineage flat. result() runs the same
-    day-explode WAU kernel the batch op uses over the accumulated set.
+    events_ops.active_users. State is the distinct (user_id, day) set
+    (events_ops.active_days of each batch) as a DISTRIBUTED DataFrame;
+    merging a batch is union + distinct, which is ORDER-INDEPENDENT —
+    unlike the funnel monitor this twin needs no arrival-order contract
+    at all (late or replayed events land in the same set). State grows
+    with users x active-days, not events; localCheckpoint keeps lineage
+    flat. result() is events_ops.active_users_from_days over the
+    accumulated set — the batch op's own finish.
     """
 
     def __init__(self, window_days: int = 7):
@@ -1142,39 +1138,16 @@ class ActiveUsersMonitor(Monitor):
         self.state: DataFrame | None = None
 
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
-        b = batch_df.select(
-            "user_id", F.date_trunc("day", "ts").alias("day")
-        ).distinct()
+        from ..operators.events_ops import active_days
+
+        b = active_days(batch_df)
         st = b if self.state is None else self.state.unionByName(b).distinct()
         self.state = eager_checkpoint(st)
 
     def _result(self) -> DataFrame:
-        days = self.state
-        dau = days.groupBy("day").agg(F.count("*").alias("dau"))
-        membership = (
-            days.select(
-                "user_id",
-                F.explode(
-                    F.expr(
-                        f"sequence(day, day + INTERVAL {self.window_days - 1}"
-                        " DAYS, INTERVAL 1 DAY)"
-                    )
-                ).alias("wday"),
-            )
-            .distinct()
-            .groupBy("wday")
-            .agg(F.count("*").alias("wau"))
-        )
-        return (
-            dau.join(membership, dau.day == membership.wday)
-            .select(
-                "day",
-                "dau",
-                "wau",
-                F.expr("(dau * 1000000) div wau").alias("stickiness_ppm"),
-            )
-            .orderBy("day")
-        )
+        from ..operators.events_ops import active_users_from_days
+
+        return active_users_from_days(self.state, self.window_days)
 
 
 def stream_active_users(
@@ -1188,33 +1161,38 @@ def stream_active_users(
 class KMVDistinctMonitor(Monitor):
     """Streaming per-source distinct-cardinality estimation — twin of
     dedup.kmv_source_distinct(include_exact=False). State is the merged
-    KMV bottom-k sketch (≤ k rows PER SOURCE, a distributed frame that
-    never grows past k·n_sources regardless of stream length — contrast
-    ActiveUsersMonitor, whose state grows with the data), on the one
-    KMV kernel (operators.sketches.kmv_bottom_k / kmv_merge /
-    kmv_estimate). Merging is bottom_k(state ∪ batch_sketch): KMV
-    sketches are MERGEABLE and set union is order-independent, so
-    replays and late arrivals land in the identical sketch and result()
-    equals the batch op on the union of all batches, row for row."""
+    KMV bottom-k sketch on the driver, {source: sorted bottom-k hashes}
+    (≤ k values PER SOURCE, never more than k·n_sources regardless of
+    stream length — contrast ActiveUsersMonitor, whose state grows with
+    the data), on the one KMV kernel (operators.sketches.kmv_bottom_k /
+    kmv_estimate). Each batch's sketch is collected (≤ k rows per
+    source) and merged by _merge_bottom_k, the merge GroupedKmvMonitor
+    runs: KMV sketches are MERGEABLE and set union is order-independent
+    and idempotent, so replays and late arrivals land in the identical
+    sketch and result() equals the batch op on the union of all
+    batches, row for row. The source column keeps its type (the schema
+    of the batch sketch is kept for result())."""
 
     def __init__(self, k: int = 256):
         self.k = k
-        self.state: DataFrame | None = None
+        self.hashes: dict[object, list[int]] = {}  # source -> sorted bottom-k
+        self._schema = None
 
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.dedup import kmv_fingerprints
-        from ..operators.sketches import kmv_bottom_k, kmv_merge
+        from ..operators.sketches import kmv_bottom_k
 
         b = kmv_bottom_k(kmv_fingerprints(batch_df), self.k, ["src"])
-        st = b if self.state is None else kmv_merge(
-            self.state.unionByName(b), self.k, ["src"]
-        )
-        self.state = eager_checkpoint(st)
+        if self._schema is None:
+            self._schema = b.schema
+        _merge_bottom_k(self.hashes, b.collect(), "src", self.k)
 
     def _result(self) -> DataFrame:
         from ..operators.sketches import kmv_estimate
 
-        return kmv_estimate(self.state, self.k, ["src"]).orderBy("src")
+        rows = [(g, h) for g, hs in self.hashes.items() for h in hs]
+        sketch = self._frame_from_rows(rows, self._schema)
+        return kmv_estimate(sketch, self.k, ["src"]).orderBy("src")
 
 
 def stream_kmv_distinct(docs: DataFrame, checkpoint_dir: str, k: int = 256):
@@ -1345,9 +1323,11 @@ class TransitionMonitor(Monitor):
     """Streaming first-order Markov transition counts — twin of
     events_ops.event_transitions. Two pieces of state, both distributed:
 
-    - ``counts`` (prev, next, n): transition counts are ADDITIVE, so
-      batch results merge by sum — the unbounded-stream part is a
-      |event types|² table, effectively constant-size.
+    - ``counts`` (prev, next, n): events_ops.transition_counts of each
+      batch plus the stitched boundary pairs. Counts are ADDITIVE, so
+      they merge by sum (Monitor._summed) — the unbounded-stream part
+      is a |event types|² table, effectively constant-size; result()
+      is events_ops.transition_table over it.
     - ``last`` (user_id, ts, event_id, event_type): each user's latest
       event, ONE row per user — the boundary needed to stitch the
       transition that spans two micro-batches.
@@ -1368,18 +1348,10 @@ class TransitionMonitor(Monitor):
         self.last: DataFrame | None = None
 
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
+        from ..operators.events_ops import transition_counts
+
         b = batch_df.select("user_id", "ts", "event_id", "event_type")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        within = (
-            b.select(
-                "user_id",
-                F.col("event_type").alias("prev"),
-                F.lead("event_type").over(w).alias("next"),
-            )
-            .where(F.col("next").isNotNull())
-            .groupBy("prev", "next")
-            .agg(F.count("*").alias("n"))
-        )
+        within = transition_counts(b)
         order = F.struct("ts", "event_id")
         firsts = b.groupBy("user_id").agg(
             F.min_by("event_type", order).alias("__first")
@@ -1420,27 +1392,14 @@ class TransitionMonitor(Monitor):
             )
         else:
             new_last = lasts
-        merged = (
-            within
-            if self.counts is None
-            else self.counts.unionByName(within)
-        ).groupBy("prev", "next").agg(F.sum("n").alias("n"))
-        self.counts = eager_checkpoint(merged)
+        self.counts = self._summed(self.counts, within, ["prev", "next"], ["n"])
         self.last = eager_checkpoint(new_last)
 
     def _result(self) -> DataFrame:
-        """Same table shape as events_ops.event_transitions."""
-        marg = self.counts.groupBy("prev").agg(F.sum("n").alias("n_prev"))
-        return (
-            self.counts.join(F.broadcast(marg), "prev")
-            .select(
-                "prev",
-                "next",
-                "n",
-                F.expr("(n * 1000000) div n_prev").alias("p_ppm"),
-            )
-            .orderBy("prev", "next")
-        )
+        """events_ops.event_transitions's table, by its own finish."""
+        from ..operators.events_ops import transition_table
+
+        return transition_table(self.counts)
 
 
 def stream_transitions(events: DataFrame, checkpoint_dir: str):
@@ -1629,19 +1588,12 @@ class EmbeddingDriftMonitor(Monitor):
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.similarity import drift_per_dim_sums
 
-        b = drift_per_dim_sums(batch_df, self.group_col, self.vec_col)
-        st = (
-            b
-            if self.state is None
-            else self.state.unionByName(b)
-            .groupBy(self.group_col, "dim")
-            .agg(
-                F.sum("sum_q").alias("sum_q"),
-                F.sum("ss").alias("ss"),
-                F.sum("n").alias("n"),
-            )
+        self.state = self._summed(
+            self.state,
+            drift_per_dim_sums(batch_df, self.group_col, self.vec_col),
+            [self.group_col, "dim"],
+            ["sum_q", "ss", "n"],
         )
-        self.state = eager_checkpoint(st)
 
     def _result(self) -> DataFrame:
         """Same table shape as similarity.snapshot_drift(reference, all
@@ -1726,15 +1678,9 @@ class QualityGateMonitor(Monitor):
                 .groupBy(F.col(col).alias("val"))
                 .agg(F.count("*").alias("cnt"))
             )
-            st = self._ustate.get(k)
-            merged = (
-                b
-                if st is None
-                else st.unionByName(b)
-                .groupBy("val")
-                .agg(F.sum("cnt").alias("cnt"))
+            self._ustate[k] = self._summed(
+                self._ustate.get(k), b, ["val"], ["cnt"]
             )
-            self._ustate[k] = eager_checkpoint(merged)
         if persisted:
             batch_df.unpersist()
 
@@ -1803,14 +1749,7 @@ class HistogramMonitor(Monitor):
         b = _value_histogram_unsorted(
             batch_df, self.lo, self.hi, self.n_buckets
         )
-        st = (
-            b
-            if self.state is None
-            else self.state.unionByName(b)
-            .groupBy("event_type", "bucket")
-            .agg(F.sum("n").alias("n"))
-        )
-        self.state = eager_checkpoint(st)
+        self.state = self._summed(self.state, b, ["event_type", "bucket"], ["n"])
 
     def _result(self) -> DataFrame:
         """Equal to events_ops.value_histogram over the union of all
@@ -1833,14 +1772,14 @@ def stream_histogram(
 class BandPlanMonitor(Monitor):
     """Streaming ε-band join cost estimator — the continuously-
     maintained twin of ``asof.band_plan``: state is the per
-    (eps_u, keys…, bucket) count frame for every candidate ε, merged
-    additively per micro-batch (commutative counts → fully
+    (eps_u, keys…, bucket) count frame for every candidate ε — each
+    batch's ``asof._band_bucket_counts`` (one pass for all ε), merged
+    additively (Monitor._summed; commutative counts → fully
     ORDER-INDEPENDENT; re-delivery would double-count, so a repeated
     epoch is skipped — ADDITIVE, like every counting monitor).
-    ``result()`` assembles the decision table through the SHARED
-    ``asof.band_stats_from_counts`` (batch and stream cannot drift) and
-    equals the batch ``band_plan`` on the union of all batches
-    row-for-row.
+    ``result()`` is the batch op's own ``asof.band_stats_from_counts`` +
+    ``band_verdict`` (batch and stream cannot drift) and equals the batch ``band_plan`` on the
+    union of all batches row-for-row.
 
     State bound: Σ_ε n_buckets(ε) rows per key group — set by the
     VALUE DOMAIN and the ε grid, not by stream length (a [0,100]
@@ -1883,47 +1822,22 @@ class BandPlanMonitor(Monitor):
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.asof import _band_bucket_counts, _band_quantized
 
-        base = _band_quantized(batch_df, self.keys, self.value_col)
-        # persist the slim batch once; each ε pass re-reads it
-        base = base.persist()
-        b = None
-        for e in self.eps_options:
-            c = _band_bucket_counts(base, self.keys, e)
-            b = c if b is None else b.unionByName(c)
-        st = (
-            b
-            if self.state is None
-            else self.state.unionByName(b)
-            .groupBy("eps_u", *self.keys, "bucket")
-            .agg(F.sum("c").alias("c"))
+        b = _band_bucket_counts(
+            _band_quantized(batch_df, self.keys, self.value_col),
+            self.keys,
+            self.eps_options,
         )
-        self.state = eager_checkpoint(st)
-        base.unpersist()
+        self.state = self._summed(
+            self.state, b, ["eps_u", *self.keys, "bucket"], ["c"]
+        )
 
     def _result(self) -> DataFrame:
         """The band_plan decision table over everything ingested —
         identical to ``asof.band_plan`` on the union of all batches."""
-        from ..operators.asof import band_stats_from_counts
+        from ..operators.asof import band_stats_from_counts, band_verdict
 
-        out = band_stats_from_counts(self.state, self.keys).withColumn(
-            "within_budget",
-            F.col("cand_pairs") <= F.lit(self.budget_pairs),
-        )
-        best = out.agg(
-            F.max(
-                F.when(F.col("within_budget"), F.col("eps_u"))
-            ).alias("_best")
-        )
-        return (
-            out.crossJoin(F.broadcast(best))
-            .withColumn(
-                "recommended",
-                F.coalesce(
-                    F.col("eps_u") == F.col("_best"), F.lit(False)
-                ),
-            )
-            .drop("_best")
-            .orderBy("eps_u")
+        return band_verdict(
+            band_stats_from_counts(self.state, self.keys), self.budget_pairs
         )
 
 
@@ -2287,6 +2201,18 @@ def _sketch_frame(state: dict, group_col: str | None, schema: str) -> DataFrame:
     return Monitor._frame_from_rows(rows, f"{group_col} string, {schema}")
 
 
+def _merge_bottom_k(hashes: dict, rows, group_col: str, k: int) -> None:
+    """Fold collected KMV sketch rows (group_col, h) into ``hashes``
+    {group: sorted bottom-k}: per group the k smallest of the union,
+    duplicates collapsed — the kmv_merge law on the driver. Idempotent
+    and order-independent, so re-delivered batches change nothing."""
+    batch: dict[object, set[int]] = {}
+    for r in rows:
+        batch.setdefault(r[group_col], set()).add(int(r["h"]))
+    for g, hs in batch.items():
+        hashes[g] = sorted(set(hashes.get(g, ())) | hs)[:k]
+
+
 class CountMinMonitor(Monitor):
     """Streaming Count-Min frequency sketch — a continuously-maintained
     bounded-state frequency table for an integer key stream, the sketch
@@ -2513,15 +2439,15 @@ class GroupedKmvMonitor(Monitor):
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.sketches import kmv_sketch
 
-        batch: dict[object, set[int]] = {}
-        for r in kmv_sketch(
-            _sketch_input(batch_df, self.key_col, self.group_col),
-            self.key_col, self.k, group_col=self.group_col,
-        ).collect():  # bounded: <= batch_groups * k rows
-            batch.setdefault(r[self.group_col], set()).add(int(r["h"]))
-        for g, hs in batch.items():
-            merged = set(self.hashes.get(g, ())) | hs
-            self.hashes[g] = sorted(merged)[: self.k]
+        _merge_bottom_k(
+            self.hashes,
+            kmv_sketch(
+                _sketch_input(batch_df, self.key_col, self.group_col),
+                self.key_col, self.k, group_col=self.group_col,
+            ).collect(),  # bounded: <= batch_groups * k rows
+            self.group_col,
+            self.k,
+        )
 
     def _result(self) -> DataFrame:
         """Surviving bottom-k hashes (group, h) of the merged per-group

@@ -324,6 +324,26 @@ def test_stream_kmv_distinct_equals_batch_any_order(spark, tmp_path):
     pd.testing.assert_frame_equal(got, expect)
 
 
+def test_kmv_monitor_over_an_integer_source_equals_batch(spark):
+    """The monitor's driver-side sketch keeps the source column's type:
+    over an INTEGER source, three micro-batches finish to the batch op's
+    rows and schema (src stays int, not string)."""
+    from bytehub_spark import streaming as st
+    from bytehub_spark.operators.dedup import kmv_source_distinct
+
+    docs = load_table(spark, SF, "documents").withColumn(
+        "source", (F.col("doc_id") % 4).cast("int")
+    )
+    expect = kmv_source_distinct(docs, k=16, include_exact=False)
+    mon = st.KMVDistinctMonitor(k=16)
+    for b in range(3):
+        mon.process_batch(docs.where((F.col("doc_id") * 7) % 3 == b), b)
+    got = mon.result()
+    assert got.schema == expect.schema
+    assert dict(got.dtypes)["src"] == "int"
+    pd.testing.assert_frame_equal(got.toPandas(), expect.toPandas())
+
+
 # ------------------------------------------------- round-4b plan pins
 
 

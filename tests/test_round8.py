@@ -48,7 +48,7 @@ def test_band_plan_cand_pairs_is_exact_join_volume(spark):
     from bytehub_spark.operators.asof import _band_bucket_counts, _band_quantized
 
     base = _band_quantized(df, ["k"], "value")
-    cnt = _band_bucket_counts(base, ["k"], 5_000).toPandas()
+    cnt = _band_bucket_counts(base, ["k"], (5_000,)).toPandas()
     c = dict(zip(cnt["bucket"], cnt["c"]))
     expect = sum(
         n * (c.get(b - 1, 0) + n + c.get(b + 1, 0)) for b, n in c.items()
@@ -73,7 +73,7 @@ def test_band_bucket_exact_floor_div_beyond_2_53(spark):
     from bytehub_spark.operators.asof import _band_bucket_counts
 
     got = (
-        _band_bucket_counts(base, ["k"], eps)
+        _band_bucket_counts(base, ["k"], (eps,))
         .select("bucket")
         .toPandas()["bucket"]
         .tolist()
