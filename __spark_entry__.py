@@ -2736,7 +2736,7 @@ def _kmv_overlap_ctes() -> str:
 
 def _cosine_bucket_ctes(n_planes: int, bands: int, src: str = "embeddings") -> str:
     """CTE chain embeddings→quantized dims→plane signs→banded bucket ids,
-    mirroring similarity.hyperplane_signature / lsh_cosine_buckets: int64
+    mirroring similarity.lsh_cosine_buckets (_srp_projections): int64
     dots of floor(v·1e6) against ±1 planes — order-independent integer
     arithmetic, so the relational GROUP BY here equals the numpy GEMM."""
     n_total = n_planes * bands

@@ -623,15 +623,11 @@ def minhash_band_balance(
     shape costs one slim bucket pass + a two-level aggregation. All
     arithmetic is integer and replayed exactly by the DuckDB oracle.
     ``imbalance_ppm`` (max bucket over mean bucket) is the EXACT
-    floor(max·n_buckets·1e6 / n_rows) computed via the two-term
-    identity ``(q·nb) + (r·nb) div n`` with ``q, r = divmod(max·1e6,
-    n_rows)`` — exact because q·nb is integral, and BIGINT-safe to
-    n_rows ≈ 9.2e12 per band for the first term and n_rows·n_buckets
-    ≈ 9.2e18 for the correction (vs the naive max·nb·1e6 form that
-    wrapped around a few million rows, silently in Spark's non-ANSI
-    mode; a truncate-first-only form read 0 ppm on singleton-heavy
-    bands where the mean bucket is ~1 — exactly the skew regime the
-    monitor exists for).
+    floor(max·n_buckets·1e6 / n_rows) of the occupancy kernel
+    ``similarity._bucket_occupancy`` that the SRP monitors share (a
+    truncate-first-only form read 0 ppm on singleton-heavy bands where
+    the mean bucket is ~1 — exactly the skew regime the monitor exists
+    for).
     Mirrors the near-dup sizing advice in the reference's dedup test
     suite only abstractly — the reference has no banding monitor; this is
     the scale tool its fixed-shape design lacks.
@@ -659,32 +655,16 @@ def minhash_band_balance(
         for bands in bands_options
         for b in range(bands)
     )
+    from .similarity import _bucket_occupancy
+
     buckets = sig.select(
         F.expr(f"explode(array({shape_structs}))").alias("bb")
     ).select("bb.bands", "bb.band", "bb.bh")
     per_bucket = buckets.groupBy("bands", "band", "bh").agg(
         F.count("*").alias("c")
     )
-    return (
-        per_bucket.groupBy("bands", "band")
-        .agg(
-            F.sum("c").cast("long").alias("n_rows"),
-            F.count("*").cast("long").alias("n_buckets"),
-            F.max("c").cast("long").alias("max_bucket_rows"),
-            F.sum(F.expr("c * (c - 1) div 2")).cast("long").alias("cand_pairs"),
-        )
-        .select(
-            "bands",
-            "band",
-            "n_rows",
-            "n_buckets",
-            "max_bucket_rows",
-            "cand_pairs",
-            F.expr("(max_bucket_rows * 1000000 div n_rows) * n_buckets + ((max_bucket_rows * 1000000 % n_rows) * n_buckets) div n_rows")
-            .cast("long")
-            .alias("imbalance_ppm"),
-        )
-        .orderBy("bands", "band")
+    return _bucket_occupancy(per_bucket, ["bands", "band"]).orderBy(
+        "bands", "band"
     )
 
 
@@ -774,10 +754,11 @@ def embedding_cosine_dups(
     LSH bucket tables OR'd together (engine-portable ±1 planes — see
     similarity.lsh_cosine_buckets), turning O(n²) pair generation into
     bucket equi-joins — the strategy that survives 100 TB. Similarity is
-    rounded to 4 decimals (half-up, matching SQL ROUND) BEFORE
-    thresholding so membership is stable across engines.
+    rounded to 4 decimals (similarity.cosine4 / round4: half away from
+    zero on the scaled value, DuckDB's ``round``) BEFORE thresholding so
+    membership is stable across engines.
     """
-    from .similarity import _dot
+    from .similarity import _cosine_matrix, _vec_stack, cosine4, round4
 
     if n_planes:
         from .similarity import lsh_cosine_buckets
@@ -805,11 +786,9 @@ def embedding_cosine_dups(
         va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
         vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
         joined = pair_ids.join(va, "id_a").join(vb, "id_b")
-        sim = _dot("vec_a", "vec_b") / (
-            F.sqrt(_dot("vec_a", "vec_a")) * F.sqrt(_dot("vec_b", "vec_b"))
-        )
+        sim = cosine4(F.col("vec_a"), F.col("vec_b"))
         return (
-            joined.select("id_a", "id_b", F.round(sim, 4).alias("cosine_sim"))
+            joined.select("id_a", "id_b", sim.alias("cosine_sim"))
             .where(F.col("cosine_sim") >= F.lit(threshold))
             .orderBy("id_a", "id_b")
         )
@@ -832,10 +811,9 @@ def embedding_cosine_dups(
             "vectors is infeasible; pass n_planes to use LSH-blocked "
             "candidates"
         )
-    ids_b = side[id_col].to_numpy()
-    mat_b = np.array([np.asarray(v, dtype=np.float64) for v in side[vec_col]])
-    mat_b /= np.linalg.norm(mat_b, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids_b, mat_b))
+    bc = spark.sparkContext.broadcast(
+        (side[id_col].to_numpy(), _vec_stack(side[vec_col]))
+    )
 
     def block(it):
         b_ids, b_mat = bc.value
@@ -843,14 +821,7 @@ def embedding_cosine_dups(
             if len(pdf) == 0:
                 continue
             a_ids = pdf[id_col].to_numpy()
-            a_mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            a_mat /= np.linalg.norm(a_mat, axis=1, keepdims=True)
-            sims = a_mat @ b_mat.T
-            # round half-up to 4 decimals (SQL ROUND semantics; sims at the
-            # threshold are positive so +0.5-floor is exact)
-            sims = np.floor(sims * 1e4 + 0.5) / 1e4
+            sims = round4(_cosine_matrix(_vec_stack(pdf[vec_col]), b_mat))
             ii, jj = np.nonzero(
                 (sims >= threshold) & (a_ids[:, None] < b_ids[None, :])
             )

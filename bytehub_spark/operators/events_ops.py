@@ -778,7 +778,8 @@ def _value_histogram_unsorted(
 ) -> DataFrame:
     """value_histogram without the output sort — the composable core
     (histogram_quantile_brackets builds windows on top and must not
-    embed a mid-plan global sort; same lesson as _lsh_bucket_stats)."""
+    embed a mid-plan global sort: a total order that feeds further
+    computation is an extra full-data range exchange)."""
     return (
         events.select(
             "event_type",

@@ -16,9 +16,23 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .similarity import _query_vectors, _rerank, _vec_stack
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows of ``x`` scaled to unit L2 norm (all-zero rows stay zero)."""
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+
+
+def _nearest_cells(
+    queries: np.ndarray, centroids: np.ndarray, n_probe: int
+) -> np.ndarray:
+    """(n_queries, n_probe) ids of each query's most cosine-similar cells."""
+    return np.argsort(-(_unit_rows(queries) @ centroids.T), axis=1)[:, :n_probe]
 
 
 def train_centroids(
@@ -38,9 +52,8 @@ def train_centroids(
         .limit(sample_size)
         .toPandas()
     )
-    x = np.array(sample[vec_col].tolist(), dtype=np.float64)
     # normalize → cosine k-means (spherical)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _unit_rows(_vec_stack(sample[vec_col]))
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
     for _ in range(n_iter):
@@ -65,11 +78,20 @@ def assign_cells(
 
     @F.pandas_udf(T.IntegerType())
     def nearest(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+        x = _unit_rows(_vec_stack(vecs))
         return pd.Series((x @ cents.T).argmax(axis=1).astype(np.int32))
 
     return embeddings.withColumn(out_col, nearest(F.col(vec_col)))
+
+
+def _probe_join(celled: DataFrame, probes: DataFrame, id_col: str) -> DataFrame:
+    """Rows of ``celled`` in a cell their query probes (``probes``:
+    query_id, probe_cells, ...), the query itself excluded."""
+    return celled.join(
+        F.broadcast(probes),
+        F.array_contains(F.col("probe_cells"), F.col("cell"))
+        & (F.col(id_col) != F.col("query_id")),
+    )
 
 
 def ivf_topk(
@@ -82,54 +104,25 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k cosine: probe the n_probe nearest cells per query,
-    exact re-rank inside (same scoring as similarity.cosine_topk)."""
-    from .similarity import _dot
-
-    cents = train_centroids(embeddings, n_cells, id_col=id_col, vec_col=vec_col)
+    exact re-rank inside (similarity._rerank, the scoring of
+    similarity.cosine_topk; query vectors come from the corpus frame)."""
     from ..plans.scratch import scratch_persist
 
+    cents = train_centroids(embeddings, n_cells, id_col=id_col, vec_col=vec_col)
     celled = scratch_persist(assign_cells(embeddings, cents, vec_col))
 
-    queries = celled.where(F.col(id_col).isin(query_ids)).toPandas()
-    qx = np.array(queries[vec_col].tolist(), dtype=np.float64)
-    qx /= np.maximum(np.linalg.norm(qx, axis=1, keepdims=True), 1e-12)
-    probe_cells = np.argsort(-(qx @ cents.T), axis=1)[:, :n_probe]
-
-    spark = embeddings.sparkSession
-    probe_rows = [
-        (int(qid), [int(c) for c in cells], list(map(float, vec)))
-        for qid, cells, vec in zip(queries[id_col], probe_cells, queries[vec_col])
-    ]
-    probes = spark.createDataFrame(
-        probe_rows,
-        T.StructType(
-            [
-                T.StructField("query_id", T.LongType()),
-                T.StructField("probe_cells", T.ArrayType(T.IntegerType())),
-                T.StructField("q_vec", T.ArrayType(T.FloatType())),
-            ]
-        ),
+    queries = (
+        celled.where(F.col(id_col).isin(query_ids)).select(id_col, vec_col).toPandas()
     )
-    cand = celled.join(
-        F.broadcast(probes),
-        F.array_contains(F.col("probe_cells"), F.col("cell"))
-        & (F.col(id_col) != F.col("query_id")),
+    cells = _nearest_cells(_vec_stack(queries[vec_col]), cents, n_probe)
+    probes = embeddings.sparkSession.createDataFrame(
+        [(int(q), [int(c) for c in row]) for q, row in zip(queries[id_col], cells)],
+        "query_id long, probe_cells array<int>",
     )
-    sim = _dot(vec_col, "q_vec") / (
-        F.sqrt(_dot(vec_col, vec_col)) * F.sqrt(_dot("q_vec", "q_vec"))
+    cand = _probe_join(celled, probes, id_col).join(
+        F.broadcast(_query_vectors(celled, query_ids, id_col, vec_col)), "query_id"
     )
-    scored = cand.select(
-        "query_id", F.col(id_col).alias("neighbor_id"), F.round(sim, 4).alias("cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _rerank(cand, k, id_col, vec_col)
 
 
 def write_cell_partitioned(
@@ -167,11 +160,7 @@ def ivf_topk_partitioned(
     """Probe a cell-partitioned IVF index: only the n_probe nearest cells'
     partitions are read (static partition pruning — assert via
     plans.partition_filters). query_vecs maps query_id -> vector."""
-    from .similarity import _dot
-
-    qx = np.array(list(query_vecs.values()), dtype=np.float64)
-    qx /= np.maximum(np.linalg.norm(qx, axis=1, keepdims=True), 1e-12)
-    probe = np.argsort(-(qx @ centroids.T), axis=1)[:, :n_probe]
+    probe = _nearest_cells(_vec_stack(query_vecs.values()), centroids, n_probe)
     all_cells = sorted({int(c) for row in probe for c in row})
 
     index = spark.read.parquet(path).where(F.col("cell").isin(all_cells))
@@ -182,23 +171,4 @@ def ivf_topk_partitioned(
         ],
         "query_id long, probe_cells array<int>, q_vec array<float>",
     )
-    cand = index.join(
-        F.broadcast(probes),
-        F.array_contains(F.col("probe_cells"), F.col("cell"))
-        & (F.col(id_col) != F.col("query_id")),
-    )
-    sim = _dot(vec_col, "q_vec") / (
-        F.sqrt(_dot(vec_col, vec_col)) * F.sqrt(_dot("q_vec", "q_vec"))
-    )
-    scored = cand.select(
-        "query_id", F.col(id_col).alias("neighbor_id"), F.round(sim, 4).alias("cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _rerank(_probe_join(index, probes, id_col), k, id_col, vec_col)

@@ -27,6 +27,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .similarity import _topk, _vec_stack
+
+
+def _sq_dists(xs: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(len(xs), len(cents)) squared L2 distances via
+    ||a-b||^2 = ||a||^2 - 2ab + ||b||^2."""
+    return (
+        (xs * xs).sum(1)[:, None]
+        - 2.0 * xs @ cents.T
+        + (cents * cents).sum(1)[None, :]
+    )
 
 
 def train_codebooks(
@@ -47,7 +60,7 @@ def train_codebooks(
         .limit(sample_size)
         .toPandas()
     )
-    x = np.array(sample[vec_col].tolist(), dtype=np.float64)
+    x = _vec_stack(sample[vec_col])
     n, d = x.shape
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     dsub = d // m
@@ -58,13 +71,7 @@ def train_codebooks(
         k = min(ksub, n)
         cents = xs[rng.choice(n, size=k, replace=False)]
         for _ in range(n_iter):
-            # L2 assignment via ||a-b||^2 = ||a||^2 - 2ab + ||b||^2
-            d2 = (
-                (xs * xs).sum(1)[:, None]
-                - 2.0 * xs @ cents.T
-                + (cents * cents).sum(1)[None, :]
-            )
-            assign = d2.argmin(axis=1)
+            assign = _sq_dists(xs, cents).argmin(axis=1)
             for c in range(k):
                 members = xs[assign == c]
                 if len(members):
@@ -93,17 +100,11 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = _vec_stack(pdf[vec_col])
             codes = np.empty((len(X), m), dtype=np.int32)
             for j in range(m):
                 xs = X[:, j * dsub : (j + 1) * dsub]
-                cents = books[j]
-                d2 = (
-                    (xs * xs).sum(1)[:, None]
-                    - 2.0 * xs @ cents.T
-                    + (cents * cents).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1)
+                codes[:, j] = _sq_dists(xs, books[j]).argmin(axis=1)
             out = {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
             for c in carry_cols:
                 out[c] = pdf[c].to_numpy()
@@ -111,14 +112,87 @@ def pq_encode(
 
     # carry columns keep their INPUT types (a hardcoded 'int' silently
     # truncated long ids / failed on strings — ADVICE r02)
-    in_types = {f.name: f.dataType.simpleString() for f in embeddings.schema.fields}
+    in_types = {f.name: f.dataType for f in embeddings.schema.fields}
     missing = [c for c in carry_cols if c not in in_types]
     if missing:
         raise ValueError(f"carry_cols not in embeddings schema: {missing}")
-    carry_schema = "".join(f", {c} {in_types[c]}" for c in carry_cols)
-    return embeddings.select(id_col, vec_col, *carry_cols).mapInPandas(
-        encode, schema=f"{id_col} long, codes array<int>{carry_schema}"
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType()),
+            T.StructField("codes", T.ArrayType(T.IntegerType())),
+        ]
+        + [T.StructField(c, in_types[c]) for c in carry_cols]
     )
+    return embeddings.select(id_col, vec_col, *carry_cols).mapInPandas(
+        encode, schema=schema
+    )
+
+
+def _adc_topk(
+    codes: DataFrame,
+    codebooks: np.ndarray,
+    queries: np.ndarray,
+    k: int,
+    id_col: str,
+    probe: np.ndarray | None = None,
+) -> DataFrame:
+    """ADC top-k shared by every PQ search: per query an (m, ksub) table
+    of exact sub-distances to every sub-centroid is precomputed
+    driver-side (KBs) and captured in the UDF; a candidate scores m table
+    gathers + a sum, each partition emits its k best per query, and the
+    final ``_topk`` window breaks ties on the id. With ``probe``
+    ((n_queries, n_probe) cell ids), a query scores only rows of its
+    probed cells (``codes`` then carries a ``cell`` column)."""
+    books = codebooks
+    m, ksub, dsub = books.shape
+    Q = np.asarray(queries, dtype=np.float64)
+    nq = len(Q)
+    # distance tables: tabs[q, j, c] = ||Q[q] subspace j - books[j, c]||^2
+    tabs = np.empty((nq, m, ksub), dtype=np.float64)
+    for j in range(m):
+        tabs[:, j, :] = _sq_dists(Q[:, j * dsub : (j + 1) * dsub], books[j])
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            C = np.stack(pdf["codes"].to_numpy())  # (n, m)
+            ids = pdf[id_col].to_numpy()
+            cells = None if probe is None else pdf["cell"].to_numpy()
+            out_ids, out_q, out_d = [], [], []
+            for q in range(nq):
+                rows = slice(None) if cells is None else np.isin(cells, probe[q])
+                q_ids = ids[rows]
+                if not len(q_ids):
+                    continue
+                # gather: dist[i] = sum_j tabs[q, j, C[i, j]]
+                dist = tabs[q, np.arange(m)[None, :], C[rows]].sum(axis=1)
+                # per-partition pre-cut to k best (heap analogue)
+                take = min(k, len(dist))
+                part = np.argpartition(dist, take - 1)[:take]
+                out_ids.append(q_ids[part])
+                out_q.append(np.full(take, q, dtype=np.int32))
+                out_d.append(dist[part])
+            if not out_ids:
+                continue
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(out_q),
+                    id_col: np.concatenate(out_ids),
+                    "approx_dist2": np.concatenate(out_d),
+                }
+            )
+
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.IntegerType()),
+            T.StructField(id_col, T.LongType()),
+            T.StructField("approx_dist2", T.DoubleType()),
+        ]
+    )
+    scored = codes.mapInPandas(score, schema=schema)
+    order = [F.col("approx_dist2").asc(), F.col(id_col).asc()]
+    return _topk(scored, k, order).select("query_id", id_col, "approx_dist2", "rank")
 
 
 def pq_topk(
@@ -134,62 +208,36 @@ def pq_topk(
     gathers + a sum — no decode, no d-dim arithmetic.
 
     Returns (query_id, vec_id, approx_dist2, rank), rank 1..k per query —
-    ties broken by vec_id for determinism. Top-k is per-partition heap +
-    driver merge (TakeOrdered shape) on k*|queries| rows, never a global
-    sort.
+    ties broken by vec_id for determinism. Each partition pre-cuts its k
+    best per query, so the query-keyed rank window sees at most
+    k·|queries|·n_partitions rows.
     """
-    books = codebooks
-    m, ksub, dsub = books.shape
-    Q = np.asarray(queries, dtype=np.float64)
-    nq = len(Q)
-    # distance tables: tabs[q, j, c] = ||Q[q] subspace j - books[j, c]||^2
-    tabs = np.empty((nq, m, ksub), dtype=np.float64)
-    for j in range(m):
-        qs = Q[:, j * dsub : (j + 1) * dsub]
-        cents = books[j]
-        tabs[:, j, :] = (
-            (qs * qs).sum(1)[:, None]
-            - 2.0 * qs @ cents.T
-            + (cents * cents).sum(1)[None, :]
-        )
+    return _adc_topk(codes, codebooks, queries, k, id_col)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            ids = pdf[id_col].to_numpy()
-            out_ids, out_q, out_d = [], [], []
-            for q in range(nq):
-                # gather: dist[i] = sum_j tabs[q, j, C[i, j]]
-                dist = tabs[q, np.arange(m)[None, :], C].sum(axis=1)
-                # per-partition pre-cut to k best (heap analogue)
-                take = min(k, len(dist))
-                part = np.argpartition(dist, take - 1)[:take]
-                out_ids.append(ids[part])
-                out_q.append(np.full(take, q, dtype=np.int32))
-                out_d.append(dist[part])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_ids),
-                    "approx_dist2": np.concatenate(out_d),
-                }
-            )
 
-    scored = codes.mapInPandas(
-        score, schema=f"query_id int, {id_col} long, approx_dist2 double"
-    )
-    from pyspark.sql import Window
+def _ivf_pq_codes(
+    embeddings: DataFrame,
+    n_cells: int,
+    m: int,
+    ksub: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[np.ndarray, np.ndarray, DataFrame]:
+    """(centroids, codebooks, codes): IVF cells and PQ codebooks trained
+    on ``embeddings``, and its rows encoded with their ``cell`` carried."""
+    from . import ivf
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist2").asc(), F.col(id_col).asc()
+    cents = ivf.train_centroids(
+        embeddings, n_cells=n_cells, id_col=id_col, vec_col=vec_col
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    books = train_codebooks(
+        embeddings, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col
     )
+    with_cell = ivf.assign_cells(embeddings, cents, vec_col=vec_col)
+    codes = pq_encode(
+        with_cell, books, id_col=id_col, vec_col=vec_col, carry_cols=("cell",)
+    )
+    return cents, books, codes
 
 
 def ivf_pq_topk(
@@ -224,19 +272,11 @@ def ivf_pq_topk(
     The registered driver gate asserts the full k·|Q| count at its scale;
     query_ids absent from the corpus raise immediately (ADVICE r02).
     """
-    from . import ivf
+    from .ivf import _nearest_cells
 
-    cents = ivf.train_centroids(
-        embeddings, n_cells=n_cells, id_col=id_col, vec_col=vec_col
+    cents, books, codes = _ivf_pq_codes(
+        embeddings, n_cells, m, ksub, id_col, vec_col
     )
-    books = train_codebooks(
-        embeddings, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col
-    )
-    with_cell = ivf.assign_cells(embeddings, cents, vec_col=vec_col)
-    codes = pq_encode(
-        with_cell, books, id_col=id_col, vec_col=vec_col, carry_cols=("cell",)
-    )
-
     qrows = (
         embeddings.where(F.col(id_col).isin(query_ids))
         .select(id_col, vec_col)
@@ -250,64 +290,9 @@ def ivf_pq_topk(
             "ivf_pq_topk queries must be corpus rows — fetch external "
             "query vectors with pq_topk instead"
         )
-    Q = np.array([by_id[i] for i in query_ids], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    probe = np.argsort(-(Qn @ cents.T), axis=1)[:, :n_probe]  # (nq, n_probe)
-
-    mm, _, dsub = books.shape
-    nq = len(Q)
-    tabs = np.empty((nq, mm, ksub), dtype=np.float64)
-    for j in range(mm):
-        qs = Q[:, j * dsub : (j + 1) * dsub]
-        cb = books[j]
-        tabs[:, j, :] = (
-            (qs * qs).sum(1)[:, None]
-            - 2.0 * qs @ cb.T
-            + (cb * cb).sum(1)[None, :]
-        )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["codes"].to_numpy())
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            out_ids, out_q, out_d = [], [], []
-            for q in range(nq):
-                mask = np.isin(cells, probe[q])
-                if not mask.any():
-                    continue
-                Cq = C[mask]
-                dist = tabs[q, np.arange(mm)[None, :], Cq].sum(axis=1)
-                take = min(k, len(dist))
-                part = np.argpartition(dist, take - 1)[:take]
-                out_ids.append(ids[mask][part])
-                out_q.append(np.full(take, q, dtype=np.int32))
-                out_d.append(dist[part])
-            if not out_ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_ids),
-                    "approx_dist2": np.concatenate(out_d),
-                }
-            )
-
-    scored = codes.mapInPandas(
-        score, schema=f"query_id int, {id_col} long, approx_dist2 double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    Q = _vec_stack(by_id[i] for i in query_ids)
+    probe = _nearest_cells(Q, cents, n_probe)
+    return _adc_topk(codes, books, Q, k, id_col, probe)
 
 
 def build_ivf_pq_index(
@@ -325,17 +310,8 @@ def build_ivf_pq_index(
     with pq_encode(carry_cols=("cell",)); returns (centroids, codebooks)
     — KB-sized, persist them next to the index.
     """
-    from . import ivf
-
-    cents = ivf.train_centroids(
-        embeddings, n_cells=n_cells, id_col=id_col, vec_col=vec_col
-    )
-    books = train_codebooks(
-        embeddings, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col
-    )
-    with_cell = ivf.assign_cells(embeddings, cents, vec_col=vec_col)
-    codes = pq_encode(
-        with_cell, books, id_col=id_col, vec_col=vec_col, carry_cols=("cell",)
+    cents, books, codes = _ivf_pq_codes(
+        embeddings, n_cells, m, ksub, id_col, vec_col
     )
     (
         codes.repartition(F.col("cell"))
@@ -365,65 +341,12 @@ def ivf_pq_query_index(
     pq_topk over the same codes/books: storage round-trip and pruning
     change WHICH candidates are scored, never their scores.
     """
-    Q = np.asarray(queries, dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    probe = np.argsort(-(Qn @ centroids.T), axis=1)[:, :n_probe]
+    from .ivf import _nearest_cells
+
+    probe = _nearest_cells(np.asarray(queries, dtype=np.float64), centroids, n_probe)
     all_cells = sorted({int(c) for row in probe for c in row})
     codes = spark.read.parquet(path).where(F.col("cell").isin(all_cells))
-
-    m, ksub, dsub = codebooks.shape
-    nq = len(Q)
-    tabs = np.empty((nq, m, ksub), dtype=np.float64)
-    for j in range(m):
-        qs = Q[:, j * dsub : (j + 1) * dsub]
-        cents = codebooks[j]
-        tabs[:, j, :] = (
-            (qs * qs).sum(1)[:, None]
-            - 2.0 * qs @ cents.T
-            + (cents * cents).sum(1)[None, :]
-        )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["codes"].to_numpy())
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            out_ids, out_q, out_d = [], [], []
-            for q in range(nq):
-                mask = np.isin(cells, probe[q])
-                if not mask.any():
-                    continue
-                dist = tabs[q, np.arange(m)[None, :], C[mask]].sum(axis=1)
-                take = min(k, len(dist))
-                part = np.argpartition(dist, take - 1)[:take]
-                out_ids.append(ids[mask][part])
-                out_q.append(np.full(take, q, dtype=np.int32))
-                out_d.append(dist[part])
-            if not out_ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_ids),
-                    "approx_dist2": np.concatenate(out_d),
-                }
-            )
-
-    scored = codes.mapInPandas(
-        score, schema=f"query_id int, {id_col} long, approx_dist2 double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _adc_topk(codes, codebooks, queries, k, id_col, probe)
 
 
 def append_ivf_pq_index(

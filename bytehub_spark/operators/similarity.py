@@ -11,6 +11,29 @@
   oracle. ``bands`` independent plane sets are OR'd for recall
   amplification. Candidates come only from matching buckets, then exact
   re-rank — at 100 TB this turns an O(N·Q) scan into bucket lookups.
+
+Every operator here, in ivf.py, pq.py and dedup.py builds on one kernel
+per vector primitive:
+
+- ``cosine4`` (Column) / ``round4`` (numpy): cosine rounded to 4
+  decimals under ONE rule — half away from zero on the scaled binary
+  value, ``s·1e4 >= 0 ? floor(s·1e4 + 0.5) : ceil(s·1e4 - 0.5)``, the
+  rule DuckDB's ``round`` applies. Spark's own ``round`` rounds the
+  double's shortest decimal form instead (0.70715 → 0.7072 there, 0.7071
+  here), so no operator calls it on a similarity. ``_dot`` builds the
+  dot products as Column expressions, never SQL text, so any column
+  name works.
+- ``_vec_stack`` / ``_cosine_matrix``: the float64 vector stack and the
+  ``(A·Bᵀ) / (|A|·|B|)`` cosine matrix of every Arrow-batched GEMM path.
+- ``_topk``: the per-query ``row_number`` cut; ``_rerank``: cosine4
+  scoring + ``_topk`` over a candidate frame (exact, LSH and IVF paths);
+  ``_gemm_topk``: the broadcast-queries GEMM block (``cosine_topk_gemm``,
+  ``hard_negatives``).
+- ``_srp_projections`` / ``_srp_pack``: int64 SRP plane dots and their
+  per-band sign-bit buckets, for corpus UDFs and driver-side queries.
+- ``_bucket_occupancy``: the per-key bucket statistics of
+  ``lsh_bucket_balance``, ``lsh_plane_plan`` and
+  ``dedup.minhash_band_balance``.
 """
 
 from __future__ import annotations
@@ -20,11 +43,85 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
+
+def _dot(a: F.Column, b: F.Column, t: str = "double") -> F.Column:
+    """Σ a_i·b_i with both sides cast to ``t``, summed left to right."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast(t) * y.cast(t)),
+        F.lit(0).cast(t),
+        lambda acc, v: acc + v,
+    )
 
 
-def _dot(a: str, b: str) -> F.Column:
-    return F.expr(DOT.format(a=a, b=b))
+def cosine4(a: F.Column, b: F.Column) -> F.Column:
+    """Cosine of two array columns, rounded to 4 decimals half away from
+    zero on the scaled binary value (the ``round4`` rule)."""
+    s = _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))) * 1e4
+    return F.when(s >= 0, F.floor(s + 0.5)).otherwise(F.ceil(s - 0.5)) / 1e4
+
+
+def round4_units(x: np.ndarray) -> np.ndarray:
+    """x·1e4 rounded half away from zero, as int64 (1e-4 units)."""
+    s = x * 1e4
+    return np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5)).astype(np.int64)
+
+
+def round4(x: np.ndarray) -> np.ndarray:
+    """numpy twin of ``cosine4``'s rounding: x to 4 decimals."""
+    return round4_units(x) / 1e4
+
+
+def _vec_stack(vecs) -> np.ndarray:
+    """(n, dim) float64 matrix from a sequence of vectors ((0, 0) if
+    there are none)."""
+    rows = [np.asarray(v, dtype=np.float64) for v in vecs]
+    return np.array(rows) if rows else np.zeros((0, 0))
+
+
+def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(a), len(b)) cosines: one GEMM divided by the norm products."""
+    na = np.linalg.norm(a, axis=1)
+    nb = np.linalg.norm(b, axis=1)
+    return (a @ b.T) / (na[:, None] * nb[None, :])
+
+
+def _cosine_order() -> list[F.Column]:
+    """The ranking rule of every cosine top-k: similarity descending,
+    ties to the lower neighbor id."""
+    return [F.col("cosine_sim").desc(), F.col("neighbor_id").asc()]
+
+
+def _topk(scored: DataFrame, k: int, order: list) -> DataFrame:
+    """The first k rows of each query_id under ``order``: (query_id, rank,
+    the other columns), sorted by query_id and rank."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    rest = [c for c in scored.columns if c != "query_id"]
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", *rest)
+        .orderBy("query_id", "rank")
+    )
+
+
+def _query_vectors(
+    embeddings: DataFrame, query_ids: list[int], id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, q_vec) rows of the query ids."""
+    return embeddings.where(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+
+
+def _rerank(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-rank of candidate rows (query_id, id_col, vec_col, q_vec):
+    cosine4 score, first k per query by similarity then neighbor id."""
+    scored = cand.select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        cosine4(F.col(vec_col), F.col("q_vec")).alias("cosine_sim"),
+    )
+    return _topk(scored, k, _cosine_order())
 
 
 def cosine_topk(
@@ -39,29 +136,69 @@ def cosine_topk(
     Similarity is rounded to 4 decimals BEFORE ranking so that ranking is
     stable across engines; ties break on neighbor id.
     """
-    q = embeddings.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    joined = embeddings.crossJoin(F.broadcast(q)).where(
+    q = _query_vectors(embeddings, query_ids, id_col, vec_col)
+    cand = embeddings.crossJoin(F.broadcast(q)).where(
         F.col(id_col) != F.col("query_id")
     )
-    sim = _dot(vec_col, "q_vec") / (
-        F.sqrt(_dot(vec_col, vec_col)) * F.sqrt(_dot("q_vec", "q_vec"))
+    return _rerank(cand, k, id_col, vec_col)
+
+
+def _gemm_topk(
+    embeddings: DataFrame,
+    query_ids: list[int],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None = None,
+) -> DataFrame:
+    """Broadcast-queries GEMM top-k: the query rows are collected and
+    broadcast once; each partition scores its rows with one
+    ``_cosine_matrix`` and emits only its local top-k per query, so the
+    final ``_topk`` window sees n_partitions·k·|Q| rows. With
+    ``label_col`` a candidate must carry a label different from the
+    query's, and its label is emitted as ``neighbor_label``."""
+    from ..plans import ensure_parallelism
+
+    cols = [id_col, vec_col] + ([label_col] if label_col else [])
+    q = embeddings.where(F.col(id_col).isin(query_ids)).select(*cols).toPandas()
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        (
+            q[id_col].to_numpy(),
+            _vec_stack(q[vec_col]),
+            q[label_col].to_numpy() if label_col else None,
+        )
     )
-    scored = joined.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(sim, 4).alias("cosine_sim"),
+
+    def block(it):
+        qi, qm, ql = bc.value
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            labels = pdf[label_col].to_numpy() if label_col else None
+            sims = round4(_cosine_matrix(_vec_stack(pdf[vec_col]), qm))
+            picks, owners = [], []
+            for j in range(len(qi)):
+                mask = ids != qi[j]
+                if label_col:
+                    mask &= labels != ql[j]
+                rows = np.flatnonzero(mask)
+                picks.append(rows[np.lexsort((ids[rows], -sims[rows, j]))[:k]])
+                owners.append(np.full(len(picks[-1]), j))
+            top, j = np.concatenate(picks), np.concatenate(owners)
+            out = {"query_id": qi[j], "neighbor_id": ids[top]}
+            if label_col:
+                out["neighbor_label"] = labels[top]
+            out["cosine_sim"] = sims[top, j]
+            yield pd.DataFrame(out)
+
+    schema = "query_id long, neighbor_id long, " + (
+        "neighbor_label int, " if label_col else ""
+    ) + "cosine_sim double"
+    local = ensure_parallelism(embeddings.select(*cols)).mapInPandas(
+        block, schema=schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(local, k, _cosine_order())
 
 
 def cosine_topk_gemm(
@@ -81,96 +218,33 @@ def cosine_topk_gemm(
     top-k per query (k·|Q| rows), so the final global re-rank window sees
     n_partitions·k·|Q| rows — driver-scale regardless of corpus size.
 
-    Similarity is rounded half-away-from-zero to 4 decimals BEFORE ranking
-    (matching SQL ROUND), ties break on neighbor id — identical ordering
-    rules to ``cosine_topk``.
+    Similarity is rounded to 4 decimals BEFORE ranking with ``round4``
+    (the rule of ``cosine4``), ties break on neighbor id — identical
+    ordering rules to ``cosine_topk``.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..plans import ensure_parallelism
-
-    spark = embeddings.sparkSession
-    q = (
-        embeddings.where(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col), F.col(vec_col))
-        .toPandas()
-    )
-    q_ids = q[id_col].to_numpy()
-    q_mat = np.array([np.asarray(v, dtype=np.float64) for v in q[vec_col]])
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norms))
-
-    def block(it):
-        qi, qm, qn = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1)
-            sims = (mat @ qm.T) / (norms[:, None] * qn[None, :])
-            # SQL ROUND: half away from zero, 4 decimals
-            scaled = sims * 1e4
-            sims = np.where(
-                scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
-            ) / 1e4
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qi)):
-                mask = ids != qi[j]
-                cids, cs = ids[mask], sims[mask, j]
-                top = np.lexsort((cids, -cs))[:k]
-                out_q.extend([qi[j]] * len(top))
-                out_n.extend(cids[top])
-                out_s.extend(cs[top])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine_sim": out_s}
-            )
-
-    local = ensure_parallelism(
-        embeddings.select(F.col(id_col), F.col(vec_col))
-    ).mapInPandas(block, schema="query_id long, neighbor_id long, cosine_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _gemm_topk(embeddings, query_ids, k, id_col, vec_col)
 
 
-def hyperplane_signature(
-    df: DataFrame,
-    n_planes: int = 16,
-    vec_col: str = "embedding",
-    plane_offset: int = 0,
-) -> F.Column:
-    """Sign-bit signature under n deterministic ±1 (Rademacher) planes.
-
-    bit p = [Σ_d floor(v_d·1e6) · s(p+offset, d) > 0] with s(·,·) the
-    engine-portable plane sign (hashing.plane_sign) — the dot product is
-    pure int64 arithmetic on 1e6-quantized components, so bucket ids are
-    independent of summation order and bit-identical in the DuckDB oracle
-    (the r02 xxhash64/double variant was neither). Computed as ONE Arrow-
-    batched numpy GEMM per batch (the interpreted per-plane higher-order
-    aggregate it replaces was the map-stage bottleneck). ``plane_offset``
-    selects an independent plane set — the banding hook.
-    """
+def _srp_projections(vecs: np.ndarray, n_total: int) -> np.ndarray:
+    """(n, n_total) int64 dots of floor(v·1e6) with the first ``n_total``
+    ±1 planes (hashing.plane_sign_matrix): pure integer arithmetic, so
+    independent of summation order and bit-identical in the DuckDB
+    oracle."""
     from .hashing import plane_sign_matrix
 
-    @F.pandas_udf("long")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vecs.tolist()])
-        Q = np.floor(V * 1e6).astype(np.int64)
-        S = plane_sign_matrix(n_planes, Q.shape[1], plane_offset)
-        bits = (Q @ S > 0).astype(np.int64)
-        return pd.Series(bits @ (1 << np.arange(n_planes, dtype=np.int64)))
+    q = np.floor(vecs * 1e6).astype(np.int64)
+    return q @ plane_sign_matrix(n_total, q.shape[1], 0)
 
-    return _sig(F.col(vec_col))
+
+def _srp_pack(dots: np.ndarray, n_planes: int, bands: int) -> np.ndarray:
+    """(n, bands) int64 buckets: band b packs the sign bits of plane
+    columns [b·n_planes, (b+1)·n_planes), plane j as bit j."""
+    bits = (dots > 0).astype(np.int64)
+    w = 1 << np.arange(n_planes, dtype=np.int64)
+    return np.stack(
+        [bits[:, b * n_planes : (b + 1) * n_planes] @ w for b in range(bands)],
+        axis=1,
+    )
 
 
 def lsh_cosine_buckets(
@@ -184,35 +258,55 @@ def lsh_cosine_buckets(
     (1-p^n)^bands instead of 1-p^n).
 
     All bands come from ONE Arrow-batched GEMM over the full
-    bands·n_planes plane set (r14 optimization round, the lsh_plane_plan
-    fusion): band b's bucket packs bit columns [b·n, (b+1)·n) of the
-    shared sign matrix — bit-identical to per-band hyperplane_signature
-    at plane_offset = b·n by construction (same plane_sign_matrix
-    columns, same packing), at 1 Python pass instead of ``bands``.
+    bands·n_planes plane set (``_srp_projections``), each band's bucket
+    packed from its own bit columns (``_srp_pack``) — the same kernel
+    ``lsh_plane_plan`` and the multi-probe query side use.
     """
-    from .hashing import plane_sign_matrix
-
     n = int(n_planes)
     nb = int(bands)
-    total = n * nb
 
     @F.pandas_udf("array<long>")
     def _band_sigs(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vecs.tolist()])
-        Q = np.floor(V * 1e6).astype(np.int64)
-        S = plane_sign_matrix(total, Q.shape[1], 0)
-        bits = (Q @ S > 0).astype(np.int64)
-        w = 1 << np.arange(n, dtype=np.int64)
-        cols = [bits[:, b * n : (b + 1) * n] @ w for b in range(nb)]
-        return pd.Series(list(np.stack(cols, axis=1)))
+        dots = _srp_projections(_vec_stack(vecs), n * nb)
+        return pd.Series(list(_srp_pack(dots, n, nb)))
 
     return embeddings.select(
         F.col(id_col),
         F.col(vec_col),
         F.posexplode(_band_sigs(F.col(vec_col))).alias("band", "bucket"),
     )
+
+
+def _lsh_rerank(
+    embeddings: DataFrame,
+    buckets: DataFrame,
+    probes: DataFrame,
+    query_ids: list[int],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact re-rank of the ids sharing any probed (band, bucket) with
+    their query (``probes``: query_id, q_band, q_bucket). Candidate ids
+    are distinct before the vector fetch, so each is scored once."""
+    cand_ids = (
+        buckets.select(id_col, "band", "bucket")
+        .join(
+            F.broadcast(probes),
+            (F.col("band") == F.col("q_band"))
+            & (F.col("bucket") == F.col("q_bucket"))
+            & (F.col(id_col) != F.col("query_id")),
+        )
+        .select("query_id", id_col)
+        .distinct()
+    )
+    cand = cand_ids.join(embeddings.select(id_col, vec_col), id_col).join(
+        F.broadcast(_query_vectors(embeddings, query_ids, id_col, vec_col)),
+        "query_id",
+    )
+    return _rerank(cand, k, id_col, vec_col)
 
 
 def lsh_cosine_topk(
@@ -240,42 +334,7 @@ def lsh_cosine_topk(
         F.col("band").alias("q_band"),
         F.col("bucket").alias("q_bucket"),
     )
-    # candidate ids from ANY matching band bucket — slim rows, distinct
-    # before the vector fetch so each candidate is scored once
-    cand_ids = (
-        b.select(id_col, "band", "bucket")
-        .join(
-            F.broadcast(q),
-            (F.col("band") == F.col("q_band"))
-            & (F.col("bucket") == F.col("q_bucket"))
-            & (F.col(id_col) != F.col("query_id")),
-        )
-        .select("query_id", id_col)
-        .distinct()
-    )
-    vecs = embeddings.select(F.col(id_col), F.col(vec_col))
-    qv = embeddings.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("__qid"), F.col(vec_col).alias("q_vec")
-    )
-    cand = (
-        cand_ids.join(vecs, id_col)
-        .join(F.broadcast(qv), F.col("query_id") == F.col("__qid"))
-    )
-    sim = _dot(vec_col, "q_vec") / (
-        F.sqrt(_dot(vec_col, vec_col)) * F.sqrt(_dot("q_vec", "q_vec"))
-    )
-    scored = cand.select(
-        "query_id", F.col(id_col).alias("neighbor_id"), F.round(sim, 4).alias("cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _lsh_rerank(embeddings, b, q, query_ids, k, id_col, vec_col)
 
 
 def group_centroids(
@@ -489,69 +548,12 @@ def hard_negatives(
     most-similar vectors with a DIFFERENT label — the negatives that
     actually teach the margin (random negatives are trivially far).
 
-    Same GEMM kernel and ranking rules as cosine_topk_gemm (one matmul
-    per partition, per-partition top-k, driver-scale re-rank), plus a
-    label-inequality mask applied before the local cut. Rounded to 4
-    decimals before ranking — exactly SQL-replayable.
+    Same GEMM block and ranking rules as cosine_topk_gemm (``_gemm_topk``:
+    one matmul per partition, per-partition top-k, driver-scale
+    re-rank), plus a label-inequality mask applied before the local cut.
+    Rounded to 4 decimals before ranking — exactly SQL-replayable.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..plans import ensure_parallelism
-
-    spark = embeddings.sparkSession
-    q = (
-        embeddings.where(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col, label_col)
-        .toPandas()
-    )
-    q_ids = q[id_col].to_numpy()
-    q_mat = np.array([np.asarray(v, dtype=np.float64) for v in q[vec_col]])
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    q_labels = q[label_col].to_numpy()
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norms, q_labels))
-
-    def block(it):
-        qi, qm, qn, ql = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            labels = pdf[label_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1)
-            sims = (mat @ qm.T) / (norms[:, None] * qn[None, :])
-            scaled = sims * 1e4
-            sims = np.where(
-                scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
-            ) / 1e4
-            out = {"query_id": [], "neighbor_id": [], "neighbor_label": [],
-                   "cosine_sim": []}
-            for j in range(len(qi)):
-                mask = (ids != qi[j]) & (labels != ql[j])
-                cids, cl, cs = ids[mask], labels[mask], sims[mask, j]
-                top = np.lexsort((cids, -cs))[:k]
-                out["query_id"].extend([qi[j]] * len(top))
-                out["neighbor_id"].extend(cids[top])
-                out["neighbor_label"].extend(cl[top])
-                out["cosine_sim"].extend(cs[top])
-            yield pd.DataFrame(out)
-
-    local = ensure_parallelism(
-        embeddings.select(id_col, vec_col, label_col)
-    ).mapInPandas(
-        block,
-        schema="query_id long, neighbor_id long, neighbor_label int, cosine_sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "neighbor_label", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _gemm_topk(embeddings, query_ids, k, id_col, vec_col, label_col)
 
 
 def lsh_cosine_topk_multiprobe(
@@ -573,72 +575,32 @@ def lsh_cosine_topk_multiprobe(
     unchanged (the standard multi-probe trade — Lv et al. 2007).
 
     Probe buckets are derived driver-side from the |Q|-row query matrix
-    (same int64 plane arithmetic as the corpus UDF, so base buckets agree
-    bit-for-bit) and broadcast; the candidate join stays a (band, bucket)
-    equi-join. Flip choice breaks margin ties toward the lowest plane
-    index — deterministic and SQL-replayable.
+    by the corpus UDF's own kernel (``_srp_projections`` + ``_srp_pack``,
+    so base buckets agree bit-for-bit) and broadcast; the candidate join
+    stays a (band, bucket) equi-join. Flip choice breaks margin ties
+    toward the lowest plane index — deterministic and SQL-replayable.
     """
-    from .hashing import plane_sign_matrix
-
     q = (
         embeddings.where(F.col(id_col).isin(query_ids))
         .select(id_col, vec_col)
         .toPandas()
     )
+    n = int(n_planes)
+    dots = _srp_projections(_vec_stack(q[vec_col]), n * bands)
+    buckets = _srp_pack(dots, n, bands)
     probe_rows = []
-    for _, row in q.iterrows():
-        v = np.floor(np.asarray(row[vec_col], dtype=np.float64) * 1e6).astype(
-            np.int64
-        )
+    for i, qid in enumerate(q[id_col]):
         for b in range(bands):
-            S = plane_sign_matrix(n_planes, len(v), b * n_planes)
-            dots = v @ S
-            bucket = int(((dots > 0).astype(np.int64) << np.arange(n_planes)).sum())
-            probe_rows.append((int(row[id_col]), b, bucket))
-            order = np.lexsort((np.arange(n_planes), np.abs(dots)))
-            for j in order[:n_flip]:
-                probe_rows.append((int(row[id_col]), b, bucket ^ (1 << int(j))))
-    spark = embeddings.sparkSession
-    probes = spark.createDataFrame(
+            bucket = int(buckets[i, b])
+            probe_rows.append((int(qid), b, bucket))
+            margins = np.abs(dots[i, b * n : (b + 1) * n])
+            for j in np.lexsort((np.arange(n), margins))[:n_flip]:
+                probe_rows.append((int(qid), b, bucket ^ (1 << int(j))))
+    probes = embeddings.sparkSession.createDataFrame(
         probe_rows, "query_id long, q_band int, q_bucket long"
     ).distinct()
-
     b = lsh_cosine_buckets(embeddings, n_planes, id_col, vec_col, bands=bands)
-    cand_ids = (
-        b.select(id_col, "band", "bucket")
-        .join(
-            F.broadcast(probes),
-            (F.col("band") == F.col("q_band"))
-            & (F.col("bucket") == F.col("q_bucket"))
-            & (F.col(id_col) != F.col("query_id")),
-        )
-        .select("query_id", id_col)
-        .distinct()
-    )
-    vecs = embeddings.select(F.col(id_col), F.col(vec_col))
-    qv = embeddings.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("__qid"), F.col(vec_col).alias("q_vec")
-    )
-    cand = (
-        cand_ids.join(vecs, id_col)
-        .join(F.broadcast(qv), F.col("query_id") == F.col("__qid"))
-    )
-    sim = _dot(vec_col, "q_vec") / (
-        F.sqrt(_dot(vec_col, vec_col)) * F.sqrt(_dot("q_vec", "q_vec"))
-    )
-    scored = cand.select(
-        "query_id", F.col(id_col).alias("neighbor_id"),
-        F.round(sim, 4).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _lsh_rerank(embeddings, b, probes, query_ids, k, id_col, vec_col)
 
 
 def ann_recall_eval(
@@ -710,36 +672,29 @@ def lsh_bucket_balance(
 
     One bucket pass (the same integer SRP signatures as the operators it
     monitors — what you measure is literally what they join on) and a
-    two-level aggregation; everything integer, replayed exactly by the
-    DuckDB oracle. ``imbalance_ppm`` is the EXACT
-    floor(max·n_buckets·1e6 / n_rows) via the two-term divide-first
-    identity (q·nb + (r·nb) div n) — BIGINT-safe to ~9.2e12 rows/band
-    (first term) and n_rows·n_buckets ≈ 9.2e18 (correction term).
+    two-level aggregation (``_bucket_occupancy``, whose exact
+    ``imbalance_ppm`` identity ``minhash_band_balance`` and
+    ``lsh_plane_plan`` share); everything integer, replayed exactly by
+    the DuckDB oracle.
     """
-    return _lsh_bucket_stats(
-        embeddings, n_planes, bands, id_col, vec_col
-    ).orderBy("band")
-
-
-def _lsh_bucket_stats(
-    embeddings: DataFrame,
-    n_planes: int,
-    bands: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """lsh_bucket_balance without the output sort — the composable core
-    (lsh_plane_plan unions several shapes and must not embed per-shape
-    global sorts mid-plan; each frame is <= bands rows, but the plan
-    gate rightly treats any mid-plan total order as a smell)."""
-    b = lsh_cosine_buckets(
-        embeddings, n_planes, id_col, vec_col, bands=bands
-    ).select("band", "bucket")
-    per_bucket = b.groupBy("band", "bucket").agg(
-        F.count("*").alias("c")
+    per_bucket = (
+        lsh_cosine_buckets(embeddings, n_planes, id_col, vec_col, bands=bands)
+        .groupBy("band", "bucket")
+        .agg(F.count("*").alias("c"))
     )
+    return _bucket_occupancy(per_bucket, ["band"]).orderBy("band")
+
+
+def _bucket_occupancy(per_bucket: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-``keys`` occupancy of bucket row counts ``c`` (one row per
+    bucket): n_rows, n_buckets, max_bucket_rows, cand_pairs = Σ c·(c-1)/2
+    and imbalance_ppm = floor(max·n_buckets·1e6 / n_rows), exact via the
+    two-term divide-first identity (q·nb + (r·nb) div n with q, r =
+    divmod(max·1e6, n_rows)) — BIGINT-safe to ~9.2e12 rows per key (first
+    term) and n_rows·n_buckets ≈ 9.2e18 (correction term), where the
+    naive max·nb·1e6 form wraps at a few million rows."""
     return (
-        per_bucket.groupBy("band")
+        per_bucket.groupBy(*keys)
         .agg(
             F.sum("c").cast("long").alias("n_rows"),
             F.count("*").cast("long").alias("n_buckets"),
@@ -873,26 +828,17 @@ def margin_pairs(
         )
     if len(b) < k:
         raise ValueError(f"group B has {len(b)} rows < k={k}")
-    b_ids = b[id_col].to_numpy()
-    b_mat = np.array([np.asarray(v, dtype=np.float64) for v in b[vec_col]])
-    b_norms = np.linalg.norm(b_mat, axis=1)
-    bc = spark.sparkContext.broadcast((b_ids, b_mat, b_norms))
+    bc = spark.sparkContext.broadcast(
+        (b[id_col].to_numpy(), _vec_stack(b[vec_col]))
+    )
 
     def block(it):
-        bi, bm, bn = bc.value
+        bi, bm = bc.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            norms = np.linalg.norm(mat, axis=1)
-            sims = (mat @ bm.T) / (norms[:, None] * bn[None, :])
-            scaled = sims * 1e4  # SQL ROUND: half away from zero
-            cos_u = np.where(
-                scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
-            ).astype(np.int64)
+            cos_u = round4_units(_cosine_matrix(_vec_stack(pdf[vec_col]), bm))
             d, ai, bj, cu = [], [], [], []
             for i in range(len(ids)):  # forward: global top-k (full B here)
                 top = np.lexsort((bi, -cos_u[i]))[:k]
@@ -992,14 +938,12 @@ def _quantized_vectors(
     THE shared quantization for every bit-exact integer-cosine operator
     (margin_pairs_lsh, knn_graph) — one definition so the DuckDB replay
     contract can never drift between them."""
-    q_expr = F.expr(
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000)"
-        " AS BIGINT))"
+    q_expr = F.transform(
+        F.col(vec_col), lambda x: F.floor(x.cast("double") * 1000000).cast("long")
     )
-    nq_expr = F.expr("aggregate(q, CAST(0 AS BIGINT), (acc, v) -> acc + v * v)")
     return (
         embeddings.withColumn("q", q_expr)
-        .withColumn("nq", nq_expr)
+        .withColumn("nq", _dot(F.col("q"), F.col("q"), "long"))
         .where(F.col("nq") > 0)
         .select(id_col, *extra_cols, "q", "nq")
     )
@@ -1008,7 +952,7 @@ def _quantized_vectors(
 def _int_gemm_scored(cand: DataFrame, qa: DataFrame, qb: DataFrame) -> DataFrame:
     """Score (a_id, b_id) candidates to integer cosine units in ONE
     Arrow-batched pass: exact order-independent int64 dots, per-op IEEE
-    sqrt/div, half-away-from-zero rounding to 1e-4 units (SQL ROUND) —
+    sqrt/div, ``round4_units`` rounding to 1e-4 units —
     the shared kernel whose every step is replayed in the oracles.
     Result is scratch-persisted (both ranking directions read it).
 
@@ -1041,15 +985,11 @@ def _int_gemm_scored(cand: DataFrame, qa: DataFrame, qb: DataFrame) -> DataFrame
                 np.sqrt(naa.astype(np.float64))
                 * np.sqrt(nbb.astype(np.float64))
             )
-            scaled = c * 1e4  # SQL ROUND: half away from zero
-            cos_u = np.where(
-                scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
-            ).astype(np.int64)
             yield pd.DataFrame(
                 {
                     "a_id": pdf["a_id"].to_numpy(),
                     "b_id": pdf["b_id"].to_numpy(),
-                    "cos_u": cos_u,
+                    "cos_u": round4_units(c),
                 }
             )
 
@@ -1243,7 +1183,7 @@ def semantic_dedup(
     """
     from pyspark.sql import types as T
 
-    from .ivf import assign_cells, train_centroids
+    from .ivf import _unit_rows, assign_cells, train_centroids
 
     if n_cells is None:
         n_cells = semantic_dedup_cells(embeddings.count())
@@ -1263,8 +1203,7 @@ def semantic_dedup(
 
     def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+        x = _unit_rows(_vec_stack(pdf[vec_col]))
         m = len(pdf)
         best = np.full(m, -1.0)
         for lo in range(1, m, block):
@@ -1316,21 +1255,14 @@ def embedding_health(
     Zero-norm vectors are counted in n_near_zero and excluded from the
     pair profile (cosine undefined).
     """
-    qv = (
-        f"transform({vec_col}, "
-        "x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-    )
-    idot = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, "
-        "(acc, v) -> acc + v)"
-    )
     from ..plans.scratch import scratch_persist
 
+    qv = F.transform(
+        F.col(vec_col), lambda x: F.floor(x.cast("double") * 1000).cast("long")
+    )
     q = scratch_persist(
-        embeddings.select(
-            F.col(id_col), F.expr(qv).alias("qv")
-        ).withColumn(
-            "qnorm2", F.expr(idot.format(a="qv", b="qv"))
+        embeddings.select(F.col(id_col), qv.alias("qv")).withColumn(
+            "qnorm2", _dot(F.col("qv"), F.col("qv"), "long")
         )
     )
     stats = q.agg(
@@ -1350,14 +1282,14 @@ def embedding_health(
         F.col("qv").alias("vb"),
         F.col("qnorm2").alias("qb2"),
     )
-    cos_u = (
-        f"CAST(floor(CAST({idot.format(a='va', b='vb')} AS DOUBLE) * 1000000 "
-        "/ (sqrt(CAST(qa2 AS DOUBLE)) * sqrt(CAST(qb2 AS DOUBLE)))) AS BIGINT)"
-    )
+    cos_u = F.floor(
+        _dot(F.col("va"), F.col("vb"), "long").cast("double") * 1000000
+        / (F.sqrt(F.col("qa2").cast("double")) * F.sqrt(F.col("qb2").cast("double")))
+    ).cast("long")
     pairs = (
         a.join(b, "ida")
         .where((F.col("qa2") > 0) & (F.col("qb2") > 0))
-        .select(F.expr(cos_u).alias("qcos"))
+        .select(cos_u.alias("qcos"))
     )
     pstats = pairs.agg(
         F.count("*").cast("long").alias("n_pairs"),
@@ -1724,23 +1656,17 @@ def lsh_plane_plan(
     When NO shape fits the budget every ``recommended`` is false —
     grow planes_options or bands.
     """
-    from pyspark import StorageLevel
-
     from ..plans.scratch import scratch_persist
-    from .hashing import plane_sign_matrix
 
-    src = scratch_persist(
-        embeddings.select(id_col, vec_col), StorageLevel.MEMORY_AND_DISK
-    )
     # Fused shape evaluation (r14 optimization round, the
     # minhash_band_balance pattern): ONE Arrow GEMM against the largest
     # shape's full plane set (max(p)·bands columns — shape p's band b
-    # reads bit columns [b·p, (b+1)·p), exactly hyperplane_signature at
-    # plane_offset = b·p) emits every shape's bucket per row, so the
+    # reads bit columns [b·p, (b+1)·p), exactly lsh_cosine_buckets' band b
+    # at n_planes = p) emits every shape's bucket per row, so the
     # source is scanned and the signature bits computed ONCE for all
     # shapes, vs one pass + an independent (and overlapping) GEMM per
     # shape. Bucket values are bit-identical to the per-shape path by
-    # construction — same plane_sign_matrix planes, same packing.
+    # construction — the same _srp_projections / _srp_pack kernel.
     shapes = [int(p) for p in planes_options]
     total_planes = max(p * bands for p in shapes)
 
@@ -1748,20 +1674,13 @@ def lsh_plane_plan(
     def _multi_sig(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vecs.tolist()])
-        Q = np.floor(V * 1e6).astype(np.int64)
-        S = plane_sign_matrix(total_planes, Q.shape[1], 0)
-        bits = (Q @ S > 0).astype(np.int64)
-        cols = []
-        for p in shapes:
-            w = 1 << np.arange(p, dtype=np.int64)
-            for b in range(bands):
-                cols.append(bits[:, b * p : (b + 1) * p] @ w)
-        return pd.Series(list(np.stack(cols, axis=1)))
+        dots = _srp_projections(_vec_stack(vecs), total_planes)
+        packed = [_srp_pack(dots, p, bands) for p in shapes]
+        return pd.Series(list(np.concatenate(packed, axis=1)))
 
     planes_arr = F.array(*[F.lit(p).cast("int") for p in shapes])
     buck = (
-        src.select(_multi_sig(F.col(vec_col)).alias("bk"))
+        embeddings.select(_multi_sig(F.col(vec_col)).alias("bk"))
         .select(F.posexplode("bk").alias("pos", "bucket"))
         .select(
             F.element_at(
@@ -1778,21 +1697,7 @@ def lsh_plane_plan(
     # best-shape scalar AND the final join — persist or the whole
     # signature pass re-runs per consumer (measured 26 jobs / 90 stages
     # for this 18-row frame's 4 appearances)
-    out = scratch_persist(
-        per_bucket.groupBy("n_planes", "band")
-        .agg(
-            F.sum("c").cast("long").alias("n_rows"),
-            F.count("*").cast("long").alias("n_buckets"),
-            F.max("c").cast("long").alias("max_bucket_rows"),
-            F.sum(F.expr("c * (c - 1) div 2")).cast("long").alias("cand_pairs"),
-        )
-        .withColumn(
-            "imbalance_ppm",
-            F.expr(
-                "(max_bucket_rows * 1000000 div n_rows) * n_buckets + ((max_bucket_rows * 1000000 % n_rows) * n_buckets) div n_rows"
-            ).cast("long"),
-        )
-    )
+    out = scratch_persist(_bucket_occupancy(per_bucket, ["n_planes", "band"]))
     tot = (
         out.groupBy("n_planes")
         .agg(F.sum("cand_pairs").cast("long").alias("shape_cand_pairs"))

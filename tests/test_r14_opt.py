@@ -48,7 +48,7 @@ def vecs(spark):
 
 
 def test_lsh_plane_plan_fused_matches_per_shape_stats(spark, vecs):
-    """The fused multi-shape GEMM must reproduce _lsh_bucket_stats'
+    """The fused multi-shape GEMM must reproduce lsh_bucket_balance's
     per-shape rows exactly (same planes, same bit packing)."""
     bands = 3
     plan = similarity.lsh_plane_plan(
@@ -62,7 +62,7 @@ def test_lsh_plane_plan_fused_matches_per_shape_stats(spark, vecs):
     )
     want = []
     for p in (4, 6):
-        stats = similarity._lsh_bucket_stats(
+        stats = similarity.lsh_bucket_balance(
             vecs, p, bands, "vec_id", "embedding"
         ).withColumn("n_planes", F.lit(p).cast("int"))
         want.extend(
