@@ -4,9 +4,10 @@ API parity target: /root/reference/bytehub/_base.py:61-260 (method names &
 semantics) and core.py (CoreFeatureStore behavior). Every load builds ONE
 lazy DataFrame plan (``FeatureStore._read_plan``) — scan (Catalyst pushdown
 + Hive partition pruning) → time-travel predicate → bitemporal dedup window
-→ resample/align LOCF — executed only at the caller's action. It shuffles
-its rows once, into one partition when Spark's plan-time estimate says the
-scans are small.
+→ resample/align LOCF — executed only at the caller's action. A load whose
+partition-pruned scans fit one task runs as one Spark job of one task,
+with no exchange; a larger one shuffles its rows once, into one partition
+when the pruned scans' bytes fit one.
 
 Query lifecycle parity map (SURVEY.md §3.1):
   seed lookup        core._seed_rows (in-plan)    [dask.py:142-148]
@@ -68,15 +69,18 @@ def _value_type(meta: dict | None) -> T.DataType | None:
         return None
 
 
-def _seed_rows(upto: DataFrame, time_travel: str | None, values) -> DataFrame:
+def _seed_rows(upto: DataFrame, time_travel: str | None, values, ranges: int) -> DataFrame:
     """LOCF seed (J3) as part of the read plan: per series, the newest
     long-format row at or before ``from_date`` in its latest version, from
-    a scan pruned to ``time <= from_date``; ``values`` are the load's value
+    a scan pruned to ``time <= from_date`` (and, without time travel, to
+    ``SparkStorage.seed_partitions``); ``values`` are the load's value
     columns. Unioned into the ranged scan ahead of the dedup window, so a
     grid point before the first ranged row carries the seed's value; a
     seed exactly at ``from_date`` duplicates a ranged row and the dedup
     window drops the copy. One mergeable aggregate instead of an eager
-    max(time) job per load."""
+    max(time) job per load; in the load's one task at ``ts.ONE_TASK``."""
+    if ranges == ts.ONE_TASK:
+        upto = upto.coalesce(1)
     if time_travel:
         upto = ts.time_travel(upto, time_travel)
     latest = F.max_by(
@@ -288,32 +292,37 @@ class FeatureStore:
         load; with both bounds given the build runs no Spark job), with
         ``to < from`` clamped to ``from`` (``_window``). With ``last_only``
         (``last()`` of a transform) a stored feature's window is its
-        newest partition. A transform loads its arguments through this
-        same builder (``_load_transform``) and enters as one more series.
-        The load is
+        newest partition holding a data file. A transform loads its
+        arguments through this same builder (``_load_transform``) and
+        enters as one more series. The load is
 
             union of the k slim scans, each tagged with its series name,
             pruned to its window, one value column per value type
-              → n = ts.plan_ranges(scans)  (plan-time size estimate)
+              → n = ts.plan_ranges(scans, seed scans)  (one task, one
+                    partition or wide, from the pruned scans' files and
+                    bytes; no Spark job)
               → one time-travel predicate
               → no freq: ts.ranged_long (k = 1: one range exchange on
                     time, dedup + sort in place) or ts.align (one range
                     exchange on time buckets, dedup + fill in place)
               → freq, per distinct window: ∪ one seed aggregate
                     groupBy(series) over the scans pruned to
-                    time <= from [_seed_rows] (explicit from_date only),
+                    time <= from and, without time travel, to two listed
+                    partitions (SparkStorage.seed_partitions) [_seed_rows]
+                    (explicit from_date only),
                     then ts.resample_long (one exchange on the grid cell,
                     dedup in place, then the answer-sized fill); one
                     window is the answer, more (and transforms) meet in
                     ts.align on the union of their grid times
 
-        Each shuffles its rows once, on a key that already orders the
-        answer, into one partition when the scans are small (see "Store
+        Each runs in one task with no exchange when the pruned scans fit
+        one, else shuffles its rows once, on a key that already orders the
+        answer, into one partition when their bytes fit one (see "Store
         read plan" in timeseries). Measured on the retrieve benchmark
         (4 shallow features, 1 deep; seed 1, local[4]) in Spark jobs, the
-        former per-feature join fold → n = shuffle partitions → n = 1:
-        ranged 4 → 3 → 2, time travel 4 → 3 → 2, resampled 9 → 4 → 3,
-        wide 8 → 4 → 3, align 13 → 5 → 2.
+        former per-feature join fold → n = shuffle partitions → n = 1 →
+        one task: ranged 4 → 3 → 2 → 1, time travel 4 → 3 → 2 → 1,
+        resampled 9 → 4 → 3 → 1, wide 8 → 4 → 3 → 1, align 13 → 5 → 2 → 1.
 
         A load of one transform is its output, unfilled: a null the
         function returns at a grid point stays null.
@@ -342,13 +351,15 @@ class FeatureStore:
             for name, pair in stored.items()
         }
 
-        def scan(name, lo, hi) -> DataFrame:
+        def scan(name, lo, hi, seed=False) -> DataFrame:
             nsp, nm = stored[name]
             meta, storage = metas[nsp, nm], self._storage(nsp)
             base = self._open_recorded(nsp, nm, meta)
-            if last_only and base is not None:
-                newest = storage.list_partitions(nm, reverse=True)[:1]
-                base = base.where(F.col("partition").isin(newest))
+            if base is not None and (last_only or (seed and not time_travel)):
+                # travel can hide whole partitions: its seed reads them all
+                upto = None if last_only else hi
+                parts = storage.seed_partitions(nm, upto, meta["partition"])
+                base = base.where(F.col("partition").isin(parts))
             return storage.scan(
                 nm, from_date=lo, to_date=hi, scheme=meta["partition"], base=base,
                 value_type=_value_type(meta),
@@ -378,12 +389,20 @@ class FeatureStore:
             _tagged(out, {name: F.col(ts.VALUE_COL)}, cols, vtypes, no_created)
             for name, out in outputs.items()
         ]
-        ranges = ts.plan_ranges(_union([*ranged.values(), *extra]))
-        if freq is None and len(names) == 1:
-            return ts.ranged_long(travelled(ranged[names[0]]), names[0], ranges)
         groups: dict[tuple, list[str]] = {}
         for name in stored:
             groups.setdefault(windows[name] if freq else None, []).append(name)
+        # the seed scans of each grid window after an explicit from_date
+        uptos = {
+            window: _union(tagged(n, scan(n, None, window[0], seed=True)) for n in group)
+            for window, group in groups.items()
+            if from_date is not None and window is not None and None not in window
+        }
+        ranges = ts.plan_ranges(
+            _union([*ranged.values(), *extra]), _union(uptos.values()) if uptos else None
+        )
+        if freq is None and len(names) == 1:
+            return ts.ranged_long(travelled(ranged[names[0]]), names[0], ranges)
         parts = []
         for window, group in groups.items():
             rows = travelled(_union(ranged[n] for n in group))
@@ -391,9 +410,9 @@ class FeatureStore:
                 parts.append(rows)
                 continue
             lo, hi = window
-            if from_date is not None:
-                upto = _union(tagged(n, scan(n, None, lo)) for n in group)
-                rows = rows.unionByName(_seed_rows(upto, time_travel, list(vtypes)))
+            if window in uptos:
+                seeds = _seed_rows(uptos[window], time_travel, list(vtypes), ranges)
+                rows = rows.unionByName(seeds)
             grid = ts.resample_long(rows, {n: cols[n] for n in group}, lo, hi, freq, ranges)
             if len(groups) == 1 and not outputs:
                 return grid
@@ -514,7 +533,10 @@ class FeatureStore:
         is ONE collect: the union of the members' newest-partition scans,
         tagged with the request index, under one `groupBy(i)` whose
         `max_by(value, (time, created_time))` is the latest version of the
-        newest row. k features of one type cost one job set, not k.
+        newest row. k features of one type cost one job set, not k: one
+        job of one task when their scans fit one (``ts.narrow``). The
+        newest partition is the newest holding a data file
+        (``SparkStorage.seed_partitions``).
         A transform feature is one load of the builder over its leaves'
         newest partitions, then the function."""
         pairs = unpack_feature_list(features)
@@ -536,7 +558,7 @@ class FeatureStore:
                 vals[i] = rows[0][join_name(*pair)] if rows else None
                 continue
             base = self._open_recorded(nsp, nm, meta)
-            parts = self._storage(nsp).list_partitions(nm, reverse=True)
+            parts = self._storage(nsp).seed_partitions(nm)
             if base is None or not parts:
                 continue  # no data: None
             newest = base.where(F.col("partition") == parts[0]).select(
@@ -547,7 +569,8 @@ class FeatureStore:
             groups.setdefault(vt, []).append(newest)
         latest = F.max_by(ts.VALUE_COL, F.struct(ts.TIME_COL, ts.CREATED_COL))
         for scans in groups.values():
-            for row in _union(scans).groupBy("__i").agg(latest.alias("v")).collect():
+            frame = ts.narrow(_union(scans))  # one task, no exchange, when it fits
+            for row in frame.groupBy("__i").agg(latest.alias("v")).collect():
                 vals[row["__i"]] = row["v"]
         out = {}
         for i, (pair, meta) in enumerate(zip(pairs, metas)):

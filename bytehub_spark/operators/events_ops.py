@@ -95,9 +95,12 @@ def resample_locf(events: DataFrame, freq: str = "1h") -> DataFrame:
     (one small bounds collect); every user gets all of it. ``ts.resample``
     then makes one plan with one hash exchange on ``user_id``: the dedup
     (latest ``event_id`` per user and ``ts``), the per-cell newest value,
-    each user's grid rows and the fill all run in place. No timed row:
-    no grid, an empty frame.
+    each user's grid rows and the fill all run in place. When ``events``
+    fits one task (``ts.narrow``) both run there with no exchange: two
+    Spark jobs of one task, and ``ts.resample`` does not measure it
+    again. No timed row: no grid, an empty frame.
     """
+    events = ts.narrow(events)  # one task, no exchange, for both jobs
     # as µs since the epoch: a collected timestamp is a naive datetime in
     # the driver's time zone, a naive request time a UTC instant
     instant = F.col("ts").cast("timestamp")

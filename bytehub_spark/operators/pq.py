@@ -192,7 +192,11 @@ def _adc_topk(
     )
     scored = codes.mapInPandas(score, schema=schema)
     order = [F.col("approx_dist2").asc(), F.col(id_col).asc()]
-    return _topk(scored, k, order).select("query_id", id_col, "approx_dist2", "rank")
+    return (
+        _topk(scored, k, order)
+        .select("query_id", id_col, "approx_dist2", "rank")
+        .orderBy("query_id", "rank")
+    )
 
 
 def pq_topk(

@@ -25,7 +25,8 @@ per vector primitive:
   name works.
 - ``_vec_stack`` / ``_cosine_matrix``: the float64 vector stack and the
   ``(A·Bᵀ) / (|A|·|B|)`` cosine matrix of every Arrow-batched GEMM path.
-- ``_topk``: the per-query ``row_number`` cut; ``_rerank``: cosine4
+- ``_topk``: the ``row_number`` cut per query (or per pair side: the
+  margin and kNN cuts under ``_pair_order``); ``_rerank``: cosine4
   scoring + ``_topk`` over a candidate frame (exact, LSH and IVF paths);
   ``_gemm_topk``: the broadcast-queries GEMM block (``cosine_topk_gemm``,
   ``hard_negatives``).
@@ -91,17 +92,22 @@ def _cosine_order() -> list[F.Column]:
     return [F.col("cosine_sim").desc(), F.col("neighbor_id").asc()]
 
 
-def _topk(scored: DataFrame, k: int, order: list) -> DataFrame:
-    """The first k rows of each query_id under ``order``: (query_id, rank,
-    the other columns), sorted by query_id and rank."""
-    w = Window.partitionBy("query_id").orderBy(*order)
-    rest = [c for c in scored.columns if c != "query_id"]
+def _topk(scored: DataFrame, k: int, order: list, key: str = "query_id") -> DataFrame:
+    """The first k rows of each ``key`` under ``order``: (key, rank, the
+    other columns), rank counting from 1."""
+    w = Window.partitionBy(key).orderBy(*order)
+    rest = [c for c in scored.columns if c != key]
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "rank", *rest)
-        .orderBy("query_id", "rank")
+        .select(key, "rank", *rest)
     )
+
+
+def _pair_order(other: str) -> list[F.Column]:
+    """The ranking rule of the margin and kNN cuts: quantized cosine
+    descending, ties to the lower ``other`` id."""
+    return [F.col("cos_u").desc(), F.col(other).asc()]
 
 
 def _query_vectors(
@@ -121,7 +127,7 @@ def _rerank(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
         F.col(id_col).alias("neighbor_id"),
         cosine4(F.col(vec_col), F.col("q_vec")).alias("cosine_sim"),
     )
-    return _topk(scored, k, _cosine_order())
+    return _topk(scored, k, _cosine_order()).orderBy("query_id", "rank")
 
 
 def cosine_topk(
@@ -198,7 +204,7 @@ def _gemm_topk(
     local = ensure_parallelism(embeddings.select(*cols)).mapInPandas(
         block, schema=schema
     )
-    return _topk(local, k, _cosine_order())
+    return _topk(local, k, _cosine_order()).orderBy("query_id", "rank")
 
 
 def cosine_topk_gemm(
@@ -896,13 +902,8 @@ def margin_pairs(
     # must combine to a global top-k first), but runs it ONCE: sum and
     # best-a come from one aggregation over the top-k rows instead of
     # two branches re-running the window.
-    wb = Window.partitionBy("b_id").orderBy(
-        F.col("cos_u").desc(), F.col("a_id").asc()
-    )
     bstats = (
-        parts.where("dir = 'b'")
-        .withColumn("r", F.row_number().over(wb))
-        .where(F.col("r") <= k)
+        _topk(parts.where("dir = 'b'"), k, _pair_order("a_id"), key="b_id")
         .groupBy("b_id")
         .agg(
             F.sum("cos_u").alias("sb"),
@@ -1077,15 +1078,8 @@ def margin_pairs_lsh(
     # (min_by under the same (cos_u desc, id asc) tie rule), replacing
     # the two-branch-per-side shape whose four consumers re-ran the
     # windows and needed three joins to reassemble (r14 opt).
-    wa = Window.partitionBy("a_id").orderBy(
-        F.col("cos_u").desc(), F.col("b_id").asc()
-    )
-    wb = Window.partitionBy("b_id").orderBy(
-        F.col("cos_u").desc(), F.col("a_id").asc()
-    )
     a_stats = (
-        scored.withColumn("r", F.row_number().over(wa))
-        .where(F.col("r") <= k)
+        _topk(scored, k, _pair_order("b_id"), key="a_id")
         .groupBy("a_id")
         .agg(
             F.sum("cos_u").alias("sa"),
@@ -1104,8 +1098,7 @@ def margin_pairs_lsh(
         )
     )
     b_stats = (
-        scored.withColumn("r", F.row_number().over(wb))
-        .where(F.col("r") <= k)
+        _topk(scored, k, _pair_order("a_id"), key="b_id")
         .groupBy("b_id")
         .agg(
             F.sum("cos_u").alias("sb"),
@@ -1376,10 +1369,8 @@ def _knn_rows(
         F.col(id_col).alias("b_id"), F.col("q").alias("qb"), F.col("nq").alias("nbb")
     )
     scored = _int_gemm_scored(cand, qa, qb)
-    w = Window.partitionBy("a_id").orderBy(F.col("cos_u").desc(), F.col("b_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        _topk(scored, k, _pair_order("b_id"), key="a_id")
         .select(
             F.col("a_id").alias(id_col),
             F.col("rank").cast("int").alias("rank"),

@@ -24,7 +24,7 @@ Scale design:
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,6 +116,9 @@ class SparkStorage:
         # invalidates (external writers bypass this — same staleness
         # contract as any cached file index; call invalidate() to refresh)
         self._open_cache: dict = {}
+        # (open() frame, its partitions holding a data file), kept while
+        # that frame is the memo: _indexed_partitions
+        self._partitions_cache: dict = {}
         # per-namespace credentials/conf reach the Hadoop connectors here
         # (reference threads storage_options into every fsspec call); s3a
         # options scope per-bucket (fs.s3a.bucket.<bucket>.*) so two
@@ -208,6 +211,46 @@ class SparkStorage:
             )
             for d in self._partition_dirs(root)
         }
+
+    def seed_partitions(self, name: str, upto=None, scheme: str = "date") -> list[str]:
+        """The partitions that can hold a feature's newest row at or before
+        ``upto`` (its newest row at all when None): ``upto``'s own and the
+        newest earlier one holding a data file (the newest holding one,
+        when None), from ``_indexed_partitions``.
+
+        Exact when every version is visible: a write creates a partition
+        directory only for rows it writes, every row of an earlier
+        partition is older than any row of a later one, and all versions
+        of a time share its partition. A partition holding only zero-row
+        files (no write here makes one) would hide the older ones. Time
+        travel can hide every row of a partition, so it needs the whole
+        history."""
+        parts = self._indexed_partitions(name)
+        if upto is None:
+            return parts[-1:]
+        own = partition_bound(upto, scheme)
+        return [own, *[p for p in parts if p < own][-1:]]
+
+    def _indexed_partitions(self, name: str) -> list[str]:
+        """Sorted partitions holding a data file in the file index of the
+        memoized ``open()`` frame, the one every scan reads: a
+        ``partition=`` directory without a data file (as a failed write may
+        leave) is not one, and a frame memoized before a write that skipped
+        ``invalidate()`` keeps what it holds. Once per memoized frame, from
+        the index's file list in one string: no listing, no Spark job."""
+        base = self.open(name)
+        cached = self._partitions_cache.get(name)
+        if cached is None or cached[0] is not base:
+            files = []
+            if base is not None:
+                wrap = self.spark._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
+                files = wrap(base._jdf.inputFiles()).mkString("\n").split("\n")
+            dirs = {unquote(f.rsplit("/", 2)[-2]) for f in files if f.count("/") > 1}
+            cached = base, sorted(
+                d.split("=", 1)[1] for d in dirs if d.startswith(f"{PARTITION_COL}=")
+            )
+            self._partitions_cache[name] = cached
+        return cached[1]
 
     # ------------------------------------------------------------------
     # S2 — append sink

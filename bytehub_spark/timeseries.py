@@ -35,7 +35,8 @@ driver process's time zone.
 
 Keyed resample. ``resample`` grids one series per key (e.g. per user) in
 one plan with one hash exchange, ``repartition(keys)`` (one partition when
-there is no key); every later step runs in place. The dedup window on
+there is no key), or none, ``coalesce(1)``, when its input fits one task
+(``narrow``); every later step runs in place. The dedup window on
 (keys, time) keeps each time's newest version; each row gets an integer
 grid cell as in ``resample_long`` (0 at or before from_date, rows past the
 last grid point in one cell no grid row reads); ``groupBy(keys, cell)``
@@ -48,24 +49,38 @@ grid, and no range-sampling job.
 Store read plan. Every feature-store load (``core.FeatureStore._read_plan``)
 takes k tagged long-format series (``__series``, time, created_time and
 one value column per distinct value type of the load: just ``value``
-when they share one) and shuffles their rows ONCE, on a key that already
-orders the answer, into n partitions. Each series aggregates from its
+when they share one) and shuffles their rows at most ONCE, on a key that
+already orders the answer, into n partitions. Each series aggregates from its
 own value column with one ``max_by``/``first`` over
 ``when(__series = name, ...)``, so a load may mix value types:
 
-- Width. ``plan_ranges`` gives n = 1 when Spark's plan-time size estimate
-  of the load's ranged scans (``optimizedPlan().stats().sizeInBytes``:
-  the partition-pruned file bytes of the memoized file index; no Spark
-  job) is at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
-  the size AQE would coalesce into about one partition anyway; else
-  n = ``spark.sql.shuffle.partitions``. At n = 1 the exchange is a
-  single partition: no range-sampling job, and every later window,
-  aggregate and sort (and, for the grid, the fill) runs in place. The
-  LOCF seed aggregate is left out of the estimate: without CBO Spark
-  sizes it like all the history before from_date, though it emits at
-  most one row per series per scan task.
-- ``ranged_long`` (one series, no freq): ``repartitionByRange(n, time)``;
-  the dedup window and ``orderBy(time)`` reuse that exchange.
+- Width. ``plan_ranges`` measures the load's ranged and LOCF seed scans
+  once, runs no Spark job and adds no setting: the partition-pruned file
+  bytes and file count of each physical file scan
+  (``FileSourceScanExec.selectedPartitions``, read from the memoized file
+  index; planning them costs about 20-28 ms on the driver), against
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the size AQE
+  coalesces into about one partition):
+  - one task (``ONE_TASK``) when the bytes plus files x
+    ``spark.sql.files.openCostInBytes`` fit. The exchange is then
+    ``coalesce(1)``, and so is the input of the seed aggregate below it:
+    one partition satisfies every later window, aggregate and sort, so
+    the load is one Spark job of one task.
+  - else n = 1 when the bytes fit. At n = 1 the exchange is a single
+    partition: no range-sampling job, and every later window, aggregate
+    and sort (and, for the grid, the fill) runs in place.
+  - else n = ``spark.sql.shuffle.partitions``.
+  Spark's plan-time estimate (``optimizedPlan().stats().sizeInBytes``)
+  is not used: for these path-based reads it is NOT partition-pruned but
+  the whole dataset's file bytes (the retrieve benchmark's deep feature:
+  466,172 B for a 4-day window and for the full scan alike, where the
+  pruned scans are 5 files / 126,152 B and 21 files / 524,444 B). The
+  seed scan reads two listed partitions per series
+  (``SparkStorage.seed_partitions``; all of them under time travel), so
+  it adds at most two files per series.
+- ``ranged_long`` (one series, no freq): ``repartitionByRange(n, time)``
+  (``coalesce(1)`` in one task, as every exchange below); the dedup
+  window and ``orderBy(time)`` reuse it.
 - ``resample_long`` (freq set; the series of one window): each row gets
   an integer grid cell (0 at or before from_date, else
   ``ceil((time - from) / step)`` in µs; rows past the last grid point are
@@ -88,7 +103,8 @@ own value column with one ``max_by``/``first`` over
   balances the buckets; rows outside it land in the first or last one.
 
 Wider than 1, each exchange keeps ``spark.sql.shuffle.partitions`` that
-AQE may coalesce.
+AQE may coalesce. Writes keep their exchange (``storage._write_partitioned``):
+a write's output file count is unknown before it runs.
 """
 
 from __future__ import annotations
@@ -133,26 +149,90 @@ def _shuffle_partitions(spark: SparkSession) -> int:
     return max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
 
 
-def plan_ranges(scans: DataFrame) -> int:
-    """Width of a store read plan over ``scans`` (its ranged scans, seed
-    aggregate left out): 1 when Spark's plan-time size estimate of them is
-    at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, else
-    ``spark.sql.shuffle.partitions``. See "Store read plan"."""
-    spark = scans.sparkSession
+# ``plan_ranges``' width of a load whose scans fit one task: no exchange,
+# ``coalesce(1)`` (see "Store read plan")
+ONE_TASK = 0
+
+
+def _sqlconf(spark: SparkSession, entry: str) -> int:
     sqlconf = spark._jvm.org.apache.spark.sql.internal.SQLConf
-    advisory = spark._jsparkSession.sessionState().conf().getConf(
-        sqlconf.ADVISORY_PARTITION_SIZE_IN_BYTES()
-    )
-    size = scans._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return 1 if size <= advisory else _shuffle_partitions(spark)
+    return spark._jsparkSession.sessionState().conf().getConf(getattr(sqlconf, entry)())
+
+
+def _input_size(df: DataFrame) -> tuple[int, int] | None:
+    """(bytes, files) read by ``df``: the partition-pruned file bytes and
+    file count of each file scan, plus the size estimate of every other
+    leaf (a cached frame, a local or empty relation); None when a leaf has
+    no estimate. Reads each file scan's ``selectedPartitions`` from the
+    physical plan (the memoized file index, pruned by the partition
+    filters): no Spark job, about 20-28 ms on the driver."""
+    nbytes = files = 0
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            listing = leaf.selectedPartitions()
+            nbytes += listing.totalFileSize()
+            files += listing.totalNumberOfFiles()
+        else:
+            link = leaf.logicalLink()
+            if not link.isDefined():
+                return None
+            nbytes += int(link.get().stats().sizeInBytes())
+    return nbytes, files
+
+
+def plan_ranges(scans: DataFrame, seeds: DataFrame | None = None) -> int:
+    """Width of a store read plan over its ranged ``scans`` and LOCF
+    ``seeds`` scans, from one measurement of what they read
+    (``_input_size``) against ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
+    ``ONE_TASK`` when the bytes plus files x
+    ``spark.sql.files.openCostInBytes`` fit it, else 1 when the bytes do,
+    else ``spark.sql.shuffle.partitions``. See "Store read plan"."""
+    spark = scans.sparkSession
+    size = _input_size(scans if seeds is None else scans.unionByName(seeds))
+    if size is not None:
+        nbytes, files = size
+        advisory = _sqlconf(spark, "ADVISORY_PARTITION_SIZE_IN_BYTES")
+        if nbytes + files * _sqlconf(spark, "FILES_OPEN_COST_IN_BYTES") <= advisory:
+            return ONE_TASK
+        if nbytes <= advisory:
+            return 1
+    return _shuffle_partitions(spark)
+
+
+def _coalesced(df: DataFrame) -> bool:
+    """True when ``df`` is one partition already: a ``coalesce(1)`` under
+    steps of one input that do not repartition."""
+    node = df._jdf.queryExecution().logical()
+    while node.children().size() == 1:
+        name = node.nodeName()
+        if name in ("Repartition", "RepartitionByExpression", "RebalancePartitions"):
+            return name == "Repartition" and node.numPartitions() == 1 and not node.shuffle()
+        node = node.children().head()
+    return False
+
+
+def narrow(df: DataFrame) -> DataFrame:
+    """``df`` in one task with no exchange, ``coalesce(1)``, when what it
+    reads fits one (``plan_ranges`` gives ``ONE_TASK``); else ``df``
+    unchanged, also when it is one partition already (``_coalesced``: not
+    measured again). A single partition satisfies every later window,
+    aggregate and sort."""
+    if _coalesced(df) or plan_ranges(df) != ONE_TASK:
+        return df
+    return df.coalesce(1)
 
 
 def _exchange(df: DataFrame, ranges: int, col: str, by_range=False) -> DataFrame:
-    """``df`` shuffled on ``col`` into one partition when ``ranges`` is 1
-    (a single partition: no range-sampling job, and every later window,
-    aggregate and sort runs in place), else into the
-    ``spark.sql.shuffle.partitions`` that ``plan_ranges`` returned, left
-    unnumbered because AQE coalesces no exchange given a partition count."""
+    """``df`` in the width ``plan_ranges`` gave: one task, no exchange, at
+    ``ONE_TASK`` (``coalesce(1)``: a single partition satisfies every later
+    window, aggregate and sort); shuffled on ``col`` into one partition at
+    1 (no range-sampling job, and every later step runs in place); else
+    into ``spark.sql.shuffle.partitions``, left unnumbered because AQE
+    coalesces no exchange given a partition count."""
+    if ranges == ONE_TASK:
+        return df.coalesce(1)
     width = (1, col) if ranges == 1 else (col,)
     return df.repartitionByRange(*width) if by_range else df.repartition(*width)
 
@@ -304,7 +384,8 @@ def resample(
     (keys, time). A time whose newest version is null carries the previous
     time's value. Every key of ``df`` gets the whole grid, nulls before
     its first value, even when none of its rows is in range. One hash
-    exchange on the keys; see "Keyed resample" in the module docstring.
+    exchange on the keys, none when ``df`` fits one task; see "Keyed
+    resample" in the module docstring.
     """
     keys = list(partition_by)
     value_cols = list(value_cols) if value_cols is not None else [
@@ -326,7 +407,9 @@ def resample(
             ),
         ),
     )
-    rows = df.repartition(*keys) if keys else df.repartition(1)
+    rows = narrow(df)
+    if not _coalesced(rows):
+        rows = df.repartition(*keys) if keys else df.repartition(1)
     if created_col is not None:
         rows = dedup_latest(rows, time_col, created_col, partition_by=keys)
     newest = [
@@ -453,10 +536,11 @@ def align(
     (``plan_ranges``); see "Store read plan" in the module docstring.
     """
     t0 = _micros(from_date)
-    step = max(1, (_micros(to_date) - t0) // ranges)
+    buckets = max(1, ranges)
+    step = max(1, (_micros(to_date) - t0) // buckets)
     # bucket i holds (t0 + i*step, t0 + (i+1)*step]; the ends take the rest
     pid = F.expr(
-        f"least({ranges - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
+        f"least({buckets - 1}, greatest(0, (unix_micros({TIME_COL}) - {t0 + 1}) div {step}))"
     )
     firsts = [
         F.first(F.when(_of(name), F.col(c)), ignorenulls=True).alias(name)

@@ -15,6 +15,21 @@ def spark():
 
 
 @pytest.fixture()
+def session_conf(spark):
+    """Sets session confs; the test's end restores them."""
+    saved = {}
+
+    def apply(confs):
+        for k, v in confs.items():
+            saved.setdefault(k, spark.conf.get(k, None))
+            spark.conf.set(k, v)
+
+    yield apply
+    for k, v in saved.items():
+        spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+@pytest.fixture()
 def fs(spark, tmp_path):
     """Fresh store: in-memory catalog + tmp data dir with one namespace."""
     store = FeatureStore(":memory:", spark=spark)

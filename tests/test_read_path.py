@@ -1,23 +1,26 @@
 """Store read path: building a load with explicit from/to launches no Spark
 job (the LOCF seed is part of the plan), running a ranged, gridded or
-aligned load costs a bounded number of jobs (one keyed exchange, one
-partition for a small load, also beside a never-saved feature), the one
-read plan matches hand-computed answers, the pandas model of the reference
-semantics (``read_model``, which stands in for the per-feature generic path
-the plan replaced) and its own wide (many-range) side, a load looks each
-feature up in the catalog once, last() runs one collect per stored value
-type, a refused Hadoop rename fails loudly and the os and Hadoop listings
-agree without scanning data."""
+aligned load costs a bounded number of jobs (one job of one task for a
+load whose pruned scans fit one, else one keyed exchange, one partition
+for a small load, also beside a never-saved feature), the seed scan reads
+two listed partitions, the one read plan matches hand-computed answers,
+the pandas model of the reference semantics (``read_model``, which stands
+in for the per-feature generic path the plan replaced) and its own
+one-partition and wide (many-range) sides, a load looks each feature up in
+the catalog once, last() runs one collect per stored value type, a refused
+Hadoop rename fails loudly and the os and Hadoop listings agree without
+scanning data."""
 
 import json
 import os
+import shutil
 
 import pandas as pd
 import pytest
 
 from bytehub_spark import timeseries as ts
 from bytehub_spark.exceptions import StorageError
-from bytehub_spark.storage import _rename
+from bytehub_spark.storage import SparkStorage, _rename
 from read_model import assert_matches, loaded, model
 
 T = pd.Timestamp
@@ -79,6 +82,8 @@ def test_exists_through_hadoop_matches_the_local_check(fs, spark):
     storage = fs._storage("test")
     os.makedirs(storage.feature_path("hollow"))
     os.makedirs(storage.feature_path("d") + "__compacting")  # a work dir, not a dataset
+    # an empty partition dir, as a failed write may leave: listed, no files
+    os.makedirs(os.path.join(storage.feature_path("d"), "partition=2024-01-02"))
     names = ["missing", "hollow", "d"]
 
     def listings():
@@ -97,8 +102,8 @@ def test_exists_through_hadoop_matches_the_local_check(fs, spark):
     assert remote == local == {
         "exists": [False, True, True],
         "ls": ["d", "hollow"],
-        "list_partitions": [[], [], ["2024-01-03", "2024-01-01"]],
-        "partition_file_counts": [{}, {}, {"2024-01-01": 2, "2024-01-03": 1}],
+        "list_partitions": [[], [], ["2024-01-03", "2024-01-02", "2024-01-01"]],
+        "partition_file_counts": [{}, {}, {"2024-01-01": 2, "2024-01-02": 0, "2024-01-03": 1}],
     }
 
 
@@ -107,11 +112,11 @@ def test_exists_through_hadoop_matches_the_local_check(fs, spark):
 # ---------------------------------------------------------------------------
 
 
-def _doubles(fs, k=3):
+def _doubles(fs, k=3, partition="date"):
     names = [f"test/f{i}" for i in range(k)]
     idx = pd.date_range("2024-01-01", periods=40, freq="9h")
     for i, name in enumerate(names):
-        fs.create_feature(name, partition="date")
+        fs.create_feature(name, partition=partition)
         fs.save_dataframe(
             pd.DataFrame(
                 {"time": idx, "created_time": idx, "value": [float(j + i) for j in range(40)]}
@@ -320,6 +325,110 @@ def test_ranged_load_without_freq_drops_the_seed(fs):
 
 
 # ---------------------------------------------------------------------------
+# the seed scan reads two listed partitions (all of them under time travel)
+# ---------------------------------------------------------------------------
+
+
+def _bound_deep(fs):
+    _deep_seed(fs)  # 50 days without a partition between seed and from
+    return {}, [1.0, 1.0, 2.0, 2.0], ["2024-02-20", "2024-01-01"]
+
+
+def _bound_at_from(fs):
+    _at_from(fs)  # the seed is from_date's own row
+    return {}, [5.0] * 4, ["2024-02-20", "2024-02-19"]
+
+
+def _bound_null_newest(fs):
+    # the newest version of the newest row before from is null: the seed
+    # is that null, not the older value one partition further back
+    _save(fs, "test/a", [
+        ("2024-02-18 06:00", "2024-02-18 06:00", 1.0),
+        ("2024-02-19 12:00", "2024-02-19 12:00", 2.0),
+        ("2024-02-19 12:00", "2024-02-19 13:00", None),
+        ("2024-02-20 03:00", "2024-02-20 03:00", 3.0),
+    ])
+    return {}, [None, None, 3.0, 3.0], ["2024-02-20", "2024-02-19"]
+
+
+def _bound_travel(fs):
+    # as of time + 1h every row of 2024-02-19 is unknown: the seed comes
+    # from 2024-02-17, read from the whole history
+    _save(fs, "test/a", [
+        ("2024-02-17 06:00", "2024-02-17 06:00", 1.0),
+        ("2024-02-19 08:00", "2024-02-25 00:00", 2.0),
+        ("2024-02-19 09:00", "2024-02-25 00:00", 2.5),
+        ("2024-02-20 03:00", "2024-02-20 03:00", 3.0),
+    ])
+    return {"time_travel": "1h"}, [1.0, 1.0, 3.0, 3.0], None
+
+
+def _bound_year(fs):
+    fs.create_feature("test/a", partition="year")
+    _save(fs, "test/a", [
+        ("2022-06-01 00:00", "2022-06-01 00:00", 1.0),
+        ("2024-02-20 03:00", "2024-02-20 03:00", 2.0),
+    ])
+    return {}, [1.0, 1.0, 2.0, 2.0], ["2024", "2022"]
+
+
+def _bound_failed_write(fs):
+    # a failed write left empty partition dirs between seed and from
+    _save(fs, "test/a", [
+        ("2024-02-10 00:00", "2024-02-10 00:00", 4.0),
+        ("2024-02-20 05:00", "2024-02-20 05:00", 6.0),
+    ])
+    root = fs._storage("test").feature_path("a")
+    for day in ("2024-02-19", "2024-02-15"):
+        os.makedirs(os.path.join(root, f"partition={day}"))
+    return {}, [4.0, 4.0, 4.0, 6.0], ["2024-02-20", "2024-02-10"]
+
+
+def _bound_stale_memo(fs):
+    # a writer that skipped invalidate() added a partition between seed and
+    # from after the open() frame was memoized: the seed partitions come
+    # from that frame's file index, so its own older partition stays in
+    _save(fs, "test/a", [
+        ("2024-02-10 00:00", "2024-02-10 00:00", 4.0),
+        ("2024-02-20 05:00", "2024-02-20 05:00", 6.0),
+    ])
+    fs.load_dataframe("test/a", **LOAD).toPandas()  # memoizes the open() frame
+    root = fs._storage("test").feature_path("a")
+    shutil.copytree(os.path.join(root, "partition=2024-02-10"),
+                    os.path.join(root, "partition=2024-02-15"))
+    return {}, [4.0, 4.0, 4.0, 6.0], ["2024-02-20", "2024-02-10"]
+
+
+BOUND_CASES = {
+    "deep": _bound_deep,
+    "at_from": _bound_at_from,
+    "null_newest": _bound_null_newest,
+    "travel_hides_partition": _bound_travel,
+    "year": _bound_year,
+    "failed_write_dir": _bound_failed_write,
+    "stale_memo": _bound_stale_memo,
+}
+
+
+@pytest.mark.parametrize("case", sorted(BOUND_CASES))
+def test_seed_scan_reads_two_listed_partitions(fs, monkeypatch, case):
+    kw, want, parts = BOUND_CASES[case](fs)
+    listed = []
+    orig = SparkStorage.seed_partitions
+
+    def spy(self, *a):
+        listed.append(orig(self, *a))
+        return listed[-1]
+
+    monkeypatch.setattr(SparkStorage, "seed_partitions", spy)
+    got = loaded(fs.load_dataframe("test/a", **LOAD, **kw))
+    assert listed == ([] if parts is None else [parts])
+    assert list(got.index) == list(GRID)
+    assert [None if pd.isna(v) else v for v in got["test/a"]] == want
+    assert_matches(got, model(fs, "test/a", **LOAD, **kw))
+
+
+# ---------------------------------------------------------------------------
 # batched last() == the per-feature last_row answers
 # ---------------------------------------------------------------------------
 
@@ -340,6 +449,9 @@ def test_last_matches_per_feature_last_row(fs):
         ("2024-01-04", "2024-01-04", {"x": 2.0, "y": "q"}),
     ])
     fs.create_feature("test/e", partition="date")
+    # a failed write's empty newest partition dir: last() and the
+    # transform's newest-partition load both pass over it
+    os.makedirs(os.path.join(fs._storage("test").feature_path("d"), "partition=2024-02-01"))
 
     @fs.transform("test/t", from_features=["test/d"])
     def doubled(df):
@@ -362,8 +474,33 @@ def test_last_matches_per_feature_last_row(fs):
 
 
 # ---------------------------------------------------------------------------
-# execution jobs: one keyed exchange per ranged, gridded or aligned load
+# execution jobs: one task, else one keyed exchange per load
 # ---------------------------------------------------------------------------
+
+# the read plan's three widths (``ts.plan_ranges``) and the session confs
+# that force each: the defaults give one task to these small loads; an
+# open cost per file above the advisory size leaves one partition (the
+# pruned bytes still fit); a one-byte advisory size, many partitions
+ONE_PARTITION_SIDE = {"spark.sql.files.openCostInBytes": str(1 << 30)}
+WIDE_SIDE = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1",
+    "spark.sql.shuffle.partitions": "4",
+}
+TIERS = {"one_task": ({}, ts.ONE_TASK), "one_partition": (ONE_PARTITION_SIDE, 1),
+         "wide": (WIDE_SIDE, 4)}
+
+
+def _widths(monkeypatch) -> list:
+    """The widths ``ts.plan_ranges`` returns from now on."""
+    widths = []
+    orig = ts.plan_ranges
+
+    def spy(*a):
+        widths.append(orig(*a))
+        return widths[-1]
+
+    monkeypatch.setattr(ts, "plan_ranges", spy)
+    return widths
 
 
 @pytest.mark.parametrize(
@@ -371,8 +508,11 @@ def test_last_matches_per_feature_last_row(fs):
     [("ranged", 2), ("travel", 2), ("resampled", 3), ("wide", 3), ("align", 2),
      ("never_saved", 2), ("never_saved_freq", 3)],
 )
-def test_execution_jobs_per_load(fs, spark, shape, limit):
-    names = _doubles(fs, k=4)
+def test_execution_jobs_per_load(fs, spark, monkeypatch, session_conf, shape, limit):
+    """One job when the load fits one task (one yearly file per feature:
+    every load here, seeds included); at most ``limit`` on one partition,
+    its keyed exchange plus a grid's seed aggregate."""
+    names = _doubles(fs, k=4, partition="year")
     # created, never saved: its empty scan must not make the plan wide
     fs.create_feature("test/never", partition="date")
     feats, kw = {
@@ -385,12 +525,19 @@ def test_execution_jobs_per_load(fs, spark, shape, limit):
         "never_saved_freq": ([names[0], "test/never"], {"freq": "1h"}),
     }[shape]
     load = lambda: fs.load_dataframe(feats, **RANGE, **kw)  # noqa: E731
-    load().toPandas()  # open() memos warm, as in a steady read loop
-    df = load()
-    j0 = _next_job(spark)
-    df.toPandas()
-    jobs = _next_job(spark) - j0
-    assert 0 < jobs <= limit, f"{shape}: {jobs} Spark jobs to run the load"
+    widths = _widths(monkeypatch)
+
+    def run(tier):
+        session_conf(TIERS[tier][0])
+        load().toPandas()  # open() memos warm, as in a steady read loop
+        df = load()
+        j0 = _next_job(spark)
+        df.toPandas()
+        return widths[-1], _next_job(spark) - j0
+
+    assert run("one_task") == (ts.ONE_TASK, 1), shape
+    width, jobs = run("one_partition")
+    assert width == 1 and 0 < jobs <= limit, f"{shape}: {jobs} Spark jobs to run the load"
 
 
 # ---------------------------------------------------------------------------
@@ -556,51 +703,70 @@ WIDTH_CASES = {
     "serialized": ("test/s", {}),
     "null_newest": ("test/a", {}),
 }
-# a one-byte advisory size sends every load to the many-range side
-WIDE_SIDE = {
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1",
-    "spark.sql.shuffle.partitions": "4",
-}
 
 
 @pytest.mark.parametrize("case", sorted(WIDTH_CASES))
-def test_many_ranges_equal_one_range(fs, spark, monkeypatch, case):
+def test_many_ranges_equal_one_range(fs, spark, monkeypatch, session_conf, case):
+    """One task, one partition and many ranges give one answer."""
     _width_store(fs)
     feats, kw = WIDTH_CASES[case]
-    widths = []
-    orig = ts.plan_ranges
+    widths = _widths(monkeypatch)
 
-    def spy(scans):
-        widths.append(orig(scans))
-        return widths[-1]
-
-    monkeypatch.setattr(ts, "plan_ranges", spy)
-
-    def load():
+    def load(tier):
+        session_conf(TIERS[tier][0])
         j0 = _next_job(spark)
         df = fs.load_dataframe(
             feats, from_date="2024-02-20 00:00", to_date="2024-02-20 06:00", **kw
         )
         assert _next_job(spark) == j0, "a Spark job while building the plan"
-        return df.toPandas()
+        out = df.toPandas()
+        return out, _next_job(spark) - j0
 
-    one = load()
-    saved = {k: spark.conf.get(k, None) for k in WIDE_SIDE}
-    for k, v in WIDE_SIDE.items():
-        spark.conf.set(k, v)
-    try:
-        many = load()
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
-    assert widths == [1, 4]
+    (one, jobs), (part, _), (many, _) = (load(t) for t in TIERS)
+    assert widths == [w for _, w in TIERS.values()]
+    assert jobs == 1  # the one-task plan
     assert len(one) > 1
+    pd.testing.assert_frame_equal(one, part)
     pd.testing.assert_frame_equal(one, many)
     if case == "null_newest":  # no fill without freq
         got = one.set_index("time")["test/a"]
         assert list(got.index) == [T(t) for t in ("2024-02-20 01:00", "2024-02-20 02:00",
                                                   "2024-02-20 05:30")]
         assert got.iloc[0] == 2.0 and pd.isna(got.iloc[1]) and got.iloc[2] == 5.0
+
+
+def test_narrow_window_is_judged_on_its_pruned_files(fs, spark, monkeypatch, session_conf):
+    """A two-day window of a 30-day feature fits one task (one partition
+    past one task's file budget) under an advisory size below the whole
+    dataset's bytes, which is what Spark's plan-time estimate reads for
+    it: both widths read the pruned scan."""
+    _save(fs, "test/a", [
+        (t, t, float(i)) for i, t in enumerate(pd.date_range("2024-01-01", periods=120, freq="6h"))
+    ])
+    root = fs._storage("test").feature_path("a")
+    total = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, files in os.walk(root) for f in files
+        if f.endswith(".parquet")
+    )
+    window = dict(from_date="2024-01-10 00:00", to_date="2024-01-11 12:00")
+    want = model(fs, "test/a", **window)
+    session_conf({
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(total // 2),
+    })
+    widths = _widths(monkeypatch)
+    df = fs.load_dataframe("test/a", **window)
+    scans = fs._storage("test").scan("a", **window)
+    estimate = scans._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert estimate > total // 2  # the estimate alone would plan it wide
+    assert widths == [ts.ONE_TASK]
+    assert_matches(loaded(df), want)
+    # past one task's file budget, the one-partition side reads the same
+    # pruned bytes
+    session_conf({"spark.sql.files.openCostInBytes": str(total)})
+    df = fs.load_dataframe("test/a", **window)
+    assert widths == [ts.ONE_TASK, 1]
+    assert_matches(loaded(df), want)
 
 
 @pytest.mark.parametrize("freq", ["45s", "7min", "5h", "1d", "1w"])
