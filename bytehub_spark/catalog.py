@@ -297,13 +297,17 @@ class Catalog:
                     f"Feature {namespace}/{name} does not exist"
                 )
             new_meta = _merge_meta(json.loads(row["meta"]), meta)
+            # a new transform drops the output type recorded for the old one
             con.execute(
                 "UPDATE features SET description = COALESCE(?, description),"
-                " transform = COALESCE(?, transform), meta = ?, version = version + 1"
+                " transform = COALESCE(?, transform),"
+                " value_schema = CASE WHEN ? THEN NULL ELSE value_schema END,"
+                " meta = ?, version = version + 1"
                 " WHERE namespace = ? AND name = ?",
                 (
                     description,
                     json.dumps(transform) if transform is not None else None,
+                    transform is not None,
                     json.dumps(new_meta),
                     namespace,
                     name,
@@ -311,11 +315,14 @@ class Catalog:
             )
 
     def set_value_schema(self, namespace: str, name: str, schema_json: str) -> None:
-        """Record the stored value column's Spark DataType (json form).
+        """Record the stored value column's Spark DataType (json form); of
+        a transform, its output type.
 
         Internal bookkeeping written by the save path so reads can skip
-        parquet schema inference — deliberately does NOT bump the feature
-        version (it's derived state, not a user-visible metadata change).
+        parquet schema inference, and by a transform's first load so later
+        builds skip the type sample — deliberately does NOT bump the
+        feature version (it's derived state, not a user-visible metadata
+        change). A new transform clears it (``update_feature``).
         """
         con = self._con()
         with self._lock, con:

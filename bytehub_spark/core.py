@@ -478,8 +478,11 @@ class FeatureStore:
         are byte-identical before/after; run it off the write path like
         a Delta OPTIMIZE."""
         nsp, nm = split_name(name)
-        if self.catalog.get_feature(nsp, nm) is None:
+        meta = self.catalog.get_feature(nsp, nm)
+        if meta is None:
             raise MissingFeatureException(f"No such feature {name!r}")
+        # opened with the recorded type: the rewrite runs no inference job
+        self._open_recorded(nsp, nm, meta)
         return self._storage(nsp).compact(nm, max_files_per_partition)
 
     def sql(
@@ -624,10 +627,11 @@ class FeatureStore:
 
         Each feature contributes ONE scan of slim `(i, time)` rows; the
         scans union (narrow — no per-branch query stage) into a single
-        `groupBy(i)` computing min/max, so the prepass is one shuffle and
-        2-3 scheduler jobs under AQE regardless of k. With both bounds
-        given it runs no job. Transform features are skipped (their leaves
-        load recursively with their own ranges).
+        `groupBy(i)` computing min/max, regardless of k: one Spark job of
+        one task, with no exchange, when the scans fit one (``ts.narrow``),
+        else one shuffle and 2-3 scheduler jobs under AQE. With both
+        bounds given it runs no job. Transform features are skipped (their
+        leaves load recursively with their own ranges).
         """
         stored = [p for p in metas if metas[p] is not None and not metas[p]["transform"]]
         # open() builds a fresh parquet file index per feature; warm all
@@ -662,7 +666,8 @@ class FeatureStore:
             # µs since the epoch: a collected timestamp is a naive datetime
             # in the driver's time zone, a naive request time a UTC instant
             aggs = [F.unix_micros(f(ts.TIME_COL)) for f in (F.min, F.max)]
-            for i, *us in _union(branches).groupBy("__i").agg(*aggs).collect():
+            rows = ts.narrow(_union(branches))  # one task, no exchange, when it fits
+            for i, *us in rows.groupBy("__i").agg(*aggs).collect():
                 bounds[pairs[i]] = tuple(
                     None if t is None else pd.Timestamp(t, unit="us", tz="UTC") for t in us
                 )
@@ -701,7 +706,8 @@ class FeatureStore:
     ) -> DataFrame:
         """A transform's output (time, value): its arguments as one load of
         ``_read_plan`` (one argument unfilled, more carried forward on the
-        union of their times), then the function per batch."""
+        union of their times), then the function per batch. The output
+        type is sampled (2-3 Spark jobs) only until it is recorded."""
         if not self.enable_transforms:
             raise TransformError(
                 "Transforms are disabled on this store (enable_transforms=False)"
@@ -716,27 +722,36 @@ class FeatureStore:
             callers, last_only,
         )
 
-        # Infer output type by applying fn to a small driver-side sample
-        sample = wide.limit(100).toPandas().set_index(ts.TIME_COL)
-        sample = sample[args] if args else sample
-        try:
-            sample_out = fn(sample)
-        except Exception as e:
-            raise TransformError(f"Transform function failed on sample: {e}") from e
-        if isinstance(sample_out, pd.DataFrame):
-            if sample_out.shape[1] != 1:
+        # The output type: the one recorded in the transform's catalog
+        # entry (no Spark job), else fn's output on a driver-side sample,
+        # recorded once the sample shows a value (transform() clears it)
+        value_type = _value_type(meta)
+        if value_type is None:
+            sample = wide.limit(100).toPandas().set_index(ts.TIME_COL)
+            sample = sample[args] if args else sample
+            try:
+                sample_out = fn(sample)
+            except Exception as e:
+                raise TransformError(f"Transform function failed on sample: {e}") from e
+            if isinstance(sample_out, pd.DataFrame):
+                if sample_out.shape[1] != 1:
+                    raise TransformError(
+                        "Transform must return a single column "
+                        f"(got {sample_out.shape[1]})"
+                    )
+                out_dtype = sample_out.iloc[:, 0]
+            elif isinstance(sample_out, pd.Series):
+                out_dtype = sample_out
+            else:
                 raise TransformError(
-                    "Transform must return a single column "
-                    f"(got {sample_out.shape[1]})"
+                    "Transform must return a pandas DataFrame or Series"
                 )
-            out_dtype = sample_out.iloc[:, 0]
-        elif isinstance(sample_out, pd.Series):
-            out_dtype = sample_out
-        else:
-            raise TransformError(
-                "Transform must return a pandas DataFrame or Series"
-            )
-        value_type = _pandas_dtype_to_spark(out_dtype)
+            value_type = _pandas_dtype_to_spark(out_dtype)
+            if out_dtype.notna().any():
+                meta["value_schema"] = value_type.json()
+                self.catalog.set_value_schema(
+                    meta["namespace"], meta["name"], meta["value_schema"]
+                )
 
         out_schema = T.StructType(
             [

@@ -13,12 +13,16 @@ Scale design:
   pruning; read() derives partition predicates from the time range so scans
   at 100 TB touch only the needed days/years.
 - time-range predicates are pushed to the parquet row-group stats.
-- appends write through `partitionBy("partition")` so ingest is append-only
-  and parallel, one file per touched partition per append
-  (`_write_partitioned`); compact() rewrites partitions that many appends
-  fragmented, swapping them in by directory renames (a table format —
-  Delta/Iceberg, `backends.py` — does it ACID when its jars are on the
-  classpath).
+- appends write through `partitionBy("partition")` so ingest is append-only,
+  one file per touched partition per append (`_write_partitioned`): a
+  write that fits one task (its scan by `ts.narrow`'s rule, its bytes
+  under AQE's one-partition size) runs as one task with no exchange,
+  which sorts by partition and so writes one file per partition too (a
+  20-row save: one Spark job, was a shuffle-map job and a write job);
+  a larger one shuffles on `partition` and writes in parallel. compact()
+  rewrites partitions that many appends fragmented, swapping them in by
+  directory renames (a table format — Delta/Iceberg, `backends.py` — does
+  it ACID when its jars are on the classpath).
 """
 
 from __future__ import annotations
@@ -260,14 +264,34 @@ class SparkStorage:
         """``df`` (with its ``partition`` column) as Hive-partitioned
         parquet at ``path``, one file per partition.
 
-        Without the repartition every task writes a sliver into every
-        partition dir — a daily-partitioned multi-year series exploded
-        into ~80k tiny files (measured: 40s save / 14s ranged load at 600k
-        rows; 4s / <1s after). maxRecordsPerFile re-splits genuinely large
-        partitions."""
+        A write that fits one task runs in one, ``coalesce(1)``: its scan
+        fits one task (``ts.narrow``) and its bytes are at most what AQE
+        would coalesce the exchange's output into one partition anyway
+        (``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB,
+        under ``parallelismFirst``, the default; else the advisory size),
+        so no write parallelism is lost. The one task sorts its rows by
+        partition before writing, so it too writes one file per partition:
+        a 20-row save is one Spark job of one task, not a shuffle-map job
+        and a write job. A frame without a size estimate (an RDD-backed
+        one) keeps the exchange.
+
+        Any larger write shuffles on ``partition``: without that every
+        task writes a sliver into every partition dir — a daily-partitioned
+        multi-year series exploded into ~80k tiny files (measured: 40s
+        save / 14s ranged load at 600k rows; 4s / <1s after).
+        maxRecordsPerFile re-splits genuinely large partitions."""
+        spark = df.sparkSession
+        parallelism_first = ts._sqlconf(spark, "COALESCE_PARTITIONS_PARALLELISM_FIRST")
+        budget = ts._sqlconf(
+            spark,
+            "COALESCE_PARTITIONS_MIN_PARTITION_SIZE" if parallelism_first
+            else "ADVISORY_PARTITION_SIZE_IN_BYTES",
+        )
+        df = ts.narrow(df, budget)
+        if not ts._coalesced(df):
+            df = df.repartition(F.col(PARTITION_COL))
         (
-            df.repartition(F.col(PARTITION_COL))
-            .write.mode(mode)
+            df.write.mode(mode)
             .option("maxRecordsPerFile", 5_000_000)
             .partitionBy(PARTITION_COL)
             .parquet(path)

@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import timeseries as ts
 from ..plans.iterate import eager_checkpoint
 
 EVENTS_SCHEMA = T.StructType(
@@ -884,7 +885,14 @@ class Monitor:
     """Base of the streaming monitors (see the module docstring for the
     contract). Subclasses implement ``_update(batch_df, epoch_id)`` and
     ``_result()``, and set ``ADDITIVE = True`` when their merge would
-    double-count a re-delivered epoch."""
+    double-count a re-delivered epoch.
+
+    ``process_batch`` hands ``_update`` the batch through ``ts.narrow``:
+    a micro-batch whose files fit one task is ``coalesce(1)``, so each of
+    the monitor's per-batch jobs runs as one task with no exchange (a
+    Count-Min batch of the ingest benchmark: 1 job, was 2). Larger
+    batches are unchanged. Every merge is over the batch's whole rows,
+    never its partitioning, so stream == batch holds either way."""
 
     ADDITIVE = False
     # class-level defaults; the first write shadows them per instance
@@ -911,7 +919,7 @@ class Monitor:
         # epoch_id after a restart, so equality is the replay test
         if self.ADDITIVE and epoch_id is not None and epoch_id == self._last_epoch:
             return
-        self._update(batch_df, epoch_id)
+        self._update(ts.narrow(batch_df), epoch_id)
         self.n_batches += 1
         self._last_epoch = epoch_id
 

@@ -103,8 +103,19 @@ own value column with one ``max_by``/``first`` over
   balances the buckets; rows outside it land in the first or last one.
 
 Wider than 1, each exchange keeps ``spark.sql.shuffle.partitions`` that
-AQE may coalesce. Writes keep their exchange (``storage._write_partitioned``):
-a write's output file count is unknown before it runs.
+AQE may coalesce.
+
+Writes take the same one-task rule (``storage._write_partitioned``, with
+``narrow``'s ``budget``): a write runs as one task, ``coalesce(1)``, when
+its scan fits one and its bytes are at most what AQE would coalesce the
+write's exchange into one partition anyway
+(``spark.sql.adaptive.coalescePartitions.minPartitionSize``, 1 MB, under
+the default ``parallelismFirst``; else the advisory size). The one task
+sorts by partition before it writes, so the file count is the
+exchange's: one file per partition. Measured on the ingest benchmark
+(seed 1, local[4], jobs/stages/tasks per op): save and backfill 2/3/5 →
+1/1/1, compact 2/3/4 → 1/1/1. Monitor micro-batches take ``narrow`` too
+(``streaming.Monitor``).
 """
 
 from __future__ import annotations
@@ -182,19 +193,24 @@ def _input_size(df: DataFrame) -> tuple[int, int] | None:
     return nbytes, files
 
 
-def plan_ranges(scans: DataFrame, seeds: DataFrame | None = None) -> int:
+def plan_ranges(
+    scans: DataFrame, seeds: DataFrame | None = None, budget: int | None = None
+) -> int:
     """Width of a store read plan over its ranged ``scans`` and LOCF
     ``seeds`` scans, from one measurement of what they read
     (``_input_size``) against ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
     ``ONE_TASK`` when the bytes plus files x
-    ``spark.sql.files.openCostInBytes`` fit it, else 1 when the bytes do,
-    else ``spark.sql.shuffle.partitions``. See "Store read plan"."""
+    ``spark.sql.files.openCostInBytes`` fit it (and the bytes fit
+    ``budget``, when given), else 1 when the bytes fit it, else
+    ``spark.sql.shuffle.partitions``. See "Store read plan"."""
     spark = scans.sparkSession
     size = _input_size(scans if seeds is None else scans.unionByName(seeds))
     if size is not None:
         nbytes, files = size
         advisory = _sqlconf(spark, "ADVISORY_PARTITION_SIZE_IN_BYTES")
-        if nbytes + files * _sqlconf(spark, "FILES_OPEN_COST_IN_BYTES") <= advisory:
+        if nbytes + files * _sqlconf(spark, "FILES_OPEN_COST_IN_BYTES") <= advisory and (
+            budget is None or nbytes <= budget
+        ):
             return ONE_TASK
         if nbytes <= advisory:
             return 1
@@ -213,13 +229,13 @@ def _coalesced(df: DataFrame) -> bool:
     return False
 
 
-def narrow(df: DataFrame) -> DataFrame:
+def narrow(df: DataFrame, budget: int | None = None) -> DataFrame:
     """``df`` in one task with no exchange, ``coalesce(1)``, when what it
-    reads fits one (``plan_ranges`` gives ``ONE_TASK``); else ``df``
-    unchanged, also when it is one partition already (``_coalesced``: not
-    measured again). A single partition satisfies every later window,
-    aggregate and sort."""
-    if _coalesced(df) or plan_ranges(df) != ONE_TASK:
+    reads fits one (``plan_ranges`` gives ``ONE_TASK``; with ``budget``,
+    its bytes must also fit that many); else ``df`` unchanged, also when
+    it is one partition already (``_coalesced``: not measured again). A
+    single partition satisfies every later window, aggregate and sort."""
+    if _coalesced(df) or plan_ranges(df, budget=budget) != ONE_TASK:
         return df
     return df.coalesce(1)
 

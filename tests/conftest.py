@@ -30,6 +30,32 @@ def session_conf(spark):
 
 
 @pytest.fixture()
+def spark_work(spark):
+    """``spark_work(fn)`` calls ``fn`` and returns (Spark jobs, tasks run)
+    of the jobs it started, read from the status tracker once the listener
+    bus has caught up (as ``perfbench/run.py``'s ``_spark_work``);
+    ``fn``'s return value is kept as ``spark_work.result``."""
+    sc = spark.sparkContext
+
+    def next_job() -> int:
+        return sc._jsc.sc().dagScheduler().nextJobId()
+
+    def work(fn):
+        j0 = next_job()
+        work.result = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        status, jobs, tasks = sc.statusTracker(), range(j0, next_job()), 0
+        for j in jobs:
+            job = status.getJobInfo(j)
+            for s in job.stageIds if job else ():
+                stage = status.getStageInfo(s)
+                tasks += stage.numCompletedTasks if stage else 0
+        return len(jobs), tasks
+
+    return work
+
+
+@pytest.fixture()
 def fs(spark, tmp_path):
     """Fresh store: in-memory catalog + tmp data dir with one namespace."""
     store = FeatureStore(":memory:", spark=spark)

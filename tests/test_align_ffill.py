@@ -54,28 +54,17 @@ def _model(pdf, types):
     return wide.reset_index()
 
 
-def _next_job(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 @pytest.mark.parametrize("advisory", [None, "1"])
-def test_align_ffill_types_matches_the_model(spark, tmp_path, advisory):
+def test_align_ffill_types_matches_the_model(spark, tmp_path, session_conf, spark_work, advisory):
     """The null newest click hour carries the click before it, "refund"
     has no rows: a null column. The one-bucket plan builds without a
     Spark job; a one-byte advisory size takes the many-bucket side."""
     pdf, events = _events(spark, tmp_path / "events")
     types = ("click", "purchase", "refund")
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    saved = spark.conf.get(key, None)
     if advisory is not None:
-        spark.conf.set(key, advisory)
-    try:
-        j0 = _next_job(spark)
-        out = events_ops.align_ffill_types(events, types)
-        built = _next_job(spark) - j0
-        got = out.toPandas()
-    finally:
-        spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
+        session_conf({"spark.sql.adaptive.advisoryPartitionSizeInBytes": advisory})
+    built, _ = spark_work(lambda: events_ops.align_ffill_types(events, types))
+    got = spark_work.result.toPandas()
     if advisory is None:
         assert built == 0, f"{built} Spark job(s) while building the plan"
     want = _model(pdf, types)

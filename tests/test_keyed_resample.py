@@ -128,10 +128,6 @@ def test_resample_locf_matches_the_model(spark):
     _assert_equal(_sorted(got.toPandas()), model(rows, lo, hi, "1h"))
 
 
-def _next_job(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 # a one-byte advisory size sends the kernel to its keyed exchange (as in
 # test_read_path)
 WIDE_SIDE = {
@@ -140,13 +136,16 @@ WIDE_SIDE = {
 }
 
 
-def _run_twice(spark, events):
+def _run_twice(spark_work, events):
     """(the second run's Spark jobs, its executed plan)."""
-    events_ops.resample_locf(events, "1h").write.format("noop").mode("overwrite").save()
-    j0 = _next_job(spark)
-    out = events_ops.resample_locf(events, "1h")
-    out.write.format("noop").mode("overwrite").save()
-    return _next_job(spark) - j0, executed_plan(out)
+    def run():
+        out = events_ops.resample_locf(events, "1h")
+        out.write.format("noop").mode("overwrite").save()
+        return out
+
+    run()
+    jobs, _ = spark_work(run)
+    return jobs, executed_plan(spark_work.result)
 
 
 @pytest.fixture()
@@ -158,26 +157,28 @@ def cached_events(spark):
     events.unpersist()
 
 
-def test_resample_locf_runs_in_one_task(spark, cached_events, monkeypatch):
+def test_resample_locf_runs_in_one_task(spark_work, cached_events, monkeypatch):
     """A cached input that fits one task: the bounds collect and the plan
     run with no exchange, one job each, and the input's size is measured
     once per call (``ts.resample`` finds it coalesced already)."""
     widths = []
     orig = ts.plan_ranges
-    monkeypatch.setattr(ts, "plan_ranges", lambda *a: widths.append(orig(*a)) or widths[-1])
-    jobs, plan = _run_twice(spark, cached_events)
+    monkeypatch.setattr(
+        ts, "plan_ranges", lambda *a, **k: widths.append(orig(*a, **k)) or widths[-1]
+    )
+    jobs, plan = _run_twice(spark_work, cached_events)
     assert widths == [ts.ONE_TASK] * 2  # one per run
     assert 0 < jobs <= 2, f"{jobs} Spark jobs"
     assert "Exchange" not in plan, plan
     assert "CartesianProduct" not in plan and "NestedLoopJoin" not in plan
 
 
-def test_resample_locf_runs_one_keyed_exchange(spark, cached_events, session_conf):
+def test_resample_locf_runs_one_keyed_exchange(spark_work, cached_events, session_conf):
     """Wider than one task: the bounds collect and one plan with one hash
     exchange on user_id: at most 4 Spark jobs (the persist, key list and
     cross join form ran 6 here), and no cartesian product."""
     session_conf(WIDE_SIDE)
-    jobs, plan = _run_twice(spark, cached_events)
+    jobs, plan = _run_twice(spark_work, cached_events)
     assert 0 < jobs <= 4, f"{jobs} Spark jobs"
     assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
     assert "CartesianProduct" not in plan and "NestedLoopJoin" not in plan

@@ -201,29 +201,25 @@ WIDE_SIDE = {
 
 
 @pytest.mark.parametrize("freq", ["1h", None])
-def test_all_transform_open_range_answer_ignores_the_bucket_span(fs, spark, freq):
+def test_all_transform_open_range_answer_ignores_the_bucket_span(fs, session_conf, freq):
     """Such a load knows no span for align's buckets; its answer on
     many ranges equals the one-range answer and the model."""
     _store(fs)
     feats = ["test/sum", "test/gap"]
     one = _pin(fs, feats, freq=freq)
-    saved = {k: spark.conf.get(k, None) for k in WIDE_SIDE}
-    for k, v in WIDE_SIDE.items():
-        spark.conf.set(k, v)
-    try:
-        many = loaded(fs.load_dataframe(feats, freq=freq))
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    session_conf(WIDE_SIDE)
+    many = loaded(fs.load_dataframe(feats, freq=freq))
     pd.testing.assert_frame_equal(one, many)
 
 
-def _next_job(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 # Spark jobs to run each load once built (memos warm), as measured on
-# this store at local[4]; the per-feature join fold ran 4-19.
+# this store at local[4]; the per-feature join fold ran 4-19. And the
+# jobs to build it: an open bound's bounds prepass is one job of one task
+# when its scans fit one (``ts.narrow``: open_single, was 2 jobs of 8
+# tasks), else 2 with its exchange (the four doubles' 54 files, at
+# spark.sql.files.openCostInBytes each, exceed the advisory size); a
+# transform records its output type on its first load, so a later build
+# samples nothing (was 2-3 sample jobs).
 EXEC_JOBS = {
     "mixed_freq": (["test/f0", "test/f1", "test/s"], dict(RANGE, freq="1h"), 3),
     "mixed_align": (["test/f0", "test/f1", "test/s"], RANGE, 2),
@@ -235,15 +231,27 @@ EXEC_JOBS = {
     "transform": ("test/sum", RANGE, 2),
     "transform_and_stored_freq": (["test/sum", "test/f2"], dict(RANGE, freq="1h"), 6),
 }
+BUILD_JOBS = {
+    "mixed_freq": 0,
+    "mixed_align": 0,
+    "open_wide_freq": 2,
+    "open_align": 2,
+    "from_only_align": 2,
+    "open_single": 1,
+    "transform_freq": 0,
+    "transform": 0,
+    "transform_and_stored_freq": 0,
+}
 
 
 @pytest.mark.parametrize("shape", sorted(EXEC_JOBS))
-def test_execution_jobs_of_the_former_fallback_shapes(fs, spark, shape):
+def test_execution_jobs_of_the_former_fallback_shapes(fs, spark_work, shape):
     _store(fs)
     feats, kw, limit = EXEC_JOBS[shape]
     fs.load_dataframe(feats, **kw).toPandas()  # open() memos warm
-    df = fs.load_dataframe(feats, **kw)
-    j0 = _next_job(spark)
-    df.toPandas()
-    jobs = _next_job(spark) - j0
+    built, build_tasks = spark_work(lambda: fs.load_dataframe(feats, **kw))
+    assert built == BUILD_JOBS[shape], f"{shape}: {built} Spark jobs to build the load"
+    if built < 2:
+        assert build_tasks == built, f"{shape}: {build_tasks} tasks to build the load"
+    jobs, _ = spark_work(spark_work.result.toPandas)
     assert 0 < jobs <= limit, f"{shape}: {jobs} Spark jobs to run the load"

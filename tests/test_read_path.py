@@ -42,10 +42,6 @@ def _save(fs, name, rows, **create):
     )
 
 
-def _next_job(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 # ---------------------------------------------------------------------------
 # loud rename failures
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ def test_rename_passes_when_hadoop_returns_true():
     assert fs.calls == [("a", "b")]
 
 
-def test_exists_through_hadoop_matches_the_local_check(fs, spark):
+def test_exists_through_hadoop_matches_the_local_check(fs, spark_work):
     # exists, ls, list_partitions and partition_file_counts answer alike
     # through the os listing local stores take and the Hadoop listing
     # object-store URLs take, and neither runs a Spark job
@@ -96,9 +92,9 @@ def test_exists_through_hadoop_matches_the_local_check(fs, spark):
 
     local = listings()
     storage._is_local = False  # the branch object-store URLs take
-    j0 = _next_job(spark)
-    remote = listings()
-    assert _next_job(spark) == j0  # listing calls, no schema-inference job
+    jobs, _ = spark_work(listings)
+    remote = spark_work.result
+    assert jobs == 0  # listing calls, no schema-inference job
     assert remote == local == {
         "exists": [False, True, True],
         "ls": ["d", "hollow"],
@@ -133,7 +129,7 @@ RANGE = dict(from_date="2024-01-05", to_date="2024-01-10")
     "shape",
     ["ranged", "time_travel", "freq", "wide_fast_path", "generic_align"],
 )
-def test_building_an_explicit_range_load_runs_no_job(fs, spark, monkeypatch, shape):
+def test_building_an_explicit_range_load_runs_no_job(fs, spark_work, monkeypatch, shape):
     names = _doubles(fs)
     feats, kw = {
         "ranged": (names[0], {}),
@@ -151,18 +147,15 @@ def test_building_an_explicit_range_load_runs_no_job(fs, spark, monkeypatch, sha
         return orig(*a, **k)
 
     monkeypatch.setattr(ts, "resample_long", spy)
-    j0 = _next_job(spark)
-    df = fs.load_dataframe(feats, **RANGE, **kw)
-    j1 = _next_job(spark)
-    df.toPandas()
-    j2 = _next_job(spark)
-    assert j1 - j0 == 0, f"{shape}: {j1 - j0} Spark job(s) while building the plan"
-    assert j2 > j1  # the action itself runs the plan
+    built, _ = spark_work(lambda: fs.load_dataframe(feats, **RANGE, **kw))
+    ran, _ = spark_work(spark_work.result.toPandas)
+    assert built == 0, f"{shape}: {built} Spark job(s) while building the plan"
+    assert ran > 0  # the action itself runs the plan
     if shape == "wide_fast_path":
         assert grids == [1]  # one grid for the k features of one window
 
 
-def test_last_is_one_collect_per_value_type(fs, spark, monkeypatch):
+def test_last_is_one_collect_per_value_type(fs, spark, spark_work, monkeypatch):
     names = _doubles(fs)
     _save(fs, "test/s1", [("2024-01-02", "2024-01-02", "x")])
     _save(fs, "test/s2", [("2024-01-03", "2024-01-03", "y")])
@@ -178,9 +171,8 @@ def test_last_is_one_collect_per_value_type(fs, spark, monkeypatch):
 
     def jobs(feats):
         collects.clear()
-        j0 = _next_job(spark)
-        out = fs.last(feats)
-        return out, _next_job(spark) - j0, len(collects)
+        n, _ = spark_work(lambda: fs.last(feats))
+        return spark_work.result, n, len(collects)
 
     fs.last(names)  # open() memos warm, as in a steady read loop
     fs.last(["test/s1", "test/s2"])
@@ -495,8 +487,8 @@ def _widths(monkeypatch) -> list:
     widths = []
     orig = ts.plan_ranges
 
-    def spy(*a):
-        widths.append(orig(*a))
+    def spy(*a, **k):
+        widths.append(orig(*a, **k))
         return widths[-1]
 
     monkeypatch.setattr(ts, "plan_ranges", spy)
@@ -508,7 +500,7 @@ def _widths(monkeypatch) -> list:
     [("ranged", 2), ("travel", 2), ("resampled", 3), ("wide", 3), ("align", 2),
      ("never_saved", 2), ("never_saved_freq", 3)],
 )
-def test_execution_jobs_per_load(fs, spark, monkeypatch, session_conf, shape, limit):
+def test_execution_jobs_per_load(fs, spark_work, monkeypatch, session_conf, shape, limit):
     """One job when the load fits one task (one yearly file per feature:
     every load here, seeds included); at most ``limit`` on one partition,
     its keyed exchange plus a grid's seed aggregate."""
@@ -530,10 +522,8 @@ def test_execution_jobs_per_load(fs, spark, monkeypatch, session_conf, shape, li
     def run(tier):
         session_conf(TIERS[tier][0])
         load().toPandas()  # open() memos warm, as in a steady read loop
-        df = load()
-        j0 = _next_job(spark)
-        df.toPandas()
-        return widths[-1], _next_job(spark) - j0
+        jobs, _ = spark_work(load().toPandas)
+        return widths[-1], jobs
 
     assert run("one_task") == (ts.ONE_TASK, 1), shape
     width, jobs = run("one_partition")
@@ -706,7 +696,7 @@ WIDTH_CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(WIDTH_CASES))
-def test_many_ranges_equal_one_range(fs, spark, monkeypatch, session_conf, case):
+def test_many_ranges_equal_one_range(fs, spark_work, monkeypatch, session_conf, case):
     """One task, one partition and many ranges give one answer."""
     _width_store(fs)
     feats, kw = WIDTH_CASES[case]
@@ -714,13 +704,12 @@ def test_many_ranges_equal_one_range(fs, spark, monkeypatch, session_conf, case)
 
     def load(tier):
         session_conf(TIERS[tier][0])
-        j0 = _next_job(spark)
-        df = fs.load_dataframe(
+        built, _ = spark_work(lambda: fs.load_dataframe(
             feats, from_date="2024-02-20 00:00", to_date="2024-02-20 06:00", **kw
-        )
-        assert _next_job(spark) == j0, "a Spark job while building the plan"
-        out = df.toPandas()
-        return out, _next_job(spark) - j0
+        ))
+        assert built == 0, "a Spark job while building the plan"
+        jobs, _ = spark_work(spark_work.result.toPandas)
+        return spark_work.result, jobs
 
     (one, jobs), (part, _), (many, _) = (load(t) for t in TIERS)
     assert widths == [w for _, w in TIERS.values()]

@@ -98,3 +98,39 @@ def test_transforms_disabled():
             fs2.load_dataframe("t2/y")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_output_type_is_recorded_on_the_first_load(fs, spark_work):
+    """The first load samples the function for its output type and
+    records it; a later build runs no Spark job. Registering a new
+    function with another output type clears the record: the next load
+    samples again and gets the new type."""
+    fs.create_feature("test/src")
+    idx = pd.date_range("2021-01-01", periods=5, freq="D")
+    fs.save_dataframe(pd.DataFrame({"time": idx, "value": np.arange(5.0)}), "test/src")
+
+    @fs.transform("test/label", from_features=["test/src"])
+    def label(df):
+        return df["test/src"] * 2
+
+    def build():
+        return spark_work(
+            lambda: fs.load_dataframe("test/label", from_date=idx[0], to_date=idx[-1])
+        )
+
+    first, _ = build()
+    assert first > 0  # the type sample
+    assert fs.catalog.get_feature("test", "label")["value_schema"] == '"double"'
+    assert build() == (0, 0)
+    assert spark_work.result.toPandas()["test/label"].tolist() == [0.0, 2.0, 4.0, 6.0, 8.0]
+
+    @fs.transform("test/label", from_features=["test/src"])
+    def label_text(df):
+        return df["test/src"].map(lambda v: f"v{v:.0f}")
+
+    assert fs.catalog.get_feature("test", "label")["value_schema"] is None
+    again, _ = build()
+    assert again > 0
+    assert fs.catalog.get_feature("test", "label")["value_schema"] == '"string"'
+    assert build() == (0, 0)
+    assert spark_work.result.toPandas()["test/label"].tolist() == [f"v{i}" for i in range(5)]
