@@ -625,13 +625,15 @@ class FeatureStore:
         """Default-range time bounds of every stored feature of a load
         that omits ``from_date`` or ``to_date``, in one collect.
 
-        Each feature contributes ONE scan of slim `(i, time)` rows; the
-        scans union (narrow — no per-branch query stage) into a single
-        `groupBy(i)` computing min/max, regardless of k: one Spark job of
-        one task, with no exchange, when the scans fit one (``ts.narrow``),
-        else one shuffle and 2-3 scheduler jobs under AQE. With both
-        bounds given it runs no job. Transform features are skipped (their
-        leaves load recursively with their own ranges).
+        Each feature contributes ONE scan of slim `(i, time)` rows, pruned
+        to its oldest and newest partition holding a data file
+        (``SparkStorage.bound_partitions``, from the ``open()`` memo's file
+        index); the scans union (narrow — no per-branch query stage) into
+        a single `groupBy(i)` computing min/max, regardless of k: one
+        Spark job of one task, with no exchange, when the scans fit one
+        (``ts.narrow``), else one shuffle and 2-3 scheduler jobs under AQE.
+        With both bounds given it runs no job. Transform features are
+        skipped (their leaves load recursively with their own ranges).
         """
         stored = [p for p in metas if metas[p] is not None and not metas[p]["transform"]]
         # open() builds a fresh parquet file index per feature; warm all
@@ -660,7 +662,9 @@ class FeatureStore:
             meta = metas[nsp, nm]
             base = self._open_recorded(nsp, nm, meta)
             if base is not None:
-                sdf = self._storage(nsp).scan(nm, scheme=meta["partition"], base=base)
+                storage = self._storage(nsp)
+                base = base.where(F.col("partition").isin(storage.bound_partitions(nm)))
+                sdf = storage.scan(nm, scheme=meta["partition"], base=base)
                 branches.append(sdf.select(F.lit(i).alias("__i"), F.col(ts.TIME_COL)))
         if branches:
             # µs since the epoch: a collected timestamp is a naive datetime

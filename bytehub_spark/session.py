@@ -81,3 +81,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def spark_work(spark: SparkSession, fn):
+    """Call ``fn``; returns (Spark jobs, tasks run, ``fn``'s return value)
+    for the jobs it started, read from the status tracker once the
+    listener bus has caught up."""
+    sc = spark.sparkContext
+
+    def next_job() -> int:
+        return sc._jsc.sc().dagScheduler().nextJobId()
+
+    j0 = next_job()
+    result = fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    status, jobs, tasks = sc.statusTracker(), range(j0, next_job()), 0
+    for j in jobs:
+        job = status.getJobInfo(j)
+        for s in job.stageIds if job else ():
+            stage = status.getStageInfo(s)
+            tasks += stage.numCompletedTasks if stage else 0
+    return len(jobs), tasks, result

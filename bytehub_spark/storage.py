@@ -235,6 +235,14 @@ class SparkStorage:
         own = partition_bound(upto, scheme)
         return [own, *[p for p in parts if p < own][-1:]]
 
+    def bound_partitions(self, name: str) -> list[str]:
+        """The oldest and the newest partition holding a data file, from
+        ``_indexed_partitions``: they hold a feature's earliest and latest
+        row, with every version visible (``seed_partitions``' argument),
+        so its min and max time read no other partition."""
+        parts = self._indexed_partitions(name)
+        return parts[:1] + parts[-1:]
+
     def _indexed_partitions(self, name: str) -> list[str]:
         """Sorted partitions holding a data file in the file index of the
         memoized ``open()`` frame, the one every scan reads: a
@@ -491,18 +499,13 @@ class SparkStorage:
         Derives `partition` predicates from the time bounds so Catalyst
         prunes Hive partitions *and* pushes the time filters to row-group
         stats. Empty/missing datasets return a 0-row frame with the
-        canonical schema (parity: dask.py:108-114): a projection of
-        ``range(0)``, which Spark sizes at 0 bytes. A frame built from
-        Python rows (``createDataFrame``) is sized at
-        ``spark.sql.defaultSizeInBytes``, so one never-saved feature made
+        canonical schema (parity: dask.py:108-114), ``ts.empty``: sized
+        at 0 bytes, so a never-saved feature does not make
         ``ts.plan_ranges`` plan the whole load wide.
         """
         df = base if base is not None else self.open(name)
         if df is None:
-            return self.spark.range(0).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name)
-                  for f in _schema(value_type or T.DoubleType())]
-            )
+            return ts.empty(self.spark, _schema(value_type or T.DoubleType()))
         if from_date is not None:
             df = df.where(
                 (F.col(ts.TIME_COL) >= F.lit(ts.instant(from_date)).cast("timestamp"))

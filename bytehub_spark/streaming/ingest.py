@@ -24,14 +24,23 @@ and subclasses ``Monitor``, which owns the contract:
   availableNow foreachBatch query; each ``stream_*`` monitor function is
   ``XMonitor(...).attach(stream, checkpoint_dir)``.
 - ``process_batch(batch_df, epoch_id=None)`` runs the subclass's
-  ``_update``, then counts ``n_batches``, then stamps the epoch — state
-  is only marked done after the work succeeded, so a failed batch's
-  re-delivery is processed.
+  ``_update``, then counts ``n_batches``, then commits the epoch's state
+  snapshot, then stamps the epoch — state is only marked done after the
+  work succeeded, so a failed batch's re-delivery is processed.
 - ``ADDITIVE`` (class constant) declares the merge law. Additive
   merges (counts, sums, run extension) would count a re-delivered epoch
   twice, so a repeated ``epoch_id`` is skipped; idempotent merges (set
   union, max, bottom-k, top-k) re-process it harmlessly. Direct callers
   that pass no ``epoch_id`` get no dedup.
+- Monitors whose state is Spark frames (all but the six that keep it on
+  the driver: Count-Min, HLL, both KMV monitors, Lateness, weighted
+  sample) commit it once per epoch as a parquet snapshot under
+  ``{checkpoint_dir}/monitor_state`` (``streaming.snapshots``): written
+  under ``<epoch>.tmp``, renamed to ``<epoch>``, read back as a file
+  scan that Spark sizes by its files, so a small state merges in one
+  task. ``attach`` first loads the newest complete snapshot, so the
+  state survives a restart, and skips the re-delivered epoch it holds.
+  The driver-state monitors restart empty.
 - ``result()`` raises ``RuntimeError`` until a batch has been processed,
   then returns the subclass's ``_result()``.
 
@@ -47,9 +56,10 @@ finish through ``sketches.kmv_estimate``.
 
 Counting monitors whose state is a frame (histogram, band plan,
 embedding drift, the quality gate's ``unique`` rules, transition
-counts) merge it with the one ``Monitor._summed``: sum per key, then
-``eager_checkpoint``. Every monitor with a batch twin builds its
-per-batch state and its result() table with the twin's own functions
+counts) merge it with the one ``Monitor._summed``: sum per key, in one
+task when the state and the batch fit one. Every monitor with a batch
+twin builds its per-batch state and its result() table with the twin's
+own functions
 (``events_ops.active_days`` / ``active_users_from_days``,
 ``transition_counts`` / ``transition_table``, ``funnel_count`` /
 ``funnel_table``, ``asof._band_bucket_counts`` /
@@ -59,7 +69,12 @@ stream == batch does not rest on two copies staying in step.
 
 from __future__ import annotations
 
+import copy
 import datetime as dt
+import shutil
+import tempfile
+import time
+import weakref
 from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
@@ -70,6 +85,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import timeseries as ts
 from ..plans.iterate import eager_checkpoint
+from . import snapshots
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -892,18 +908,54 @@ class Monitor:
     the monitor's per-batch jobs runs as one task with no exchange (a
     Count-Min batch of the ingest benchmark: 1 job, was 2). Larger
     batches are unchanged. Every merge is over the batch's whole rows,
-    never its partitioning, so stream == batch holds either way."""
+    never its partitioning, so stream == batch holds either way.
+
+    A monitor whose state is Spark frames names them: ``STATE``, the
+    attributes holding a frame ``_update`` rebuilds whole; ``PARTS``, the
+    append-only ones, to which ``_update`` hands only the epoch's
+    additions (``_append``); ``DRIVER``, Python values (JSON) kept with
+    them. Each epoch ends in one commit (``streaming.snapshots``): the
+    frames are written as parquet under ``<epoch>.tmp``, renamed to
+    ``<epoch>`` once, and read back with their recorded schema through
+    ``ts.narrow``, so each is a file scan sized by its files and a small
+    state merges in one task. The newest two snapshots are kept; parts stay while a kept
+    snapshot lists them. ``attach`` keeps the snapshots under
+    ``{checkpoint_dir}/monitor_state`` and first loads the newest complete
+    one, so state survives a restart; a direct ``process_batch`` caller's
+    go to a temporary directory of the instance. A batch that fails
+    before its commit leaves the state as it was.
+
+    ``metrics`` holds one record per processed batch: its epoch, the
+    parquet files and bytes of the committed state (from the snapshot's
+    listing, no Spark job) and the batch's wall time in ms."""
 
     ADDITIVE = False
+    STATE: tuple[str, ...] = ()
+    PARTS: tuple[str, ...] = ()
+    DRIVER: tuple[str, ...] = ()
     # class-level defaults; the first write shadows them per instance
     n_batches = 0
     _last_epoch: int | None = None
+    _loaded_epoch: int | None = None  # the epoch of the snapshot attach loaded
+    _root: str | None = None  # where the snapshots go
+    _epoch: str  # the name of this batch's snapshot and parts
+
+    def __init__(self):
+        self.metrics: list[dict] = []
+        self._snaps: list[str] = []  # the kept snapshots, newest last
+        self._schemas: dict[str, str] = {}  # frame -> schema JSON
+        self._parts: dict[str, list] = {}  # frame -> [[epoch, files, bytes], ...]
+        self._pending: dict[str, list] = {}  # frame -> this epoch's part
 
     def attach(self, stream: DataFrame, checkpoint_dir: str):
         """Run this monitor over ``stream`` as an availableNow
-        foreachBatch query. Returns (StreamingQuery, monitor) — read
-        monitor.result() after the query terminates (or periodically
-        while it runs)."""
+        foreachBatch query, from the newest state snapshot under
+        ``checkpoint_dir`` when there is one. Returns (StreamingQuery,
+        monitor) — read monitor.result() after the query terminates (or
+        periodically while it runs)."""
+        if self._frame_state():
+            self._root = f"{checkpoint_dir}/monitor_state"
+            self._load(stream.sparkSession)
         q = (
             stream.writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint_dir)
@@ -916,12 +968,34 @@ class Monitor:
         self, batch_df: DataFrame, epoch_id: int | None = None
     ) -> None:
         # foreachBatch re-delivers an uncommitted epoch under the SAME
-        # epoch_id after a restart, so equality is the replay test
-        if self.ADDITIVE and epoch_id is not None and epoch_id == self._last_epoch:
+        # epoch_id after a restart, so equality is the replay test; the
+        # epoch of a loaded snapshot is held whatever the merge law
+        if epoch_id is not None and epoch_id == self._last_epoch and (
+            self.ADDITIVE or epoch_id == self._loaded_epoch
+        ):
             return
-        self._update(ts.narrow(batch_df), epoch_id)
-        self.n_batches += 1
+        t0 = time.perf_counter()
+        self._epoch = str(self.n_batches if epoch_id is None else epoch_id)
+        frames, driver, n_batches = (
+            self._frames(), copy.deepcopy(self._driver()), self.n_batches
+        )
+        try:
+            self._update(ts.narrow(batch_df), epoch_id)
+            self.n_batches += 1
+            if self._frame_state():
+                self._commit(batch_df.sparkSession, epoch_id)
+        except BaseException:  # uncommitted: back to the state before
+            self._set_frames(frames)
+            for name, value in driver.items():
+                setattr(self, name, value)
+            self.n_batches, self._pending = n_batches, {}
+            raise
         self._last_epoch = epoch_id
+        files, nbytes = self._state_size(batch_df.sparkSession)
+        self.metrics.append({
+            "epoch": epoch_id, "state_files": files, "state_bytes": nbytes,
+            "batch_ms": (time.perf_counter() - t0) * 1000.0,
+        })
 
     def _ready(self) -> bool:
         return self.n_batches > 0
@@ -936,25 +1010,122 @@ class Monitor:
             )
         return self._result()
 
+    # -- frame state: one snapshot per epoch ---------------------------
+
+    def _frame_state(self) -> bool:
+        return bool(self.STATE or self.PARTS)
+
+    def _frames(self) -> dict[str, DataFrame | None]:
+        """The state frames by name: the ``STATE`` and ``PARTS``
+        attributes."""
+        return {n: getattr(self, n) for n in (*self.STATE, *self.PARTS)}
+
+    def _set_frames(self, frames: dict[str, DataFrame | None]) -> None:
+        """Replace the state frames with ``frames`` (missing ones: None)."""
+        for n in (*self.STATE, *self.PARTS):
+            setattr(self, n, frames.get(n))
+
+    def _driver(self) -> dict:
+        return {n: getattr(self, n) for n in self.DRIVER}
+
+    def _state_root(self) -> str:
+        if self._root is None:  # a direct caller's: the instance's own
+            self._root = tempfile.mkdtemp(prefix="monitor_state_")
+            weakref.finalize(self, shutil.rmtree, self._root, True)
+        return self._root
+
+    def _append(self, frame: str, additions: DataFrame) -> None:
+        """Write this epoch's ``additions`` to the append-only ``frame``
+        as a part that its snapshot, and every later one, lists."""
+        self._pending[frame] = snapshots.write_part(
+            additions.sparkSession, self._state_root(), frame, self._epoch, additions
+        )
+        self._schemas[frame] = additions.schema.json()
+
+    def _commit(self, spark: SparkSession, epoch_id: int | None) -> None:
+        """Write the epoch's snapshot, rename it into place, read the
+        frames back from it and keep the newest two snapshots."""
+        root = self._state_root()
+        whole = {
+            n: df for n, df in self._frames().items()
+            if df is not None and n not in self.PARTS
+        }
+        self._schemas.update({n: df.schema.json() for n, df in whole.items()})
+        parts = dict(self._parts)
+        for frame, part in self._pending.items():
+            parts[frame] = [*parts.get(frame, []), part]
+        meta = {
+            "epoch": epoch_id, "n_batches": self.n_batches, "frames": list(whole),
+            "schemas": self._schemas, "parts": parts, "driver": self._driver(),
+        }
+        path = snapshots.commit(spark, root, self._epoch, whole, meta)
+        frames = self._frames()
+        frames.update(self._read(spark, path, meta, [*whole, *self._pending]))
+        self._set_frames(frames)
+        self._parts, self._pending = parts, {}
+        self._snaps = [*self._snaps[-1:], path]
+        snapshots.prune(spark, root, set(self._snaps))
+
+    def _read(self, spark, path: str, meta: dict, names) -> dict[str, DataFrame]:
+        """Frames ``names`` of the snapshot at ``path``."""
+        return {
+            n: snapshots.read(
+                spark,
+                snapshots.part_paths(self._root, n, meta["parts"][n])
+                if n in meta["parts"] else [f"{path}/{n}"],
+                meta["schemas"][n],
+            )
+            for n in names
+        }
+
+    def _load(self, spark: SparkSession) -> None:
+        """Take the state of the newest complete snapshot under the root,
+        and delete what a torn commit left."""
+        found = snapshots.newest(spark, self._root)
+        if found is None:
+            return
+        path, meta = found
+        self._set_frames(self._read(spark, path, meta, [*meta["frames"], *meta["parts"]]))
+        for name, value in meta["driver"].items():
+            setattr(self, name, value)
+        self.n_batches = meta["n_batches"]
+        self._last_epoch = self._loaded_epoch = meta["epoch"]
+        self._schemas, self._parts, self._snaps = meta["schemas"], meta["parts"], [path]
+        snapshots.prune(spark, self._root, {path})
+        snapshots.prune_parts(spark, self._root, meta["parts"])
+
+    def _state_size(self, spark: SparkSession) -> tuple[int, int]:
+        """(parquet files, bytes) of the committed state: the newest
+        snapshot's listing plus its parts' recorded sizes."""
+        if not self._snaps:
+            return 0, 0
+        files, nbytes = snapshots.size(spark, f"{self._snaps[-1]}/*/*.parquet")
+        for listed in self._parts.values():
+            files += sum(p[1] for p in listed)
+            nbytes += sum(p[2] for p in listed)
+        return files, nbytes
+
     @staticmethod
     def _frame_from_rows(rows: list, schema) -> DataFrame:
-        """result() frame of a monitor that keeps its state in Python."""
-        return SparkSession.getActiveSession().createDataFrame(rows, schema)
+        """result() frame of a monitor that keeps its state in Python, in
+        one partition (row order kept): its rows are bounded, and a
+        parallelized frame would be one task per core."""
+        return SparkSession.getActiveSession().createDataFrame(rows, schema).coalesce(1)
 
     @staticmethod
     def _summed(
         state: DataFrame | None, batch: DataFrame, keys: list[str], sums: list[str]
     ) -> DataFrame:
         """The additive frame merge: ``batch`` (one row per key) folded
-        into ``state`` by summing ``sums`` per ``keys``, pinned by
-        eager_checkpoint so the lineage does not grow with batch count.
-        Sums commute, so any batching and arrival order give the same
-        frame; they are not idempotent, hence ADDITIVE on the callers."""
-        if state is not None:
-            batch = state.unionByName(batch).groupBy(*keys).agg(
-                *[F.sum(c).alias(c) for c in sums]
-            )
-        return eager_checkpoint(batch)
+        into ``state`` by summing ``sums`` per ``keys``, in one task when
+        both fit one (``ts.narrow``); the epoch's commit writes it. Sums
+        commute, so any batching and arrival order give the same frame;
+        they are not idempotent, hence ADDITIVE on the callers."""
+        if state is None:
+            return batch
+        return ts.narrow(state.unionByName(batch)).groupBy(*keys).agg(
+            *[F.sum(c).alias(c) for c in sums]
+        )
 
 
 class LatenessMonitor(Monitor):
@@ -976,6 +1147,7 @@ class LatenessMonitor(Monitor):
     ADDITIVE = True
 
     def __init__(self, arrival_col: str = "event_id"):
+        super().__init__()
         self.arrival_col = arrival_col
         self.max_us: int | None = None
         self.totals: dict[str, list[int]] = {}
@@ -1049,14 +1221,19 @@ class FunnelMonitor(Monitor):
     State is a DISTRIBUTED DataFrame (user_id, t1..tk) — not a driver
     dict: per-user funnel state at corpus scale belongs on executors.
     Each batch costs k-1 user-keyed joins + aggregations against batch
-    data only, and the state frame is localCheckpointed so the lineage
-    does not grow with batch count. ``result()`` counts each step's
-    reached users with events_ops.funnel_count and finishes them with
+    data only, and the epoch's commit writes the state frame as a
+    parquet snapshot and reads it back (``Monitor``), so the lineage
+    does not grow with batch count and a restart resumes from it.
+    ``result()`` counts each step's reached users with
+    events_ops.funnel_count and finishes them with
     events_ops.funnel_table, the batch op's own code — equality is
     pinned in tests/test_round3c.py.
     """
 
+    STATE = ("state",)
+
     def __init__(self, steps: tuple[str, ...] = ("view", "click", "purchase")):
+        super().__init__()
         if len(steps) < 2:
             raise ValueError("funnel needs at least 2 steps")
         self.steps = steps
@@ -1066,13 +1243,12 @@ class FunnelMonitor(Monitor):
         b = batch_df.select("user_id", "event_type", "ts")
         k = len(self.steps)
         tcols = [f"t{i}" for i in range(1, k + 1)]
-        if self.state is None:
-            spark = batch_df.sparkSession
-            schema = "user_id long, " + ", ".join(
-                f"{c} timestamp" for c in tcols
-            )
-            self.state = spark.createDataFrame([], schema)
         st = self.state
+        if st is None:
+            st = ts.empty(
+                batch_df.sparkSession,
+                "user_id long, " + ", ".join(f"{c} timestamp" for c in tcols),
+            )
         # step 1: earliest step-1 event ever seen (final under ordered
         # arrival once set)
         a1 = (
@@ -1101,8 +1277,7 @@ class FunnelMonitor(Monitor):
             st = st.join(ai, "user_id", "left").withColumn(
                 f"t{i}", F.coalesce(f"t{i}", f"__b{i}")
             ).drop(f"__b{i}")
-        # pin the state: lineage would otherwise grow by ~k joins/batch
-        self.state = eager_checkpoint(st.select("user_id", *tcols))
+        self.state = st.select("user_id", *tcols)
 
     def _result(self) -> DataFrame:
         """Per-step reached-user counts + ppm conversions, finished by
@@ -1136,12 +1311,16 @@ class ActiveUsersMonitor(Monitor):
     merging a batch is union + distinct, which is ORDER-INDEPENDENT —
     unlike the funnel monitor this twin needs no arrival-order contract
     at all (late or replayed events land in the same set). State grows
-    with users x active-days, not events; localCheckpoint keeps lineage
-    flat. result() is events_ops.active_users_from_days over the
-    accumulated set — the batch op's own finish.
+    with users x active-days, not events; the epoch's snapshot commit
+    (``Monitor``) keeps lineage flat and survives a restart. result() is
+    events_ops.active_users_from_days over the accumulated set — the
+    batch op's own finish.
     """
 
+    STATE = ("state",)
+
     def __init__(self, window_days: int = 7):
+        super().__init__()
         self.window_days = window_days
         self.state: DataFrame | None = None
 
@@ -1149,8 +1328,10 @@ class ActiveUsersMonitor(Monitor):
         from ..operators.events_ops import active_days
 
         b = active_days(batch_df)
-        st = b if self.state is None else self.state.unionByName(b).distinct()
-        self.state = eager_checkpoint(st)
+        self.state = (
+            b if self.state is None
+            else ts.narrow(self.state.unionByName(b)).distinct()
+        )
 
     def _result(self) -> DataFrame:
         from ..operators.events_ops import active_users_from_days
@@ -1182,6 +1363,7 @@ class KMVDistinctMonitor(Monitor):
     of the batch sketch is kept for result())."""
 
     def __init__(self, k: int = 256):
+        super().__init__()
         self.k = k
         self.hashes: dict[object, list[int]] = {}  # source -> sorted bottom-k
         self._schema = None
@@ -1239,7 +1421,10 @@ class RetentionMonitor(Monitor):
     tests/test_round6.py.
     """
 
+    STATE = ("state",)
+
     def __init__(self, max_weeks: int = 8):
+        super().__init__()
         self.max_weeks = int(max_weeks)
         self.state: DataFrame | None = None
 
@@ -1250,13 +1435,13 @@ class RetentionMonitor(Monitor):
         agg = b.groupBy("user_id").agg(
             F.min("__wk").alias("__bmin"), F.collect_set("__wk").alias("__wks")
         )
-        if self.state is None:
-            spark = batch_df.sparkSession
-            self.state = spark.createDataFrame(
-                [], "user_id long, cohort timestamp, mask long"
+        st = self.state
+        if st is None:
+            st = ts.empty(
+                batch_df.sparkSession, "user_id long, cohort timestamp, mask long"
             )
         merged = (
-            self.state.join(agg, "user_id", "full_outer")
+            st.join(agg, "user_id", "full_outer")
             # cohort = min week ever seen (order-independent); when it
             # moves back, shift the existing bits by the week delta so
             # bit w still means "active in cohort + w"
@@ -1297,7 +1482,7 @@ class RetentionMonitor(Monitor):
                 ),
             )
         )
-        self.state = eager_checkpoint(merged.select("user_id", "cohort", "mask"))
+        self.state = merged.select("user_id", "cohort", "mask")
 
     def _result(self) -> DataFrame:
         """Same table shape as events_ops.retention_cohorts."""
@@ -1350,8 +1535,10 @@ class TransitionMonitor(Monitor):
     """
 
     ADDITIVE = True
+    STATE = ("counts", "last")
 
     def __init__(self):
+        super().__init__()
         self.counts: DataFrame | None = None
         self.last: DataFrame | None = None
 
@@ -1384,7 +1571,7 @@ class TransitionMonitor(Monitor):
             )
             within = within.unionByName(boundary)
             new_last = (
-                self.last.unionByName(lasts)
+                ts.narrow(self.last.unionByName(lasts))
                 .groupBy("user_id")
                 .agg(
                     F.max_by(
@@ -1401,7 +1588,7 @@ class TransitionMonitor(Monitor):
         else:
             new_last = lasts
         self.counts = self._summed(self.counts, within, ["prev", "next"], ["n"])
-        self.last = eager_checkpoint(new_last)
+        self.last = new_last
 
     def _result(self) -> DataFrame:
         """events_ops.event_transitions's table, by its own finish."""
@@ -1448,6 +1635,9 @@ class BloomFilterMonitor(Monitor):
     dedup verdict.
     """
 
+    STATE = ("state",)
+    DRIVER = ("batch_log",)
+
     def __init__(
         self,
         n: int = 4,
@@ -1456,6 +1646,7 @@ class BloomFilterMonitor(Monitor):
         text_col: str = "text",
         id_col: str = "doc_id",
     ):
+        super().__init__()
         self.n = n
         self.m_bits = int(m_bits)
         self.k_hashes = int(k_hashes)
@@ -1495,14 +1686,13 @@ class BloomFilterMonitor(Monitor):
             batch_df, self.n, self.m_bits, self.k_hashes,
             self.text_col, self.id_col,
         )
-        st = (
+        self.state = (
             words
             if self.state is None
-            else self.state.unionByName(words)
+            else ts.narrow(self.state.unionByName(words))
             .groupBy("word_idx")
             .agg(F.expr("bit_or(word)").alias("word"))
         )
-        self.state = eager_checkpoint(st)
         self.batch_log.append(
             {"epoch": epoch_id, "n_docs": int(n_docs),
              "n_short_docs": int(n_short),
@@ -1577,6 +1767,7 @@ class EmbeddingDriftMonitor(Monitor):
     """
 
     ADDITIVE = True
+    STATE = ("state",)
 
     def __init__(
         self,
@@ -1584,6 +1775,7 @@ class EmbeddingDriftMonitor(Monitor):
         group_col: str = "label",
         vec_col: str = "embedding",
     ):
+        super().__init__()
         from ..operators.similarity import drift_per_dim_sums
 
         self.group_col = group_col
@@ -1641,8 +1833,11 @@ class QualityGateMonitor(Monitor):
     """
 
     ADDITIVE = True
+    STATE = ("_ustate",)  # {rule index: frame}: see _frames
+    DRIVER = ("_counts",)
 
     def __init__(self, rules: list[tuple]):
+        super().__init__()
         from ..operators.profile import simple_rule_expr
 
         self.rules = list(rules)
@@ -1655,8 +1850,14 @@ class QualityGateMonitor(Monitor):
             else:
                 simple_rule_expr(rule)  # validate kind eagerly
                 self._simple.append((k, rule))
-        self._counts: dict[int, int] = {k: 0 for k, _ in self._simple}
+        self._counts = [0] * len(self._simple)  # per simple rule, in order
         self._ustate: dict[int, DataFrame] = {}
+
+    def _frames(self) -> dict[str, DataFrame]:
+        return {f"u{k}": df for k, df in self._ustate.items()}
+
+    def _set_frames(self, frames: dict[str, DataFrame]) -> None:
+        self._ustate = {int(n[1:]): df for n, df in frames.items()}
 
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.profile import simple_rule_expr
@@ -1677,8 +1878,8 @@ class QualityGateMonitor(Monitor):
                 for k, rule in self._simple
             ]
             row = batch_df.agg(*aggs).collect()[0]  # 1-row bounded
-            for k, _ in self._simple:
-                self._counts[k] += int(row[f"v{k}"])
+            for j, (k, _) in enumerate(self._simple):
+                self._counts[j] += int(row[f"v{k}"])
         for k, rule in self._unique:
             col = str(rule[2])
             b = (
@@ -1695,7 +1896,7 @@ class QualityGateMonitor(Monitor):
     def _result(self) -> DataFrame:
         """Same table shape as profile.check_constraints on the union of
         all processed batches."""
-        viols: dict[int, int] = dict(self._counts)
+        viols = {k: n for (k, _), n in zip(self._simple, self._counts)}
         for k, _ in self._unique:
             st = self._ustate.get(k)
             if st is None:
@@ -1741,10 +1942,12 @@ class HistogramMonitor(Monitor):
     """
 
     ADDITIVE = True
+    STATE = ("state",)
 
     def __init__(
         self, lo: float = 0.0, hi: float = 100.0, n_buckets: int = 10
     ):
+        super().__init__()
         self.lo, self.hi, self.n_buckets = float(lo), float(hi), int(n_buckets)
         self.state: DataFrame | None = None
 
@@ -1809,6 +2012,7 @@ class BandPlanMonitor(Monitor):
     """
 
     ADDITIVE = True
+    STATE = ("state",)
 
     def __init__(
         self,
@@ -1817,6 +2021,7 @@ class BandPlanMonitor(Monitor):
         eps_options: tuple[int, ...] = (1_000, 5_000, 20_000),
         budget_pairs: int = 20_000_000,
     ):
+        super().__init__()
         if not eps_options:
             raise ValueError(
                 "BandPlanMonitor: eps_options must be non-empty"
@@ -1889,6 +2094,12 @@ class Scd2Monitor(Monitor):
       ``closed`` here keeps result() self-contained for the
       stream==batch contract.
 
+    Each epoch's commit (``Monitor``) rewrites ``open`` in its snapshot
+    and writes only the batch's closures as a part of ``closed``: the
+    parts are append-only, every later snapshot lists them, and pruning
+    old snapshots never deletes them. ``closed`` is one scan of the
+    listed parts, so a restart resumes with the whole history.
+
     Every step is user-partitioned (two windows + three user-keyed
     joins per batch); no global window, no driver loop. Version
     arithmetic is BIGINT from birth. Extending runs is not idempotent
@@ -1897,8 +2108,11 @@ class Scd2Monitor(Monitor):
     """
 
     ADDITIVE = True
+    STATE = ("open",)
+    PARTS = ("closed",)
 
     def __init__(self):
+        super().__init__()
         self.closed: DataFrame | None = None
         self.open: DataFrame | None = None
 
@@ -1907,9 +2121,8 @@ class Scd2Monitor(Monitor):
 
         # Empty micro-batch: nothing to stitch — skip entirely (ADVICE
         # r10: an empty FIRST batch used to set self.open to an empty
-        # checkpointed frame, silently bypassing the result() "no
-        # micro-batch yet" guard; later empty batches paid a needless
-        # localCheckpoint per batch).
+        # frame, silently bypassing the result() "no micro-batch yet"
+        # guard).
         if batch_df.isEmpty():
             return
 
@@ -2004,21 +2217,11 @@ class Scd2Monitor(Monitor):
             if old_open_closed is None
             else closed_in_batch.unionByName(old_open_closed)
         )
-        # checkpoint only the batch's ADDITIONS (output-sized), never
-        # the whole closed history: re-checkpointing the unbounded
-        # frame each batch is O(all closed rows) per batch — quadratic
-        # over the stream. A flat union of already-checkpointed leaves
-        # never recomputes; its plan grows one node per batch, which is
-        # the availableNow regime this monitor targets (a truly
-        # unbounded deployment sinks adds_ck per batch instead, per the
-        # class docstring).
-        adds_ck = eager_checkpoint(adds)
-        self.closed = (
-            adds_ck
-            if self.closed is None
-            else self.closed.unionByName(adds_ck)
-        )
-        self.open = eager_checkpoint(
+        # write only the batch's ADDITIONS (output-sized), never the
+        # whole closed history: rewriting the unbounded frame each batch
+        # is O(all closed rows) per batch — quadratic over the stream
+        self._append("closed", adds)
+        self.open = (
             batch_open
             if untouched_open is None
             else batch_open.unionByName(untouched_open)
@@ -2066,8 +2269,10 @@ class CurationFunnelMonitor(Monitor):
     monitor here shares), ``result()`` grouped rows equal the batch
     flags aggregated over the same batch boundaries EXACTLY.
 
-    State, both additions-only checkpointed then flat-unioned (the
-    Scd2Monitor quadratic-re-checkpoint lesson):
+    State, both append-only (``PARTS``: each epoch's commit writes
+    only the batch's additions as a part, the Scd2Monitor lesson —
+    rewriting the whole set each batch is quadratic; a restart reads
+    every listed part back):
     - ``fps``: one row per DISTINCT normalized-text fingerprint seen —
       content-sized, the exact-dedup membership set;
     - ``buckets``: one row per DISTINCT claimed MinHash (band, bh) —
@@ -2076,7 +2281,7 @@ class CurationFunnelMonitor(Monitor):
 
     Per-batch driver state is one 5-int tuple (the funnel row); the
     kernel's scratch frames are released after the counts are collected
-    and the state additions checkpointed (safe inside foreachBatch —
+    and the state additions written (safe inside foreachBatch —
     batches execute serially; a session running OTHER scratch-persisting
     operators concurrently with the stream should not, same caveat as
     any release_scratch() caller).
@@ -2085,10 +2290,13 @@ class CurationFunnelMonitor(Monitor):
     # a re-delivered epoch would read as all-exact-dups — a spurious
     # near-zero funnel row that ALSO shifts later batch indices
     ADDITIVE = True
+    PARTS = ("fps", "buckets")
+    DRIVER = ("rows",)
 
     def __init__(
         self, n_hashes: int = 64, bands: int = 32, ngram: int = 3
     ):
+        super().__init__()
         self.n_hashes = int(n_hashes)
         self.bands = int(bands)
         self.ngram = int(ngram)
@@ -2121,12 +2329,8 @@ class CurationFunnelMonitor(Monitor):
             F.sum(F.col("exact_new").cast("long")).alias("n_exact_new"),
             F.sum(F.col("near_new").cast("long")).alias("n_near_new"),
         ).collect()[0]  # 1-row bounded
-        fck = eager_checkpoint(new_fps)
-        bck = eager_checkpoint(new_buckets)
-        self.fps = fck if self.fps is None else self.fps.unionByName(fck)
-        self.buckets = (
-            bck if self.buckets is None else self.buckets.unionByName(bck)
-        )
+        self._append("fps", new_fps)
+        self._append("buckets", new_buckets)
         self.rows.append(
             (
                 len(self.rows),
@@ -2136,7 +2340,7 @@ class CurationFunnelMonitor(Monitor):
                 int(row["n_near_new"]),
             )
         )
-        release_scratch()  # counts collected + additions checkpointed
+        release_scratch()  # counts collected + additions written
 
     def _result(self) -> DataFrame:
         """One funnel row per processed micro-batch."""
@@ -2258,6 +2462,7 @@ class CountMinMonitor(Monitor):
 
     def __init__(self, key_col: str = "user_id", depth: int = 4,
                  width: int = 256, group_col: str | None = None):
+        super().__init__()
         if depth < 1 or width < 2:
             raise ValueError("depth >= 1 and width >= 2 required")
         self.key_col = key_col
@@ -2342,6 +2547,7 @@ class HllDistinctMonitor(Monitor):
 
     def __init__(self, key_col: str = "user_id", m: int = 64,
                  group_col: str | None = None):
+        super().__init__()
         if m < 2 or (m & (m - 1)) != 0:
             raise ValueError("m must be a power of two >= 2")
         self.key_col = key_col
@@ -2437,6 +2643,7 @@ class GroupedKmvMonitor(Monitor):
         group_col: str = "event_type",
         k: int = 256,
     ):
+        super().__init__()
         if k < 2:
             raise ValueError("k >= 2 required")
         self.key_col = key_col
@@ -2520,6 +2727,7 @@ class WeightedSampleMonitor(Monitor):
         id_col: str = "doc_id",
         cap: int = 8,
     ):
+        super().__init__()
         if k < 1:
             raise ValueError("k >= 1 required")
         self.k = int(k)

@@ -125,6 +125,7 @@ from typing import Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .utils import freq_to_interval, parse_freq, parse_timedelta_interval
 
@@ -238,6 +239,20 @@ def narrow(df: DataFrame, budget: int | None = None) -> DataFrame:
     if _coalesced(df) or plan_ranges(df, budget=budget) != ONE_TASK:
         return df
     return df.coalesce(1)
+
+
+def empty(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A 0-row frame of ``schema`` (a DDL string or a ``StructType``) that
+    the optimizer knows is empty: a projection of ``range(0)`` under a
+    false filter, which it plans as an empty local relation, sized at 0
+    bytes, that unions and outer joins drop. A frame built from Python rows
+    (``createDataFrame``) is sized at ``spark.sql.defaultSizeInBytes``, so
+    ``plan_ranges`` plans whatever reads it wide."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    ).where(F.lit(False))
 
 
 def _exchange(df: DataFrame, ranges: int, col: str, by_range=False) -> DataFrame:

@@ -12,8 +12,13 @@ file-source stream (availableNow, so runs are finite and comparable):
 - cms_monitor: stream_cms — a Monitor with bounded in-process state
              (<= depth*width Count-Min counters)
 
+Each pipeline's Spark jobs and tasks (its micro-batches plus, for the
+monitors, one result()) are read from the status tracker
+(``session.spark_work``) and printed next to its events/s.
+
 Usage: python scripts/bench_streaming.py [sf_dir]
-Prints ONE JSON line {"metric": ..., "events_per_sec": {...}, ...}.
+Prints ONE JSON line {"metric": ..., "events_per_sec": {...},
+"spark_jobs": {...}, "spark_tasks": {...}, ...}.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bytehub_spark import FeatureStore
 from bytehub_spark import streaming as st
-from bytehub_spark.session import get_spark
+from bytehub_spark.session import get_spark, spark_work
 from bytehub_spark.sources import load_table
 
 
@@ -45,73 +50,60 @@ def main() -> None:
     load_table(spark, sf_dir, "events").repartition(8).write.parquet(src_dir)
 
     rates: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    tasks: dict[str, int] = {}
 
-    def finish(label: str, t0: float, n: int) -> None:
-        dt = time.time() - t0
-        rates[label] = round(n / dt, 1)
+    def run(label: str, pipeline) -> None:
+        t0 = time.time()
+        jobs[label], tasks[label], _ = spark_work(spark, pipeline)
+        rates[label] = round(n_events / (time.time() - t0), 1)
+
+    def events():
+        return st.stream_events(spark, src_dir, max_files=2)
+
+    def ckpt(name: str) -> str:
+        return os.path.join(work, f"ckpt_{name}")
+
+    def to_noop(df, name: str):
+        return (
+            df.writeStream.outputMode("append")
+            .format("noop")
+            .option("checkpointLocation", ckpt(name))
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def monitor(attach, name: str):
+        def pipeline():
+            q, mon = attach(events(), ckpt(name))
+            q.awaitTermination(600)
+            mon.result().write.format("noop").mode("overwrite").save()
+
+        return pipeline
 
     # 1. ingest into the feature store (foreachBatch bitemporal appends)
     fs = FeatureStore(os.path.join(work, "cat.db"), spark=spark)
     fs.create_namespace("bench", url=os.path.join(work, "store"))
     fs.create_feature("bench/value", partition="date")
-    t0 = time.time()
-    q = st.stream_into_feature(
-        st.stream_events(spark, src_dir, max_files=2),
-        fs,
-        "bench/value",
-        os.path.join(work, "ckpt_ingest"),
-    )
-    q.awaitTermination(600)
-    finish("ingest", t0, n_events)
-
+    run("ingest", lambda: st.stream_into_feature(
+        events(), fs, "bench/value", ckpt("ingest")
+    ).awaitTermination(600))
     # 2. watermarked windowed aggregation
-    t0 = time.time()
-    q = (
-        st.windowed_event_stats(st.stream_events(spark, src_dir, max_files=2))
-        .writeStream.outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", os.path.join(work, "ckpt_win"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    finish("windowed", t0, n_events)
-
+    run("windowed", lambda: to_noop(
+        st.windowed_event_stats(events()), "win"
+    ).awaitTermination(600))
     # 3. stateful sessionization
-    t0 = time.time()
-    q = (
-        st.sessionize(st.stream_events(spark, src_dir, max_files=2), gap_minutes=120)
-        .writeStream.outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", os.path.join(work, "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    finish("sessionize", t0, n_events)
-
-    # 4. foreachBatch distributed-state monitor (cohort retention — one
-    # bitmask row per user; representative of the monitor family)
-    t0 = time.time()
-    q, mon = st.stream_retention(
-        st.stream_events(spark, src_dir, max_files=2),
-        os.path.join(work, "ckpt_ret"),
-    )
-    q.awaitTermination(600)
-    mon.result().write.format("noop").mode("overwrite").save()
-    finish("retention_monitor", t0, n_events)
-
+    run("sessionize", lambda: to_noop(
+        st.sessionize(events(), gap_minutes=120), "sess"
+    ).awaitTermination(600))
+    # 4. foreachBatch frame-state monitor (cohort retention — one bitmask
+    # row per user, committed as a parquet snapshot per epoch;
+    # representative of the monitor family)
+    run("retention_monitor", monitor(st.stream_retention, "ret"))
     # 5. bounded-driver-state sketch monitor (Count-Min — state is
     # <= depth*width ints no matter the key cardinality; representative
     # of the r11 sketch-monitor pair)
-    t0 = time.time()
-    q, cmon = st.stream_cms(
-        st.stream_events(spark, src_dir, max_files=2),
-        os.path.join(work, "ckpt_cms"),
-    )
-    q.awaitTermination(600)
-    cmon.result().write.format("noop").mode("overwrite").save()
-    finish("cms_monitor", t0, n_events)
+    run("cms_monitor", monitor(st.stream_cms, "cms"))
 
     shutil.rmtree(work, ignore_errors=True)
     print(
@@ -120,6 +112,8 @@ def main() -> None:
                 "metric": "streaming throughput (events/s, availableNow replay)",
                 "n_events": n_events,
                 "events_per_sec": rates,
+                "spark_jobs": jobs,
+                "spark_tasks": tasks,
                 "sf_dir": sf_dir,
             }
         )

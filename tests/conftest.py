@@ -4,6 +4,7 @@ import shutil
 import pytest
 
 from bytehub_spark import FeatureStore
+from bytehub_spark import session
 from bytehub_spark.session import get_spark
 
 
@@ -32,25 +33,12 @@ def session_conf(spark):
 @pytest.fixture()
 def spark_work(spark):
     """``spark_work(fn)`` calls ``fn`` and returns (Spark jobs, tasks run)
-    of the jobs it started, read from the status tracker once the listener
-    bus has caught up (as ``perfbench/run.py``'s ``_spark_work``);
-    ``fn``'s return value is kept as ``spark_work.result``."""
-    sc = spark.sparkContext
-
-    def next_job() -> int:
-        return sc._jsc.sc().dagScheduler().nextJobId()
+    of the jobs it started (``session.spark_work``); ``fn``'s return value
+    is kept as ``spark_work.result``."""
 
     def work(fn):
-        j0 = next_job()
-        work.result = fn()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        status, jobs, tasks = sc.statusTracker(), range(j0, next_job()), 0
-        for j in jobs:
-            job = status.getJobInfo(j)
-            for s in job.stageIds if job else ():
-                stage = status.getStageInfo(s)
-                tasks += stage.numCompletedTasks if stage else 0
-        return len(jobs), tasks
+        jobs, tasks, work.result = session.spark_work(spark, fn)
+        return jobs, tasks
 
     return work
 

@@ -3,12 +3,17 @@ attach functions (17 monitor classes; the Count-Min and HLL monitors run
 once ungrouped and once with ``group_col="event_type"``): every
 ``stream_*`` attach equals feeding the same files through
 ``process_batch``; additive monitors skip a re-delivered epoch;
-``result()`` before any micro-batch raises one uniform error."""
+``result()`` before any micro-batch raises one uniform error. The
+monitors whose state is Spark frames resume from their state snapshot
+after a restart and keep at most two snapshots; after a crash between a
+snapshot's write and its rename they process the torn epoch once, and
+after a crash past the rename they skip the epoch the snapshot holds."""
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
 
 import pandas as pd
 import pytest
@@ -167,6 +172,52 @@ def _table(res) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
+def _stream(spark, sources, case, src, ckpt, monitor=None):
+    """Run the case's availableNow query over ``src`` to its end; returns
+    (the monitor, the exception the query failed with, or None)."""
+    fn, cls, table, kwargs, prep = case
+    stream = (
+        spark.readStream.schema(sources[table][1])
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    if prep:
+        stream = prep(stream)
+    if monitor is None:
+        q, monitor = getattr(st, fn)(
+            stream, ckpt, **(kwargs(spark) if kwargs else {})
+        )
+    else:
+        q, _ = monitor.attach(stream, ckpt)
+    try:
+        finished = q.awaitTermination(600)
+    except Exception as e:  # the query failed: a crashed stream
+        return monitor, e
+    finally:
+        q.stop()
+    assert finished and isinstance(monitor, cls)
+    return monitor, None
+
+
+@pytest.fixture(scope="module")
+def direct(spark, sources):
+    """``direct(case)``: the case's monitor fed every file in arrival
+    order through process_batch, as a table — the reference a stream
+    must equal, computed once per case."""
+    tables = {}
+
+    def table(case) -> pd.DataFrame:
+        key = _case_id(case)
+        if key not in tables:
+            mon = _monitor(spark, case)
+            for i, b in enumerate(_batches(spark, sources, case)):
+                mon.process_batch(b, i)
+            tables[key] = _table(mon.result())
+        return tables[key]
+
+    return table
+
+
 @pytest.mark.parametrize("case", CASES, ids=CASE_IDS)
 def test_attach_equals_process_batch(spark, sources, tmp_path, case):
     """stream_*(3-file availableNow source) == the same monitor fed the
@@ -231,3 +282,107 @@ def test_result_before_any_batch_raises(spark, case):
     msg = f"{type(mon).__name__}.result() before any micro-batch was processed"
     with pytest.raises(RuntimeError, match=re.escape(msg)):
         mon.result()
+
+
+# monitors whose state is Spark frames: committed as a snapshot per epoch
+FRAME_CASES = [c for c in CASES if c[1].STATE or c[1].PARTS]
+FRAME_IDS = [_case_id(c) for c in FRAME_CASES]
+
+
+def _arrive(sources, case, dst, i):
+    """File ``i`` of the case's table lands in the source ``dst``, with
+    its mtime, so the arrival order stays fixed."""
+    os.makedirs(dst, exist_ok=True)
+    shutil.copy2(sources[case[2]][2][i], dst)
+
+
+def _snapshots(ckpt) -> list[str]:
+    return sorted(set(os.listdir(os.path.join(ckpt, "monitor_state"))) - {"parts"})
+
+
+@pytest.mark.parametrize("case", FRAME_CASES, ids=FRAME_IDS)
+def test_restart_resumes_from_the_snapshot(spark, sources, direct, tmp_path, case):
+    """A monitor on a checkpoint processes the first file; a new instance
+    on the same checkpoint resumes from its snapshot and processes the
+    rest: the result equals the batch twin's, and at most the newest two
+    snapshots remain."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    _arrive(sources, case, src, 0)
+    first, error = _stream(spark, sources, case, src, ckpt)
+    assert error is None and first.n_batches == 1
+    for i in range(1, N_FILES):
+        _arrive(sources, case, src, i)
+    second, error = _stream(spark, sources, case, src, ckpt)
+    assert error is None
+    assert second is not first and second.n_batches == N_FILES
+    assert [m["epoch"] for m in second.metrics] == list(range(1, N_FILES))
+    pd.testing.assert_frame_equal(_table(second.result()), direct(case))
+    assert _snapshots(ckpt) == [str(N_FILES - 2), str(N_FILES - 1)]
+
+
+@pytest.mark.parametrize("case", FRAME_CASES, ids=FRAME_IDS)
+def test_torn_commit_reprocesses_the_batch_once(
+    spark, sources, direct, tmp_path, monkeypatch, case
+):
+    """A crash between a snapshot's write and its rename leaves
+    ``<epoch>.tmp``: the restarted monitor loads the previous epoch,
+    and Spark's re-delivery of the torn epoch is processed exactly
+    once."""
+    from bytehub_spark.streaming import snapshots
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    for i in range(2):
+        _arrive(sources, case, src, i)
+    renames = []
+    rename = snapshots._rename
+
+    def crash_on_the_second(fs, tmp, final):
+        renames.append(final.getName())
+        if len(renames) == 2:
+            raise RuntimeError("driver lost")
+        rename(fs, tmp, final)
+
+    monkeypatch.setattr(snapshots, "_rename", crash_on_the_second)
+    _, error = _stream(spark, sources, case, src, ckpt)
+    monkeypatch.setattr(snapshots, "_rename", rename)
+    assert error is not None and renames == ["0", "1"]
+    assert _snapshots(ckpt) == ["0", "1.tmp"]
+    for i in range(2, N_FILES):
+        _arrive(sources, case, src, i)
+    restarted, error = _stream(spark, sources, case, src, ckpt, _monitor(spark, case))
+    assert error is None and restarted.n_batches == N_FILES
+    assert [m["epoch"] for m in restarted.metrics] == list(range(1, N_FILES))
+    pd.testing.assert_frame_equal(_table(restarted.result()), direct(case))
+
+
+@pytest.mark.parametrize("case", FRAME_CASES, ids=FRAME_IDS)
+def test_a_committed_epoch_is_not_processed_again(
+    spark, sources, direct, tmp_path, monkeypatch, case
+):
+    """A crash after a snapshot's rename, before Spark records the epoch
+    as done: Spark re-delivers the epoch, and the restarted monitor,
+    whose snapshot holds it, skips it whatever its merge law."""
+    from bytehub_spark.streaming import snapshots
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    for i in range(2):
+        _arrive(sources, case, src, i)
+    prunes = []
+    prune = snapshots.prune
+
+    def crash_on_the_second(*args):
+        prunes.append(args)
+        if len(prunes) == 2:
+            raise RuntimeError("driver lost")
+        prune(*args)
+
+    monkeypatch.setattr(snapshots, "prune", crash_on_the_second)
+    _, error = _stream(spark, sources, case, src, ckpt)
+    monkeypatch.setattr(snapshots, "prune", prune)
+    assert error is not None and _snapshots(ckpt) == ["0", "1"]
+    for i in range(2, N_FILES):
+        _arrive(sources, case, src, i)
+    restarted, error = _stream(spark, sources, case, src, ckpt, _monitor(spark, case))
+    assert error is None and restarted.n_batches == N_FILES
+    assert [m["epoch"] for m in restarted.metrics] == list(range(2, N_FILES))
+    pd.testing.assert_frame_equal(_table(restarted.result()), direct(case))

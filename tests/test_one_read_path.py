@@ -214,12 +214,13 @@ def test_all_transform_open_range_answer_ignores_the_bucket_span(fs, session_con
 
 # Spark jobs to run each load once built (memos warm), as measured on
 # this store at local[4]; the per-feature join fold ran 4-19. And the
-# jobs to build it: an open bound's bounds prepass is one job of one task
-# when its scans fit one (``ts.narrow``: open_single, was 2 jobs of 8
-# tasks), else 2 with its exchange (the four doubles' 54 files, at
-# spark.sql.files.openCostInBytes each, exceed the advisory size); a
-# transform records its output type on its first load, so a later build
-# samples nothing (was 2-3 sample jobs).
+# jobs to build it: an open bound's bounds prepass reads each feature's
+# oldest and newest partition only, one job of one task when those scans
+# fit one (``ts.narrow``: every open shape here; all 54 files of the four
+# doubles, at spark.sql.files.openCostInBytes each, exceeded the advisory
+# size and took 2 jobs of 29 tasks); a transform records its output type
+# on its first load, so a later build samples nothing (was 2-3 sample
+# jobs).
 EXEC_JOBS = {
     "mixed_freq": (["test/f0", "test/f1", "test/s"], dict(RANGE, freq="1h"), 3),
     "mixed_align": (["test/f0", "test/f1", "test/s"], RANGE, 2),
@@ -234,9 +235,9 @@ EXEC_JOBS = {
 BUILD_JOBS = {
     "mixed_freq": 0,
     "mixed_align": 0,
-    "open_wide_freq": 2,
-    "open_align": 2,
-    "from_only_align": 2,
+    "open_wide_freq": 1,
+    "open_align": 1,
+    "from_only_align": 1,
     "open_single": 1,
     "transform_freq": 0,
     "transform": 0,
