@@ -608,16 +608,17 @@ class FeatureStore:
             nsrow = self.catalog.get_namespace(namespace)
             if nsrow is None:
                 raise MissingFeatureException(f"Namespace {namespace!r} does not exist")
-            from .backends import make_storage
-
+            # parquet is the only data plane: a namespace made for another
+            # table format must fail here, not read or write plain parquet
+            backend = (nsrow.get("meta") or {}).get("backend")
+            if backend is not None and str(backend).lower() != "parquet":
+                raise ValidationError(
+                    f"Namespace {namespace!r} requests storage backend "
+                    f"{backend!r}; only 'parquet' is supported"
+                )
             st = self._storages.setdefault(
                 namespace,
-                make_storage(
-                    self.spark,
-                    nsrow["url"],
-                    nsrow.get("storage_options") or {},
-                    (nsrow.get("meta") or {}).get("backend"),
-                ),
+                SparkStorage(self.spark, nsrow["url"], nsrow.get("storage_options") or {}),
             )
         return st
 

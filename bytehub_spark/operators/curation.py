@@ -815,14 +815,6 @@ def snapshot_diff(
     )
 
 
-def snapshot_diff_summary(diff: DataFrame) -> DataFrame:
-    """Rollup of snapshot_diff: row counts per verdict (the 4-row table a
-    pipeline gate actually checks before deciding to republish)."""
-    return (
-        diff.groupBy("status").agg(F.count("*").alias("n")).orderBy("status")
-    )
-
-
 def interleave_sources(
     documents: DataFrame,
     weights: Mapping[str, int] | None = None,

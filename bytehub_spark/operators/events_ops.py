@@ -793,21 +793,6 @@ def _value_histogram_unsorted(
     )
 
 
-def value_quantiles_approx(events: DataFrame, accuracy: int = 10000) -> DataFrame:
-    """Scale path for value_quantiles: percentile_approx (Greenwald-Khanna
-    sketch, mergeable map-side — no global sort). accuracy trades memory
-    for error bound (~1/accuracy relative rank error)."""
-    return (
-        events.groupBy("event_type")
-        .agg(
-            F.percentile_approx("value", 0.5, accuracy).alias("p50"),
-            F.percentile_approx("value", 0.95, accuracy).alias("p95"),
-            F.percentile_approx("value", 0.99, accuracy).alias("p99"),
-        )
-        .orderBy("event_type")
-    )
-
-
 def decayed_user_score(
     events: DataFrame,
     half_life_hours: int = 12,

@@ -3,8 +3,8 @@
 The classic two-stage ANN: coarse-quantize vectors into cells around
 k-means centroids, then search only the `n_probe` cells nearest the query.
 At 100 TB this turns a full-corpus scan into a handful of cell scans; the
-cell column doubles as a physical partition key so probes prune at the
-parquet layer.
+stored index whose cell column is a physical partition key, so probes
+prune at the parquet layer, is ``pq.build_ivf_pq_index``.
 
 Training is driver-side numpy over a deterministic sample (a few thousand
 rows — the standard IVF recipe; centroids are tiny and broadcast to
@@ -124,51 +124,3 @@ def ivf_topk(
     )
     return _rerank(cand, k, id_col, vec_col)
 
-
-def write_cell_partitioned(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Materialize the IVF index physically: vectors written Hive-
-    partitioned by their cell, one file per cell. Probing then prunes at
-    the parquet layer — a 100 TB corpus scan becomes n_probe directory
-    reads. Returns the centroids (persist them next to the index)."""
-    cents = train_centroids(embeddings, n_cells, id_col=id_col, vec_col=vec_col)
-    celled = assign_cells(embeddings, cents, vec_col)
-    (
-        celled.repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    return cents
-
-
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query_vecs: dict[int, list[float]],
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a cell-partitioned IVF index: only the n_probe nearest cells'
-    partitions are read (static partition pruning — assert via
-    plans.partition_filters). query_vecs maps query_id -> vector."""
-    probe = _nearest_cells(_vec_stack(query_vecs.values()), centroids, n_probe)
-    all_cells = sorted({int(c) for row in probe for c in row})
-
-    index = spark.read.parquet(path).where(F.col("cell").isin(all_cells))
-    probes = spark.createDataFrame(
-        [
-            (int(qid), [int(c) for c in cells], [float(x) for x in vec])
-            for (qid, vec), cells in zip(query_vecs.items(), probe)
-        ],
-        "query_id long, probe_cells array<int>, q_vec array<float>",
-    )
-    return _rerank(_probe_join(index, probes, id_col), k, id_col, vec_col)

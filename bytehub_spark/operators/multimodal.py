@@ -140,27 +140,6 @@ def featurize(media: DataFrame, fake: bool = False) -> DataFrame:
     return media.mapInPandas(run, schema=_FEATURIZE_SCHEMA)
 
 
-def resize_images(media: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Resize op: same plumbing, returns re-encoded binary (stubbed codec)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for content, fmt in zip(pdf["content"], pdf["format"]):
-                raw = _decode_stub(content, fmt, fake)
-                # fake resize: decimate/pad the byte stream to the target size
-                target = width * height
-                resized = np.resize(raw, target).astype(np.uint8)
-                out.append(bytes(resized.tobytes()))
-            res = pdf.copy()
-            res["content"] = out
-            res["width"] = width
-            res["height"] = height
-            yield res
-
-    return media.where(F.col("kind") == "image").mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = False) -> DataFrame:
     """Frame sampling for video rows: explode one row per sampled frame."""
     schema = T.StructType(

@@ -1538,29 +1538,6 @@ def hash_embed(documents: DataFrame, dim: int = 32) -> DataFrame:
     )
 
 
-def hash_embed_dense(documents: DataFrame, dim: int = 32) -> DataFrame:
-    """Dense-array view of hash_embed for downstream GEMM/ANN consumers:
-    (doc_id, embedding array<double> of length dim), zero-filled via a
-    deterministic map lookup (collect_list order never matters)."""
-    sparse = hash_embed(documents, dim)
-    return (
-        sparse.groupBy("doc_id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("bucket", "cnt"))
-            ).alias("__m")
-        )
-        .select(
-            "doc_id",
-            F.expr(
-                f"transform(sequence(0, {dim - 1}), "
-                "i -> CAST(coalesce(__m[i], 0) AS DOUBLE))"
-            ).alias("embedding"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def quality_classifier(documents: DataFrame, dim: int = 32) -> DataFrame:
     """fastText-style linear quality classifier INFERENCE at corpus
     scale: hashing-trick featurize (hash_embed) then a sparse dot with a

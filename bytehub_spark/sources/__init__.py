@@ -1,29 +1,7 @@
-from .bucketed import drop_bucketed, read_bucketed, write_bucketed
-from .jsonl import DOCUMENTS_DDL, read_jsonl, write_jsonl
-from .csv import read_csv, write_csv
-from .avro import avro_available, read_avro, write_avro
-from .orc import read_orc, write_orc
-from .text import read_text_docs, read_text_lines, write_text
 from .tables import TABLES, load_table, register_views
 
 __all__ = [
-    "read_text_lines",
-    "read_text_docs",
-    "write_text",
     "TABLES",
     "load_table",
     "register_views",
-    "read_jsonl",
-    "write_jsonl",
-    "read_csv",
-    "write_csv",
-    "read_orc",
-    "write_orc",
-    "avro_available",
-    "read_avro",
-    "write_avro",
-    "DOCUMENTS_DDL",
-    "write_bucketed",
-    "read_bucketed",
-    "drop_bucketed",
 ]

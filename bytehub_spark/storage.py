@@ -21,8 +21,9 @@ Scale design:
   20-row save: one Spark job, was a shuffle-map job and a write job);
   a larger one shuffles on `partition` and writes in parallel. compact()
   rewrites partitions that many appends fragmented, swapping them in by
-  directory renames (a table format — Delta/Iceberg, `backends.py` — does
-  it ACID when its jars are on the classpath).
+  directory renames. This is the only data plane: a namespace whose
+  ``meta["backend"]`` names another table format is refused
+  (``FeatureStore._storage``), never read or written as parquet.
 """
 
 from __future__ import annotations
@@ -61,7 +62,7 @@ def partition_bound(value, scheme: str) -> str:
 
 def partitioned(df: DataFrame, scheme: str) -> DataFrame:
     """The (time, created_time, value) rows of ``df`` with the derived
-    ``partition`` column: what every backend appends."""
+    ``partition`` column: what ``SparkStorage.write`` appends."""
     for c in (ts.TIME_COL, ts.VALUE_COL):
         if c not in df.columns:
             raise ValidationError(f"save requires a {c!r} column")
@@ -363,8 +364,8 @@ class SparkStorage:
         not a recursive delete, and no step loses rows: a crash anywhere
         leaves either the live or the retired copy intact, and the next
         compact() (or ``recover_compaction()``) restores/cleans orphans.
-        True no-window atomicity needs a table format (Delta/Iceberg) —
-        see the backend seam. Returns {partitions, files_before,
+        True no-window atomicity would need a table format (Delta/Iceberg),
+        which this store does not use. Returns {partitions, files_before,
         files_after}.
         """
         self.recover_compaction(name)

@@ -2119,12 +2119,9 @@ class Scd2Monitor(Monitor):
     def _update(self, batch_df: DataFrame, epoch_id: int | None) -> None:
         from ..operators.events_ops import _user_runs
 
-        # Empty micro-batch: nothing to stitch — skip entirely (ADVICE
-        # r10: an empty FIRST batch used to set self.open to an empty
-        # frame, silently bypassing the result() "no micro-batch yet"
-        # guard).
-        if batch_df.isEmpty():
-            return
+        # No isEmpty() pre-check (a full Spark job per batch): an empty
+        # batch stitches to no runs, leaving ``open`` and ``closed`` as
+        # they were (an empty first batch: an empty ``open``, see _ready)
 
         # the batch op's EXACT run recipe — one shared definition, so
         # the stream==batch contract is structural, not coincidental
@@ -2228,8 +2225,9 @@ class Scd2Monitor(Monitor):
         )
 
     def _ready(self) -> bool:
-        # empty batches are skipped, so only a non-empty one unlocks
-        return self.open is not None
+        # every user seen has an open run, so an empty ``open`` means
+        # every batch so far was empty: one job here, none per batch
+        return self.open is not None and not self.open.isEmpty()
 
     def _result(self) -> DataFrame:
         """Same table shape as events_ops.scd2_history: the closed
@@ -2308,13 +2306,10 @@ class CurationFunnelMonitor(Monitor):
         from ..operators.curation import _funnel_flags
         from ..plans.scratch import release_scratch
 
-        if batch_df.isEmpty():
-            # an empty micro-batch is a real (all-zero) funnel row:
-            # dropping it would shift later batch indices off the
-            # trigger sequence (unlike Scd2Monitor, where skipping is
-            # semantically neutral, result() here is per-batch)
-            self.rows.append((len(self.rows), 0, 0, 0, 0))
-            return
+        # No isEmpty() pre-check (a full Spark job per batch): an empty
+        # micro-batch is a real all-zero funnel row (dropping it would
+        # shift later batch indices off the trigger sequence), which the
+        # sums over zero rows (NULL) give once coalesced to 0
         flags, new_fps, new_buckets = _funnel_flags(
             batch_df,
             self.fps,
@@ -2335,9 +2330,9 @@ class CurationFunnelMonitor(Monitor):
             (
                 len(self.rows),
                 int(row["n_in"]),
-                int(row["n_gate"]),
-                int(row["n_exact_new"]),
-                int(row["n_near_new"]),
+                int(row["n_gate"] or 0),
+                int(row["n_exact_new"] or 0),
+                int(row["n_near_new"] or 0),
             )
         )
         release_scratch()  # counts collected + additions written

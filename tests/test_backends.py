@@ -1,66 +1,57 @@
-"""Backend seam: parquet default, delta opt-in via namespace meta.
-
-Delta jars are absent in this container (verified in bytehub_spark/
-backends.py docstring), so the delta round-trip tests skip; the seam
-itself — routing, and the loud no-jars error — is always tested.
-"""
+"""Storage backend selection at the FeatureStore level: a namespace's
+``meta["backend"]`` accepts only ``parquet`` (any case, or unset), the
+one data plane (``storage.SparkStorage``). Any other value is refused
+with a ``ValidationError`` naming it, on the namespace's first save or
+load, so a namespace made for another table format never reads or
+writes plain parquet."""
 
 import pandas as pd
 import pytest
 
 from bytehub_spark import FeatureStore
-from bytehub_spark.backends import DeltaStorage, delta_available, make_storage
-from bytehub_spark.exceptions import StorageError, ValidationError
+from bytehub_spark.exceptions import ValidationError
 from bytehub_spark.storage import SparkStorage
 
 
+def _store(spark, tmp_path, kinds):
+    fs = FeatureStore(":memory:", spark=spark)
+    for i, backend in enumerate(kinds):
+        meta = {} if backend is None else {"backend": backend}
+        fs.create_namespace(f"n{i}", url=str(tmp_path / f"n{i}"), description="", meta=meta)
+        fs.create_feature(f"n{i}/f")
+    return fs
+
+
+def _frame():
+    idx = pd.date_range("2021-01-01", periods=3, freq="D")
+    return pd.DataFrame({"time": idx, "value": [1.0, 2.0, 3.0]})
+
+
 def test_default_backend_is_parquet(spark, tmp_path):
-    st = make_storage(spark, str(tmp_path / "p"))
-    assert type(st) is SparkStorage
+    fs = _store(spark, tmp_path, [None, "parquet", "PARQUET"])
+    for i in range(3):
+        assert type(fs._storage(f"n{i}")) is SparkStorage
+        fs.save_dataframe(_frame(), f"n{i}/f")
+        assert fs.load_pandas(f"n{i}/f")[f"n{i}/f"].tolist() == [1.0, 2.0, 3.0]
 
 
 def test_unknown_backend_rejected(spark, tmp_path):
-    with pytest.raises(ValidationError):
-        make_storage(spark, str(tmp_path / "x"), backend="orc")
+    kinds = ["delta", "orc", "Delta"]
+    fs = _store(spark, tmp_path, kinds)
+    for i, backend in enumerate(kinds):
+        with pytest.raises(ValidationError, match=repr(backend)):
+            fs.save_dataframe(_frame(), f"n{i}/f")
+        with pytest.raises(ValidationError, match=repr(backend)):
+            fs.load_pandas(f"n{i}/f")
 
 
 def test_namespace_meta_selects_backend(spark, tmp_path):
-    fs = FeatureStore(":memory:", spark=spark)
-    fs.create_namespace(
-        "d", url=str(tmp_path / "d"), description="", meta={"backend": "delta"}
-    )
-    if delta_available(spark):
-        assert type(fs._storage("d")) is DeltaStorage
-    else:
-        with pytest.raises(StorageError, match="delta"):
-            fs._storage("d")
-
-
-@pytest.mark.skipif(
-    "not __import__('bytehub_spark.backends', fromlist=['delta_available'])"
-    ".delta_available(__import__('bytehub_spark.session', fromlist=['get_spark'])"
-    ".get_spark())",
-    reason="Delta Lake jars not on the classpath",
-)
-def test_delta_roundtrip_and_compact(spark, tmp_path):
-    fs = FeatureStore(":memory:", spark=spark)
-    fs.create_namespace(
-        "d", url=str(tmp_path / "d"), description="", meta={"backend": "delta"}
-    )
-    fs.create_feature("d/f")
-    idx = pd.date_range("2021-01-01", periods=6, freq="D")
-    for k in range(3):
-        fs.save_dataframe(
-            pd.DataFrame(
-                {
-                    "time": idx,
-                    "created_time": idx + pd.Timedelta(minutes=k),
-                    "value": [float(k * 10 + i) for i in range(6)],
-                }
-            ),
-            "d/f",
-        )
-    before = fs.load_pandas("d/f")
-    stats = fs.compact_feature("d/f")
-    assert stats["files_after"] <= stats["files_before"]
-    pd.testing.assert_frame_equal(before, fs.load_pandas("d/f"))
+    """The refusal follows the namespace: in one store, the parquet
+    namespace saves and loads while the delta one raises and leaves no
+    data behind."""
+    fs = _store(spark, tmp_path, ["parquet", "delta"])
+    fs.save_dataframe(_frame(), "n0/f")
+    with pytest.raises(ValidationError, match="'delta'"):
+        fs.save_dataframe(_frame(), "n1/f")
+    assert len(fs.load_pandas("n0/f")) == 3
+    assert not (tmp_path / "n1").exists()

@@ -1,57 +1,9 @@
-"""JSONL source/sink: round-trip fidelity, explicit-schema read, corrupt-
-line quarantine, partitioned layout."""
+"""Document chunking and embedding-group centroids over the sf0.001
+document and embedding tables."""
 
-import json
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from bytehub_spark.sources import DOCUMENTS_DDL, load_table, read_jsonl, write_jsonl
+from bytehub_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_jsonl_roundtrip_documents(spark, tmp_path):
-    docs = load_table(spark, SF, "documents")
-    path = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, path, compression=None)
-    back = read_jsonl(spark, path, schema=DOCUMENTS_DDL)
-    assert back.schema == docs.schema
-    a = docs.orderBy("doc_id").toPandas()
-    b = back.orderBy("doc_id").toPandas()
-    assert a.equals(b)
-
-
-def test_jsonl_partitioned_write_prunes(spark, tmp_path):
-    docs = load_table(spark, SF, "documents")
-    path = str(tmp_path / "docs_by_lang")
-    write_jsonl(docs, path, compression=None, partition_by=["lang"])
-    assert os.path.isdir(os.path.join(path, "lang=en"))
-    back = read_jsonl(
-        spark, path, schema="doc_id bigint, text string, source string, n_chars bigint"
-    ).where(F.col("lang") == "en")
-    n_en = docs.where(F.col("lang") == "en").count()
-    assert back.count() == n_en
-    # partition filter must prune at the source, not post-scan
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan, plan
-
-
-def test_jsonl_corrupt_lines_quarantined(spark, tmp_path):
-    path = str(tmp_path / "mixed.jsonl")
-    with open(path, "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": "ok"}) + "\n")
-        f.write("{broken json line\n")
-        f.write(json.dumps({"doc_id": 2, "text": "also ok"}) + "\n")
-    df = read_jsonl(
-        spark, path, schema="doc_id bigint, text string", keep_corrupt=True
-    )
-    rows = df.collect()
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert {r["doc_id"] for r in good} == {1, 2}
-    assert len(bad) == 1 and bad[0]["doc_id"] is None
 
 
 def test_chunk_documents_reconstructs_text(spark):

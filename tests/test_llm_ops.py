@@ -133,10 +133,6 @@ def test_multimodal_plumbing(spark):
         [sum(f) for f in feats["feature"]], 1.0, atol=1e-3
     )
 
-    resized = multimodal.resize_images(media, 32, 32, fake=True).toPandas()
-    assert (resized["width"] == 32).all()
-    assert all(len(c) == 32 * 32 for c in resized["content"])
-
     video = multimodal.synthesize_media(spark, n=4, kind="video")
     frames = multimodal.sample_frames(video, every_ms=500, fake=True).toPandas()
     assert len(frames) >= 4
@@ -263,58 +259,6 @@ def test_jaccard_df_cut_is_subset(spark, documents):
     assert set(c.index) <= set(e.index)
     for k, v in c.items():
         assert v <= e.loc[k] + 1e-12
-
-
-def test_approx_quantiles_near_exact(spark):
-    from bytehub_spark.operators.events_ops import value_quantiles, value_quantiles_approx
-    from bytehub_spark.sources import load_table
-    ev = load_table(spark, SF, "events")
-    from pyspark.sql import functions as F
-    approx = value_quantiles_approx(ev).toPandas().set_index("event_type")
-    # GK guarantees rank error <= 1/accuracy; on 1k rows that's exact RANK,
-    # but the sketch returns an ELEMENT while percentile() interpolates —
-    # so check the approx value lies inside a ±2%-rank band of exact values
-    band = (
-        ev.groupBy("event_type")
-        .agg(*[F.expr(f"percentile(value, {q})").alias(n)
-               for n, q in [("lo50", 0.48), ("hi50", 0.52), ("lo95", 0.93),
-                            ("hi95", 0.97), ("lo99", 0.97), ("hi99", 1.0)]])
-        .toPandas().set_index("event_type")
-    )
-    for et in approx.index:
-        for col, lo, hi in [("p50", "lo50", "hi50"), ("p95", "lo95", "hi95"),
-                            ("p99", "lo99", "hi99")]:
-            v = approx.loc[et, col]
-            assert band.loc[et, lo] <= v <= band.loc[et, hi], (et, col, v)
-
-
-def test_ivf_partitioned_index_prunes(spark, embeddings, tmp_path):
-    """Physically partitioned IVF index: probes read ONLY probe cells
-    (static partition pruning visible in the plan) and agree with the
-    in-memory IVF on the same centroids."""
-    from bytehub_spark import plans
-    from bytehub_spark.operators import ivf
-
-    path = str(tmp_path / "ivf_index")
-    cents = ivf.write_cell_partitioned(embeddings, path, n_cells=8)
-    qs = {r["vec_id"]: list(r["embedding"])
-          for r in embeddings.where(F.col("vec_id") < 3).collect()}
-    topk = ivf.ivf_topk_partitioned(spark, path, cents, qs, k=5, n_probe=2)
-    pf = plans.partition_filters(topk)
-    assert any("cell" in f for f in pf), f"no cell pruning in {pf}"
-    got = topk.toPandas()
-    assert set(got["query_id"]) == set(qs)
-    assert (got.groupby("query_id")["rank"].max() <= 5).all()
-    # neighbors must come only from probed cells
-    probed = spark.read.parquet(path).select("vec_id", "cell").toPandas()
-    cell_of = dict(zip(probed["vec_id"], probed["cell"]))
-    import numpy as np
-    qx = np.array(list(qs.values()), dtype=np.float64)
-    qx /= np.linalg.norm(qx, axis=1, keepdims=True)
-    probe = np.argsort(-(qx @ cents.T), axis=1)[:, :2]
-    allowed = {qid: set(map(int, cells)) for qid, cells in zip(qs, probe)}
-    for _, row in got.iterrows():
-        assert cell_of[row["neighbor_id"]] in allowed[row["query_id"]]
 
 
 def test_redact_pii_counts_and_replaces(spark):

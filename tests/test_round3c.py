@@ -353,10 +353,7 @@ def test_linear_attribution_splits_credit(spark):
 
 # --------------------------------------------------------- snapshot diff
 def test_snapshot_diff_all_verdicts(spark):
-    from bytehub_spark.operators.curation import (
-        snapshot_diff,
-        snapshot_diff_summary,
-    )
+    from bytehub_spark.operators.curation import snapshot_diff
 
     old = spark.createDataFrame(
         pd.DataFrame(
@@ -373,14 +370,6 @@ def test_snapshot_diff_all_verdicts(spark):
     assert d.loc[2, "status"] == "unchanged"
     assert d.loc[3, "status"] == "changed"
     assert d.loc[4, "status"] == "added" and pd.isna(d.loc[4, "old_hash"])
-    s = (
-        snapshot_diff_summary(snapshot_diff(old, new, ["k"], ["v", "w"]))
-        .toPandas()
-        .set_index("status")["n"]
-    )
-    assert s.to_dict() == {
-        "added": 1, "changed": 1, "removed": 1, "unchanged": 1
-    }
 
 
 def test_snapshot_diff_null_vs_literal_null(spark):
@@ -644,24 +633,12 @@ def test_hash_embed_deterministic_and_conserves_tokens(spark):
     )
     assert s1["cnt"].sum() == n_tokens
     assert s1["bucket"].between(0, 31).all()
-
-
-def test_hash_embed_dense_matches_sparse(spark):
-    from bytehub_spark.operators.text import hash_embed, hash_embed_dense
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": [0, 1], "text": ["aa bb aa cc", "dd dd"]}
-        )
-    )
-    sp = hash_embed(docs, dim=8).toPandas()
-    de = hash_embed_dense(docs, dim=8).toPandas().set_index("doc_id")
-    for doc_id, grp in sp.groupby("doc_id"):
-        vec = np.zeros(8)
-        vec[grp["bucket"].to_numpy()] = grp["cnt"].to_numpy()
-        assert list(de.loc[doc_id, "embedding"]) == list(vec)
     # same token -> same bucket: doc 0's "aa" x2 share a bucket (other
     # tokens may collide into it too at dim=8 — that's the hashing trick)
+    small = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0, 1], "text": ["aa bb aa cc", "dd dd"]})
+    )
+    sp = hash_embed(small, dim=8).toPandas()
     assert sp[sp.doc_id == 0]["cnt"].max() >= 2
     assert sp[sp.doc_id == 0]["cnt"].sum() == 4
     assert sp[sp.doc_id == 1]["cnt"].tolist() == [2]

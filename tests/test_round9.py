@@ -235,31 +235,6 @@ def test_pipeline_card_rejects_bad_shape(spark):
         curation.pipeline_card(docs, bench, n_hashes=64, bands=7)
 
 
-# ------------------------------------------------ avro seam
-
-
-def test_avro_seam_probe_and_loud_error(spark):
-    """The spark-avro data source is an external module this container
-    does not ship (probed r09: pyspark/jars has only the Hadoop-internal
-    avro serdes). The seam must (a) report availability truthfully,
-    (b) fail LOUDLY with the remedy rather than letting Spark's
-    'Failed to find data source' surface mid-plan, and (c) never fall
-    back to another format. If the jar appears in a later container,
-    the round-trip below runs instead."""
-    from bytehub_spark.sources import avro_available, read_avro, write_avro
-
-    df = spark.range(3).withColumnRenamed("id", "doc_id")
-    if not avro_available(spark):
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            write_avro(df, "/tmp/avro_seam_probe")
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            read_avro(spark, "/tmp/avro_seam_probe")
-    else:
-        write_avro(df, "/tmp/avro_seam_probe")
-        back = read_avro(spark, "/tmp/avro_seam_probe", columns=["doc_id"])
-        assert sorted(r.doc_id for r in back.collect()) == [0, 1, 2]
-
-
 # --------------------------------------- token-scale ppm ratio audit
 
 

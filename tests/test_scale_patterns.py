@@ -1,5 +1,6 @@
-"""Scale-pattern tests: salted aggregation correctness on skewed keys and
-bucketed co-located joins eliminating the join shuffle."""
+"""Scale-pattern tests: salted aggregation correctness on skewed keys,
+no global data window in sequence packing, AQE skew splits on a hot
+LSH bucket."""
 
 import numpy as np
 import pandas as pd
@@ -7,7 +8,6 @@ from pyspark.sql import functions as F
 
 from bytehub_spark import plans
 from bytehub_spark.operators.skew import salted_agg
-from bytehub_spark.sources import bucketed
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,38 +39,6 @@ def test_salted_agg_scatters_hot_key(spark):
     )
     n_buckets = salted.select("__salt").distinct().count()
     assert n_buckets == 8
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    # managed tables land in ./spark-warehouse (warehouse dir is a static
-    # conf); mode("overwrite") keeps reruns idempotent
-    bucketed.bucket_fact_tables(spark, SF, buckets=4)
-    # force the sort-merge path (at sf0.001 orders would auto-broadcast,
-    # which hides the co-location proof this test is about)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketed.bucketed_order_lineitem_join(spark)
-        plan = plans.executed_plan(j)
-        # co-located bucketed scans: a fact-fact SMJ with ZERO exchanges
-        # anywhere (the groupBy on o_orderkey reuses the bucketing too)
-        assert "SortMergeJoin" in plan
-        assert plan.count("Exchange") == 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # correctness: same result as the plain (shuffling) join
-    from bytehub_spark.sources import load_table
-    o = load_table(spark, SF, "orders")
-    l = load_table(spark, SF, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    exp = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(F.sum(revenue).alias("revenue"))
-    )
-    got_pdf = j.toPandas().sort_values("o_orderkey").reset_index(drop=True)
-    exp_pdf = exp.toPandas().sort_values("o_orderkey").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got_pdf, exp_pdf)
 
 
 def test_pack_sequences_no_global_data_window(spark):
