@@ -633,12 +633,37 @@ def test_hash_embed_deterministic_and_conserves_tokens(spark):
     )
     assert s1["cnt"].sum() == n_tokens
     assert s1["bucket"].between(0, 31).all()
+
+
+def test_hash_embed_dense_matches_sparse(spark):
+    """hash_embed's sparse (doc_id, bucket, cnt) rows, scattered into a
+    dense vector, equal a dense bucket-count vector built in plain
+    Python from the same Horner fold over code points."""
+    from bytehub_spark.operators.text import hash_embed
+
+    texts = ["aa bb aa cc", "dd dd"]
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0, 1], "text": texts})
+    )
+    sp = hash_embed(docs, dim=8).toPandas()
+
+    def bucket(token):
+        acc = 0
+        for ch in token:
+            acc = (acc * 1000003 + ord(ch)) % 2147483647
+        return acc % 8
+
+    for doc_id, text in enumerate(texts):
+        ref = np.zeros(8)
+        for tok in text.split(" "):
+            if tok:
+                ref[bucket(tok)] += 1
+        grp = sp[sp.doc_id == doc_id]
+        vec = np.zeros(8)
+        vec[grp["bucket"].to_numpy()] = grp["cnt"].to_numpy()
+        assert list(vec) == list(ref)
     # same token -> same bucket: doc 0's "aa" x2 share a bucket (other
     # tokens may collide into it too at dim=8 — that's the hashing trick)
-    small = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1], "text": ["aa bb aa cc", "dd dd"]})
-    )
-    sp = hash_embed(small, dim=8).toPandas()
     assert sp[sp.doc_id == 0]["cnt"].max() >= 2
     assert sp[sp.doc_id == 0]["cnt"].sum() == 4
     assert sp[sp.doc_id == 1]["cnt"].tolist() == [2]
